@@ -139,12 +139,16 @@ def run_module(
     if not dest:
         raise ValueError(f"module {rel_path}: no sink() and source has no dest_table")
 
-    result = spark.sql(rendered.sql).persist()  # one execution: write + count
+    result = spark.sql(rendered.sql)
+    if incr_sources:
+        # the watermark probe below re-reads the result after the write
+        result = result.persist()
     mode = mode if pk else WriteMode.APPEND  # merge needs a PK
     writer = _writer_for(cfg, target_name, dest, pk, mode)
     try:
+        # one execution: the write job also counts the rows it loaded
         writer.write(result)
-        n = result.count()
+        n = writer.rows_written
         # Advance watermarks only after the write committed. Prefer the
         # cursor max observed in the WRITTEN result (when the transform
         # preserves the cursor column) — that ties the watermark to rows
@@ -161,8 +165,8 @@ def run_module(
         result.unpersist()
         for _, _, src_df in incr_sources:
             src_df.unpersist()
-    # Accumulator-backed fetch counts are complete here: the write/count
-    # actions above consumed every source partition.
+    # Accumulator-backed fetch counts are complete here: the write job
+    # above consumed every source partition.
     fetch = {name: src.stats().as_dict() for name, src in http_sources}
     stats = ModuleStats(
         rel_path, dest, n, round(time.perf_counter() - t0, 3), fetch_stats=fetch

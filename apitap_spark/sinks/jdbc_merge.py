@@ -27,20 +27,30 @@ Spark-native re-expression of the reference's Postgres writer
 * S22 transactions run on ONE connection per partition (fixes the
   reference's pool-scattered BEGIN/COMMIT hazard, SURVEY §7.4).
 
-Scale design: the writer runs inside ``foreachPartition`` — each executor
-task opens one connection, streams its partition in parameter-limit-sized
-statements inside a single transaction, and commits. Idempotence at
-retry: MERGE/upsert by PK makes task retries safe (append mode is
-documented at-least-once, same as the reference).
+Scale design: every partition is one executor task that opens one
+connection, writes its rows inside a single transaction, commits, and
+returns its input row count; the driver sums those into
+``rows_written``, so the write is the only Spark job of a load. Where
+the dialect has COPY, the partition body is ``mapInArrow``: pyarrow
+writes the batches as CSV straight into the COPY stage (MERGE/upsert)
+or the target (append). Elsewhere (DuckDB, drivers without COPY) it is
+a row partition feeding the statements of
+:meth:`JdbcMergeWriter.write_rows`. Idempotence at retry: MERGE/upsert
+by PK makes task retries safe (append mode is documented at-least-once,
+same as the reference).
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
+import io
+import itertools
 import json
 import math
 import re
-from collections.abc import Callable, Iterable
+import time
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 from enum import Enum
 
@@ -150,9 +160,16 @@ class Dialect:
 
     # -- bulk append fast path --------------------------------------------
     def bulk_append(self, conn, table: str, columns: list[str], rows: list) -> bool:
-        """Engine-native bulk load for APPEND mode (DuckDB: DataFrame
-        registration; Postgres: COPY when the driver exposes it). Returns
-        False when unsupported → caller falls back to multi-row INSERT."""
+        """Engine-native bulk load of bound rows for APPEND mode (DuckDB:
+        DataFrame registration; COPY-capable engines load through
+        :meth:`copy_csv` instead). Returns False when unsupported →
+        caller falls back to multi-row INSERT."""
+        return False
+
+    def copy_csv(self, conn, table: str, columns: list[str], data) -> bool:
+        """Bulk-load CSV (unquoted empty field = NULL, quoted "" = empty
+        string) from the file-like ``data``. Returns False when the engine
+        or driver has no COPY."""
         return False
 
     # -- DDL hooks ---------------------------------------------------------
@@ -204,38 +221,18 @@ class PostgresDialect(Dialect):
     def json_cast(self, expr: str) -> str:
         return f"{expr}::jsonb"
 
-    def bulk_append(self, conn, table: str, columns: list[str], rows: list) -> bool:
+    def copy_csv(self, conn, table: str, columns: list[str], data) -> bool:
         """COPY FROM STDIN (CSV) when the driver exposes copy_expert —
-        the 10-100x append path the reference lists as future work
+        the 10-100x load path the reference lists as future work
         (reference README.md:127, docs/OPTIMIZATION_REPORT.md:178-185)."""
-        copy_expert = getattr(getattr(conn, "cursor", lambda: None)(), "copy_expert", None)
+        copy_expert =getattr(getattr(conn, "cursor", lambda: None)(), "copy_expert", None)
         if copy_expert is None:
             return False
-        import io
-
-        def field(v) -> str:
-            # Hand-rendered CSV: csv.writer leaves empty strings
-            # unquoted, and with NULL '' COPY would read them back as
-            # NULL — strings are therefore ALWAYS quoted (a quoted ""
-            # is an empty string, an unquoted empty field is NULL).
-            if v is None:
-                return ""
-            if isinstance(v, str):
-                return '"' + v.replace('"', '""') + '"'
-            if isinstance(v, (bytes, bytearray, memoryview)):
-                return "\\x" + bytes(v).hex()  # bytea text input form
-            return str(v)  # numbers/bools/datetimes: unambiguous unquoted
-
-        buf = io.StringIO(
-            "\n".join(",".join(field(v) for v in r) for r in rows) + "\n"
-            if rows
-            else ""
-        )
         collist = ", ".join(quote_ident(c) for c in columns)
         copy_expert(
             f"COPY {quote_ident_path(table)} ({collist}) FROM STDIN "
             f"WITH (FORMAT csv, NULL '')",
-            buf,
+            data,
         )
         return True
 
@@ -490,25 +487,143 @@ def rows_per_statement(n_cols: int, batch_size: int) -> int:
     return max(1, min(batch_size, MAX_BIND_PARAMS // max(1, n_cols)))
 
 
+def _json_default(o):
+    if isinstance(o, (_dt.datetime, _dt.date)):
+        return o.isoformat()
+    if isinstance(o, bytes):
+        return o.hex()
+    return str(o)
+
+
+_JSON = json.JSONEncoder(default=_json_default)  # json.dumps, minus a per-call encoder
+
+
 def _bind_value(v, dt: T.DataType, dialect: Dialect):
     """Render one Python value for binding; complex types serialize to JSON
     (reference sink JSONB semantics, src/writer/postgres.rs:48-50)."""
     if v is None:
         return None
     if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
-        def default(o):
-            if isinstance(o, (_dt.datetime, _dt.date)):
-                return o.isoformat()
-            if isinstance(o, bytes):
-                return o.hex()
-            return str(o)
-
         if hasattr(v, "asDict"):
             v = v.asDict(recursive=True)
-        return json.dumps(v, default=default)
+        return _JSON.encode(v)
     if isinstance(v, float) and (math.isnan(v) or math.isinf(v)):
         return None
     return v
+
+
+_COMPLEX_TYPES = (T.ArrayType, T.MapType, T.StructType)
+_COPY_TYPES = (
+    T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType,
+    T.DoubleType, T.DecimalType, T.BooleanType, T.StringType, T.DateType,
+    T.TimestampType, T.TimestampNTZType, T.BinaryType, *_COMPLEX_TYPES,
+)
+
+
+def _row_fixer(dt: T.DataType, structs_as_lists: bool):
+    """A function turning one non-null ``to_pylist()`` value of ``dt`` into
+    the value the row path holds before :func:`_bind_value` dumps it, or
+    None where the two agree. Maps become dicts and session timestamps
+    local wall-clock time (``TimestampType.fromInternal``); structs stay
+    dicts, except below a top-level array or map (``structs_as_lists``),
+    where the row path dumps Rows as JSON arrays because it never calls
+    ``asDict`` there."""
+    if isinstance(dt, T.TimestampType):
+        return lambda v: v.astimezone().replace(tzinfo=None)
+    if isinstance(dt, T.ArrayType):
+        fix = _row_fixer(dt.elementType, structs_as_lists)
+        return fix and (lambda v: [_fixed(fix, e) for e in v])
+    if isinstance(dt, T.MapType):
+        kfix = _row_fixer(dt.keyType, structs_as_lists)
+        vfix = _row_fixer(dt.valueType, structs_as_lists)
+        return lambda v: {_fixed(kfix, k): _fixed(vfix, x) for k, x in v}
+    if isinstance(dt, T.StructType):
+        fixes = [(f.name, _row_fixer(f.dataType, structs_as_lists)) for f in dt.fields]
+        if structs_as_lists:
+            return lambda v: [_fixed(fix, v[n]) for n, fix in fixes]
+        if any(fix for _, fix in fixes):
+            return lambda v: {n: _fixed(fix, v[n]) for n, fix in fixes}
+    return None
+
+
+def _fixed(fix, v):
+    return v if v is None or fix is None else fix(v)
+
+
+def _csv_table(tbl, schema: T.StructType):
+    """The Arrow twin of :func:`_bind_value`: the table that COPY reads
+    as pyarrow CSV, which quotes every string, so '' stays distinct from
+    NULL. Floats widen to float64 (what a Row carries) with NaN/±inf as
+    NULL; session timestamps become local wall-clock time; complex
+    columns become the row path's JSON text and binary the bytea hex
+    form."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    utc_host = time.timezone == 0 and not time.daylight
+    cols = []
+    for col, f in zip(tbl.columns, schema.fields):
+        dt = f.dataType
+        if isinstance(dt, (T.FloatType, T.DoubleType)):
+            col = col.cast(pa.float64())
+            col = pc.if_else(pc.is_finite(col), col, pa.scalar(None, pa.float64()))
+        elif isinstance(dt, T.TimestampType) and utc_host:
+            col = col.cast(pa.timestamp("us"))  # drop the zone
+        elif isinstance(dt, T.TimestampType):
+            fix = _row_fixer(dt, False)
+            col = pa.array([_fixed(fix, v) for v in col.to_pylist()], pa.timestamp("us"))
+        elif isinstance(dt, T.BinaryType):
+            col = pa.array(
+                [None if v is None else "\\x" + v.hex() for v in col.to_pylist()],
+                pa.string(),
+            )
+        elif isinstance(dt, _COMPLEX_TYPES):
+            fix = _row_fixer(dt, not isinstance(dt, T.StructType))
+            col = pa.array(
+                [
+                    None if v is None else _JSON.encode(_fixed(fix, v))
+                    for v in col.to_pylist()
+                ],
+                pa.string(),
+            )
+        cols.append(col)
+    return pa.Table.from_arrays(cols, names=tbl.column_names)
+
+
+def _last_wins(tbl, pks: list[str]):
+    """Keep the last row of each primary key, in input order — the row
+    path's within-statement dedup (Postgres refuses a MERGE that touches
+    one row twice)."""
+    import numpy as np
+    import pyarrow as pa
+
+    if tbl.num_rows < 2:
+        return tbl
+    pos = "\x00pos"
+    last = (
+        tbl.select(pks)
+        .append_column(pos, pa.array(np.arange(tbl.num_rows)))
+        .group_by(pks, use_threads=False)
+        .aggregate([(pos, "max")])[f"{pos}_max"]
+    )
+    if len(last) == tbl.num_rows:
+        return tbl
+    return tbl.take(np.sort(last.to_numpy()))
+
+
+def _chunked(batches: Iterable, rows: int) -> Iterator[list]:
+    """Group record batches into lists of at least ``rows`` rows (the
+    last list may hold fewer)."""
+    chunk: list = []
+    n = 0
+    for b in batches:
+        chunk.append(b)
+        n += b.num_rows
+        if n >= rows:
+            yield chunk
+            chunk, n = [], 0
+    if chunk:
+        yield chunk
 
 
 class JdbcMergeWriter:
@@ -537,13 +652,15 @@ class JdbcMergeWriter:
         self.pks = [primary_key] if isinstance(primary_key, str) else list(primary_key or [])
         self.batch_size = batch_size
         self.truncate_first = truncate_first
+        self.rows_written = 0  # input rows of the last write()
         if self.mode == WriteMode.MERGE and not self.pks:
             raise ValueError("merge mode requires a primary key")
 
     # -- setup (driver-side, once) ----------------------------------------
-    def prepare(self, schema: T.StructType) -> None:
+    def prepare(self, schema: T.StructType):
         """ensure_table + additive schema evolution + optional truncate
-        (S13/S18), one driver connection.
+        (S13/S18), one driver connection. Returns the COPY route
+        :meth:`write` takes for ``schema`` (see :meth:`_copy_route`).
 
         Evolution policy: columns present in the DataFrame but missing from
         an existing target are added via ``ALTER TABLE ADD COLUMN``
@@ -552,8 +669,7 @@ class JdbcMergeWriter:
         values. (The reference has no schema evolution at all —
         reference README.md:125 lists it as future work.)
         """
-        conn = self.conn_factory()
-        try:
+        with self._transaction() as conn:
             cur = conn.cursor()
             cur.execute(
                 ddl_for_schema(
@@ -566,9 +682,8 @@ class JdbcMergeWriter:
                     cur.execute(f"TRUNCATE TABLE {quote_ident_path(self.table)}")
                 except Exception:  # noqa: BLE001 — missing table tolerated (42P01)
                     pass
-            conn.commit()
-        finally:
-            conn.close()
+            version = self.dialect.server_version(conn)
+            return self._copy_route(conn, version, schema)
 
     def _evolve_schema(self, cur, schema: T.StructType) -> None:
         """Add DataFrame columns missing from the live table (additive only)."""
@@ -649,126 +764,13 @@ class JdbcMergeWriter:
             f"{self.dialect.name} {version} supports neither MERGE nor ON CONFLICT"
         )
 
-    def write_rows(self, rows: Iterable, schema: T.StructType) -> int:
-        """Write an iterable of Rows on ONE connection in ONE transaction.
-
-        This is the per-partition body; also usable directly for
-        driver-side writes/tests.
-        """
-        columns = [f.name for f in schema.fields]
-        dtypes = [f.dataType for f in schema.fields]
-        chunk_rows = rows_per_statement(len(columns), self.batch_size)
+    @contextlib.contextmanager
+    def _transaction(self) -> Iterator:
+        """One connection, one transaction (S22): commit when the block
+        finishes, roll back when it raises."""
         conn = self.conn_factory()
-        written = 0
         try:
-            version = self.dialect.server_version(conn)
-            cur = conn.cursor()
-            buf: list = []
-
-            use_bulk = self.mode in (WriteMode.APPEND, WriteMode.OVERWRITE)
-
-            merge_dedup = (
-                self.mode == WriteMode.MERGE
-                and self.pks
-                and not self.dialect.merge_as_insert()
-            )
-            pk_idx = (
-                [columns.index(p) for p in self.pks] if merge_dedup else []
-            )
-            # COPY-staged upsert: bulk-load each batch into a typed temp
-            # stage, apply with ONE server-side MERGE / INSERT..ON
-            # CONFLICT — the 65535-bind VALUES path becomes the fallback.
-            use_stage = (
-                merge_dedup
-                and (
-                    self.dialect.supports_merge(version)
-                    or self.dialect.supports_on_conflict(version)
-                )
-                and self.dialect.supports_copy_stage(conn)
-            )
-            stage = stage_table_name(self.table)
-            stage_stmt: str | None = None
-            if use_stage:
-                # COPY is bind-limit-free; bigger batches amortize the
-                # per-cycle MERGE + TRUNCATE. The VALUES fallback below
-                # re-slices to the bind limit if COPY is refused.
-                chunk_rows = max(chunk_rows, STAGE_BATCH_ROWS)
-
-            def flush():
-                nonlocal written, use_bulk, use_stage, stage_stmt
-                if merge_dedup and len(buf) > 1:
-                    # Postgres rejects duplicate keys inside one INSERT..ON
-                    # CONFLICT DO UPDATE / MERGE statement ("command cannot
-                    # affect row a second time"); CDC increments routinely
-                    # repeat a PK. Last-wins within the statement — the same
-                    # outcome the rows would produce applied sequentially.
-                    last = {tuple(r[i] for i in pk_idx): r for r in buf}
-                    if len(last) < len(buf):
-                        buf[:] = list(last.values())
-                if not buf:
-                    return
-                if use_stage:
-                    rendered = [
-                        tuple(
-                            _bind_value(r[i], dtypes[i], self.dialect)
-                            for i in range(len(columns))
-                        )
-                        for r in buf
-                    ]
-                    if stage_stmt is None:
-                        cur.execute(stage_ddl(self.dialect, stage, schema))
-                        stage_stmt = (
-                            merge_from_stage_sql(
-                                self.table, stage, columns, self.pks
-                            )
-                            if self.dialect.supports_merge(version)
-                            else upsert_from_stage_sql(
-                                self.table, stage, columns, self.pks
-                            )
-                        )
-                    if self.dialect.bulk_append(conn, stage, columns, rendered):
-                        cur.execute(stage_stmt)
-                        cur.execute(f"TRUNCATE TABLE {quote_ident(stage)}")
-                        written += len(buf)
-                        buf.clear()
-                        return
-                    use_stage = False  # COPY refused → VALUES merge path
-                if use_bulk:
-                    rendered = [
-                        tuple(
-                            _bind_value(r[i], dtypes[i], self.dialect)
-                            for i in range(len(columns))
-                        )
-                        for r in buf
-                    ]
-                    if self.dialect.bulk_append(conn, self.table, columns, rendered):
-                        written += len(buf)
-                        buf.clear()
-                        return
-                    use_bulk = False  # unsupported → INSERT from here on
-                # bind-limit-aware slicing: a buffer accumulated for the
-                # (limit-free) stage path may exceed one statement here
-                limit = rows_per_statement(len(columns), self.batch_size)
-                for s in range(0, len(buf), limit):
-                    part = buf[s : s + limit]
-                    sql = self._statement(
-                        len(columns), columns, version, len(part), dtypes
-                    )
-                    params: list = []
-                    for r in part:
-                        params.extend(
-                            _bind_value(r[i], dtypes[i], self.dialect)
-                            for i in range(len(columns))
-                        )
-                    cur.execute(sql, params)
-                written += len(buf)
-                buf.clear()
-
-            for row in rows:
-                buf.append(row)
-                if len(buf) >= chunk_rows:
-                    flush()
-            flush()
+            yield conn
             conn.commit()
         except Exception:
             try:
@@ -778,12 +780,175 @@ class JdbcMergeWriter:
             raise
         finally:
             conn.close()
+
+    def write_rows(self, rows: Iterable, schema: T.StructType) -> int:
+        """Write an iterable of Rows on ONE connection in ONE transaction;
+        returns the rows written after PK dedup. The row partition body
+        of :meth:`write`, also usable for driver-side writes/tests. On a
+        COPY route the rows convert to Arrow and take
+        :meth:`_copy_batches`, as :meth:`write_batches` does."""
+        with self._transaction() as conn:
+            version = self.dialect.server_version(conn)
+            route = self._copy_route(conn, version, schema)
+            if route is None:
+                return self._write_rows_on(conn, version, rows, schema)
+            from pyspark.sql.conversion import LocalDataToArrowConversion
+
+            rows = iter(rows)
+            batches = (
+                b
+                for chunk in iter(
+                    lambda: list(itertools.islice(rows, STAGE_BATCH_ROWS)), []
+                )
+                for b in LocalDataToArrowConversion.convert(
+                    chunk, schema, False
+                ).to_batches()
+            )
+            return self._copy_batches(conn, batches, schema, *route)
+
+    def _write_rows_on(self, conn, version, rows: Iterable, schema: T.StructType) -> int:
+        columns = [f.name for f in schema.fields]
+        dtypes = [f.dataType for f in schema.fields]
+        chunk_rows = rows_per_statement(len(columns), self.batch_size)
+        written = 0
+        cur = conn.cursor()
+        buf: list = []
+
+        use_bulk = self.mode in (WriteMode.APPEND, WriteMode.OVERWRITE)
+
+        merge_dedup = (
+            self.mode == WriteMode.MERGE
+            and self.pks
+            and not self.dialect.merge_as_insert()
+        )
+        pk_idx = (
+            [columns.index(p) for p in self.pks] if merge_dedup else []
+        )
+
+        def flush():
+            nonlocal written, use_bulk
+            if merge_dedup and len(buf) > 1:
+                # Postgres rejects duplicate keys inside one INSERT..ON
+                # CONFLICT DO UPDATE / MERGE statement ("command cannot
+                # affect row a second time"); CDC increments routinely
+                # repeat a PK. Last-wins within the statement — the same
+                # outcome the rows would produce applied sequentially.
+                last = {tuple(r[i] for i in pk_idx): r for r in buf}
+                if len(last) < len(buf):
+                    buf[:] = list(last.values())
+            if not buf:
+                return
+            rendered = [
+                tuple(
+                    _bind_value(r[i], dtypes[i], self.dialect)
+                    for i in range(len(columns))
+                )
+                for r in buf
+            ]
+            if use_bulk:
+                if self.dialect.bulk_append(conn, self.table, columns, rendered):
+                    written += len(buf)
+                    buf.clear()
+                    return
+                use_bulk = False  # unsupported → INSERT from here on
+            sql = self._statement(len(columns), columns, version, len(buf), dtypes)
+            cur.execute(sql, [v for r in rendered for v in r])
+            written += len(buf)
+            buf.clear()
+
+        for row in rows:
+            buf.append(row)
+            if len(buf) >= chunk_rows:
+                flush()
+        flush()
+        return written
+
+    def write_batches(self, batches: Iterable, schema: T.StructType) -> int:
+        """The COPY partition body of :meth:`write`: Arrow record batches
+        in, written through :meth:`_copy_batches` on ONE connection in ONE
+        transaction. Returns the input row count, before PK dedup. An
+        empty partition opens no connection."""
+        batches = iter(batches)
+        head = next(batches, None)
+        if head is None:
+            return 0
+        n_in = 0
+
+        def counted():
+            nonlocal n_in
+            for b in itertools.chain([head], batches):
+                n_in += b.num_rows
+                yield b
+
+        with self._transaction() as conn:
+            version = self.dialect.server_version(conn)
+            route = self._copy_route(conn, version, schema)
+            if route is None:
+                raise RuntimeError(f"{self.dialect.name}: no COPY route for {self.table}")
+            self._copy_batches(conn, counted(), schema, *route)
+        return n_in
+
+    def _copy_route(self, conn, version, schema: T.StructType):
+        """``(COPY table, statement applying it or None)`` when the batches
+        can ride COPY as CSV, else None: the dialect has COPY, every column
+        type renders (:func:`_csv_table`), and the mode is append/overwrite
+        (COPY into the target) or an upsert the engine can apply from a
+        temp stage with ONE statement — MERGE, else INSERT .. ON
+        CONFLICT."""
+        if not (
+            all(isinstance(f.dataType, _COPY_TYPES) for f in schema.fields)
+            and self.dialect.supports_copy_stage(conn)
+        ):
+            return None
+        if self.mode in (WriteMode.APPEND, WriteMode.OVERWRITE):
+            return self.table, None
+        if self.dialect.merge_as_insert():
+            return None
+        stage = stage_table_name(self.table)
+        if self.dialect.supports_merge(version):
+            return stage, merge_from_stage_sql(self.table, stage, schema.names, self.pks)
+        if self.dialect.supports_on_conflict(version):
+            return stage, upsert_from_stage_sql(self.table, stage, schema.names, self.pks)
+        return None
+
+    def _copy_batches(self, conn, batches, schema: T.StructType, table: str, apply) -> int:
+        """COPY the batches as CSV in ``STAGE_BATCH_ROWS`` chunks: straight
+        into ``table``, or deduplicated last-wins by PK into the temp
+        stage ``table`` and applied by ``apply`` once per chunk. Returns
+        the rows written after dedup."""
+        import pyarrow as pa
+        from pyarrow import csv as pacsv
+
+        cur = conn.cursor()
+        if apply is not None:
+            cur.execute(stage_ddl(self.dialect, table, schema))
+        written = 0
+        for chunk in _chunked(batches, STAGE_BATCH_ROWS):
+            tbl = pa.Table.from_batches(chunk)
+            if apply is not None:
+                tbl = _last_wins(tbl, self.pks)
+            buf = io.BytesIO()
+            pacsv.write_csv(
+                _csv_table(tbl, schema),
+                buf,
+                pacsv.WriteOptions(include_header=False),
+            )
+            buf.seek(0)
+            if not self.dialect.copy_csv(conn, table, schema.names, buf):
+                raise RuntimeError(f"{self.dialect.name}: COPY refused for {table}")
+            if apply is not None:
+                cur.execute(apply)
+                cur.execute(f"TRUNCATE TABLE {quote_ident(table)}")
+            written += tbl.num_rows
         return written
 
     # -- distributed write -------------------------------------------------
-    def write(self, df: DataFrame) -> None:
+    def write(self, df: DataFrame) -> int:
         """Create the table, then stream every partition through its own
         connection (merge/upsert is idempotent by PK → task-retry safe).
+        Sets and returns ``rows_written``: the input row count, summed
+        from the per-partition counts the write job returns, so callers
+        need no second action to count the result.
 
         MERGE/upsert writes hash-partition by primary key first: equal
         keys land in ONE partition, so the within-buffer last-wins dedup
@@ -797,7 +962,7 @@ class JdbcMergeWriter:
         Single-writer engines (DuckDB test stand-in) coalesce to one
         partition first; real warehouses take the full parallel fan-in.
         """
-        self.prepare(df.schema)
+        copy_route = self.prepare(df.schema)
         if (
             self.mode == WriteMode.MERGE
             and self.pks
@@ -808,9 +973,31 @@ class JdbcMergeWriter:
         if self.dialect.single_writer:
             df = df.coalesce(1)
         schema = df.schema
-        writer = self  # dataclass-free self is picklable (factory must be too)
+        writer = self  # picklable as long as the factory is
 
-        def handle_partition(it):
-            writer.write_rows(it, schema)
+        if copy_route is not None:
 
-        df.foreachPartition(handle_partition)
+            def copy_partition(batches):
+                import pyarrow as pa
+
+                n = writer.write_batches(batches, schema)
+                yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int64())})
+
+            counts = [r.n for r in df.mapInArrow(copy_partition, "n long").collect()]
+        else:
+
+            def row_partition(rows):
+                n = 0
+
+                def counted():
+                    nonlocal n
+                    for r in rows:
+                        n += 1
+                        yield r
+
+                writer.write_rows(counted(), schema)
+                yield n
+
+            counts = df.rdd.mapPartitions(row_partition).collect()
+        self.rows_written = sum(counts)
+        return self.rows_written

@@ -16,7 +16,7 @@ the DSN) including SCRAM-SHA-256-PLUS channel binding
 protocol (Parse/Bind/Describe/Execute/Sync) with all parameters and
 results in text format, typed decode of the common OIDs, and
 protocol-level COPY in both directions via ``Cursor.copy_expert`` —
-COPY IN is the fast path ``JdbcMergeWriter.bulk_append`` probes for
+COPY IN is the fast path ``PostgresDialect.copy_csv`` probes for
 and the bench measures; COPY OUT feeds the apitap_postgres
 DataSource's per-stride bulk read.
 Not implemented: binary format — the sink does not need it.

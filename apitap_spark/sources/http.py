@@ -30,11 +30,14 @@ Reference behaviors reproduced (SURVEY §2.1):
       Spark JSON inference's widen-to-double / fallback-to-string lattice
       (reference ``src/http/fetcher.rs:667-727``, ``src/utils/schema.rs``).
 
-Scale design: page fetches distribute via ``spark.range(pages)`` +
-``mapInPandas`` — one HTTP request per page, pages spread across
-executors, rows never pass through the driver (except the ≤100-row
-schema sample and the driver-side sequential cursor walk, which is
-inherently serial). Unknown totals are discovered with an O(log n)
+Scale design: a load is ONE plan, ``spark.range(0, n_pages, 1, k)`` +
+``mapInPandas`` — one HTTP request per page, pages spread over ``k``
+tasks, rows never pass through the driver (except page 0, fetched once
+on the driver for its schema sample and total hint and shipped to its
+task inside the fetch closure, and the driver-side sequential cursor
+walk, which is inherently serial). Schema inference runs at analysis
+time (``schema_of_json`` over the sample), so building the frame
+launches no Spark job. Unknown totals are discovered with an O(log n)
 exponential+binary probe on the driver, then fetched in one parallel
 pass — the reference's sequential stop-on-empty loop becomes two
 phases: cheap discovery, then an embarrassingly parallel read.
@@ -583,9 +586,21 @@ class HttpSource:
         """≤sample_size-row schema inference, fixed for the run (reference
         src/http/fetcher.rs:667-727): Spark's JSON inference implements the
         same widen-int⊔float→double / conflict→string lattice natively
-        (SURVEY §1.2)."""
-        sample = [json.dumps(r) for r in sample_rows[: self.sample_size]]
-        return spark.read.json(spark.sparkContext.parallelize(sample, 1)).schema
+        (SURVEY §1.2).
+
+        Object rows go through ``schema_of_json`` over the sample as ONE
+        JSON array: it runs the JSON reader's inference at analysis time,
+        so no Spark job is launched, and the element type equals what
+        ``spark.read.json`` infers for the same rows (property-tested).
+        Non-object rows keep the reader job, whose top-level handling of
+        scalars and nested arrays differs."""
+        sample = sample_rows[: self.sample_size]
+        if not all(isinstance(r, dict) for r in sample):
+            lines = [json.dumps(r) for r in sample]
+            return spark.read.json(spark.sparkContext.parallelize(lines, 1)).schema
+        text = F.lit(json.dumps(sample))
+        probe = spark.range(1).select(F.from_json(text, F.schema_of_json(text)))
+        return probe.schema[0].dataType.elementType
 
     def load(self, spark: SparkSession) -> DataFrame:
         """Fetch the full source as a DataFrame (schema inferred from the
@@ -634,19 +649,21 @@ class HttpSource:
             else:
                 n_pages = self._probe_page_count(session=sess)
 
-        # Distributed fetch of pages 1..n-1 (page 0 ships from the driver —
-        # "fetch once", SURVEY §7.4); executor-side requests.Session per
-        # partition. Partition count is capped at max_concurrency (the
-        # reference's buffer_unordered(5) politeness, src/http/fetcher.rs:
-        # 434-497): each task walks its pages sequentially, so at most
-        # max_concurrency requests are ever in flight — on local[32] and
-        # on a 1000-executor cluster alike.
+        # Distributed fetch of pages 0..n-1 in one plan. Page 0 was fetched
+        # above and rides in the closure ("fetch once", SURVEY §7.4); the
+        # task holding it emits those rows without a request. Executor-side
+        # requests.Session per partition. The task count is capped at
+        # max_concurrency (the reference's buffer_unordered(5) politeness,
+        # src/http/fetcher.rs:434-497): each task walks its pages
+        # sequentially, so at most max_concurrency requests are ever in
+        # flight — on local[32] and on a 1000-executor cluster alike.
         sc = spark.sparkContext
         acc_pages, acc_rows, acc_retries = (
             sc.accumulator(0), sc.accumulator(0), sc.accumulator(0)
         )
         self._accs = (acc_pages, acc_rows, acc_retries)
         src = self  # capture for closure; dataclass pickles cleanly
+        first_json = [json.dumps(r) for r in first]
 
         def fetch_partition(batches: Iterator) -> Iterator:
             import pandas as pd
@@ -661,26 +678,22 @@ class HttpSource:
                     retries[0] += 1
 
                 for page_idx in pdf["id"]:
-                    for row in src._fetch_page(
+                    if page_idx == 0:
+                        out.extend(first_json)  # fetched and counted on the driver
+                        continue
+                    rows = src._fetch_page(
                         int(page_idx), session=sess, on_retry=_on_retry
-                    ):
-                        out.append(json.dumps(row))
-                acc_pages.add(len(pdf))
-                acc_rows.add(len(out))
+                    )
+                    out.extend(json.dumps(row) for row in rows)
+                    acc_pages.add(1)
+                    acc_rows.add(len(rows))
                 acc_retries.add(retries[0])
                 yield pd.DataFrame({"value": out})
 
-        parts = [
-            spark.createDataFrame(
-                [(json.dumps(r),) for r in first], "value string"
-            )
-        ]
-        if n_pages > 1:
-            pages = spark.range(1, n_pages).repartition(
-                min(n_pages - 1, max(1, self.max_concurrency))
-            )
-            parts.append(pages.mapInPandas(fetch_partition, schema="value string"))
-        raw = parts[0] if len(parts) == 1 else parts[0].unionAll(parts[1])
+        tasks = min(n_pages, max(1, self.max_concurrency))
+        raw = spark.range(0, n_pages, 1, tasks).mapInPandas(
+            fetch_partition, schema="value string"
+        )
         return raw.select(F.from_json(F.col("value"), schema).alias("j")).select("j.*")
 
     def _page_size_guess(self) -> int:

@@ -26,6 +26,7 @@ class MockApi:
         self.inflight = 0  # concurrent in-flight requests right now
         self.max_inflight = 0  # high-water mark (politeness-cap assertions)
         self.delay_sec = 0.0  # per-request hold, makes overlap observable
+        self.served: list = []  # (route, query params, body) per 200 response
         self.lock = threading.Lock()
         self.server: ThreadingHTTPServer | None = None
         # OAuth2 client-credentials endpoint state (/token + /protected)
@@ -81,6 +82,8 @@ class MockApi:
                         self.end_headers()
                         self.wfile.write(str(exc).encode())
                         return
+                    with api.lock:
+                        api.served.append((route, qs, body))
                     data = (
                         body if isinstance(body, bytes) else json.dumps(body).encode()
                     )

@@ -428,6 +428,93 @@ def test_fetch_stats_counts(spark, big_api):
     assert s.retries == 2
 
 
+
+# ---- fetch-once accounting ------------------------------------------------
+def _page_index(route: str, qs: dict) -> int:
+    if route == "page_number":
+        return int(qs["page"]) - 1
+    if route == "page_number_nohint":
+        return int(qs["pageNum"]) - 1
+    return int(qs["offset"]) // int(qs["limit"])
+
+
+_HINT = TotalHint("items", "/meta/total")
+FETCH_CASES = {
+    # name: (route, pagination, data_path, rows, pages the load reads)
+    "hint_n_pages": (
+        "page_number", PageNumberPagination(per_page=10, total_hint=_HINT),
+        "/data", ROWS, 6,
+    ),
+    "hint_1_page": (
+        "page_number", PageNumberPagination(per_page=100, total_hint=_HINT),
+        "/data", ROWS, 1,
+    ),
+    "nohint_1_page": (
+        "page_number_nohint",
+        PageNumberPagination(
+            per_page=100, page_param="pageNum", per_page_param="pageSize"
+        ),
+        "/results", ROWS, 1,
+    ),
+    "nohint_n_pages": (
+        "limit_offset", LimitOffsetPagination(limit=10), None, ROWS, 6,
+    ),
+    "empty_first_page": (
+        "limit_offset", LimitOffsetPagination(limit=10), None, [], 1,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(FETCH_CASES))
+def test_fetch_once_accounting(spark, monkeypatch, case):
+    """Each page the load reads is requested exactly once — page 0 on the
+    driver, never again by its task — and the only other requests are
+    the unknown-total probe's. stats() equals what the API served, the
+    frame holds exactly the served rows, and building it launches no
+    Spark job."""
+    from collections import Counter
+
+    route, pagination, data_path, rows, n_pages = FETCH_CASES[case]
+    api = MockApi(rows)
+    base = api.start()
+    probed = []
+    probe = HttpSource._probe_fetch
+
+    def spy(self, page_idx, session):
+        probed.append(page_idx)
+        return probe(self, page_idx, session)
+
+    monkeypatch.setattr(HttpSource, "_probe_fetch", spy)
+    sc = spark.sparkContext
+    group = f"fetch_once_{case}"
+    try:
+        src = HttpSource(
+            name=case, url=f"{base}/{route}", pagination=pagination,
+            data_path=data_path,
+        )
+        sc.setJobGroup(group, group)
+        try:
+            df = src.load(spark)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        out = df.collect()
+    finally:
+        api.stop()
+
+    requested = Counter(_page_index(r, q) for r, q, _ in api.served)
+    assert requested == Counter(range(n_pages)) + Counter(probed)
+    assert requested[0] == 1
+    served = {
+        _page_index(r, q): drill_data_path(body, data_path)
+        for r, q, body in api.served
+    }
+    read = [row for p in range(n_pages) for row in served[p]]
+    s = src.stats()
+    assert s.pages == len(api.served)
+    assert s.rows == len(read) == len(rows)
+    assert sorted(r["id"] for r in out) == sorted(row["id"] for row in read)
+
 def test_min_request_interval_throttles(spark, big_api):
     import time as _t
 

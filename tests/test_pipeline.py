@@ -214,6 +214,53 @@ def test_cli_runs(tmp_path, api, modules_dir, capsys):
     con.close()
 
 
+
+# Spark jobs of one run_module over the mock API into DuckDB, measured
+# when the write job started counting the rows it loads: the write's
+# single job. Before, schema inference and result.count() added two.
+RUN_MODULE_JOB_BUDGET = 1
+
+
+def test_run_module_job_budget(spark, tmp_path, api):
+    """A module run launches no JSON-inference and no count job: the
+    schema is inferred at analysis time and the write job returns the
+    row count, which must equal the rows that landed."""
+    from apitap_spark.config.models import load_config_from_path
+    from apitap_spark.pipeline.runner import run_module
+
+    duck_path = os.path.join(tmp_path, "budget.duckdb")
+    cfg = load_config_from_path(_write_cfg(tmp_path, api.base, duck_path))
+    sql_dir = tmp_path / "budget"
+    sql_dir.mkdir()
+    (sql_dir / "m.sql").write_text(
+        "{{ sink(name='budget_posts') }}"
+        "SELECT id, title FROM {{ use_source('posts') }} WHERE userId > 3"
+    )
+    sc = spark.sparkContext
+    group = "run_module_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        stats = run_module(spark, cfg, str(sql_dir), "m.sql", "wh")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [
+        tracker.getStageInfo(s).name
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert not [n for n in stages if n.startswith("json at")], stages
+    # AQE submits a count() under a thread-pool call site, not "count at",
+    # so the budget is what catches it: the module has no shuffle, and the
+    # write alone is one job
+    assert len(jobs) <= RUN_MODULE_JOB_BUDGET, stages
+    expected = sum(1 for r in ROWS if r["userId"] > 3)
+    con = duckdb.connect(duck_path)
+    landed = con.execute("SELECT count(*) FROM budget_posts").fetchone()[0]
+    con.close()
+    assert landed == stats.rows_written == expected
+
 def test_incremental_sync_high_watermark(spark, tmp_path):
     """Second run fetches only rows past the watermark; warehouse converges
     (reference roadmap: incremental sync state management)."""

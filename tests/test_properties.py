@@ -124,6 +124,48 @@ def test_inference_json_roundtrip_parseable(rows):
         json.dumps(tup)  # all values JSON-serializable
 
 
+
+# Keys that stress the analysis-time inference: dots, backticks, spaces,
+# non-ASCII, SQL keywords, the empty name and case-only duplicates.
+json_keys = st.sampled_from(
+    ["a", "A", "b", "B", "a.b", "x`y", "two words", "ñame", "Жж", "select", ""]
+) | st.text(max_size=4)
+json_leaves = st.one_of(
+    st.none(),
+    st.booleans(),
+    st.integers(min_value=-(2**70), max_value=2**70),  # beyond 64 bits too
+    st.integers(min_value=-3, max_value=3),
+    st.floats(allow_nan=False, allow_infinity=False),
+    st.text(max_size=6),
+)
+json_values = st.recursive(
+    json_leaves,
+    lambda inner: st.lists(inner, max_size=3)
+    | st.dictionaries(json_keys, inner, max_size=3),
+    max_leaves=8,
+)
+
+
+@given(
+    rows=st.lists(
+        st.dictionaries(json_keys, json_values, max_size=4),
+        min_size=1,
+        max_size=6,
+    )
+)
+@settings(max_examples=40, deadline=None)
+def test_http_inference_matches_json_reader(spark, rows):
+    """HttpSource.infer_schema (schema_of_json at analysis time) infers
+    exactly the schema a spark.read.json job infers for the same object
+    rows: nested objects and arrays, int/float/string/bool conflicts,
+    null-only fields, empty arrays and objects, wide ints."""
+    from apitap_spark.sources.http import HttpSource
+
+    lines = [json.dumps(r) for r in rows]
+    want = spark.read.json(spark.sparkContext.parallelize(lines, 1)).schema
+    got = HttpSource(name="p", url="-").infer_schema(spark, rows)
+    assert got == want
+
 def test_cramer_det4_matches_numpy():
     """The shared fully-parenthesized determinant strings (evaluated by
     the logreg driver AND spliced into the DuckDB oracle) agree with

@@ -3,7 +3,11 @@ upsert/append/overwrite semantics against a DuckDB stand-in database."""
 
 from __future__ import annotations
 
+import datetime as dt
+import json
+import math
 import os
+from decimal import Decimal
 
 import duckdb
 import pytest
@@ -14,6 +18,7 @@ from apitap_spark.sinks.jdbc_merge import (
     JdbcMergeWriter,
     PostgresDialect,
     WriteMode,
+    _bind_value,
     ddl_for_schema,
     insert_sql,
     merge_sql,
@@ -251,44 +256,39 @@ def test_write_rows_driver_side(duck_path):
 
 
 def test_postgres_copy_bulk_append_shape():
-    """COPY path: SQL + CSV payload shape via a fake copy_expert cursor."""
-    captured = {}
-
-    class FakeCur:
-        def copy_expert(self, sql, buf):
-            captured["sql"] = sql
-            captured["csv"] = buf.read()
-
-        def execute(self, *a):
-            pass
-
-        def fetchone(self):
-            return ("PostgreSQL 15.1",)
-
-    class FakeConn:
-        def cursor(self):
-            return FakeCur()
-
-    d = PostgresDialect()
-    ok = d.bulk_append(
-        FakeConn(), "public.t", ["id", "name"], [(1, "a"), (2, None), (3, 'q"x')]
+    """COPY append path: SQL + CSV payload shape via a fake copy_expert
+    cursor (:class:`CopyConn`)."""
+    conn = CopyConn()
+    w = JdbcMergeWriter(
+        lambda: conn, "public.t", dialect=PostgresDialect(), mode=WriteMode.APPEND
     )
-    assert ok
-    assert captured["sql"].startswith('COPY "public"."t" ("id", "name") FROM STDIN')
-    assert "NULL ''" in captured["sql"]
-    lines = captured["csv"].strip().splitlines()
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
+    )
+    assert w.write_rows([(1, "a"), (2, None), (3, 'q"x')], schema) == 3
+    [(sql, data)] = conn.copies
+    assert sql.startswith('COPY "public"."t" ("id", "name") FROM STDIN')
+    assert "NULL ''" in sql
     # strings are ALWAYS quoted: with NULL '' an unquoted empty field is
     # NULL, so only quoting keeps '' distinct from NULL (found live on
     # PG 15 — csv.writer's minimal quoting silently nulled empty strings)
-    assert lines[0] == '1,"a"'
-    assert lines[1] == "2,"  # None → unquoted empty = NULL
-    assert lines[2] == '3,"q""x"'  # escaped quote
+    assert data.decode().splitlines() == [
+        '1,"a"',
+        "2,",  # None → unquoted empty = NULL
+        '3,"q""x"',  # escaped quote
+    ]
     # the live-semantics cases: empty string stays quoted, bytes → bytea
-    captured.clear()
-    d.bulk_append(FakeConn(), "t", ["id", "v"], [(1, ""), (2, b"\x00\xff")])
-    lines = captured["csv"].strip().splitlines()
-    assert lines[0] == '1,""'
-    assert lines[1] == "2,\\x00ff"
+    conn.copies.clear()
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("v", T.StringType()),
+            T.StructField("b", T.BinaryType()),
+        ]
+    )
+    w.write_rows([(1, "", b"\x00\xff")], schema)
+    [(_, data)] = conn.copies
+    assert data.decode() == '1,"","\\x00ff"\n'
 
 
 def test_duckdb_bulk_append_used_for_append(spark, duck_path):
@@ -397,3 +397,310 @@ def test_existing_columns_schema_qualified(duck_path):
         ).fetchall()
     }
     assert "extra" in cols
+
+
+# ---- partition bodies: edge values ---------------------------------------
+# Shared with test_sink_postgres.py, which sends the same rows through the
+# COPY-rendered CSV path on a live server.
+EDGE_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("f", T.DoubleType()),
+        T.StructField("r", T.FloatType()),
+        T.StructField("amount", T.DecimalType(12, 3)),
+        T.StructField("day", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ok", T.BooleanType()),
+    ]
+)
+_DAY = dt.date(2024, 2, 29)
+_TS = dt.datetime(2024, 3, 1, 12, 30, 45, 123456)
+EDGE_ROWS = [
+    (1, None, float("nan"), 0.1, Decimal("1.500"), _DAY, _TS, True),
+    (2, "", float("inf"), None, None, None, None, None),
+    (3, 'quo"te, comma', float("-inf"), float("nan"), Decimal("-0.001"), _DAY, _TS, False),
+    (4, "line\nbreak\\back\\slash", 2.5, 1.5, Decimal("123456789.125"), _DAY, _TS, True),
+    (5, "ünïcödé ✓ 日本", -0.0, -2.0, Decimal("0.000"), _DAY, _TS, False),
+    # duplicate PK in the same partition: the last one wins
+    (1, "last wins", 1.25, 3.0, Decimal("9.999"), dt.date(1999, 12, 31),
+     dt.datetime(1999, 12, 31, 23, 59, 59), False),
+]
+
+
+def edge_expected() -> list[tuple]:
+    """Target rows after one MERGE of EDGE_ROWS: the last row per id, NaN
+    and ±inf as NULL, and the float32 column widened as a Row carries it."""
+    import numpy as np
+
+    def bound(i, v):
+        if isinstance(v, float) and not math.isfinite(v):
+            return None
+        if i == 3 and v is not None:
+            return float(np.float32(v))
+        return v
+
+    last = {r[0]: tuple(bound(i, v) for i, v in enumerate(r)) for r in EDGE_ROWS}
+    return [last[k] for k in sorted(last)]
+
+
+NESTED_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("tags", T.ArrayType(T.StringType())),
+        T.StructField(
+            "meta",
+            T.StructType(
+                [T.StructField("k", T.StringType()), T.StructField("n", T.LongType())]
+            ),
+        ),
+        T.StructField("attrs", T.MapType(T.StringType(), T.DoubleType())),
+    ]
+)
+NESTED_ROWS = [
+    (1, ["a", 'q"x', "b\\s"], ("v", 7), {"x": 1.5}),
+    (2, [], None, {}),
+    (3, None, ("", None), None),
+]
+# what the row path has always bound for NESTED_ROWS (json.dumps of dicts);
+# ASCII only: jsonb rejects \u escapes above 007F in a non-UTF8 database
+NESTED_JSON = {
+    1: (json.dumps(["a", 'q"x', "b\\s"]), json.dumps({"k": "v", "n": 7}), json.dumps({"x": 1.5})),
+    2: ("[]", None, "{}"),
+    3: (None, json.dumps({"k": "", "n": None}), None),
+}
+
+
+def test_edge_values_merge_duckdb(spark, duck_path):
+    """The row partition body: NULL vs '', NaN/±inf as NULL, awkward
+    text, decimal/date/timestamp/bool, last-wins PK dedup, and
+    rows_written counting the input rows before dedup."""
+    w = _writer(duck_path, WriteMode.MERGE, primary_key="id")
+    assert w.write(spark.createDataFrame(EDGE_ROWS, EDGE_SCHEMA)) == len(EDGE_ROWS)
+    assert w.rows_written == len(EDGE_ROWS)
+    got = duckdb.connect(duck_path).execute(
+        "SELECT * FROM target ORDER BY id"
+    ).fetchall()
+    assert got == edge_expected()
+
+
+def test_nested_columns_land_as_row_path_json_duckdb(spark, duck_path):
+    w = _writer(duck_path, WriteMode.MERGE, primary_key="id")
+    w.write(spark.createDataFrame(NESTED_ROWS, NESTED_SCHEMA))
+    got = duckdb.connect(duck_path).execute(
+        "SELECT id, tags, meta, attrs FROM target ORDER BY id"
+    ).fetchall()
+    assert {r[0]: r[1:] for r in got} == NESTED_JSON
+    meta = NESTED_SCHEMA["meta"].dataType
+    assert _bind_value({"k": "v", "n": 7}, meta, DuckDbDialect()) == NESTED_JSON[1][1]
+
+
+class CopyConn:
+    """DB-API stand-in for a PostgreSQL 15 connection with COPY: records
+    statements, COPY payloads and how each transaction ended."""
+
+    def __init__(self, fail_copy: bool = False):
+        self.sql: list = []
+        self.copies: list = []
+        self.ends: list = []
+        self.fail_copy = fail_copy
+
+    def cursor(self):
+        conn = self
+
+        class Cur:
+            def execute(self, sql, params=None):
+                conn.sql.append(sql)
+
+            def fetchone(self):
+                return ("PostgreSQL 15.4",)
+
+            def copy_expert(self, sql, f):
+                if conn.fail_copy:
+                    raise RuntimeError("connection lost mid-COPY")
+                conn.copies.append((sql, f.read()))
+
+        return Cur()
+
+    def commit(self):
+        self.ends.append("commit")
+
+    def rollback(self):
+        self.ends.append("rollback")
+
+    def close(self):
+        pass
+
+
+COPY_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("f", T.DoubleType()),
+        T.StructField("ts", T.TimestampType()),
+    ]
+)
+
+
+_UTC = dt.timezone.utc
+# the first and last share one New York wall-clock time (the DST fold);
+# the third is the last second before the spring-forward gap
+_COPY_TS = [
+    dt.datetime(2024, 11, 3, 5, 30, 0, 250000, tzinfo=_UTC),
+    None,
+    dt.datetime(2024, 3, 10, 6, 59, 59, 500000, tzinfo=_UTC),
+    dt.datetime(2024, 11, 3, 6, 30, 0, 250000, tzinfo=_UTC),
+]
+
+
+def _micros(t: dt.datetime) -> int:
+    return (t - dt.datetime(1970, 1, 1, tzinfo=_UTC)) // dt.timedelta(microseconds=1)
+
+
+def _copy_batch():
+    """One Arrow batch as mapInArrow hands it over: session timestamps
+    arrive zoned (UTC instants)."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_pydict(
+        {
+            "id": pa.array([1, 2, 3, 1], pa.int64()),
+            "s": pa.array([None, "", 'q"x,y', "a\nb\\c"]),
+            "f": pa.array([float("nan"), float("inf"), 1.5, 2.0]),
+            "ts": pa.array(_COPY_TS, pa.timestamp("us", tz="UTC")),
+        }
+    )
+
+
+@pytest.fixture(params=["UTC", "America/New_York"])
+def local_tz(request, monkeypatch):
+    """Run under a process time zone; restored (and re-read) afterwards."""
+    import time
+
+    monkeypatch.setenv("TZ", request.param)
+    time.tzset()
+    yield request.param
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_copy_body_renders_csv_and_dedups_last_wins(local_tz):
+    """The COPY partition body: pyarrow CSV into the stage with '' quoted
+    and NULL bare, NaN/inf as NULL, the duplicate PK deduplicated to its
+    last row, then one MERGE and one commit; returns the input row count.
+    Timestamps land as the local wall-clock time the row path bound
+    (``TimestampType.fromInternal``), including both sides of a DST
+    change when the process zone has one."""
+    conn = CopyConn()
+    w = JdbcMergeWriter(
+        lambda: conn, "public.t", dialect=PostgresDialect(),
+        mode=WriteMode.MERGE, primary_key="id",
+    )
+    assert w.write_batches(iter([_copy_batch()]), COPY_SCHEMA) == 4
+    [(sql, data)] = conn.copies
+    assert sql.startswith('COPY "_apitap_stage_t" ("id", "s", "f", "ts") FROM STDIN')
+    as_row = [
+        None if t is None else T.TimestampType().fromInternal(_micros(t))
+        for t in _COPY_TS
+    ]
+    assert data.decode() == (
+        '2,"",,\n'
+        f'3,"q""x,y",1.5,{as_row[2]}\n'
+        f'1,"a\nb\\c",2,{as_row[3]}\n'
+    )
+    if local_tz != "UTC":
+        # the two instants an hour apart share one local wall-clock time
+        assert as_row[3] == as_row[0]
+    assert any(q.startswith('MERGE INTO "public"."t"') for q in conn.sql)
+    assert conn.ends == ["commit"]
+
+
+def test_copy_body_append_copies_into_target_without_dedup():
+    conn = CopyConn()
+    w = JdbcMergeWriter(
+        lambda: conn, "t", dialect=PostgresDialect(), mode=WriteMode.APPEND
+    )
+    assert w.write_batches(iter([_copy_batch()] * 2), COPY_SCHEMA) == 8
+    [(sql, data)] = conn.copies
+    assert sql.startswith('COPY "t" ')
+    assert data.count(b"\n") == 10  # 8 row ends + 2 embedded newlines
+    assert not any("MERGE" in q for q in conn.sql)
+
+
+def test_copy_body_failure_rolls_back():
+    conn = CopyConn(fail_copy=True)
+    w = JdbcMergeWriter(
+        lambda: conn, "t", dialect=PostgresDialect(),
+        mode=WriteMode.MERGE, primary_key="id",
+    )
+    with pytest.raises(RuntimeError, match="mid-COPY"):
+        w.write_batches(iter([_copy_batch()]), COPY_SCHEMA)
+    assert conn.ends == ["rollback"]
+
+
+def test_empty_partition_opens_no_connection():
+    def refuse():
+        raise AssertionError("connected for an empty partition")
+
+    w = JdbcMergeWriter(refuse, "t", mode=WriteMode.MERGE, primary_key="id")
+    assert w.write_batches(iter([]), COPY_SCHEMA) == 0
+
+
+def test_nested_and_binary_columns_render_into_copy_csv():
+    """Array, struct and map columns reach the COPY stage as the row
+    path's JSON text (``_bind_value``), binary as the bytea hex form."""
+    import csv
+    import io
+
+    schema = T.StructType(
+        NESTED_SCHEMA.fields + [T.StructField("blob", T.BinaryType())]
+    )
+    blobs = {1: b"\x00\xff", 2: b"", 3: None}
+    conn = CopyConn()
+    w = JdbcMergeWriter(
+        lambda: conn, "t", dialect=PostgresDialect(),
+        mode=WriteMode.MERGE, primary_key="id",
+    )
+    assert w.write_rows([r + (blobs[r[0]],) for r in NESTED_ROWS], schema) == 3
+    [(_, data)] = conn.copies
+    got = {
+        int(r[0]): tuple(v or None for v in r[1:])
+        for r in csv.reader(io.StringIO(data.decode()))
+    }
+    hex_ = {1: "\\x00ff", 2: "\\x", 3: None}
+    assert got == {k: v + (hex_[k],) for k, v in NESTED_JSON.items()}
+
+
+def test_copy_json_matches_row_path_json(spark):
+    """Every complex column COPY renders from a mapInArrow batch equals the
+    JSON ``_bind_value`` makes of the collected Row value, quirks included
+    (structs below an array or map dump as JSON arrays), across nesting,
+    maps, timestamps, decimals, dates and float32."""
+    df = spark.sql(
+        """SELECT
+        array(named_struct('k', 'a', 'n', 1L,
+              'ts', TIMESTAMP'2024-11-03 06:30:00.25'), NULL) AS a,
+        map('x', named_struct('d', DATE'2024-02-29', 'x', 1.5D), 'y', NULL) AS m,
+        named_struct(
+            'inner', array(named_struct('q', CAST(1.5 AS DECIMAL(5,2)))),
+            'mm', map(1, 'one'), 't', TIMESTAMP'2024-03-10 06:59:59.5',
+            'ntz', TIMESTAMP_NTZ'2024-01-01 00:00:00', 'b', X'00FF',
+            'f', CAST(0.1 AS FLOAT)) AS s,
+        array(array(1L, NULL), array()) AS aa,
+        map('k', array(named_struct('z', 1))) AS ma"""
+    )
+    schema = df.schema
+
+    def render(batches):
+        import pyarrow as pa
+
+        from apitap_spark.sinks.jdbc_merge import _csv_table
+
+        for b in batches:
+            yield from _csv_table(pa.Table.from_batches([b]), schema).to_batches()
+
+    [got] = df.mapInArrow(render, ", ".join(f"{n} string" for n in schema.names)).collect()
+    [row] = df.collect()
+    want = [_bind_value(v, f.dataType, PostgresDialect()) for v, f in zip(row, schema)]
+    assert list(got) == want
+    assert want[0].startswith('[["a", 1, "2024-11-03T')  # a struct as a list
