@@ -28,201 +28,66 @@ if _REPO_DIR not in sys.path:
 
 _SHIPPED: set[int] = set()
 
-# The 49 gates registered in round 1 that the round-1 driver window never
-# reached (verdict: give every one a CORRECTNESS row in round 2). They
-# outrank gates added in round 2+, which wait their turn.
-_ROUND1_BACKLOG = {
-    "q_setop_except_all", "q2_cheapest_part_per_size",
-    "q11_nation_balance_share", "q13_order_count_distribution",
-    "q22_dormant_rich_customers", "q_retention_cohorts", "q4_order_priority",
-    "q8_market_share", "q9_product_profit", "q12_late_line_priority",
-    "q15_top_supplier", "q16_supplier_variety", "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue", "q20_promo_shippers", "q21_waiting_supplier",
-    "q_lateral_topn_orders", "q_window_range_time", "q_mode_median_price",
-    "q_salted_two_phase_agg", "q_string_agg_nations", "q_unpivot_measures",
-    "op_dedup_exact", "op_dedup_ngram_jaccard", "op_dedup_minhash_lsh",
-    "op_dedup_clusters", "op_dedup_simhash", "op_ann_cosine_topk",
-    "op_embedding_norms", "op_ann_lsh_bucketed", "op_ann_ivf_label",
-    "op_dedup_embedding_cosine", "op_text_token_stats",
-    "op_text_quality_score", "op_text_bpe_tokens", "op_text_lang_id",
-    "op_text_fingerprint", "op_text_winnowing", "op_multimodal_features",
-    "op_multimodal_metadata", "op_udtf_shingles", "op_pandas_udf_zscore",
-    "op_approx_aggregates", "op_corpus_curation",
-    "op_graph_session_components", "op_asof_join_attribution",
-    "op_split_train_valid_test", "op_stratified_sample", "op_kmeans_refine",
-}
-
-# Round-3-era gates the round-4 driver window displaced TWICE: round 4
-# added 99 gates and tier-2 preserved *module registration* order, so
-# newer gates in earlier-registered modules (plans -> dedup -> similarity
-# -> textstats ...) kept jumping these older gates in late-registered
-# modules (quality, ml, bpe).  Round-4 verdict task #1: front them the way
-# _ROUND1_BACKLOG fronted the round-1 stragglers.  Derived from git
-# (first commit mentioning each gate predates the round-3 marker 70ddb80)
-# and matching the judge's own list.  op_text_compression_ratio is the
-# 15th round-3 straggler but has no oracle by design (zlib codec), so it
-# stays in the rows-only tier.
-_ROUND3_BACKLOG = {
-    "op_bpe_learn_merges", "op_bpe_apply_tokens", "op_bpe_encode_docs",
-    "op_bpe_pack_training_rows", "op_data_profile", "op_data_validate",
-    "op_dataset_diff", "op_fk_integrity", "op_length_filter_bounds",
-    "op_lm_perplexity", "op_ml_logreg_quality", "op_numeric_correlation",
-    "op_robust_stats", "op_shard_plan",
-}
-
-# Gates first registered in round 5 or later.  Never-tested gates age by
-# round: these wait BEHIND every older never-tested gate so that adding a
-# new operator can never displace one that has already waited a round
-# (the starvation mode the round-4 verdict flagged).  Append here when
-# registering a new gate.
-_NEW_GATES: set[str] = {
-    # round 5: the shadowed conditional-min funnel, re-registered under
-    # its own name after the q_event_funnel duplicate-registration fix
-    "q_funnel_conditional_min",
-    # round 6: seven new operators — sized so the whole never-tested set
-    # (18 backlog + these) stays within the driver's 50-row window
-    "op_histogram_drift_l1",
-    "op_cramers_v_association",
-    "op_graph_bfs_hops",
-    "op_knn_label_accuracy",
-    "op_embedding_rp_sketch",
-    "op_gini_best_split",
-    "op_dedup_substring_spans",
-    "op_quantile_binning",
-    # round 7: five new operators — never-tested total stays within the
-    # driver's 50-row window (26 waiting + these 5)
-    "op_embedding_int8_quantization_audit",
-    "op_dedup_bloom_prefilter",
-    "op_stratified_kfold_assignment",
-    "op_label_agreement_kappa",
-    "op_ann_ivfpq_recall_audit",
-    # round 8: never-tested total stays well inside the driver's 50-row
-    # window (5 round-7 gates waiting + these)
-    "op_psi_drift",
-    "op_mutual_information",
-    "op_graph_kcore_peel",
-    "op_mmr_diversity_rerank",
-    "op_ml_naive_bayes_lang",
-    "op_text_zipf_fit",
-    "op_ml_adaboost_stump_round",
-    "op_graph_assortativity",
-    "op_text_boilerplate_prefix",
-    "op_embedding_matryoshka_audit",
-    "op_eval_pass_at_k",
-    "op_sketch_theta_overlap",
-    # round 9: training-run planning audits (operators/planning.py)
-    "op_token_budget_epochs",
-    "op_pad_waste_audit",
-    "op_quality_retention_sweep",
-    "op_privacy_randomized_response",
-    "op_fairness_equalized_odds",
-    "op_winsorized_moments",
-    "op_dedup_onion_share",
-    "op_ml_mcnemar_paired",
-    "op_curriculum_phases",
-    "op_survival_km",
-    "op_permutation_test",
-    "op_benchmark_vocab_coverage",
-    # round 10: retrieval/eval/statistics/graph additions
-    "op_ann_ndcg_audit",
-    "op_ab_test_mann_whitney",
-    "op_conformal_interval_audit",
-    "op_graph_trustrank_seeded",
-    "op_graph_resource_allocation",
-    "op_quality_brier_decomposition",
-    "op_dsir_importance_weights",
-    "op_shard_makespan_lpt",
-    "op_krippendorff_alpha",
-    "op_graph_transitivity",
-    "op_tokenizer_unigram_viterbi",
-    "op_embedding_isotropy_audit",
-    "op_ann_lsh_recall_curve",
-    "op_dedup_threshold_curve",
-    "op_ml_auprc_grid",
-    "op_ab_test_poisson_rates",
-    # round 8: five new gates (round-7 verdict asked <=5) — the window
-    # still drained most of the r1 staleness alongside them
-    "op_event_seasonality",
-    "op_data_skew_audit",
-    "op_text_ngram_novelty",
-    "op_dedup_cluster_size_histogram",
-    "op_event_gap_quantiles",
-    # round 9: evidence-drain round — four new gates only (2 rechecks +
-    # 4 new + 44 oldest greens), so the 50-row window still covers
-    # every remaining r1/r2-evidence gate
-    "op_chi2_token_selection",
-    "op_text_rouge_overlap",
-    "op_text_bigram_predictability",
-    "op_event_burstiness",
-    # round 10: three new gates (window budget: 3 rechecks + 3 new +
-    # ~44 oldest-evidence drains)
-    "op_dedup_blocking_audit",
-    "op_drift_wasserstein",
-    "op_markov_stationarity_drift",
-}
-
-# Harness-crash gates whose FIX landed this round: one front-of-window
-# re-proof converts a standing red row.  Empty when nothing is pending
-# (round-4 verdict: both round-3 members went green, so cleared).
-_REPROVE_FIXED: set[str] = set()
-
 # Gates whose IMPLEMENTATION was modified this round (semantics-
 # preserving rewrites included): front-of-window recheck so the change
 # ships WITH a fresh oracle row the same round instead of waiting for
 # the oldest-evidence rotation to reach it (round-7 ADVICE #2 — the
 # round-6 wedge co-location rewrite shipped without post-change
 # evidence).  Reset this set each round to only the gates actually
-# touched; they sort between true reds (tier 0) and the backlog tiers.
+# touched; they sort right behind true reds.
 _RECHECK_FRONT: set[str] = {
-    # round 11 optimization: every gate whose executed plan (or kernel
-    # body) changed this round gets a fresh driver oracle row the same
-    # round it ships (round-7 ADVICE #2). All driver-mimic green
-    # locally at sf0.01 + strict-audit/pandas-mimic green at both SFs —
-    # see OPTIMIZATION_r11.md. The r10 set rotated out: each got its
-    # fresh row in CORRECTNESS_r10.
-    # pool-closure cosine kernels + greedy-walk replay (8a477e4)
-    "op_ann_greedy_graph_search",
-    "op_crosslingual_neardup",
-    "op_label_noise_pairs",
-    "op_dedup_embedding_cosine",
-    # single-pass Arrow PCA / isotropy kernels (8a477e4)
-    "op_embedding_top_pc",
-    "op_embedding_isotropy_audit",
-    # kernel-body changes: cell-cap fallback, errstate guard (8a477e4)
-    "op_semantic_dedup",
-    "op_knn_label_accuracy",
-    # connected-components initial eager label (8a477e4)
-    "op_graph_session_components",
-    "op_dbscan_clusters",
-    # wedge builder explicit partition count
+    # every gate that reads a cross-gate memo: all memo accessors now go
+    # through session.memo (one keyed store instead of per-module dict
+    # caches). strict_audit and pandas_mimic green at sf0.001 and
+    # sf0.01. The r11 set rotated out: each got its fresh row in
+    # CORRECTNESS_r11.
+    # graph: coactivity edges, LP labels, (deg, wedge) tuple
+    "op_graph_assortativity",
+    "op_graph_bfs_hops",
+    "op_graph_degree_profile",
+    "op_graph_kcore_peel",
+    "op_graph_label_propagation",
     "op_graph_link_prediction",
+    "op_graph_modularity",
     "op_graph_resource_allocation",
-    # minhash bucket scan_parallel + verify checkpoint (lsh consumers)
-    "op_dedup_minhash_lsh",
-    "op_dedup_incremental_minhash",
+    "op_graph_transitivity",
+    "op_graph_triangles",
+    "op_graph_trustrank_seeded",
+    # dedup: df-capped shingles, exact/LSH pairs, MinHash buckets
+    "op_dedup_blocking_audit",
     "op_dedup_cluster_size_histogram",
     "op_dedup_clusters",
-    "op_dedup_keep_best",
-    # df-capped shingle build scan_parallel (exact-pair consumers)
-    "op_dedup_ngram_jaccard",
     "op_dedup_containment",
-    "op_minhash_estimate_audit",
+    "op_dedup_incremental_minhash",
+    "op_dedup_keep_best",
+    "op_dedup_minhash_lsh",
+    "op_dedup_ngram_jaccard",
     "op_dedup_threshold_curve",
-    "op_dedup_blocking_audit",
     "op_lsh_tuning_curve",
-    # split-starved scan fixes (order-independent math)
-    "op_text_winnowing",
-    "op_dedup_simhash",
-    "op_cdc_chunking",
-    "op_dedup_bloom_prefilter",
-    "op_dsir_importance_weights",
-    # RP sketch NumPy int64 kernel
-    "op_embedding_rp_sketch",
-    # BPE corpus-pin release rewiring (lazy packed build)
-    "op_bpe_encode_docs",
+    "op_minhash_estimate_audit",
+    # ANN: exact/LSH top-k, (assigned, codebook) PQ tuple
+    "op_ann_cosine_topk",
+    "op_ann_ivfpq_recall_audit",
+    "op_ann_ivfpq_search",
+    "op_ann_lsh_bucketed",
+    "op_ann_lsh_recall_curve",
+    "op_ann_mrr_audit",
+    "op_ann_ndcg_audit",
+    "op_ann_pq_adc",
+    "op_ann_pq_codes",
+    "op_ann_recall_audit",
+    # logreg weights (plain-value entry)
+    "op_ml_logreg_eval_auc",
+    "op_ml_logreg_quality",
+    # BPE: (merges, vocab) tuple, EOS counted in the packed build
+    "op_bpe_apply_tokens",
     "op_bpe_decode_roundtrip",
+    "op_bpe_encode_docs",
+    "op_bpe_fertility_by_lang",
+    "op_bpe_learn_merges",
     "op_bpe_pack_training_rows",
     "op_training_shuffle_plan",
+    "op_wordpiece_encode",
 }
 
 
@@ -236,28 +101,19 @@ def _gate_priority(names: list[str]) -> list[str]:
 
     0. gates whose most recent driver row is a genuine red (an oracle ran
        and mismatched — must be re-proven),
-    0.5. gates modified this round (_RECHECK_FRONT) — a rewrite must get
+    1. gates modified this round (_RECHECK_FRONT) — a rewrite must get
        a fresh oracle row the same round it ships (round-7 ADVICE #2),
-    1. round-1 backlog gates with no driver row yet (_ROUND1_BACKLOG),
-    2. round-3 backlog gates with no driver row yet (_ROUND3_BACKLOG) —
-       the 14 oracle-able stragglers the round-4 window displaced twice,
-    3. other oracle-able gates with no driver row yet EXCEPT gates first
-       registered this round (_NEW_GATES), plus previously rows-only
-       gates that have since GAINED an oracle (re-run now yields a hash
-       verdict — new information).  Never-tested gates age by round:
-       older gates outrank newer ones, so within this tier registration
-       order approximates age and _NEW_GATES waits in tier 4,
-    4. never-tested oracle-able gates first registered this round
-       (_NEW_GATES) — they must not displace gates already waiting,
-    5. gates whose most recent row is a HARNESS error (the driver's
+    2. oracle-able gates with no driver row yet, plus previously
+       rows-only gates that have since GAINED an oracle (re-run now
+       yields a hash verdict — new information),
+    3. gates whose most recent row is a HARNESS error (the driver's
        comparator crashed — a traceback in ``err`` rather than an oracle
        verdict).  These re-run after never-tested gates, not before: a
-       deterministic harness crash would otherwise camp at tier 0 every
-       round and starve the never-tested queue — the same starvation
-       mode the round-2 fix removed for ``no_oracle`` (round-3 ADVICE),
-    6. gates with no driver row and no oracle (one rows-only row is worth
+       deterministic harness crash would otherwise camp at the front
+       every round and starve the never-tested queue (round-3 ADVICE),
+    4. gates with no driver row and no oracle (one rows-only row is worth
        recording, but never at the cost of an oracle-able gate),
-    8. gates whose most recent driver row is green — rotated OLDEST
+    5. gates whose most recent driver row is green — rotated OLDEST
        EVIDENCE FIRST: within this tier gates sort by the round of
        their latest driver row, so the handful of re-verification
        slots left after the never-tested queue cycle through all
@@ -265,16 +121,14 @@ def _gate_priority(names: list[str]) -> list[str]:
        first-registered gates forever (a plain stable sort on
        registration order would starve late-registered greens of
        fresh evidence indefinitely),
-    9. gates whose most recent row is ``err='no_oracle'`` and that still
+    6. gates whose most recent row is ``err='no_oracle'`` and that still
        have no oracle — a re-run records the identical no_oracle row
        (zero new information), so these sort LAST, after green
-       refreshes (round-8 verdict #2: at a tier below green they camped
-       in every window from r6 on, displacing the exact oldest-evidence
-       refreshes the rotation exists to serve).
+       refreshes (round-8 verdict #2: below green they camped in every
+       window from r6 on, displacing oldest-evidence refreshes).
 
     Across rounds this guarantees every gate — including ones added later —
-    eventually gets a green driver row, with the only maintenance being
-    one _NEW_GATES entry per newly registered gate.
+    eventually gets a green driver row.
     """
     import glob
     import json
@@ -316,38 +170,23 @@ def _gate_priority(names: list[str]) -> list[str]:
 
     oracled = _oracle_names()
 
-    def tier(name: str) -> float:
+    def tier(name: str) -> int:
         state = verdict.get(name)
         if state == "red":
             return 0
         if name in _RECHECK_FRONT:
-            return 0.5
+            return 1
         if state is None:
-            if name in _ROUND1_BACKLOG:
-                return 1
-            if name in _ROUND3_BACKLOG:
-                return 2
-            if name not in oracled:
-                return 6
-            return 4 if name in _NEW_GATES else 3
+            return 2 if name in oracled else 4
         if state == "no_oracle":
-            # oracle gained since the row was recorded: re-run now
-            # yields a hash verdict — real new information (tier 3).
-            # Still no oracle: a re-run records the SAME no_oracle row
-            # forever, so it must sort AFTER the greens (tier 9), not
-            # before them — at tier 7 (< green's 8) the two rows-only
-            # gates camped in every window from r6 on, displacing
-            # oldest-evidence green refreshes (round-8 verdict #2).
-            return 3 if name in oracled else 9
-        if state == "harness_err" and name in _REPROVE_FIXED:
-            return 0  # crash cause fixed this round: re-prove up front
-        return {"red": 0, "harness_err": 5, "green": 8}[state]
+            return 2 if name in oracled else 6
+        return {"harness_err": 3, "green": 5}[state]
 
     def key(name: str) -> tuple[int, int]:
         t = tier(name)
-        # tier 8: oldest driver evidence first (see docstring); other
-        # tiers keep pure registration order (age ~ registration there)
-        return (t, last_round.get(name, 0) if t == 8 else 0)
+        # greens: oldest driver evidence first (see docstring); other
+        # tiers keep pure registration order
+        return (t, last_round.get(name, 0) if t == 5 else 0)
 
     return sorted(names, key=key)  # stable within (tier, evidence age)
 

@@ -38,7 +38,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apitap_spark.functions.text import tokens
-from apitap_spark.session import FrameMemo, context_key, read_table
+from apitap_spark.session import (
+    MEMO_BOOKKEEPING,
+    clear_memos,
+    context_key,
+    memo,
+    read_table,
+    release_memo,
+)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -46,31 +53,26 @@ ORACLES: dict = {}
 # Cross-gate memo (round-10 optimization): EIGHT gates (learn, apply,
 # encode, pack, fertility, decode, wordpiece, shuffle-plan) compose the
 # SAME N_MERGES learning pass and, for five of them, the same encode.
-# All four memo frames are pinned LOCAL CHECKPOINTS (RDD-level,
-# MEMORY_AND_DISK): dataset-level persist() does not survive the bench
+# Every frame below is a pinned session.memo entry (RDD-level local
+# checkpoints: dataset-level persist() does not survive the bench
 # loop's spark.catalog.clearCache(), and a lineage recompute after that
 # walks into gate-internal checkpoints release_persisted() has already
-# freed (measured: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the second run
+# freed — measured: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the second run
 # of the pack gate under the bench protocol).  final_vocab and sym_ids
 # are vocab-sized; seqs and the packed rows are encoded-corpus-sized —
-# the same class as the dedup family's persisted shingle frame, and at
-# production scale the materialization a pipeline would write as a
+# at production scale the materialization a pipeline would write as a
 # parquet intermediate anyway.  bench.py's memo-honesty counters tag
 # the building gate vs warm readers.
-_BPE_MEMO = FrameMemo()
-# (context, sf_dir) -> {"merges": [...], "eos": int} driver-side scalars
-_BPE_AUX: dict = {}
-
-# Corpus-sized pin lifecycle (r10 verdict #4): ``bpe_seqs`` and
-# ``bpe_packed`` are encoded-corpus-sized — the one FrameMemo class its
-# own docstring warns about. Each gate that reads one of them marks
-# itself below; once EVERY consumer of an entry has run (per context +
-# sf_dir), the entry is released (unpinned + forgotten) so the next
-# release_persisted sweep frees the blocks, and the consumed-set re-arms
-# (a later cycle — e.g. the bench's drift-watchlist re-runs — rebuilds
-# once and releases again at its own last consumer). Vocab-sized
-# entries (final_vocab, sym_ids) stay pinned for the session: they are
-# the tokenizer artifact itself, orders of magnitude below the corpus.
+#
+# Corpus-sized pin lifecycle (r10 verdict #4): each gate that reads
+# ``bpe_seqs`` or ``bpe_packed`` marks itself below; once EVERY consumer
+# of an entry has run (per context + sf_dir), the entry is released
+# (session.release_memo) so the next release_persisted sweep frees the
+# blocks, and the consumed-set re-arms (a later cycle — e.g. the
+# bench's drift-watchlist re-runs — rebuilds once and releases again at
+# its own last consumer). Vocab-sized entries (final_vocab, sym_ids)
+# stay pinned for the session: they are the tokenizer artifact itself,
+# orders of magnitude below the corpus.
 _CORPUS_ENTRY_CONSUMERS: dict[str, frozenset] = {
     "bpe_seqs": frozenset(
         {
@@ -83,8 +85,10 @@ _CORPUS_ENTRY_CONSUMERS: dict[str, frozenset] = {
         {"op_bpe_pack_training_rows", "op_training_shuffle_plan"}
     ),
 }
-# (context, sf_dir, entry) -> set of consumer gate names seen this cycle
+# (context, sf_dir, entry) -> set of consumer gate names seen this
+# cycle; session.clear_memos() empties it with the memo.
 _CORPUS_CONSUMED: dict[tuple, set] = {}
+MEMO_BOOKKEEPING.append(_CORPUS_CONSUMED)
 
 
 def _note_corpus_consumer(spark: SparkSession, sf_dir: str, gate: str) -> None:
@@ -95,15 +99,12 @@ def _note_corpus_consumer(spark: SparkSession, sf_dir: str, gate: str) -> None:
         seen = _CORPUS_CONSUMED.setdefault((ctx, sf_dir, entry), set())
         seen.add(gate)
         if seen >= consumers:
-            _BPE_MEMO.release(spark, (entry, sf_dir))
+            release_memo(spark, (entry, sf_dir))
             seen.clear()
 
 
-def clear_bpe_memo() -> None:
-    """Drop the family's memoized frames + scalars (tests/teardown)."""
-    _BPE_MEMO.clear()
-    _BPE_AUX.clear()
-    _CORPUS_CONSUMED.clear()
+# perfbench/gates.py imports this name; every other caller uses clear_memos.
+clear_bpe_memo = clear_memos
 
 
 def _gate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -117,17 +118,13 @@ def learned_bpe(
 ) -> tuple[list[tuple], DataFrame]:
     """Memoized (merges, final_vocab) for the sf_dir documents corpus —
     one learning pass per (session, sf_dir) shared by the whole family."""
-    key = (context_key(spark), sf_dir)
-
-    def build() -> DataFrame:
-        merges, fv = learn_bpe_with_vocab(
+    return memo(
+        spark, ("bpe_final_vocab", sf_dir),
+        lambda: learn_bpe_with_vocab(
             char_vocab(_gate_docs(spark, sf_dir)), carry=("w",)
-        )
-        _BPE_AUX.setdefault(key, {})["merges"] = merges
-        return fv
-
-    fv = _BPE_MEMO.get(spark, ("bpe_final_vocab", sf_dir), build, family="bpe")
-    return _BPE_AUX[key]["merges"], fv
+        ),
+        family="bpe",
+    )
 
 
 def encoded_bpe(
@@ -136,25 +133,17 @@ def encoded_bpe(
     """Memoized (seqs, sym_ids) — the encode step over the memoized
     vocabulary.  Both pinned checkpoints (see the module-memo note)."""
     _merges, fv = learned_bpe(spark, sf_dir)
-    sym_ids = _BPE_MEMO.get(
+    sym_ids = memo(
         spark, ("bpe_sym_ids", sf_dir), lambda: _sym_id_table(fv),
         family="bpe",
     )
-    seqs = _BPE_MEMO.get(
+    seqs = memo(
         spark,
         ("bpe_seqs", sf_dir),
         lambda: _encode_seqs(_gate_docs(spark, sf_dir), fv, sym_ids),
         family="bpe",
     )
     return seqs, sym_ids
-
-
-def _eos_id(spark: SparkSession, sf_dir: str, sym_ids: DataFrame) -> int:
-    """EOS token id (= vocabulary size), counted once per (session, sf)."""
-    aux = _BPE_AUX.setdefault((context_key(spark), sf_dir), {})
-    if "eos" not in aux:
-        aux["eos"] = sym_ids.count()
-    return aux["eos"]
 
 
 def _register(name: str, oracle: str | None = None):
@@ -605,16 +594,18 @@ def _packed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized packed training rows. The build lambda is the ONLY place
     encoded_bpe is touched: a memo hit must not re-request ``bpe_seqs``
     (which may already be released — re-requesting would rebuild the
-    corpus-sized frame just to throw it away)."""
+    corpus-sized frame just to throw it away). The EOS id (= vocabulary
+    size) is counted on the pinned sym_ids table inside the build, its
+    only consumer."""
 
     def build() -> DataFrame:
         seqs, sym_ids = encoded_bpe(spark, sf_dir)
-        return pack_rows_frame(seqs, _eos_id(spark, sf_dir, sym_ids))
+        return pack_rows_frame(seqs, sym_ids.count())
 
     # The packed frame is memoized too (pinned checkpoint): the
     # shuffle-plan gate composes the pack gate, so without the memo the
     # explode+groupBy over the full token stream ran twice per suite.
-    return _BPE_MEMO.get(spark, ("bpe_packed", sf_dir), build, family="bpe")
+    return memo(spark, ("bpe_packed", sf_dir), build, family="bpe")
 
 
 def pack_rows_frame(seqs: DataFrame, eos: int) -> DataFrame:

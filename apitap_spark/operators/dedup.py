@@ -33,7 +33,10 @@ from apitap_spark.functions.text import (
     tokens,
 )
 from apitap_spark.operators.graph import connected_components
-from apitap_spark.session import context_key, note_memo_event, read_table
+from apitap_spark.session import clear_memos, memo, read_table
+
+# perfbench/gates.py imports this name; every other caller uses clear_memos.
+clear_dedup_frame_caches = clear_memos
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -141,10 +144,6 @@ def _candidate_doc_shingles(
     )
     docs = read_table(spark, sf_dir, "documents")
     return shingle_rows(docs.join(cand_docs, "doc_id", "semi"))
-
-
-def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shingle_rows(read_table(spark, sf_dir, "documents"))
 
 
 def _jaccard_pairs(sh: DataFrame, candidates: DataFrame | None, thr: float) -> DataFrame:
@@ -272,13 +271,11 @@ def op_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _df_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pinned-persisted, shingle-partitioned (doc_id, shingle) rows
+    """Pinned-checkpointed, shingle-partitioned (doc_id, shingle) rows
     with hot shingles (df > DF_CAP_FRACTION of the corpus) dropped —
     memoized per (session, sf_dir) and shared by every exact-shingle
     consumer (ngram pairs, containment, the minhash audit's candidate
-    signatures). persist (not checkpoint) keeps the hashpartitioning
-    (shingle) layout the self-joins rely on; an evicted block
-    recomputes from lineage.
+    signatures).
 
     The df-cap uses a COUNT window over the shingle-partitioned layout:
     the window's required distribution is already satisfied, so the cap
@@ -291,12 +288,15 @@ def _df_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 1.5x slower because the self-join then re-shuffles both
     sides).
     """
-    key = (context_key(spark), sf_dir, "df_capped_shingles")
-    hit = _DEDUP_FRAME_CACHE.get(key)
-    note_memo_event(hit=hit is not None, family="df_capped_shingles")
-    if hit is not None:
-        return hit
-    from apitap_spark.session import pinned_local_checkpoint
+    return memo(
+        spark, ("df_capped_shingles", sf_dir),
+        lambda: _build_df_capped_shingles(spark, sf_dir),
+        family="df_capped_shingles",
+    )
+
+
+def _build_df_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from apitap_spark.session import scan_parallel
 
     n_docs = read_table(spark, sf_dir, "documents").count()
     # floor the cap at 2: on small corpora int(0.1*n) reaches 0 and would
@@ -304,23 +304,17 @@ def _df_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_df = max(2, int(DF_CAP_FRACTION * n_docs))
     n_par = max(1, spark.sparkContext.defaultParallelism)
     w = Window.partitionBy("shingle")
-    from apitap_spark.session import scan_parallel
-
     # scan_parallel BELOW the explode (r11): the corpus string-shingle
     # explode sat under the shingle exchange on the scan's task count —
     # ONE task for the single-split testdata file — so the build's map
     # side was serial. Counts/joins above are order-independent.
-    sh = (
+    return (
         shingle_rows(scan_parallel(read_table(spark, sf_dir, "documents"), spark))
         .repartition(n_par, "shingle")
         .withColumn("df", F.count("*").over(w))
         .filter(F.col("df") <= max_df)
         .drop("df")
     )
-    d, ids = pinned_local_checkpoint(sh, spark)
-    _DEDUP_PINNED_IDS.update(ids)
-    _DEDUP_FRAME_CACHE[key] = d
-    return d
 
 
 N_HASHES = 128
@@ -368,8 +362,8 @@ def minhash_band_buckets(hrows: DataFrame) -> DataFrame:
     )
 
 
-# Cross-gate memoized pair frames, pinned (session.pinned_local_checkpoint)
-# so between-gate release_persisted sweeps don't free blocks a later gate
+# Cross-gate memoized pair frames (session.memo), pinned so
+# between-gate release_persisted sweeps don't free blocks a later gate
 # still reads.  Both frames are pair-list-sized (near-dup pairs — orders
 # of magnitude smaller than the corpus at any scale):
 #   * exact_pairs_02: the thr-0.2 df-capped exact-Jaccard pair list —
@@ -382,49 +376,20 @@ def minhash_band_buckets(hrows: DataFrame) -> DataFrame:
 #     op_dedup_keep_best.
 # Previously each consumer re-ran the dominant shingle self-join or the
 # full signature+bucket+verify pipeline.
-_DEDUP_FRAME_CACHE: dict[tuple, DataFrame] = {}
-_DEDUP_PINNED_IDS: set[int] = set()
-
-
-def clear_dedup_frame_caches() -> None:
-    """Drop the memoized pair frames and unpin their RDD blocks (freed
-    by the next release_persisted / ContextCleaner GC)."""
-    from apitap_spark.session import unpin_rdds
-
-    _DEDUP_FRAME_CACHE.clear()
-    unpin_rdds(_DEDUP_PINNED_IDS)
-    _DEDUP_PINNED_IDS.clear()
-
-
-def _cached_pinned(spark: SparkSession, sf_dir: str, name: str, build):
-    key = (context_key(spark), sf_dir, name)
-    hit = _DEDUP_FRAME_CACHE.get(key)
-    note_memo_event(hit=hit is not None, family=name)
-    if hit is not None:
-        return hit
-    from apitap_spark.session import pinned_local_checkpoint
-
-    d, ids = pinned_local_checkpoint(build(), spark)
-    _DEDUP_PINNED_IDS.update(ids)
-    _DEDUP_FRAME_CACHE[key] = d
-    return d
-
-
 def exact_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned thr-0.2 exact-Jaccard pair list (see cache note above)."""
-    return _cached_pinned(
-        spark,
-        sf_dir,
-        "exact_pairs_02",
+    return memo(
+        spark, ("exact_pairs_02", sf_dir),
         lambda: _jaccard_pairs(_df_capped_shingles(spark, sf_dir), None, 0.2),
+        family="exact_pairs_02",
     )
 
 
 def lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned verified MinHash-LSH pair list (see cache note above)."""
-    return _cached_pinned(
-        spark, sf_dir, "minhash_lsh_pairs",
-        lambda: _minhash_lsh_pairs(spark, sf_dir),
+    return memo(
+        spark, ("minhash_lsh_pairs", sf_dir),
+        lambda: _minhash_lsh_pairs(spark, sf_dir), family="minhash_lsh_pairs",
     )
 
 
@@ -443,13 +408,14 @@ def minhash_buckets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the single-split testdata scan (r11 profile: 7.2s of the
     # 14s build); min() is order-independent, so the round-robin split
     # is oracle-safe. No-op when the input already has >= cores splits.
-    return _cached_pinned(
-        spark, sf_dir, "minhash_buckets",
+    return memo(
+        spark, ("minhash_buckets", sf_dir),
         lambda: minhash_band_buckets(
             gram_hash_rows(
                 scan_parallel(read_table(spark, sf_dir, "documents"), spark)
             )
         ),
+        family="minhash_buckets",
     )
 
 

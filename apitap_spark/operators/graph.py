@@ -25,7 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from apitap_spark.session import context_key, note_memo_event, read_table
+from apitap_spark.session import clear_memos, memo, read_table
+
+# perfbench/gates.py imports this name; every other caller uses clear_memos.
+clear_graph_frame_caches = clear_memos
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -369,17 +372,10 @@ def lp_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     — node-cardinality. op_graph_modularity composes the SAME LP_ITERS
     rounds op_graph_label_propagation runs; before round 10 each gate
     re-ran the full loop (~4 s at sf0.1)."""
-    from apitap_spark.session import pinned_local_checkpoint
-
-    key = (context_key(spark), sf_dir, "lp_labels")
-    hit = _EDGE_CACHE.get(key)
-    note_memo_event(hit=hit is not None, family="lp_labels")
-    if hit is not None:
-        return hit
-    d, ids = pinned_local_checkpoint(_lp_labels(spark, sf_dir), spark)
-    _GRAPH_PINNED_IDS.update(ids)
-    _EDGE_CACHE[key] = d
-    return d
+    return memo(
+        spark, ("lp_labels", sf_dir), lambda: _lp_labels(spark, sf_dir),
+        family="lp_labels",
+    )
 
 
 @_register("op_graph_label_propagation", _lp_oracle())
@@ -690,66 +686,22 @@ def op_graph_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 LINKPRED_TOP_K = 20
 
-# Shared wedge statistics, memoized per (SparkContext, sf_dir):
-# op_graph_link_prediction and op_graph_resource_allocation build the
-# SAME edges/degrees/wedge-enumeration (the two most expensive graph
-# gates, ~13s combined at sf0.1 when each rebuilt it); one checkpointed
-# frame emitting (u, v, cn, ra_micro) serves both — Jaccard derives from
-# cn + broadcast degrees, RA reads ra_micro directly (round-7 verdict
-# task #3). The cached deg/wedge checkpoints are PINNED
-# (session.pinned_local_checkpoint) so the between-gate
-# release_persisted sweep doesn't free blocks the second gate still
-# reads (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — found by the bench loop).
-# Footprint: degrees (node-sized) + non-adjacent co-wedge candidate
-# pairs — the same frames each gate previously materialized on its own,
-# held once per (context, sf_dir) for the session's lifetime;
-# clear_wedge_stats_cache() unpins when a long-lived host wants them
-# swept.
-_WEDGE_STATS_CACHE: dict[tuple[int, str], tuple] = {}
-# coactivity edge lists, keyed (context, sf_dir, k): the shared
-# primitive of EIGHT graph gates (triangles, degree profile, link
-# prediction / RA via the wedge frame, BFS, k-core, assortativity,
-# TrustRank, transitivity) — each previously rebuilt + checkpointed the
-# same distinct-bucket window per gate; one pinned build per session.
-_EDGE_CACHE: dict[tuple[int, str, int], DataFrame] = {}
-_GRAPH_PINNED_IDS: set[int] = set()
-
-
-def clear_graph_frame_caches() -> None:
-    """Drop the memoized edge/wedge frames and unpin their RDD blocks
-    (they are then freed by the next release_persisted / ContextCleaner
-    GC)."""
-    from apitap_spark.session import unpin_rdds
-
-    _WEDGE_STATS_CACHE.clear()
-    _EDGE_CACHE.clear()
-    unpin_rdds(_GRAPH_PINNED_IDS)
-    _GRAPH_PINNED_IDS.clear()
-
-
-clear_wedge_stats_cache = clear_graph_frame_caches  # back-compat name
-
-
 def coactivity_edges_cached(
     spark: SparkSession, sf_dir: str, k: int = TRI_NEXT_K
 ) -> DataFrame:
     """Pinned, memoized checkpoint of :func:`coactivity_edges` — built
     once per (session, sf_dir, k) and shared by every edge-consuming
-    gate; blocks survive between-gate release_persisted sweeps."""
-    from apitap_spark.session import pinned_local_checkpoint
-
-    key = (context_key(spark), sf_dir, k)
-    hit = _EDGE_CACHE.get(key)
-    note_memo_event(hit=hit is not None, family="coactivity_edges")
-    if hit is not None:
-        return hit
-    d, ids = pinned_local_checkpoint(coactivity_edges(spark, sf_dir, k), spark)
-    _GRAPH_PINNED_IDS.update(ids)
-    _EDGE_CACHE[key] = d
-    return d
+    gate (triangles, degree profile, link prediction / RA via the wedge
+    frame, BFS, k-core, assortativity, TrustRank, transitivity), each of
+    which previously rebuilt the same distinct-bucket window."""
+    return memo(
+        spark, ("coactivity_edges", sf_dir, k),
+        lambda: coactivity_edges(spark, sf_dir, k),
+        family="coactivity_edges",
+    )
 
 
-def _build_wedge_stats(spark: SparkSession, sf_dir: str, pin: bool = False):
+def _build_wedge_stats(spark: SparkSession, sf_dir: str):
     """Lazy (e, deg, wedge_candidates) frames — see _wedge_stats.
 
     wedge_candidates = non-adjacent u<v pairs with
@@ -771,22 +723,16 @@ def _build_wedge_stats(spark: SparkSession, sf_dir: str, pin: bool = False):
     # und feeds both sides of the triangle-closing self-join; deg is
     # consumed by the wedge probe AND broadcast twice downstream (du,
     # dv). Checkpoint both or each consumer re-runs the union shuffle /
-    # degree groupBy (round-5 double-materialization sweep).
+    # degree groupBy (round-5 double-materialization sweep). deg's
+    # checkpoint is lazy: the _wedge_stats memo pins deg first, and
+    # that one job also materializes it for the wedge build below
+    # (an eager checkpoint would cost a second job).
     und = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint()
     deg = und.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("bigint").alias("d")
-    )
-    if pin:
-        # deg is broadcast by link-prediction on LATER gate calls —
-        # its blocks must survive between-gate release sweeps
-        from apitap_spark.session import pinned_local_checkpoint
-
-        deg, ids = pinned_local_checkpoint(deg, spark)
-        _GRAPH_PINNED_IDS.update(ids)
-    else:
-        deg = deg.localCheckpoint()
+    ).localCheckpoint(eager=False)
     x = und.select(F.col("u").alias("cu"), F.col("v").alias("w")).join(
         F.broadcast(deg.select(F.col("node").alias("w"), "d")), "w"
     )
@@ -825,22 +771,18 @@ def _build_wedge_stats(spark: SparkSession, sf_dir: str, pin: bool = False):
 
 
 def _wedge_stats(spark: SparkSession, sf_dir: str):
-    """Memoized (deg, wedge_candidates), both pin-checkpointed —
-    computed once per session per sf_dir, shared by the
-    link-prediction and resource-allocation gates."""
-    from apitap_spark.session import pinned_local_checkpoint
+    """Memoized (deg, wedge_candidates), both pin-checkpointed in that
+    order — built once per session per sf_dir and shared by
+    op_graph_link_prediction and op_graph_resource_allocation (the two
+    most expensive graph gates, ~13s combined at sf0.1 when each
+    rebuilt it; round-7 verdict task #3): Jaccard derives from cn +
+    broadcast degrees, RA reads ra_micro directly. Footprint: degrees
+    (node-sized) + non-adjacent co-wedge candidate pairs."""
+    return memo(
+        spark, ("wedge_stats", sf_dir),
+        lambda: _build_wedge_stats(spark, sf_dir)[1:], family="wedge_stats",
+    )
 
-    key = (context_key(spark), sf_dir)
-    hit = _WEDGE_STATS_CACHE.get(key)
-    note_memo_event(hit=hit is not None, family="wedge_stats")
-    if hit is not None:
-        return hit
-    _e, deg, wedge = _build_wedge_stats(spark, sf_dir, pin=True)
-    wedge, ids = pinned_local_checkpoint(wedge, spark)
-    _GRAPH_PINNED_IDS.update(ids)
-    out = (deg, wedge)
-    _WEDGE_STATS_CACHE[key] = out
-    return out
 
 _LINKPRED_ORACLE = f"""
     WITH grp AS (

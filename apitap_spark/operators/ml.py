@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from apitap_spark.session import context_key, note_memo_event, read_table
+from apitap_spark.session import memo, read_table
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -245,32 +245,6 @@ LOGREG_LR = 2.0
 LONGFORM_CHARS = 300
 
 
-def _feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from apitap_spark.functions.text import token_count, tokens
-
-    docs = read_table(spark, sf_dir, "documents").filter(
-        F.length(F.trim("text")) > 0
-    )
-    t = tokens("text")
-    n = token_count("text").cast("double")
-    avg_len = (
-        F.aggregate(
-            F.transform(t, lambda w: F.length(w)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        ).cast("double")
-        / n
-    )
-    return docs.select(
-        "doc_id",
-        (F.length("text") > LONGFORM_CHARS).cast("double").alias("y"),
-        F.lit(1.0).alias("f_bias"),
-        (n / F.lit(100.0)).alias("f_tokens"),
-        (avg_len / F.lit(10.0)).alias("f_avg_token_len"),
-        (F.size(F.array_distinct(t)).cast("double") / n).alias("f_distinct_ratio"),
-    )
-
-
 def train_logreg(
     X: DataFrame, feature_cols: list[str], label_col: str = "y",
     iters: int = LOGREG_ITERS, lr: float = LOGREG_LR,
@@ -441,25 +415,19 @@ def _feature_micro_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Trained micro-weights memo, keyed (SparkContext id, sf_dir): the
-# quality gate and the AUC eval train the IDENTICAL model on the
-# identical feature frame — one Newton run (NEWTON_ITERS aggregation
-# passes) per session instead of two. Pure driver-side ints: nothing
-# to pin, and deterministic by construction so the memo cannot change
-# any oracle hash.
-_LOGREG_WEIGHTS_MEMO: dict[tuple[int, str], list[int]] = {}
-
-
 def trained_logreg_weights(
     spark: SparkSession, sf_dir: str, X_u: DataFrame
 ) -> list[int]:
-    key = (context_key(spark), sf_dir)
-    hit = _LOGREG_WEIGHTS_MEMO.get(key)
-    note_memo_event(hit=hit is not None, family="logreg_weights")
-    if hit is None:
-        hit = train_logreg_newton_fixed(X_u)
-        _LOGREG_WEIGHTS_MEMO[key] = hit
-    return hit
+    """Trained micro-weights, memoized per (session, sf_dir): the
+    quality gate and the AUC eval train the IDENTICAL model on the
+    identical feature frame — one Newton run (NEWTON_ITERS aggregation
+    passes) per session instead of two. Pure driver-side ints,
+    deterministic by construction, so the memo cannot change any oracle
+    hash."""
+    return memo(
+        spark, ("logreg_weights", sf_dir),
+        lambda: train_logreg_newton_fixed(X_u), family="logreg_weights",
+    )
 
 
 def train_logreg_newton_fixed(

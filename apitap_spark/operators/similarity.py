@@ -25,63 +25,30 @@ from apitap_spark.functions.vectors import (
     cosine_similarity,
     l2_norm,
 )
-from apitap_spark.session import read_table
+from apitap_spark.session import clear_memos, memo, read_table
 
 QUERIES: dict = {}
 ORACLES: dict = {}
 
 
-# Pinned memo for the two composed ANN baselines (exact top-k, LSH
-# top-k): the retrieval-audit family re-derives both as ground truth —
-# recall, MRR, nDCG, and the LSH recall curve each re-ran the full
-# corpus scoring before this cache. Both results are Q x k rows.
-from apitap_spark.session import FrameMemo as _FrameMemo  # noqa: E402
-
-_ANN_MEMO = _FrameMemo()
-
-# Pinned memo of the PQ build (round-10): FOUR gate paths re-learned
-# the identical codebooks + encoding per suite (pq_codes, pq_adc,
-# ivfpq_search, and ivfpq_recall_audit composing ivfpq_search).
-# assigned is corpus x PQ_M rows, codebook is M x K rows — both the
-# persistent index state a production ANN pipeline stores anyway.
-_PQ_BUILD_CACHE: dict[tuple, tuple] = {}
-_PQ_PINNED_IDS: set[int] = set()
-
-
-def clear_ann_frame_caches() -> None:
-    """Drop the memoized top-k/PQ frames and unpin their RDD blocks."""
-    from apitap_spark.session import unpin_rdds
-
-    _ANN_MEMO.clear()
-    _PQ_BUILD_CACHE.clear()
-    unpin_rdds(_PQ_PINNED_IDS)
-    _PQ_PINNED_IDS.clear()
+# perfbench/gates.py imports this name; every other caller uses clear_memos.
+clear_ann_frame_caches = clear_memos
 
 
 def pq_build_cached(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Pinned memo of :func:`pq_build` over the sf_dir embeddings —
-    one Lloyd build per (session, sf_dir) shared by every PQ gate."""
-    from apitap_spark.session import (
-        context_key,
-        note_memo_event,
-        pinned_local_checkpoint,
+    one Lloyd build per (session, sf_dir) shared by every PQ gate
+    (pq_codes, pq_adc, ivfpq_search, and ivfpq_recall_audit composing
+    ivfpq_search). assigned is corpus x PQ_M rows, codebook is M x K
+    rows — both the persistent index state a production ANN pipeline
+    stores anyway."""
+    return memo(
+        spark, ("pq_build", sf_dir),
+        lambda: pq_build(read_table(spark, sf_dir, "embeddings")),
+        family="pq_build",
     )
-
-    key = (context_key(spark), sf_dir)
-    hit = _PQ_BUILD_CACHE.get(key)
-    note_memo_event(hit=hit is not None, family="pq_build")
-    if hit is not None:
-        return hit
-    assigned, codebook = pq_build(read_table(spark, sf_dir, "embeddings"))
-    a, ids_a = pinned_local_checkpoint(assigned, spark)
-    c, ids_c = pinned_local_checkpoint(codebook, spark)
-    _PQ_PINNED_IDS.update(ids_a)
-    _PQ_PINNED_IDS.update(ids_c)
-    out = (a, c)
-    _PQ_BUILD_CACHE[key] = out
-    return out
 
 
 def _register(name: str, oracle: str | None = None):
@@ -139,10 +106,9 @@ def op_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     gates that use brute force as ground truth (recall, MRR, nDCG, LSH
     recall curve) read it instead of re-scanning the corpus each.
     """
-    return _ANN_MEMO.get(
-        spark, (sf_dir, "exact_topk"),
-        lambda: _cosine_topk_build(spark, sf_dir),
-        family="ann_topk",
+    return memo(
+        spark, ("exact_topk", sf_dir),
+        lambda: _cosine_topk_build(spark, sf_dir), family="ann_topk",
     )
 
 
@@ -300,10 +266,9 @@ def op_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The Q×5 result is the pinned ``lsh_topk`` memo shared with the MRR
     and nDCG audits."""
-    return _ANN_MEMO.get(
-        spark, (sf_dir, "lsh_topk"),
-        lambda: _lsh_bucketed_build(spark, sf_dir),
-        family="ann_topk",
+    return memo(
+        spark, ("lsh_topk", sf_dir),
+        lambda: _lsh_bucketed_build(spark, sf_dir), family="ann_topk",
     )
 
 

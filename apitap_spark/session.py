@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_APP_NAME = "apitap-spark"
 
@@ -76,14 +76,6 @@ def get_session(
     return builder.getOrCreate()
 
 
-# RDD ids exempt from release_persisted: cross-gate memoized frames
-# (e.g. the graph wedge-stats cache) checkpoint once per session and are
-# INTENTIONALLY still referenced after a gate finishes — unpersisting a
-# localCheckpointed RDD whose lineage was truncated discards data that
-# cannot be recomputed (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on next read).
-_PINNED_RDD_IDS: set[int] = set()
-
-
 def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
     it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
     out: set[int] = set()
@@ -93,49 +85,21 @@ def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
 
 
 def pinned_local_checkpoint(df, spark: SparkSession):
-    """``df.localCheckpoint()`` whose blocks survive release_persisted.
+    """``df.localCheckpoint()`` plus the persistent-RDD ids it created.
 
-    For session-lifetime memoized frames shared ACROSS independent gate
-    jobs. The new persistent-RDD ids are diffed around the checkpoint —
-    callers are the single-threaded driver loop, so the diff is exact.
-    Unpin via :func:`unpin_rdds` when the owning cache is cleared.
+    The ids are diffed around the checkpoint — callers are the
+    single-threaded driver loop, so the diff is exact. :func:`memo`
+    records them on the entry, which exempts them from
+    release_persisted until the entry is released or cleared.
     """
     before = _persistent_rdd_ids(spark)
     d = df.localCheckpoint()
-    new = _persistent_rdd_ids(spark) - before
-    _PINNED_RDD_IDS.update(new)
-    return d, new
+    return d, _persistent_rdd_ids(spark) - before
 
 
-def pinned_persist(df, spark: SparkSession):
-    """``df.persist()`` materialized now, whose blocks survive
-    release_persisted. Unlike :func:`pinned_local_checkpoint` the
-    lineage AND the Catalyst output partitioning are retained — use for
-    memoized frames whose physical layout downstream joins rely on.
-    An evicted block recomputes from lineage, so pinning persists is
-    always safe — but CacheManager entries do NOT survive
-    ``spark.catalog.clearCache()``, which the bench protocol runs
-    between gates: the former canonical user (the shingle-partitioned
-    dedup cache) moved to :func:`pinned_local_checkpoint` in round 10
-    for exactly that reason, trading the preserved partitioning for
-    blocks that survive the sweep (measured a net win under the bench
-    protocol; see ``dedup._df_capped_shingles``)."""
-    before = _persistent_rdd_ids(spark)
-    d = df.persist()
-    d.count()  # materialize so the id diff sees the new blocks
-    new = _persistent_rdd_ids(spark) - before
-    _PINNED_RDD_IDS.update(new)
-    return d, new
-
-
-def unpin_rdds(ids) -> None:
-    _PINNED_RDD_IDS.difference_update(ids)
-
-
-# Session-wide memo telemetry: every cross-gate cache (FrameMemo and
-# the module-local dict caches in dedup/graph/ml) reports whether a
-# lookup BUILT the shared frame or HIT an existing one. bench.py reads
-# the deltas around each gate to tag freeze rows, so a 0.04s cache-read
+# Session-wide memo telemetry: every memo lookup reports whether it
+# BUILT the shared value or HIT an existing one. bench.py reads the
+# deltas around each gate to tag freeze rows, so a 0.04s cache-read
 # timing is never mistaken for the operator's cost (round-8 verdict #4).
 # Round-11 (r10 verdict #3): events also carry the memo FAMILY name so
 # the bench can publish build-inclusive per-family totals
@@ -144,7 +108,7 @@ MEMO_COUNTERS = {"hits": 0, "builds": 0}
 MEMO_FAMILY_COUNTERS: dict[str, int] = {}
 
 
-def note_memo_event(hit: bool, family: str = "misc") -> None:
+def note_memo_event(hit: bool, family: str) -> None:
     MEMO_COUNTERS["hits" if hit else "builds"] += 1
     k = f"{family}:{'hit' if hit else 'build'}"
     MEMO_FAMILY_COUNTERS[k] = MEMO_FAMILY_COUNTERS.get(k, 0) + 1
@@ -168,59 +132,61 @@ def context_key(spark: SparkSession) -> str:
     return tok
 
 
-class FrameMemo:
-    """Session-scoped memoization of small result frames as pinned
-    checkpoints (or pinned persists when the Catalyst partitioning must
-    survive — ``persist=True``). Keys are (:func:`context_key`, *key);
-    ``clear()`` unpins everything so the next release_persisted sweep
-    can free the blocks. Use ONLY for frames that are orders of
-    magnitude smaller than their inputs (pair lists, top-k tables,
-    degree tables) — the cache holds them for the session's lifetime.
+# The session memo: (context_key, *key) -> (value, pinned RDD ids).
+# Values are results shared ACROSS independent gate jobs — built once
+# per (context, sf_dir), held for the session's lifetime. Memoize ONLY
+# values orders of magnitude smaller than their inputs (pair lists,
+# top-k tables, degree tables, vocabularies, driver-side scalars).
+_MEMO: dict[tuple, tuple] = {}
+# Module bookkeeping that describes memo entries and must reset with
+# them (bpe's consumed-gate sets); clear_memos() empties each dict.
+MEMO_BOOKKEEPING: list[dict] = []
+
+
+def memo(spark: SparkSession, key: tuple, build, family: str):
+    """``build()`` once per (:func:`context_key`, *key); later calls
+    return the same object.
+
+    A DataFrame value is stored as a pinned local checkpoint, a tuple
+    with each of its DataFrames pinned in tuple order, anything else
+    as-is. Pinned blocks survive release_persisted sweeps (RDD-level,
+    so they also survive ``spark.catalog.clearCache()``) until
+    :func:`release_memo` or :func:`clear_memos` unpins them.
     """
+    k = (context_key(spark), *key)
+    if k in _MEMO:
+        note_memo_event(hit=True, family=family)
+        return _MEMO[k][0]
+    note_memo_event(hit=False, family=family)
+    value = build()
+    ids: set[int] = set()
 
-    def __init__(self) -> None:
-        self._cache: dict = {}
-        self._ids: set[int] = set()
-        self._ids_by_key: dict = {}
-
-    def get(
-        self,
-        spark: SparkSession,
-        key: tuple,
-        build,
-        persist: bool = False,
-        family: str = "misc",
-    ):
-        k = (context_key(spark), *key)
-        hit = self._cache.get(k)
-        if hit is not None:
-            note_memo_event(hit=True, family=family)
-            return hit
-        note_memo_event(hit=False, family=family)
-        fn = pinned_persist if persist else pinned_local_checkpoint
-        d, ids = fn(build(), spark)
-        self._ids.update(ids)
-        self._ids_by_key[k] = set(ids)
-        self._cache[k] = d
+    def pin(v):
+        if not isinstance(v, DataFrame):
+            return v
+        d, new = pinned_local_checkpoint(v, spark)
+        ids.update(new)
         return d
 
-    def release(self, spark: SparkSession, key: tuple) -> None:
-        """Unpin ONE entry's blocks and forget it (r10 verdict #4: bound
-        corpus-sized pins). The blocks themselves stay persisted until
-        the host's next ``release_persisted`` sweep / ContextCleaner GC,
-        so a frame the CURRENT gate still reads is safe — only future
-        lookups rebuild."""
-        k = (context_key(spark), *key)
-        ids = self._ids_by_key.pop(k, set())
-        unpin_rdds(ids)
-        self._ids.difference_update(ids)
-        self._cache.pop(k, None)
+    value = tuple(map(pin, value)) if isinstance(value, tuple) else pin(value)
+    _MEMO[k] = (value, ids)
+    return value
 
-    def clear(self) -> None:
-        unpin_rdds(self._ids)
-        self._ids.clear()
-        self._ids_by_key.clear()
-        self._cache.clear()
+
+def release_memo(spark: SparkSession, key: tuple) -> None:
+    """Unpin ONE entry and forget it (r10 verdict #4: bound
+    corpus-sized pins). The blocks stay persisted until the host's next
+    ``release_persisted`` sweep, so a frame the CURRENT gate still
+    reads is safe — only future lookups rebuild."""
+    _MEMO.pop((context_key(spark), *key), None)
+
+
+def clear_memos() -> None:
+    """Unpin and forget every entry; the next release_persisted sweep
+    frees the blocks."""
+    _MEMO.clear()
+    for d in MEMO_BOOKKEEPING:
+        d.clear()
 
 
 def release_persisted(spark: SparkSession) -> int:
@@ -234,17 +200,18 @@ def release_persisted(spark: SparkSession) -> int:
     pressure. Calling this BETWEEN jobs is safe — nothing references the
     finished job's frames — but never mid-job: unpersisting a
     localCheckpointed RDD whose lineage was truncated discards data that
-    cannot be recomputed. Frames registered via
-    :func:`pinned_local_checkpoint` (cross-gate memo caches) are
-    skipped — they are still live by design.
+    cannot be recomputed. Blocks pinned by :func:`memo` are skipped —
+    they are still live by design (unpinning a truncated-lineage
+    checkpoint a later gate reads fails it with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
     """
-    jsc = spark.sparkContext._jsc.sc()
-    jmap = jsc.getPersistentRDDs()
+    pinned = set().union(*(ids for _value, ids in _MEMO.values()))
+    jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
     n = 0
     it = jmap.keySet().iterator()
     while it.hasNext():
         rid = it.next()
-        if rid in _PINNED_RDD_IDS:
+        if rid in pinned:
             continue
         jmap.get(rid).get().unpersist(False)
         n += 1

@@ -14,11 +14,12 @@ def test_minhash_matches_exact_jaccard(spark, sf_dir):
     """LSH candidates + exact verification must equal exact Jaccard >= 0.8."""
     from apitap_spark.operators.dedup import (
         _jaccard_pairs,
-        _shingle_df,
         op_dedup_minhash_lsh,
+        shingle_rows,
     )
+    from apitap_spark.session import read_table
 
-    sh = _shingle_df(spark, sf_dir)
+    sh = shingle_rows(read_table(spark, sf_dir, "documents"))
     exact = _pairs(_jaccard_pairs(sh, None, 0.8))
     lsh = _pairs(op_dedup_minhash_lsh(spark, sf_dir))
     assert lsh == exact
@@ -30,11 +31,12 @@ def test_simhash_finds_planted_neardups(spark, sf_dir):
     simhash hamming distance must be tiny."""
     from apitap_spark.operators.dedup import (
         _jaccard_pairs,
-        _shingle_df,
         op_dedup_simhash,
+        shingle_rows,
     )
+    from apitap_spark.session import read_table
 
-    sh = _shingle_df(spark, sf_dir)
+    sh = shingle_rows(read_table(spark, sf_dir, "documents"))
     planted = _pairs(_jaccard_pairs(sh, None, 0.95))
     found = _pairs(op_dedup_simhash(spark, sf_dir))
     assert planted, "expected planted >=0.95 jaccard pairs in testdata"
@@ -351,9 +353,10 @@ def test_dedup_clusters_invariants(spark, sf_dir):
     co-clustered."""
     from apitap_spark.operators.dedup import (
         _jaccard_pairs,
-        _shingle_df,
         op_dedup_clusters,
+        shingle_rows,
     )
+    from apitap_spark.session import read_table
 
     rows = op_dedup_clusters(spark, sf_dir).collect()
     by_doc = {r["doc_id"]: r for r in rows}
@@ -365,7 +368,8 @@ def test_dedup_clusters_invariants(spark, sf_dir):
         assert cid == min(members)  # head is the smallest id
         kept = [d for d in members if by_doc[d]["is_kept"]]
         assert kept == [cid]  # exactly one kept per cluster
-    pairs = _jaccard_pairs(_shingle_df(spark, sf_dir), None, 0.8).collect()
+    sh = shingle_rows(read_table(spark, sf_dir, "documents"))
+    pairs = _jaccard_pairs(sh, None, 0.8).collect()
     for p in pairs:
         assert by_doc[p["d1"]]["cluster_id"] == by_doc[p["d2"]]["cluster_id"]
 
@@ -397,8 +401,9 @@ def test_approx_aggregates_accuracy(spark, sf_dir):
 def test_winnowing_neardups_share_fingerprints(spark, sf_dir):
     """Planted near-dup pairs must share most winnowing fingerprints;
     random pairs must not."""
-    from apitap_spark.operators.dedup import _jaccard_pairs, _shingle_df
+    from apitap_spark.operators.dedup import _jaccard_pairs, shingle_rows
     from apitap_spark.operators.textstats import op_text_winnowing
+    from apitap_spark.session import read_table
 
     fps = {}
     for r in op_text_winnowing(spark, sf_dir).collect():
@@ -407,7 +412,9 @@ def test_winnowing_neardups_share_fingerprints(spark, sf_dir):
 
     planted = [
         (r["d1"], r["d2"])
-        for r in _jaccard_pairs(_shingle_df(spark, sf_dir), None, 0.95).collect()
+        for r in _jaccard_pairs(
+            shingle_rows(read_table(spark, sf_dir, "documents")), None, 0.95
+        ).collect()
     ]
     assert planted
     for d1, d2 in planted:
@@ -740,12 +747,14 @@ def test_bpe_corpus_pins_released_after_last_consumer(spark, sf_dir):
     blocks. Vocab-sized entries (final_vocab, sym_ids) stay pinned."""
     from apitap_spark.operators import bpe
     from apitap_spark.session import (
+        _MEMO,
         _persistent_rdd_ids,
+        clear_memos,
         context_key,
         release_persisted,
     )
 
-    bpe.clear_bpe_memo()
+    clear_memos()
     release_persisted(spark)
     ctx = context_key(spark)
     corpus_ids: set[int] = set()
@@ -762,21 +771,149 @@ def test_bpe_corpus_pins_released_after_last_consumer(spark, sf_dir):
     for name in order:
         bpe.QUERIES[name](spark, sf_dir).count()
         for entry in ("bpe_seqs", "bpe_packed"):
-            corpus_ids |= bpe._BPE_MEMO._ids_by_key.get(
-                (ctx, entry, sf_dir), set()
-            )
+            corpus_ids |= _MEMO.get((ctx, entry, sf_dir), (None, set()))[1]
         spark.catalog.clearCache()
         release_persisted(spark)
     assert corpus_ids, "corpus-sized entries were never pinned at all?"
     # both corpus-sized entries released by their last consumers ...
-    assert (ctx, "bpe_seqs", sf_dir) not in bpe._BPE_MEMO._cache
-    assert (ctx, "bpe_packed", sf_dir) not in bpe._BPE_MEMO._cache
+    assert (ctx, "bpe_seqs", sf_dir) not in _MEMO
+    assert (ctx, "bpe_packed", sf_dir) not in _MEMO
     # ... and their blocks actually freed by the post-gate sweep
     assert not (corpus_ids & _persistent_rdd_ids(spark))
     # vocab-sized artifacts survive for the session (the tokenizer itself)
-    assert (ctx, "bpe_final_vocab", sf_dir) in bpe._BPE_MEMO._cache
-    assert (ctx, "bpe_sym_ids", sf_dir) in bpe._BPE_MEMO._cache
+    assert (ctx, "bpe_final_vocab", sf_dir) in _MEMO
+    assert (ctx, "bpe_sym_ids", sf_dir) in _MEMO
+    clear_memos()
+
+
+def test_memo_pins_dataframes_and_stores_other_values_as_is(spark):
+    """session.memo: a DataFrame is stored as a pinned checkpoint, a
+    tuple has each DataFrame pinned in order (other members kept as-is),
+    a plain value is stored unpinned; a hit returns the same object,
+    counts one event for its family, and never calls build again."""
+    from pyspark.sql import DataFrame
+
+    from apitap_spark.session import (
+        _MEMO,
+        MEMO_FAMILY_COUNTERS,
+        _persistent_rdd_ids,
+        clear_memos,
+        context_key,
+        memo,
+        release_persisted,
+    )
+
+    clear_memos()
+    ctx = context_key(spark)
+    calls = []
+
+    def build(value):
+        def run():
+            calls.append(1)
+            return value
+        return run
+
+    frame = memo(spark, ("t_frame",), build(spark.range(5)), family="t_memo")
+    pair = memo(
+        spark, ("t_pair",), build(([1, 2], spark.range(3), spark.range(4))),
+        family="t_memo",
+    )
+    plain = memo(spark, ("t_plain",), build([7, 8]), family="t_memo")
+    assert isinstance(frame, DataFrame) and len(_MEMO[(ctx, "t_frame")][1]) == 1
+    assert pair[0] == [1, 2] and [f.count() for f in pair[1:]] == [3, 4]
+    assert len(_MEMO[(ctx, "t_pair")][1]) == 2  # one pin per DataFrame
+    assert plain == [7, 8] and _MEMO[(ctx, "t_plain")][1] == set()
+    spark.catalog.clearCache()
+    release_persisted(spark)
+    hits = MEMO_FAMILY_COUNTERS.get("t_memo:hit", 0)
+    assert memo(spark, ("t_frame",), build(None), family="t_memo") is frame
+    assert memo(spark, ("t_pair",), build(None), family="t_memo") is pair
+    assert memo(spark, ("t_plain",), build(None), family="t_memo") is plain
+    assert MEMO_FAMILY_COUNTERS["t_memo:hit"] == hits + 3
+    assert len(calls) == 3 and MEMO_FAMILY_COUNTERS["t_memo:build"] >= 3
+    assert frame.count() == 5  # pinned blocks survived the sweep
+    assert _MEMO[(ctx, "t_frame")][1] <= _persistent_rdd_ids(spark)
+    clear_memos()
+
+
+def test_release_memo_unpins_one_entry_and_clear_resets_bookkeeping(spark):
+    """release_memo drops and unpins ONE entry (the next sweep frees its
+    blocks, the others stay pinned); clear_memos drops the rest and
+    empties registered bookkeeping (bpe's consumed-gate sets)."""
+    from apitap_spark.operators import bpe
+    from apitap_spark.session import (
+        _MEMO,
+        _persistent_rdd_ids,
+        clear_memos,
+        context_key,
+        memo,
+        release_memo,
+        release_persisted,
+    )
+
+    clear_memos()
+    release_persisted(spark)
+    ctx = context_key(spark)
+    memo(spark, ("t_a",), lambda: spark.range(2), family="t_memo")
+    memo(spark, ("t_b",), lambda: spark.range(3), family="t_memo")
+    ids_a, ids_b = _MEMO[(ctx, "t_a")][1], _MEMO[(ctx, "t_b")][1]
+    bpe._CORPUS_CONSUMED[(ctx, "sf", "bpe_seqs")] = {"op_bpe_encode_docs"}
+    release_memo(spark, ("t_a",))
+    release_persisted(spark)
+    live = _persistent_rdd_ids(spark)
+    assert (ctx, "t_a") not in _MEMO and not (ids_a & live)
+    assert ids_b <= live
+    clear_memos()
+    release_persisted(spark)
+    assert not _MEMO and not (ids_b & _persistent_rdd_ids(spark))
+    assert bpe._CORPUS_CONSUMED == {}
+
+
+def test_perfbench_clear_names_reset_every_memo_family(spark, sf_dir):
+    """perfbench's between-gate reset calls the four legacy clear names;
+    together they must drop EVERY memo family (the logreg weights
+    included) — the next lookup of each records a build and no hit."""
+    from apitap_spark.operators import bpe, dedup, graph, ml, similarity
+    from apitap_spark.session import (
+        MEMO_FAMILY_COUNTERS,
+        clear_memos,
+        release_persisted,
+    )
+
+    X = ml._feature_micro_frame(spark, sf_dir)  # lazy: survives the sweep
+    accessors = {
+        "coactivity_edges": lambda: graph.coactivity_edges_cached(spark, sf_dir),
+        "lp_labels": lambda: graph.lp_labels_cached(spark, sf_dir),
+        "wedge_stats": lambda: graph._wedge_stats(spark, sf_dir),
+        "df_capped_shingles": lambda: dedup._df_capped_shingles(spark, sf_dir),
+        "exact_pairs_02": lambda: dedup.exact_pairs_cached(spark, sf_dir),
+        "minhash_buckets": lambda: dedup.minhash_buckets_cached(spark, sf_dir),
+        "minhash_lsh_pairs": lambda: dedup.lsh_pairs_cached(spark, sf_dir),
+        "ann_topk": lambda: similarity.op_ann_cosine_topk(spark, sf_dir),
+        "pq_build": lambda: similarity.pq_build_cached(spark, sf_dir),
+        "logreg_weights": lambda: ml.trained_logreg_weights(spark, sf_dir, X),
+        "bpe": lambda: bpe.learned_bpe(spark, sf_dir),
+    }
+    for build in accessors.values():  # every family built (or hit) once
+        build()
+
+    graph.clear_graph_frame_caches()
+    dedup.clear_dedup_frame_caches()
+    similarity.clear_ann_frame_caches()
     bpe.clear_bpe_memo()
+    release_persisted(spark)
+
+    for family, build in accessors.items():
+        before = dict(MEMO_FAMILY_COUNTERS)
+        build()
+        delta = {
+            k.rsplit(":", 1)[1]: v - before.get(k, 0)
+            for k, v in MEMO_FAMILY_COUNTERS.items()
+            if k.startswith(f"{family}:")
+        }
+        assert delta.get("build", 0) >= 1, (family, delta)
+        assert delta.get("hit", 0) == 0, (family, delta)
+    clear_memos()
 
 
 def test_pack_training_rows_tile_the_token_stream(spark, sf_dir):

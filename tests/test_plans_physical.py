@@ -108,6 +108,70 @@ def test_ann_topk_memo_survives_release_persisted(spark, sf_dir):
     assert release_persisted(spark) >= 0
 
 
+def _frames(value):
+    from pyspark.sql import DataFrame
+
+    parts = value if isinstance(value, tuple) else (value,)
+    return [v for v in parts if isinstance(v, DataFrame)]
+
+
+def test_pinned_memos_survive_release_persisted(spark, sf_dir):
+    """Every pinned memo family is read by later gates across the bench
+    loop's between-gate sweep (clearCache + release_persisted): the
+    pinned blocks must survive it (unpinned, the second gate dies with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — reproduced in the r8 bench),
+    the second lookup must return the same object, and clear_memos()
+    must make every block sweepable again."""
+    from apitap_spark.operators import bpe, dedup, graph, similarity
+    from apitap_spark.session import (
+        _MEMO,
+        _persistent_rdd_ids,
+        clear_memos,
+        context_key,
+        release_persisted,
+    )
+
+    table = [  # (memo key, accessor)
+        (("coactivity_edges", sf_dir, graph.TRI_NEXT_K),
+         lambda: graph.coactivity_edges_cached(spark, sf_dir)),
+        (("lp_labels", sf_dir), lambda: graph.lp_labels_cached(spark, sf_dir)),
+        (("wedge_stats", sf_dir), lambda: graph._wedge_stats(spark, sf_dir)),
+        (("df_capped_shingles", sf_dir),
+         lambda: dedup._df_capped_shingles(spark, sf_dir)),
+        (("exact_pairs_02", sf_dir),
+         lambda: dedup.exact_pairs_cached(spark, sf_dir)),
+        (("minhash_lsh_pairs", sf_dir),
+         lambda: dedup.lsh_pairs_cached(spark, sf_dir)),
+        (("minhash_buckets", sf_dir),
+         lambda: dedup.minhash_buckets_cached(spark, sf_dir)),
+        (("exact_topk", sf_dir),
+         lambda: similarity.op_ann_cosine_topk(spark, sf_dir)),
+        (("lsh_topk", sf_dir),
+         lambda: similarity.op_ann_lsh_bucketed(spark, sf_dir)),
+        (("pq_build", sf_dir), lambda: similarity.pq_build_cached(spark, sf_dir)),
+        (("bpe_final_vocab", sf_dir), lambda: bpe.learned_bpe(spark, sf_dir)),
+    ]
+    clear_memos()
+    release_persisted(spark)
+    ctx = context_key(spark)
+    pinned: set[int] = set()
+    for key, gate in table:
+        first = gate()
+        ids = _MEMO[(ctx, *key)][1]
+        assert ids, f"{key} pinned no blocks"
+        pinned |= ids
+        counts = [f.count() for f in _frames(first)]
+        spark.catalog.clearCache()
+        release_persisted(spark)  # the between-gate sweep
+        assert ids <= _persistent_rdd_ids(spark), f"{key} blocks swept"
+        second = gate()
+        assert second is first, f"{key} rebuilt instead of hitting"
+        assert [f.count() for f in _frames(second)] == counts
+    clear_memos()
+    release_persisted(spark)
+    assert not (pinned & _persistent_rdd_ids(spark))
+
+
 def test_exact_dedup_is_single_shuffle(spark, sf_dir):
     import re
 
@@ -1425,20 +1489,19 @@ def test_wedge_cache_survives_release_persisted(spark, sf_dir):
     blocks (unpinned, the second gate dies with
     CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — reproduced in the r8 bench)."""
     from apitap_spark.operators.graph import (
-        clear_wedge_stats_cache,
         op_graph_link_prediction,
         op_graph_resource_allocation,
     )
-    from apitap_spark.session import release_persisted
+    from apitap_spark.session import clear_memos, release_persisted
 
-    clear_wedge_stats_cache()  # force a fresh pin-checkpoint
+    clear_memos()  # force a fresh pin-checkpoint
     release_persisted(spark)
     assert op_graph_link_prediction(spark, sf_dir).count() >= 0
     spark.catalog.clearCache()
     release_persisted(spark)  # the between-gate sweep
     assert op_graph_resource_allocation(spark, sf_dir).count() > 0
     # and a full clear makes the blocks sweepable again
-    clear_wedge_stats_cache()
+    clear_memos()
     assert release_persisted(spark) >= 0
 
 

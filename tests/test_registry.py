@@ -72,12 +72,12 @@ def test_every_gate_listed_in_coverage_md():
     assert not missing, f"gates without a COVERAGE.md row: {missing}"
 
 
-def test_rotation_fronts_oldest_untested_gates():
-    """The driver samples the first 50 queries() entries. Invariants the
-    round-5 rotation fix established: every backlog gate with no driver
-    row yet sits inside the window; gates first registered this round
-    (_NEW_GATES) sit behind every older never-tested gate; and the
-    oracle_sql() ordering mirrors queries() so the driver pairs them."""
+def test_rotation_fronts_oldest_untested_gates(monkeypatch):
+    """The driver samples the first 50 queries() entries. Invariants of
+    the rotation: every never-tested oracle-able gate sorts ahead of
+    every green (new gates get their first verdict before old greens
+    are re-proven), and the oracle_sql() ordering mirrors queries() so
+    the driver pairs them."""
     import glob
     import json
     import os
@@ -90,27 +90,30 @@ def test_rotation_fronts_oldest_untested_gates():
 
     names = list(entry.queries())
     oracles = entry.oracle_sql()
-    seen: set = set()
+    latest: dict = {}
     for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
         with open(path) as fh:
-            seen |= set(json.load(fh))
+            latest.update(json.load(fh))
 
-    window = names[:50]
-    untested = [n for n in names if n not in seen]
-    # backlog sets front the window for as long as they stay untested
-    for backlog in (entry._ROUND1_BACKLOG, entry._ROUND3_BACKLOG):
-        for n in backlog:
-            if n in untested and n in names:
-                assert n in window, f"backlog gate {n} missed the window"
-    # this round's new gates never displace older never-tested gates
-    older_untested = [
-        n for n in untested if n not in entry._NEW_GATES and n in oracles
+    def green(row) -> bool:
+        return isinstance(row, dict) and not row.get("err") and all(
+            row.get(k) is not False
+            for k in ("rows_match", "schema_match", "hash_match")
+        )
+
+    untested = [n for n in names if n not in latest and n in oracles]
+    greens = [
+        n for n in names
+        if n in latest and green(latest[n]) and n not in entry._RECHECK_FRONT
     ]
-    for n in entry._NEW_GATES:
-        if n in untested and older_untested:
-            assert names.index(n) > max(
-                names.index(o) for o in older_untested
-            ), f"new gate {n} jumped older never-tested gates"
+    if untested and greens:
+        assert max(map(names.index, untested)) < min(map(names.index, greens))
+    # and non-vacuously: a freshly registered oracle-able gate fronts
+    # every green even when all committed gates already have rows
+    oracled = entry._oracle_names()
+    monkeypatch.setattr(entry, "_oracle_names", lambda: oracled | {"op_new"})
+    order = entry._gate_priority(names + ["op_new"])
+    assert order.index("op_new") < min(map(order.index, greens))
     # oracle ordering mirrors queries ordering (driver zips the dicts)
     assert list(oracles) == [n for n in names if n in oracles]
 
