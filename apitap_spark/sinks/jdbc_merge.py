@@ -863,11 +863,12 @@ class JdbcMergeWriter:
         flush()
         return written
 
-    def write_batches(self, batches: Iterable, schema: T.StructType) -> int:
+    def write_batches(self, batches: Iterable, schema: T.StructType, route) -> int:
         """The COPY partition body of :meth:`write`: Arrow record batches
-        in, written through :meth:`_copy_batches` on ONE connection in ONE
-        transaction. Returns the input row count, before PK dedup. An
-        empty partition opens no connection."""
+        in, written through :meth:`_copy_batches` along ``route`` (the
+        COPY route :meth:`prepare` returned on the driver) on ONE
+        connection in ONE transaction. Returns the input row count, before
+        PK dedup. An empty partition opens no connection."""
         batches = iter(batches)
         head = next(batches, None)
         if head is None:
@@ -881,10 +882,6 @@ class JdbcMergeWriter:
                 yield b
 
         with self._transaction() as conn:
-            version = self.dialect.server_version(conn)
-            route = self._copy_route(conn, version, schema)
-            if route is None:
-                raise RuntimeError(f"{self.dialect.name}: no COPY route for {self.table}")
             self._copy_batches(conn, counted(), schema, *route)
         return n_in
 
@@ -980,7 +977,7 @@ class JdbcMergeWriter:
             def copy_partition(batches):
                 import pyarrow as pa
 
-                n = writer.write_batches(batches, schema)
+                n = writer.write_batches(batches, schema, copy_route)
                 yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int64())})
 
             counts = [r.n for r in df.mapInArrow(copy_partition, "n long").collect()]

@@ -36,10 +36,18 @@ default (one stream per stride instead of one DataRow message per row —
 the same 10-20x protocol economics the COPY write path measured);
 ``.option("read_method", "row")`` falls back to the extended-query row
 protocol.
+
+:func:`read_on_driver` is the small-table alternative the pipeline
+runner takes below the broadcast threshold: the same schema mapping
+(:func:`describe_schema`) and the same :meth:`PostgresReader.read`, run
+once on the driver into a local relation.
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
+import math
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -87,6 +95,28 @@ def _oid_to_spark_type(oid: int):
     }.get(oid, T.StringType())
 
 
+def describe_schema(conn, relation: str):
+    """Spark schema of ``relation`` from the row description of a
+    ``LIMIT 0`` probe on ``conn``: the one OID → type mapping of both
+    read paths (the DataSource's ``schema()`` and :func:`read_on_driver`)."""
+    from pyspark.sql.types import StructField, StructType
+
+    cur = conn.cursor()
+    cur.execute(f"SELECT * FROM {relation} LIMIT 0")
+    desc = cur.description or []
+    if not desc:
+        raise ValueError(
+            "apitap_postgres: relation has no columns (or LIMIT 0 "
+            "probe returned no metadata)"
+        )
+    return StructType(
+        [
+            StructField(name, _oid_to_spark_type(oid), True)
+            for name, oid, *_ in desc
+        ]
+    )
+
+
 def _quote_ident(name: str) -> str:
     return '"' + name.replace('"', '""') + '"'
 
@@ -97,6 +127,14 @@ def _quote_literal(v) -> str:
         return "NULL"
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
+    if isinstance(v, float) and not math.isfinite(v):
+        # repr() gives nan/inf/-inf, which Postgres parses as column
+        # names. Postgres orders NaN above every number and equal to
+        # itself, as Spark does, so the pushed comparison keeps Spark's
+        # result.
+        if v != v:
+            return "'NaN'::float8"
+        return "'Infinity'::float8" if v > 0 else "'-Infinity'::float8"
     if isinstance(v, (int, float)):
         return repr(v)
     s = str(v).replace("'", "''")
@@ -245,11 +283,33 @@ class RangePartition(InputPartition):
         self.clause = clause  # None = unpartitioned full scan
 
 
+class CopyTooLarge(Exception):
+    """A COPY stream passed the reader's ``max_copy_bytes``."""
+
+
+class _CappedBuffer(io.BytesIO):
+    """A BytesIO that raises :class:`CopyTooLarge` instead of growing past
+    ``limit`` bytes."""
+
+    def __init__(self, limit: int):
+        super().__init__()
+        self.limit = limit
+
+    def write(self, b) -> int:
+        if self.tell() + len(b) > self.limit:
+            raise CopyTooLarge(self.limit)
+        return super().write(b)
+
+
 class PostgresReader(DataSourceReader):
     def __init__(self, options: dict, schema):
         self.options = options
         self.schema_struct = schema
         self.pushed: list[str] = []
+        # set by read_on_driver: its held connection (tasks open their
+        # own) and a byte cap on each COPY stream
+        self.conn = None
+        self.max_copy_bytes = None
 
     # -- option helpers ------------------------------------------------
     def _dsn(self) -> str:
@@ -257,6 +317,15 @@ class PostgresReader(DataSourceReader):
         if not dsn:
             raise ValueError("apitap_postgres: the 'dsn' option is required")
         return dsn
+
+    def _connection(self):
+        """Context manager: the held connection, else a new one closed on
+        exit."""
+        if self.conn is not None:
+            return contextlib.nullcontext(self.conn)
+        from apitap_spark.sinks import pgwire
+
+        return contextlib.closing(pgwire.connect(self._dsn()))
 
     def _relation(self) -> str:
         if self.options.get("query"):
@@ -293,18 +362,13 @@ class PostgresReader(DataSourceReader):
         lb = self.options.get("lower_bound")
         ub = self.options.get("upper_bound")
         if lb is None or ub is None:
-            from apitap_spark.sinks import pgwire
-
-            conn = pgwire.connect(self._dsn())
-            try:
+            with self._connection() as conn:
                 cur = conn.cursor()
                 cur.execute(
                     f"SELECT MIN({col}), MAX({col}) FROM {self._relation()}"
                     + self._where()
                 )
                 row = cur.fetchone()
-            finally:
-                conn.close()
             if row is None or row[0] is None:
                 return [RangePartition(None)]  # empty or all-NULL keys
             lb = lb if lb is not None else row[0]
@@ -338,8 +402,6 @@ class PostgresReader(DataSourceReader):
 
     # -- execution -----------------------------------------------------
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        from apitap_spark.sinks import pgwire
-
         cols = ", ".join(
             _quote_ident(f.name) for f in self.schema_struct.fields
         )
@@ -354,13 +416,11 @@ class PostgresReader(DataSourceReader):
             # default — the write path measured COPY at 10-20x the row
             # protocol and the read direction pays the same per-message
             # tax in reverse.
-            conn = pgwire.connect(self._dsn())
-            try:
+            with self._connection() as conn:
                 cur = conn.cursor()
                 cur.execute(sql)
-                yield from cur.fetchall()
-            finally:
-                conn.close()
+                rows = cur.fetchall()
+            yield from rows
             return
         arrow_types = [
             _arrow_type(f.dataType) for f in self.schema_struct.fields
@@ -373,17 +433,13 @@ class PostgresReader(DataSourceReader):
     def _copy_fetch(self, copy_sql: str):
         """Run one COPY ... TO STDOUT and return the raw byte stream.
         Memory profile matches the row path (which also materialized
-        the stride) — strides are bounded by num_partitions sizing."""
-        import io
-
-        from apitap_spark.sinks import pgwire
-
-        buf = io.BytesIO()
-        conn = pgwire.connect(self._dsn())
-        try:
+        the stride) — strides are bounded by num_partitions sizing.
+        With ``max_copy_bytes`` set, a stream past the cap raises
+        :class:`CopyTooLarge` mid-COPY, leaving the connection unusable."""
+        cap = self.max_copy_bytes
+        buf = io.BytesIO() if cap is None else _CappedBuffer(cap)
+        with self._connection() as conn:
             conn.cursor().copy_expert(copy_sql, buf)
-        finally:
-            conn.close()
         buf.seek(0)
         return buf
 
@@ -454,31 +510,9 @@ class PostgresDataSource(DataSource):
         return "apitap_postgres"
 
     def schema(self):
-        from pyspark.sql.types import StructField, StructType
-
-        from apitap_spark.sinks import pgwire
-
         reader = PostgresReader(self.options, None)
-        conn = pgwire.connect(reader._dsn())
-        try:
-            cur = conn.cursor()
-            cur.execute(
-                f"SELECT * FROM {reader._relation()} LIMIT 0"
-            )
-            desc = cur.description or []
-        finally:
-            conn.close()
-        if not desc:
-            raise ValueError(
-                "apitap_postgres: relation has no columns (or LIMIT 0 "
-                "probe returned no metadata)"
-            )
-        return StructType(
-            [
-                StructField(name, _oid_to_spark_type(oid), True)
-                for name, oid, *_ in desc
-            ]
-        )
+        with reader._connection() as conn:
+            return describe_schema(conn, reader._relation())
 
     def reader(self, schema) -> DataSourceReader:
         return PostgresReader(self.options, schema)
@@ -775,13 +809,9 @@ class PostgresSimpleStreamReader(SimpleDataSourceStreamReader):
         """Context manager: yield ``conn`` when the caller holds the
         poll's shared connection, else open a dedicated one and close
         it on exit — the own-or-borrow dance of every probe helper."""
-        import contextlib
-
         if conn is not None:
             return contextlib.nullcontext(conn)
-        from apitap_spark.sinks import pgwire
-
-        return contextlib.closing(pgwire.connect(self._reader._dsn()))
+        return self._reader._connection()
 
     def _advance_xmin_fence(
         self, pending: list, last: str | None, conn=None
@@ -989,6 +1019,69 @@ class PostgresSimpleStreamReader(SimpleDataSourceStreamReader):
 
     def commit(self, end: dict) -> None:  # nothing to clean up
         pass
+
+
+def read_on_driver(spark, options: dict, max_bytes: int, watermark=None):
+    """Read a small table-kind relation once, on the driver, into a local
+    DataFrame; returns None when the table is larger than ``max_bytes``
+    bytes, missing, not a plain or materialized table (a view's size
+    says nothing of its rows), a ``query`` relation, or ``max_bytes`` is
+    negative. The caller then takes the DataSource path, whose error on
+    a missing table is unchanged.
+
+    ``max_bytes`` bounds both the size on disk (``pg_table_size``, probed
+    before any row is read) and the COPY stream itself: TOAST stores
+    long text compressed, so a table small on disk can hold many times
+    its size in text (measured: 1.5 MB on disk, 97.5 MB of text). A
+    stream past the bound drops the connection and returns None.
+
+    One connection runs the size probe, the schema probe
+    (:func:`describe_schema`) and :meth:`PostgresReader.read` over the
+    whole table (COPY CSV → Arrow, or the text fallback), then
+    ``spark.createDataFrame`` makes a local relation: no planner
+    workers, no Python scan stage, no job. ``watermark`` is an
+    incremental ``(cursor, last)``: ``cursor > last`` goes into the
+    COPY's WHERE clause (not applied when the relation has no such
+    column, as on the DataSource path). The module SQL's own filters run
+    in Spark, over at most ``max_bytes``."""
+    if max_bytes < 0 or options.get("query"):
+        return None
+    import pyarrow as pa
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    reader = PostgresReader(options, None)
+    reader.max_copy_bytes = max_bytes
+    relation = reader._relation()
+    try:
+        with reader._connection() as conn:
+            cur = conn.cursor()
+            # views, partitioned and foreign tables report 0 bytes
+            # whatever they hold, so only plain and materialized tables
+            # qualify
+            cur.execute(
+                "SELECT pg_table_size(c.oid) FROM pg_class c"
+                " WHERE c.oid = to_regclass(%s) AND c.relkind IN ('r', 'm')",
+                [relation],
+            )
+            row = cur.fetchone()
+            if row is None or row[0] > max_bytes:
+                return None
+            schema = describe_schema(conn, relation)
+            reader.schema_struct, reader.conn = schema, conn
+            if watermark is not None and watermark[0] in schema.names:
+                cursor, last = watermark
+                reader.pushed = [_filter_to_sql(GreaterThan((cursor,), last))]
+            out = list(reader.read(RangePartition(None)))
+    except CopyTooLarge:
+        return None
+    if not out:
+        table = to_arrow_schema(schema).empty_table()
+    elif isinstance(out[0], pa.RecordBatch):
+        table = pa.Table.from_batches(out)
+    else:  # tuples from the text fallback (bytea, timestamptz)
+        table = LocalDataToArrowConversion.convert(out, schema, False)
+    return spark.createDataFrame(table, schema)
 
 
 def register(spark) -> None:

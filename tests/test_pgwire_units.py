@@ -258,3 +258,49 @@ def test_cert_sig_hash_total_on_arbitrary_bytes(junk):
     assert out in {
         hashlib.new(a, junk).digest() for a in ("sha256", "sha384", "sha512")
     }
+
+
+def _recv_exact(sock, n: int) -> bytes:
+    buf = b""
+    while len(buf) < n:
+        chunk = sock.recv(n - len(buf))
+        if not chunk:
+            raise ConnectionError("client closed")
+        buf += chunk
+    return buf
+
+
+def test_connection_sets_tcp_nodelay():
+    """Every connection turns Nagle off: an extended query is five small
+    writes, and with Nagle on the last ones wait for the server's delayed
+    ACK (~44 ms a statement on loopback). An in-process server answers the
+    startup packet with AuthenticationOk + ReadyForQuery."""
+    import socket
+    import struct
+    import threading
+
+    from apitap_spark.sinks.pgwire import Connection
+
+    srv = socket.create_server(("127.0.0.1", 0))
+    port = srv.getsockname()[1]
+
+    def serve():
+        peer, _ = srv.accept()
+        with peer:
+            (n,) = struct.unpack(">i", _recv_exact(peer, 4))
+            _recv_exact(peer, n - 4)  # startup packet
+            peer.sendall(
+                b"R" + struct.pack(">ii", 8, 0) + b"Z" + struct.pack(">i", 5) + b"I"
+            )
+            peer.recv(5)  # Terminate
+
+    t = threading.Thread(target=serve, daemon=True)
+    t.start()
+    conn = Connection(f"host=127.0.0.1 port={port} user=u")
+    try:
+        assert conn._sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+    finally:
+        conn.close()
+        t.join(5)
+        srv.close()
+    assert not t.is_alive()

@@ -572,6 +572,16 @@ def _copy_batch():
     )
 
 
+def _driver_route(w, schema=COPY_SCHEMA):
+    """The COPY route ``w.prepare`` returns on the driver, computed over a
+    connection of its own so the partition body's records stay separate."""
+    import copy
+
+    driver = copy.copy(w)
+    driver.conn_factory = CopyConn
+    return driver.prepare(schema)
+
+
 @pytest.fixture(params=["UTC", "America/New_York"])
 def local_tz(request, monkeypatch):
     """Run under a process time zone; restored (and re-read) afterwards."""
@@ -596,7 +606,8 @@ def test_copy_body_renders_csv_and_dedups_last_wins(local_tz):
         lambda: conn, "public.t", dialect=PostgresDialect(),
         mode=WriteMode.MERGE, primary_key="id",
     )
-    assert w.write_batches(iter([_copy_batch()]), COPY_SCHEMA) == 4
+    route = _driver_route(w)
+    assert w.write_batches(iter([_copy_batch()]), COPY_SCHEMA, route) == 4
     [(sql, data)] = conn.copies
     assert sql.startswith('COPY "_apitap_stage_t" ("id", "s", "f", "ts") FROM STDIN')
     as_row = [
@@ -613,6 +624,8 @@ def test_copy_body_renders_csv_and_dedups_last_wins(local_tz):
         assert as_row[3] == as_row[0]
     assert any(q.startswith('MERGE INTO "public"."t"') for q in conn.sql)
     assert conn.ends == ["commit"]
+    # the route came from the driver: the partition never re-probes
+    assert "SELECT version()" not in conn.sql
 
 
 def test_copy_body_append_copies_into_target_without_dedup():
@@ -620,7 +633,10 @@ def test_copy_body_append_copies_into_target_without_dedup():
     w = JdbcMergeWriter(
         lambda: conn, "t", dialect=PostgresDialect(), mode=WriteMode.APPEND
     )
-    assert w.write_batches(iter([_copy_batch()] * 2), COPY_SCHEMA) == 8
+    assert (
+        w.write_batches(iter([_copy_batch()] * 2), COPY_SCHEMA, _driver_route(w))
+        == 8
+    )
     [(sql, data)] = conn.copies
     assert sql.startswith('COPY "t" ')
     assert data.count(b"\n") == 10  # 8 row ends + 2 embedded newlines
@@ -634,7 +650,7 @@ def test_copy_body_failure_rolls_back():
         mode=WriteMode.MERGE, primary_key="id",
     )
     with pytest.raises(RuntimeError, match="mid-COPY"):
-        w.write_batches(iter([_copy_batch()]), COPY_SCHEMA)
+        w.write_batches(iter([_copy_batch()]), COPY_SCHEMA, _driver_route(w))
     assert conn.ends == ["rollback"]
 
 
@@ -643,7 +659,7 @@ def test_empty_partition_opens_no_connection():
         raise AssertionError("connected for an empty partition")
 
     w = JdbcMergeWriter(refuse, "t", mode=WriteMode.MERGE, primary_key="id")
-    assert w.write_batches(iter([]), COPY_SCHEMA) == 0
+    assert w.write_batches(iter([]), COPY_SCHEMA, _driver_route(w)) == 0
 
 
 def test_nested_and_binary_columns_render_into_copy_csv():

@@ -188,11 +188,59 @@ def test_partition_strides_cover_everything_with_bounds(spark, seeded_table):
     assert df.select("id").distinct().count() == N_ROWS
 
 
-def test_pipeline_postgres_source_to_duckdb_target(spark, seeded_table, tmp_path):
+def _on_both_read_paths(spark, run):
+    """``{path: run(path)}`` for both sides of the small-source selection:
+    the session's default broadcast threshold reads a small postgres
+    source on the driver, a threshold of -1 takes the apitap_postgres
+    DataSource. The threshold is restored afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    out = {}
+    try:
+        out["driver"] = run("driver")
+        spark.conf.set(key, "-1")
+        out["datasource"] = run("datasource")
+    finally:
+        spark.conf.set(key, old)
+    return out
+
+
+def _pin_views(monkeypatch, path: str) -> dict:
+    """Make ``run_module`` register the source under a known view name
+    (``warehouse_items_<path>``), so the module SQL can be planned again
+    after the run; returns the source → view mapping."""
+    from apitap_spark.pipeline import runner, templating
+
+    views = {"warehouse_items": f"warehouse_items_{path}"}
+    monkeypatch.setattr(
+        runner,
+        "render_module",
+        lambda d, rel: templating.render_module(d, rel, view_names=views),
+    )
+    return views
+
+
+def _module_plan_nodes(spark, mod_dir, rel, views):
+    """Physical node names of the module's SQL over its registered views."""
+    from apitap_spark.pipeline.templating import render_module
+    from tests.test_plans_physical import _node_names
+
+    sql = render_module(str(mod_dir), rel, view_names=views).sql
+    return _node_names(spark.sql(sql))
+
+
+def _assert_read_paths(nodes: dict) -> None:
+    assert "BatchScan apitap_postgres" not in nodes["driver"], nodes["driver"]
+    assert "BatchScan apitap_postgres" in nodes["datasource"], nodes["datasource"]
+
+
+def test_pipeline_postgres_source_to_duckdb_target(
+    spark, seeded_table, tmp_path, monkeypatch
+):
     """Whole-pipeline read-back: a module whose use_source() is a
-    postgres-KIND source (parallel pgsource reader) transforming into a
-    DuckDB target; second run with an incremental watermark only moves
-    new rows."""
+    postgres-KIND source transforming into a DuckDB target, once on each
+    read path (driver read of the small table, and the parallel pgsource
+    reader): both land the same rows."""
     import duckdb
 
     from apitap_spark.config.models import load_config
@@ -207,44 +255,59 @@ def test_pipeline_postgres_source_to_duckdb_target(spark, seeded_table, tmp_path
         "FROM {{ use_source('warehouse_items') }}\n"
         "WHERE name IS NOT NULL GROUP BY name"
     )
-    duck_path = str(tmp_path / "t.duckdb")
-    cfg = load_config(
-        {
-            "sources": [
-                {
-                    "name": "warehouse_items",
-                    "kind": "postgres",
-                    "dsn": DSN,
-                    "table": TABLE,
-                    "partition_column": "id",
-                    "num_partitions": 3,
-                    "primary_key": "name",
-                }
-            ],
-            "targets": [
-                {"name": "t", "kind": "duckdb", "path": duck_path}
-            ],
-        }
-    )
-    stats = run_module(
-        spark, cfg, str(mod_dir), "readback.sql", "t", WriteMode.MERGE
-    )
-    assert stats.sink_table == "agg_by_name"
-    con = duckdb.connect(duck_path)
-    got = dict(con.execute("SELECT name, n FROM agg_by_name").fetchall())
     want: dict = {}
     for r in seeded_table:
         if r[1] is not None:
             want[r[1]] = want.get(r[1], 0) + 1
-    assert got == want
-    con.close()
+
+    def run(path):
+        views = _pin_views(monkeypatch, path)
+        duck_path = str(tmp_path / f"{path}.duckdb")
+        cfg = load_config(
+            {
+                "sources": [
+                    {
+                        "name": "warehouse_items",
+                        "kind": "postgres",
+                        "dsn": DSN,
+                        "table": TABLE,
+                        "partition_column": "id",
+                        "num_partitions": 3,
+                        "primary_key": "name",
+                    }
+                ],
+                "targets": [
+                    {"name": "t", "kind": "duckdb", "path": duck_path}
+                ],
+            }
+        )
+        stats = run_module(
+            spark, cfg, str(mod_dir), "readback.sql", "t", WriteMode.MERGE
+        )
+        assert stats.sink_table == "agg_by_name"
+        con = duckdb.connect(duck_path)
+        rows = sorted(
+            con.execute("SELECT name, n, total_val FROM agg_by_name").fetchall()
+        )
+        con.close()
+        return rows, _module_plan_nodes(spark, mod_dir, "readback.sql", views)
+
+    out = _on_both_read_paths(spark, run)
+    for rows, _ in out.values():
+        assert {name: n for name, n, _ in rows} == want
+    assert out["driver"][0] == out["datasource"][0]
+    _assert_read_paths({path: nodes for path, (_, nodes) in out.items()})
 
 
 def test_pipeline_postgres_source_incremental_watermark(
-    spark, seeded_table, tmp_path
+    spark, seeded_table, tmp_path, monkeypatch
 ):
-    """The high-watermark re-run pushes cursor > last INTO Postgres via
-    pushFilters: the second run sees zero rows (no new ids)."""
+    """The high-watermark re-run applies cursor > last inside Postgres on
+    both read paths (the driver read's COPY WHERE clause, the reader's
+    pushFilters): the second run sees zero rows (no new ids), and both
+    paths land the same rows and watermarks."""
+    import duckdb
+
     from apitap_spark.config.models import load_config
     from apitap_spark.pipeline.runner import run_module
     from apitap_spark.sinks.jdbc_merge import WriteMode
@@ -265,34 +328,223 @@ def test_pipeline_postgres_source_incremental_watermark(
         "{{ sink('items_copy') }}\n"
         "SELECT id, name, val FROM {{ use_source('warehouse_items') }}"
     )
-    duck_path = str(tmp_path / "incr.duckdb")
-    cfg = load_config(
-        {
-            "sources": [
-                {
-                    "name": "warehouse_items",
-                    "kind": "postgres",
-                    "dsn": DSN,
-                    "table": TABLE,
-                    "partition_column": "id",
-                    "num_partitions": 2,
-                    "primary_key": "id",
-                    "incremental": {"cursor_field": "id"},
-                }
-            ],
-            "targets": [{"name": "t", "kind": "duckdb", "path": duck_path}],
-        }
+
+    def run(path):
+        views = _pin_views(monkeypatch, path)
+        duck_path = str(tmp_path / f"incr_{path}.duckdb")
+        cfg = load_config(
+            {
+                "sources": [
+                    {
+                        "name": "warehouse_items",
+                        "kind": "postgres",
+                        "dsn": DSN,
+                        "table": TABLE,
+                        "partition_column": "id",
+                        "num_partitions": 2,
+                        "primary_key": "id",
+                        "incremental": {"cursor_field": "id"},
+                    }
+                ],
+                "targets": [{"name": "t", "kind": "duckdb", "path": duck_path}],
+            }
+        )
+        state = MemState()
+        s1 = run_module(
+            spark, cfg, str(mod_dir), "incr.sql", "t", WriteMode.MERGE, state=state
+        )
+        assert s1.rows_written == N_ROWS
+        assert state.get("warehouse_items") == N_ROWS - 1  # max id watermark
+        s2 = run_module(
+            spark, cfg, str(mod_dir), "incr.sql", "t", WriteMode.MERGE, state=state
+        )
+        assert s2.rows_written == 0  # nothing past the watermark
+        con = duckdb.connect(duck_path)
+        rows = sorted(con.execute("SELECT id, name, val FROM items_copy").fetchall())
+        con.close()
+        nodes = _module_plan_nodes(spark, mod_dir, "incr.sql", views)
+        return rows, dict(state.d), nodes
+
+    out = _on_both_read_paths(spark, run)
+    assert out["driver"][0] == out["datasource"][0]
+    assert len(out["driver"][0]) == N_ROWS
+    assert out["driver"][1] == out["datasource"][1]
+    _assert_read_paths({path: nodes for path, (_, _, nodes) in out.items()})
+
+
+def _exec(*statements: str) -> None:
+    """Run ``statements`` in one transaction on a fresh connection."""
+    from apitap_spark.sinks import pgwire
+
+    conn = pgwire.connect(DSN)
+    try:
+        cur = conn.cursor()
+        for sql in statements:
+            cur.execute(sql)
+        conn.commit()
+    finally:
+        conn.close()
+
+
+def test_driver_read_matches_datasource_schema_and_rows(spark):
+    """The driver read and the DataSource map a relation to the same
+    schema and the same rows: over a table with a column of every OID
+    ``_oid_to_spark_type`` maps (bytea and timestamptz take the COPY text
+    fallback) and over an empty table."""
+    from apitap_spark.sources.pgsource import PostgresDataSource, read_on_driver
+
+    every = "pgsrc_every_oid"
+    empty = "pgsrc_empty"
+    _exec(
+        f"DROP TABLE IF EXISTS {every}",
+        f"CREATE TABLE {every} (b BOOLEAN, by BYTEA, i8 BIGINT, i2 SMALLINT,"
+        " i4 INTEGER, o OID, f4 REAL, f8 DOUBLE PRECISION, n NUMERIC(12, 3),"
+        " d DATE, ts TIMESTAMP, tz TIMESTAMPTZ, t TEXT)",
+        f"""INSERT INTO {every} VALUES
+            (TRUE, '\\x00ff', 1, 2, 3, 4, 1.5, 'NaN', 1.25, '2024-02-29',
+             '2024-03-10 02:30:00', '2024-03-10 06:59:59.5+00', 'x'),
+            (NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
+             NULL, NULL, NULL),
+            (FALSE, '', -1, -2, -3, 0, '-Infinity', 'Infinity', -0.001,
+             '1970-01-01', '1999-12-31 23:59:59.999999',
+             '2024-11-03 05:30:00-05', E'multi\\nline')""",
     )
-    state = MemState()
-    s1 = run_module(
-        spark, cfg, str(mod_dir), "incr.sql", "t", WriteMode.MERGE, state=state
+    _exec(
+        f"DROP TABLE IF EXISTS {empty}",
+        f"CREATE TABLE {empty} (id BIGINT, tz TIMESTAMPTZ, by BYTEA)",
     )
-    assert s1.rows_written == N_ROWS
-    assert state.get("warehouse_items") == N_ROWS - 1  # max id watermark
-    s2 = run_module(
-        spark, cfg, str(mod_dir), "incr.sql", "t", WriteMode.MERGE, state=state
+    spark.dataSource.register(PostgresDataSource)
+    try:
+        for table, n in ((every, 3), (empty, 0)):
+            opts = {"dsn": DSN, "table": table}
+            on_driver = read_on_driver(spark, opts, 1 << 30)
+            assert on_driver is not None
+            via_source = spark.read.format("apitap_postgres").options(**opts).load()
+            want = PostgresDataSource(opts).schema()
+            assert on_driver.selectExpr("*").schema == want == via_source.schema
+            got = sorted(map(repr, on_driver.collect()))  # repr: NaN == NaN
+            assert got == sorted(map(repr, via_source.collect()))
+            assert len(got) == n
+    finally:
+        _exec(f"DROP TABLE {every}", f"DROP TABLE {empty}")
+
+
+def test_driver_read_declines_large_missing_and_disabled(spark, seeded_table):
+    """``read_on_driver`` reads nothing, and returns None, for a table over
+    the bound, a threshold of -1, a missing table, a query relation, and
+    a view or partitioned table (both report 0 bytes however many rows
+    they hold). A table under the bound on disk whose TOAST-compressed
+    text passes it is dropped mid-COPY and also returns None."""
+    from apitap_spark.sinks import pgwire
+    from apitap_spark.sources.pgsource import read_on_driver
+
+    view, parted, toast = "pgsrc_items_view", "pgsrc_parted", "pgsrc_toast"
+    _exec(
+        f"CREATE OR REPLACE VIEW {view} AS SELECT * FROM {TABLE}",
+        f"DROP TABLE IF EXISTS {parted}",
+        f"CREATE TABLE {parted} (id BIGINT) PARTITION BY RANGE (id)",
+        f"CREATE TABLE {parted}_all PARTITION OF {parted}"
+        " FOR VALUES FROM (0) TO (1000000)",
+        f"INSERT INTO {parted} SELECT id FROM {TABLE}",
+        f"DROP TABLE IF EXISTS {toast}",
+        # 200 rows x 30 KB of repetitive text: ~6 MB of COPY text that
+        # pglz stores in a small fraction of that
+        f"CREATE TABLE {toast} AS SELECT g AS id,"
+        " repeat('apitap ' || (g % 10) || ' ', 3000) AS body"
+        " FROM generate_series(1, 200) g",
     )
-    assert s2.rows_written == 0  # nothing past the watermark
+    try:
+        cap = 1 << 20
+        conn = pgwire.connect(DSN)
+        try:
+            cur = conn.cursor()
+            cur.execute(
+                f"SELECT pg_table_size('{toast}'), sum(octet_length(body))"
+                f" FROM {toast}"
+            )
+            on_disk, text = cur.fetchone()
+        finally:
+            conn.close()
+        assert on_disk < cap < text  # small on disk, over the bound in text
+        toast_opts = {"dsn": DSN, "table": toast}
+        assert read_on_driver(spark, toast_opts, cap) is None
+        assert read_on_driver(spark, toast_opts, 4 * text).count() == 200
+
+        opts = {"dsn": DSN, "table": TABLE}
+        big = 1 << 30
+        assert read_on_driver(spark, opts, 1) is None
+        assert read_on_driver(spark, opts, -1) is None
+        assert read_on_driver(spark, {"dsn": DSN, "table": "no_such_table"}, big) is None
+        assert read_on_driver(spark, {"dsn": DSN, "query": "SELECT 1"}, big) is None
+        assert read_on_driver(spark, {"dsn": DSN, "table": view}, big) is None
+        assert read_on_driver(spark, {"dsn": DSN, "table": parted}, big) is None
+        assert read_on_driver(spark, opts, big).count() == N_ROWS
+    finally:
+        _exec(f"DROP VIEW {view}", f"DROP TABLE {parted}", f"DROP TABLE {toast}")
+
+
+def test_register_pg_source_bound_is_the_smaller_of_cap_and_threshold(
+    spark, seeded_table, monkeypatch
+):
+    """``_register_pg_source`` reads on the driver only when the table is
+    within both ``DRIVER_READ_MAX_BYTES`` and the broadcast threshold:
+    lowering either below the table's size takes the DataSource."""
+    from types import SimpleNamespace
+
+    from apitap_spark.pipeline import runner
+    from tests.test_plans_physical import _node_names
+
+    sc = SimpleNamespace(
+        resolved_dsn=lambda: DSN, table=TABLE, num_partitions=2,
+        partition_column="id",
+    )
+
+    def scans(view):
+        df = runner._register_pg_source(spark, sc, view)
+        assert df.count() == N_ROWS
+        return "BatchScan apitap_postgres" in _node_names(spark.table(view))
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        assert not scans("pgsrc_bound_default")
+        spark.conf.set(key, "1")
+        assert scans("pgsrc_bound_threshold")
+        spark.conf.set(key, old)
+        monkeypatch.setattr(runner, "DRIVER_READ_MAX_BYTES", 1)
+        assert scans("pgsrc_bound_cap")
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_non_finite_float_filters_push_like_spark(spark):
+    """NaN and ±Infinity filter values push down as float8 literals and
+    select exactly the rows Spark's own evaluation selects (Spark and
+    Postgres both order NaN above every number and equal to itself)."""
+    from pyspark.sql import functions as F
+
+    table = "pgsrc_nonfinite"
+    _exec(
+        f"DROP TABLE IF EXISTS {table}",
+        f"CREATE TABLE {table} (id BIGINT, v DOUBLE PRECISION)",
+        f"""INSERT INTO {table} VALUES (1, 'NaN'), (2, 'Infinity'),
+            (3, '-Infinity'), (4, 1.5), (5, NULL), (6, 0)""",
+    )
+    try:
+        pushed = _reader(spark, table=table).load()
+        local = spark.createDataFrame(pushed.collect(), pushed.schema)
+        nan, inf = float("nan"), float("inf")
+        v = F.col("v")
+        for cond in (
+            v > F.lit(nan), v == F.lit(nan), v < F.lit(nan),
+            v < F.lit(inf), v >= F.lit(inf), v > F.lit(-inf),
+            v <= F.lit(-inf), v.isin(nan, inf),
+        ):
+            got = sorted(r.id for r in pushed.filter(cond).collect())
+            want = sorted(r.id for r in local.filter(cond).collect())
+            assert got == want, cond
+    finally:
+        _exec(f"DROP TABLE {table}")
 
 
 def test_copy_read_matches_row_protocol_read(spark, seeded_table):
