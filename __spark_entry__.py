@@ -36,6 +36,13 @@ _SHIPPED: set[int] = set()
 # evidence).  Reset this set each round to only the gates actually
 # touched; they sort right behind true reds.
 _RECHECK_FRONT: set[str] = {
+    # stage budget: PageRank and TrustRank share one checkpointed round
+    # with observed scalars, basket pairs are built inside each basket
+    # array, and q5 stands for every gate reading through the footer
+    # schema of session.read_table
+    "op_basket_association_rules",
+    "op_graph_pagerank",
+    "q5_region_revenue",
     # every gate that reads a cross-gate memo: all memo accessors now go
     # through session.memo (one keyed store instead of per-module dict
     # caches). strict_audit and pandas_mimic green at sf0.001 and

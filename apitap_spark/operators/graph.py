@@ -22,7 +22,7 @@ sessionization in DuckDB) — rare for graph code.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apitap_spark.session import clear_memos, memo, read_table
@@ -168,6 +168,49 @@ def _damping_fraction(damping: float) -> tuple[int, int]:
     return frac.numerator, frac.denominator
 
 
+def _rank_state(edges: DataFrame, rank_u, nodes: DataFrame | None = None) -> DataFrame:
+    """The power-iteration state ``(v, deg, out, rank_u)``: each node's
+    out-degree and out-neighbour list (one ``groupBy(src)`` of the edges)
+    and its initial rank. The nodes are ``nodes.v`` left-joined to that
+    (NULL ``deg``/``out`` without out-edges), else the edge sources."""
+    state = edges.groupBy(F.col("src").alias("v")).agg(
+        F.count("*").alias("deg"), F.collect_list("dst").alias("out")
+    )
+    if nodes is not None:
+        state = nodes.select("v").join(state, "v", "left")
+    return state.select("v", "deg", "out", rank_u.cast("long").alias("rank_u"))
+
+
+def _rank_round(state: DataFrame, rank_sql: str) -> DataFrame:
+    """One power-iteration round over the state frame: ``inflow`` =
+    Σ rank_u(src) div deg(src) per destination (one explode of ``out``
+    and one groupBy), left-joined back to the state, which keeps its
+    adjacency and takes ``rank_sql`` (over ``v`` and ``inflow``) as
+    its new ``rank_u``. Destinations outside the state are dropped."""
+    inflow = (
+        state.select(F.explode("out").alias("v"), F.expr("rank_u div deg").alias("c"))
+        .groupBy("v")
+        .agg(F.sum("c").alias("inflow"))
+    )
+    return state.join(inflow, "v", "left").select(
+        "v", "deg", "out", F.expr(rank_sql).alias("rank_u")
+    )
+
+
+def _delivered_checkpoint(state: DataFrame, *metrics) -> tuple[DataFrame, dict]:
+    """Eagerly checkpoint ``state`` and return the mass it delivers next
+    round, ``D`` = Σ deg·(rank_u div deg) (= Σ inflow), plus ``metrics``,
+    observed on the checkpoint's own job. An Observation fires only on an
+    eager action, and ``get`` blocks until it has, so it is read after
+    the checkpoint returns; one Observation per action."""
+    obs = Observation()
+    delivered = F.expr(
+        "coalesce(sum(CASE WHEN deg > 0 THEN deg * (rank_u div deg) ELSE 0 END), 0L)"
+    )
+    state = state.observe(obs, delivered.alias("D"), *metrics).localCheckpoint()
+    return state, obs.get
+
+
 def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
@@ -182,11 +225,14 @@ def pagerank(
     (initial mass PAGERANK_SCALE per node), ``rank`` its double view.
 
     Each iteration: contribution = rank_micro(src) div outdeg(src)
-    summed per dst (one join + one groupBy, both keyed so AQE
-    coalesces), leaked mass (dangling nodes + integer-floor remainders)
-    redistributed uniformly by conservation, damping applied as an
-    exact fraction. localCheckpoint per round truncates the growing
-    lineage exactly like connected_components.
+    summed per dst, leaked mass (dangling nodes + integer-floor
+    remainders) redistributed uniformly by conservation, damping applied
+    as an exact fraction. Each round is ONE checkpointed state update
+    (:func:`_rank_round`); the node count and the delivered mass that
+    fix the next round's leak share ride that checkpoint's own job as an
+    Observation, so no round runs a second action and the share is
+    inlined as a literal. The last round is left lazy for the caller's
+    plan. An empty node set returns an empty frame.
 
     Fixed-point arithmetic makes every sum order-INdependent (bigint,
     not float), so the whole 10-iteration computation is replayable in
@@ -195,57 +241,25 @@ def pagerank(
     leaks < (E + 2n) micro-units of mass per iteration; tests assert
     the conservation band instead of float-exact totals.
     """
-    n = nodes.count()
     dnum, dden = _damping_fraction(damping)
     base_u = (PAGERANK_SCALE * (dden - dnum)) // dden
-    total_u = n * PAGERANK_SCALE
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    ranked_edges = edges.join(outdeg, "src").localCheckpoint()
-    rank = nodes.select(
-        "v", F.lit(PAGERANK_SCALE).cast("long").alias("rank_u")
-    ).localCheckpoint()
-    for _ in range(iters):
-        # ONE heavy plan per round: the contribution join+groupBy is
-        # checkpointed, then reused by both the leaked-mass probe and
-        # the rank update. (The previous formulation ran a separate
-        # rank-vs-outdeg anti-join action per round — the contribution
-        # plan effectively executed twice; measured ~1.9x slower.)
-        contrib = (
-            ranked_edges.join(rank, ranked_edges.src == rank.v)
-            .select(
-                F.col("dst").alias("v"),
-                F.expr("rank_u div deg").alias("c"),
-            )
-            .groupBy("v")
-            .agg(F.sum("c").alias("inflow"))
-            .localCheckpoint()
+    state, seen = _delivered_checkpoint(
+        _rank_state(edges, F.lit(PAGERANK_SCALE), nodes), F.count("*").alias("n")
+    )
+    n = seen["n"]
+    for i in range(iters if n else 0):
+        # leaked mass by conservation: the rank every node delivers is
+        # D = Σ inflow, so the leak (dangling + floor remainders) is
+        # n·SCALE − D. D never exceeds n·SCALE, so Python's floor
+        # division equals Spark's `div` here.
+        share = (n * PAGERANK_SCALE - seen["D"]) // n
+        state = _rank_round(
+            state,
+            f"{base_u}L + ({dnum}L * (coalesce(inflow, 0L) + {share}L)) div {dden}L",
         )
-        # leaked mass by conservation: every non-dangling node's rank is
-        # distributed up to its floor remainder, so Σ inflow = delivered
-        # mass and the leak (dangling + remainders) is total - Σ inflow.
-        # The 1-row aggregate rides the rank-update plan as a broadcast
-        # scalar — no extra driver action per round.
-        dmass = contrib.agg(
-            F.expr(
-                f"(({total_u}L - coalesce(sum(inflow), 0L)) div {n}L) as share"
-            )
-        )
-        # rank is NOT checkpointed: it is a cheap projection of nodes
-        # left-joined to the checkpointed contrib, so lineage depth stays
-        # bounded by the contrib checkpoint and skipping the second
-        # materialization saves ~25% wall time per run (measured sf0.1).
-        rank = (
-            nodes.join(contrib, "v", "left")
-            .crossJoin(F.broadcast(dmass))
-            .select(
-                "v",
-                F.expr(
-                    f"{base_u}L + ({dnum}L * (coalesce(inflow, 0L) + share))"
-                    f" div {dden}L"
-                ).alias("rank_u"),
-            )
-        )
-    return rank.select(
+        if i + 1 < iters:  # the last round stays lazy: its D is never read
+            state, seen = _delivered_checkpoint(state)
+    return state.select(
         "v",
         F.col("rank_u").alias("rank_micro"),
         (F.col("rank_u").cast("double") / F.lit(float(PAGERANK_SCALE))).alias(
@@ -1598,49 +1612,32 @@ def op_graph_trustrank_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.
 
     Scale shape: edges from :func:`coactivity_edges` (lead-window
-    build, zero joins); each of the TRUST_ITERS rounds is ONE
-    node-keyed join + groupBy on the checkpointed edge frame — the
-    op_graph_pagerank loop shape, bounded rounds, no driver state
-    beyond the loop counter.
+    build, zero joins); each of the TRUST_ITERS rounds is one
+    checkpointed :func:`_rank_round` over the adjacency state — the
+    op_graph_pagerank round with a seeded teleport term and no leak
+    share, bounded rounds, no driver state beyond the loop counter.
     """
     e = coactivity_edges_cached(spark, sf_dir, TRI_NEXT_K)
-    und = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
-    deg = und.groupBy("u").agg(F.count("*").cast("bigint").alias("d"))
-    ranked_edges = und.join(deg, "u").localCheckpoint()
-    nodes = und.select(F.col("u").alias("node")).distinct().localCheckpoint()
-    seed = F.col("node") % TRUST_SEED_MOD == 0
-    rank = nodes.select(
-        "node",
-        F.when(seed, F.lit(PAGERANK_SCALE))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank_u"),
+    und = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
+        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    for _ in range(TRUST_ITERS):
-        contrib = (
-            ranked_edges.join(rank, ranked_edges.u == rank.node)
-            .select(
-                F.col("v").alias("node"),
-                F.expr("rank_u div d").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-            .localCheckpoint()
+    seed = F.col("v") % TRUST_SEED_MOD == 0
+    state = _rank_state(
+        und, F.when(seed, F.lit(PAGERANK_SCALE)).otherwise(F.lit(0))
+    ).localCheckpoint()
+    for i in range(TRUST_ITERS):
+        state = _rank_round(
+            state,
+            f"CAST(CASE WHEN v % {TRUST_SEED_MOD} = 0"
+            f" THEN {_TR_BASE_U}L ELSE 0L END"
+            f" + ({_TR_DNUM}L * coalesce(inflow, 0L)) div {_TR_DDEN}L"
+            " AS LONG)",
         )
-        rank = nodes.join(contrib, "node", "left").select(
-            "node",
-            F.expr(
-                f"CAST(CASE WHEN node % {TRUST_SEED_MOD} = 0"
-                f" THEN {_TR_BASE_U}L ELSE 0L END"
-                f" + ({_TR_DNUM}L * coalesce(inflow, 0L)) div {_TR_DDEN}L"
-                " AS LONG)"
-            ).alias("rank_u"),
-        )
-    return rank.select(
-        F.col("node").alias("user_id"),
-        (F.col("node") % TRUST_SEED_MOD == 0).alias("is_seed"),
+        if i + 1 < TRUST_ITERS:  # the last round runs in the final plan
+            state = state.localCheckpoint()
+    return state.select(
+        F.col("v").alias("user_id"),
+        seed.alias("is_seed"),
         F.col("rank_u").alias("trust_micro"),
         (F.col("rank_u").cast("double") / F.lit(float(PAGERANK_SCALE))).alias(
             "trust"

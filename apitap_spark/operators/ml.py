@@ -22,7 +22,7 @@ centroid at convergence.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from apitap_spark.session import memo, read_table
@@ -1294,35 +1294,45 @@ def op_basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     confidence n_ab/n_a and lift n_ab·N/(n_a·n_b), each a single FLOOR
     of one correctly-rounded division of exact BIGINTs.
 
-    Scale shape: the pair generation is the standard self-join on the
-    basket key — cost Σ(basket_size²), bounded by the max basket (7
-    lines in TPC-H shape), NOT corpus². The HAVING prunes to frequent
-    pairs before the item-count joins; item counts and the scalar
-    basket total broadcast. This is exactly distributed A-priori's
-    candidate-pair stage; FP-Growth only wins when baskets are huge.
+    Scale shape: one row per order (its sorted distinct parts), and the
+    pairs p1 < p2 generated inside each basket array — cost
+    Σ(basket_size²), bounded by the max basket (7 lines in TPC-H shape),
+    NOT corpus². The basket count rides the basket checkpoint's own job
+    as an Observation. The HAVING prunes to frequent pairs before the
+    item-count joins; item counts broadcast. This is exactly distributed
+    A-priori's candidate-pair stage; FP-Growth only wins when baskets
+    are huge.
     """
     li = read_table(spark, sf_dir, "lineitem")
-    b = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint()
-    n_baskets = b.select("l_orderkey").distinct().count()
-    item = b.groupBy("l_partkey").agg(
-        F.count("*").cast("bigint").alias("n_i")
+    obs = Observation()
+    baskets = (
+        li.groupBy("l_orderkey")
+        .agg(F.array_sort(F.array_distinct(F.collect_list("l_partkey"))).alias("items"))
+        # count(l_orderkey) skips the NULL-key group, as COUNT(DISTINCT) does
+        .observe(obs, F.count("l_orderkey").alias("n"))
+        .localCheckpoint()
     )
-    a_side = b.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p1")
-    )
-    c_side = b.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p2")
-    )
+    n_baskets = obs.get["n"]
+    item = baskets.select(F.explode("items").alias("l_partkey")).groupBy(
+        "l_partkey"
+    ).agg(F.count("*").cast("bigint").alias("n_i"))
     pair = (
-        a_side.join(c_side, "ok")
-        .filter(F.col("p1") < F.col("p2"))
-        .groupBy("p1", "p2")
+        baskets.filter(F.col("l_orderkey").isNotNull())
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(items, (p1, i) -> transform("
+                    "slice(items, i + 2, size(items)), p2 -> named_struct('p1', p1, 'p2', p2))))"
+                )
+            ).alias("pr")
+        )
+        .groupBy("pr.p1", "pr.p2")
         .agg(F.count("*").cast("bigint").alias("n_ab"))
         .filter(F.col("n_ab") >= BASKET_MIN_SUPPORT)
         .localCheckpoint()
         # ^ the HAVING-filtered pair table is tiny; without the
-        # checkpoint the union's two branches each re-run the basket
-        # self-join + groupBy (the expensive half of the gate).
+        # checkpoint the union's two branches each re-run the pair
+        # generation + groupBy (the expensive half of the gate).
     )
     rules = pair.select(
         F.col("p1").alias("antecedent"),

@@ -238,6 +238,64 @@ def scan_parallel(df, spark: SparkSession):
     return df
 
 
+def _schema_file(fs, hpath):
+    """The file whose footer Spark's schema inference reads for
+    ``hpath``: the path itself, or a directory's first data file by
+    path, skipping the names Spark's file index hides (``.crc`` files,
+    ``_SUCCESS``, ``_temporary``; ``k=v`` partition directories stay)."""
+    status = fs.getFileStatus(hpath)
+    if not status.isDirectory():
+        return status
+    files, dirs = {}, [status]
+    while dirs:
+        for st in fs.listStatus(dirs.pop().getPath()):
+            name = st.getPath().getName()
+            if name.startswith(".") or (name.startswith("_") and "=" not in name):
+                continue
+            if st.isDirectory():
+                dirs.append(st)
+            else:
+                files[st.getPath().toString()] = st
+    if not files:
+        raise ValueError(f"no parquet data file under {hpath.toString()}")
+    return files[min(files)]
+
+
+def parquet_footer_schema(spark: SparkSession, path: str):
+    """The schema ``spark.read.parquet(path)`` infers for a file or a
+    directory, read from one footer on the driver (the file
+    :func:`_schema_file` picks, as inference does) instead of in a
+    one-task job.
+
+    Calls the converter inference itself calls
+    (``ParquetFileFormat.readSchema`` over
+    ``readParquetFootersInParallel``), under the session's current
+    parquet confs and its ``spark.sql.files.ignoreCorruptFiles``.
+    """
+    import json
+
+    from pyspark.sql.types import StructType
+
+    jvm, jss = spark._jvm, spark._jsparkSession
+    conf = jss.sessionState().newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    files = jvm.java.util.ArrayList()
+    files.add(_schema_file(hpath.getFileSystem(conf), hpath))
+    parquet = getattr(
+        getattr(jvm.org.apache.spark.sql.execution.datasources.parquet, "ParquetFileFormat$"),
+        "MODULE$",
+    )
+    footers = parquet.readParquetFootersInParallel(
+        conf,
+        jvm.scala.jdk.javaapi.CollectionConverters.asScala(files).toSeq(),
+        jss.sessionState().conf().ignoreCorruptFiles(),
+    )
+    schema = parquet.readSchema(footers, jss)
+    if schema.isEmpty():
+        raise ValueError(f"no readable parquet footer in {path}")
+    return StructType.fromJson(json.loads(schema.get().json()))
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one driver parquet table, normalizing engine quirks.
 
@@ -247,6 +305,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     ``cast(ts as long)`` epoch arithmetic). Both are normalized here to
     session-UTC TimestampType — the same instant DuckDB surfaces, so
     oracles agree across data generations.
+
+    The schema comes from the file footer on the driver
+    (:func:`parquet_footer_schema`), so a read launches no Spark job.
     """
     import os as _os
 
@@ -258,14 +319,12 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            # integer div, not `/`: double division of ~1.7e18 nanos loses
-            # precision (53-bit mantissa) and can round the microsecond up,
-            # off-by-1µs vs DuckDB's truncation
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        df = spark.read.parquet(path)
+    df = spark.read.schema(parquet_footer_schema(spark, path)).parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        # integer div, not `/`: double division of ~1.7e18 nanos loses
+        # precision (53-bit mantissa) and can round the microsecond up,
+        # off-by-1µs vs DuckDB's truncation
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":  # defensive: pre-conf cached reads
             df = df.withColumn(col, F.col(col).cast("timestamp"))

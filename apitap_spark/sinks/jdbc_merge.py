@@ -659,8 +659,10 @@ class JdbcMergeWriter:
     # -- setup (driver-side, once) ----------------------------------------
     def prepare(self, schema: T.StructType):
         """ensure_table + additive schema evolution + optional truncate
-        (S13/S18), one driver connection. Returns the COPY route
-        :meth:`write` takes for ``schema`` (see :meth:`_copy_route`).
+        (S13/S18), one driver connection. Returns ``(version, route)``:
+        the server version and the COPY route :meth:`write` takes for
+        ``schema`` (see :meth:`_copy_route`), so no partition probes
+        the server again.
 
         Evolution policy: columns present in the DataFrame but missing from
         an existing target are added via ``ALTER TABLE ADD COLUMN``
@@ -683,7 +685,7 @@ class JdbcMergeWriter:
                 except Exception:  # noqa: BLE001 — missing table tolerated (42P01)
                     pass
             version = self.dialect.server_version(conn)
-            return self._copy_route(conn, version, schema)
+            return version, self._copy_route(conn, version, schema)
 
     def _evolve_schema(self, cur, schema: T.StructType) -> None:
         """Add DataFrame columns missing from the live table (additive only)."""
@@ -783,10 +785,11 @@ class JdbcMergeWriter:
 
     def write_rows(self, rows: Iterable, schema: T.StructType) -> int:
         """Write an iterable of Rows on ONE connection in ONE transaction;
-        returns the rows written after PK dedup. The row partition body
-        of :meth:`write`, also usable for driver-side writes/tests. On a
-        COPY route the rows convert to Arrow and take
-        :meth:`_copy_batches`, as :meth:`write_batches` does."""
+        returns the rows written after PK dedup. For driver-side
+        writes/tests: it probes the server version and COPY route itself
+        (:meth:`write`'s row partitions take the driver's). On a COPY
+        route the rows convert to Arrow and take :meth:`_copy_batches`,
+        as :meth:`write_batches` does."""
         with self._transaction() as conn:
             version = self.dialect.server_version(conn)
             route = self._copy_route(conn, version, schema)
@@ -959,7 +962,7 @@ class JdbcMergeWriter:
         Single-writer engines (DuckDB test stand-in) coalesce to one
         partition first; real warehouses take the full parallel fan-in.
         """
-        copy_route = self.prepare(df.schema)
+        version, copy_route = self.prepare(df.schema)
         if (
             self.mode == WriteMode.MERGE
             and self.pks
@@ -992,7 +995,8 @@ class JdbcMergeWriter:
                         n += 1
                         yield r
 
-                writer.write_rows(counted(), schema)
+                with writer._transaction() as conn:
+                    writer._write_rows_on(conn, version, counted(), schema)
                 yield n
 
             counts = df.rdd.mapPartitions(row_partition).collect()

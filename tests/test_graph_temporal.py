@@ -149,6 +149,29 @@ def test_pagerank_dangling_redistribution(spark):
     assert pr[2] > pr[1]  # the pointed-at node accumulates rank
 
 
+def test_pagerank_empty_node_set(spark):
+    """Zero nodes: an empty ``(v, rank_micro, rank)`` frame, not a
+    division by the zero node count."""
+    from apitap_spark.operators.graph import pagerank
+
+    nodes = spark.createDataFrame([], "v long")
+    edges = spark.createDataFrame([], "src long, dst long")
+    pr = pagerank(nodes, edges)
+    assert pr.columns == ["v", "rank_micro", "rank"]
+    assert pr.collect() == []
+
+
+def test_pagerank_nodes_without_edges_keep_initial_mass(spark):
+    """With no edges every node is dangling: its whole mass returns as
+    the uniform share, so every rank stays PAGERANK_SCALE."""
+    from apitap_spark.operators.graph import PAGERANK_SCALE, pagerank
+
+    nodes = spark.createDataFrame([(1,), (2,), (3,)], "v long")
+    edges = spark.createDataFrame([], "src long, dst long")
+    got = {r["v"]: (r["rank_micro"], r["rank"]) for r in pagerank(nodes, edges).collect()}
+    assert got == {v: (PAGERANK_SCALE, 1.0) for v in (1, 2, 3)}
+
+
 def test_label_propagation_python_replay(spark, sf_dir):
     """Bit-exact community equality against a pure-Python synchronous
     LP replay on the same star graph — triangulates the Spark rounds

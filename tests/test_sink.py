@@ -579,7 +579,7 @@ def _driver_route(w, schema=COPY_SCHEMA):
 
     driver = copy.copy(w)
     driver.conn_factory = CopyConn
-    return driver.prepare(schema)
+    return driver.prepare(schema)[1]
 
 
 @pytest.fixture(params=["UTC", "America/New_York"])
@@ -660,6 +660,67 @@ def test_empty_partition_opens_no_connection():
 
     w = JdbcMergeWriter(refuse, "t", mode=WriteMode.MERGE, primary_key="id")
     assert w.write_batches(iter([]), COPY_SCHEMA, _driver_route(w)) == 0
+
+
+class LoggedPgConn:
+    """A PostgreSQL 15 stand-in without COPY (so writes take the row
+    path) that appends every statement to a file: the log reaches the
+    test from the driver and from the executors' Python workers alike.
+    Picklable, so an instance is its own connection factory."""
+
+    def __init__(self, log: str):
+        self.log = log
+
+    def __call__(self):
+        return self
+
+    def cursor(self):
+        conn = self
+
+        class Cur:
+            def execute(self, sql, params=None):
+                with open(conn.log, "a") as fh:
+                    fh.write(sql.replace("\n", " ") + "\n")
+
+            def fetchone(self):
+                return ("PostgreSQL 15.4",)
+
+            def fetchall(self):
+                return []
+
+        return Cur()
+
+    def commit(self):
+        pass
+
+    def rollback(self):
+        pass
+
+    def close(self):
+        pass
+
+
+def test_row_partitions_take_the_driver_server_version(spark, tmp_path):
+    """``write()`` probes the server once, in ``prepare()`` on the driver;
+    its row partitions send no ``SELECT version()`` of their own, while
+    ``write_rows`` called directly still probes."""
+    log = str(tmp_path / "sql.log")
+    w = JdbcMergeWriter(
+        LoggedPgConn(log), "t", dialect=PostgresDialect(),
+        mode=WriteMode.MERGE, primary_key="id",
+    )
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("s", T.StringType())]
+    )
+    df = spark.createDataFrame([(i, f"s{i}") for i in range(12)], schema)
+    assert w.write(df.repartition(3)) == 12
+    with open(log) as fh:
+        sent = fh.read().splitlines()
+    assert sent.count("SELECT version()") == 1
+    assert sum(q.startswith('MERGE INTO "t"') for q in sent) >= 1
+    assert w.write_rows([(1, "a")], schema) == 1
+    with open(log) as fh:
+        assert fh.read().splitlines().count("SELECT version()") == 2
 
 
 def test_nested_and_binary_columns_render_into_copy_csv():
