@@ -36,6 +36,20 @@ _SHIPPED: set[int] = set()
 # evidence).  Reset this set each round to only the gates actually
 # touched; they sort right behind true reds.
 _RECHECK_FRONT: set[str] = {
+    # embedding kernels: one conversion and one cosine fold, shared from
+    # functions/vectors.py; the isotropy rounding goes through
+    # ml._half_up_arr and top-PC reads the corpus width up front
+    "op_ann_greedy_graph_search",
+    "op_crosslingual_neardup",
+    "op_dbscan_clusters",
+    "op_dedup_embedding_cosine",
+    "op_embedding_isotropy_audit",
+    "op_embedding_knn_graph",
+    "op_embedding_rp_sketch",
+    "op_embedding_top_pc",
+    "op_knn_label_accuracy",
+    "op_mmr_diversity_rerank",
+    "op_semantic_dedup",
     # stage budget: PageRank and TrustRank share one checkpointed round
     # with observed scalars, basket pairs are built inside each basket
     # array, and q5 stands for every gate reading through the footer

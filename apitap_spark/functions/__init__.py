@@ -1,8 +1,10 @@
-"""Reusable column-expression helpers (all JVM-side built-ins — no Python UDFs).
+"""Reusable column-expression helpers and their NumPy kernel twins.
 
-The reference registers zero UDFs (SURVEY §2.2 Q14); everything here is
-composed from ``pyspark.sql.functions`` so it stays inside whole-stage
-codegen at any scale.
+The reference registers zero UDFs (SURVEY §2.2 Q14); the column helpers
+are composed from ``pyspark.sql.functions`` so they stay inside
+whole-stage codegen at any scale. ``vectors`` also holds the NumPy folds
+the Arrow embedding kernels share, so one module fixes the fold order
+both engines' cosines must agree on.
 """
 
 from apitap_spark.functions.text import (

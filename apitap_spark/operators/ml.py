@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from apitap_spark.functions.vectors import embedding_matrix
 from apitap_spark.session import memo, read_table
 
 QUERIES: dict = {}
@@ -1058,24 +1059,26 @@ def op_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     d-length mean/state vectors (same as before).
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    n = emb.count()
+    # the corpus width; NULL rows and rows of any other length are
+    # skipped by both kernels and left out of the mean's count
+    d = emb.agg(F.mode(F.size("embedding"))).first()[0]
 
     def _mu_kernel(batches):
         import numpy as np
         import pandas as pd
 
         for b in batches:
-            if len(b) == 0:
+            E = embedding_matrix(b["embedding"], d)
+            E = E[~np.isnan(E).any(axis=1)]
+            if len(E) == 0:
                 continue
-            E = np.asarray(b["embedding"].tolist(), dtype=np.float64)
             # v_u = round(x * 1e6, 0) — the expl projection, elementwise
             Vu = _half_up_arr(E * 1000000.0)
-            d = E.shape[1]
             yield pd.DataFrame(
                 {
                     "pos": np.arange(1, d + 1, dtype=np.int64),
                     "s": Vu.astype(np.int64).sum(axis=0),
-                    "cnt": np.full(d, len(b), dtype=np.int64),
+                    "cnt": np.full(d, len(E), dtype=np.int64),
                 }
             )
 
@@ -1093,7 +1096,7 @@ def op_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # old per-pos aggregate evaluated (int sums are exact, the int ->
     # double casts are lossless at these magnitudes)
     mu = {r["pos"]: float(r["s"]) / 1000000.0 / float(r["c"]) for r in mu_rows}
-    d = max(mu)
+    n = mu_rows[0]["c"]  # kept rows, the same at every pos
     mu_vec = [mu[p] for p in range(1, d + 1)]
     w_u = {p: 1000000 for p in range(1, d + 1)}
     for _ in range(PCA_ITERS):
@@ -1107,9 +1110,10 @@ def op_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
             Wd = np.asarray(_w, dtype=np.float64) / 1000000.0  # w_u/1e6
             dd = len(_mu)
             for b in batches:
-                if len(b) == 0:
+                E = embedding_matrix(b["embedding"], dd)
+                E = E[~np.isnan(E).any(axis=1)]
+                if len(E) == 0:
                     continue
-                E = np.asarray(b["embedding"].tolist(), dtype=np.float64)
                 X = _half_up_arr(E * 1000000.0) / 1000000.0 - MU[None, :]
                 # d_u = Σ_pos round(x * (w_u/1e6) * 1e6, 0) — exact int
                 Du = (

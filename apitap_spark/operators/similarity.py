@@ -17,12 +17,16 @@ index-ordered → deterministic), from apitap_spark.functions.vectors.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apitap_spark.functions.vectors import (
     cosine_from_norms,
     cosine_similarity,
+    embedding_matrix,
+    fold_cosines,
+    fold_norms,
     l2_norm,
 )
 from apitap_spark.session import clear_memos, memo, read_table
@@ -420,7 +424,6 @@ def op_ann_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 COSINE_DUP_THRESHOLD = 0.4
-COSINE_BLOCK = 256  # vectors per block; 256x256x64 f64 products = 33 MB/task
 
 
 @_register(
@@ -453,43 +456,31 @@ def op_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard.
 
     Exactness: the oracle folds products left-to-right in index order;
-    the per-dimension accumulation is the same sequential order (and
-    identical to the old tile kernel's), so dots/norms are
-    bit-identical doubles, and the 6-dp round replicates Spark's
-    HALF_UP-on-shortest-repr semantics via decimal.
+    ``fold_norms``/``fold_cosines`` accumulate in the same sequential
+    order, so dots/norms are bit-identical doubles, and the 6-dp round
+    replicates Spark's HALF_UP-on-shortest-repr semantics via decimal.
     """
     emb = read_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 1000)
     side = emb.select("vec_id", "embedding")
     pool_rows = side.collect()  # bounded: < 1000 rows by the gate filter
-    p_ids = [r["vec_id"] for r in pool_rows]
-    p_emb = [list(r["embedding"]) for r in pool_rows]
+    PI = np.asarray([r["vec_id"] for r in pool_rows], dtype=np.int64)
+    P = embedding_matrix([r["embedding"] for r in pool_rows], LSH_DIM)
+    PN = fold_norms(P)
     thr = COSINE_DUP_THRESHOLD
 
     def score_pairs(batches):
         from decimal import ROUND_HALF_UP, Decimal
 
-        import numpy as np
         import pandas as pd
 
         q6 = Decimal("0.000001")
-        P = np.asarray(p_emb, dtype=np.float64)
-        PI = np.asarray(p_ids, dtype=np.int64)
-        m, d = P.shape
-        # cumsum's last column == the left fold, element for element
-        nb = np.sqrt(np.cumsum(P * P, axis=1)[:, -1]) if m else np.zeros(0)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
+            A = embedding_matrix(pdf["embedding"], LSH_DIM)
             ia = pdf["vec_id"].to_numpy(dtype=np.int64)
-            na = np.sqrt(np.cumsum(A * A, axis=1)[:, -1])
-            dots = np.zeros((len(ia), m))
-            for k in range(d):
-                dots += A[:, k, None] * P[None, :, k]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dots / (na[:, None] * nb[None, :])
-            mask = (ia[:, None] < PI[None, :]) & np.isfinite(cos) & (cos >= thr)
-            vi, ui = np.nonzero(mask)
+            cos = fold_cosines(A, P, fold_norms(A), PN)
+            vi, ui = np.nonzero((ia[:, None] < PI[None, :]) & (cos >= thr))
             kept = cos[vi, ui]
             yield pd.DataFrame(
                 {
@@ -1034,24 +1025,15 @@ def _semdedup_cell_verdicts(pdf, tau: float, cap: int = SEMDEDUP_CELL_CAP):
     (((0 + x0*y0) + x1*y1) + ...) per pair and per norm, so cosine
     doubles are bit-identical to the Catalyst HOF's regardless of path.
     """
-    import numpy as np
     import pandas as pd
 
     pdf = pdf.sort_values("vec_id").reset_index(drop=True)
     n = len(pdf)
     vids = pdf["vec_id"].to_numpy(dtype="int64")
-    E = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
-    d = E.shape[1] if n else 0
-    nsq = np.zeros(n, dtype=np.float64)
-    for i in range(d):
-        nsq = nsq + E[:, i] * E[:, i]
-    nrm = np.sqrt(nsq)
+    E = embedding_matrix(pdf["embedding"], LSH_DIM)
+    nrm = fold_norms(E)
     if n <= cap:
-        acc = np.zeros((n, n), dtype=np.float64)
-        for i in range(d):
-            acc = acc + E[:, None, i] * E[None, :, i]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = acc / (nrm[:, None] * nrm[None, :])
+        cos = fold_cosines(E, E, nrm, nrm)
 
         def row_lower(j):  # cosines of j against all lower-id rows
             return cos[j, :j]
@@ -1059,27 +1041,18 @@ def _semdedup_cell_verdicts(pdf, tau: float, cap: int = SEMDEDUP_CELL_CAP):
     else:
 
         def row_lower(j):
-            acc = np.zeros(j, dtype=np.float64)
-            for i in range(d):
-                acc = acc + E[j, i] * E[:j, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                return acc / (nrm[j] * nrm[:j])
+            return fold_cosines(E[j : j + 1], E[:j], nrm[j : j + 1], nrm[:j])[0]
 
     mx: list = [None] * n
     kept: set = set()
     flags = []
     for j in range(n):
-        row = row_lower(j) if j > 0 else None
-        if j > 0 and nrm[j] > 0:
-            vals = row[nrm[:j] > 0]  # NULL cosines drop, as F.max
-            if vals.size:
-                mx[j] = float(np.max(vals))
-        drop = False
-        if nrm[j] > 0:
-            for i2 in range(j):
-                if nrm[i2] > 0 and row[i2] > tau and vids[i2] in kept:
-                    drop = True
-                    break
+        row = row_lower(j)
+        vals = row[~np.isnan(row)]  # NULL cosines drop, as F.max
+        if vals.size:
+            mx[j] = float(np.max(vals))
+        # NaN > tau is False: a zero-norm or dirty row drops nothing
+        drop = any(row[i2] > tau and vids[i2] in kept for i2 in range(j))
         if not drop:
             kept.add(vids[j])
         flags.append(not drop)
@@ -1419,33 +1392,22 @@ def op_crosslingual_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding", "lang", l2_norm("embedding").alias("nrm")
     )
     pool_rows = pool.collect()  # bounded: < CROSSLINGUAL_POOL rows
-    p_ids = [r["vec_id"] for r in pool_rows]
-    p_emb = [list(r["embedding"]) for r in pool_rows]
-    p_lang = [r["lang"] for r in pool_rows]
-    p_nrm = [r["nrm"] for r in pool_rows]
+    PI = np.asarray([r["vec_id"] for r in pool_rows], dtype=np.int64)
+    P = embedding_matrix([r["embedding"] for r in pool_rows], LSH_DIM)
+    PN = np.asarray([r["nrm"] for r in pool_rows], dtype=np.float64)
+    PL = np.asarray([r["lang"] for r in pool_rows], dtype=object)
     thr = CROSSLINGUAL_THRESHOLD
 
     def _xling_kernel(batches):
-        import numpy as np
         import pandas as pd
 
-        P = np.asarray(p_emb, dtype=np.float64)
-        PI = np.asarray(p_ids, dtype=np.int64)
-        PN = np.asarray(p_nrm, dtype=np.float64)
-        PL = np.asarray(p_lang, dtype=object)
-        m, d = P.shape
         for b in batches:
             if len(b) == 0:
                 continue
-            E = np.asarray(b["embedding"].tolist(), dtype=np.float64)
             V = b["vec_id"].to_numpy(dtype=np.int64)
             N = b["nrm"].to_numpy(dtype=np.float64)
             L = b["lang"].to_numpy(dtype=object)
-            acc = np.zeros((len(b), m), dtype=np.float64)
-            for i in range(d):
-                acc = acc + E[:, None, i] * P[None, :, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / (N[:, None] * PN[None, :])
+            cos = fold_cosines(embedding_matrix(b["embedding"], LSH_DIM), P, N, PN)
             # Catalyst's `lang1 != lang2` is NULL (filtered) when either
             # side is NULL — mask nulls explicitly (object != None is
             # elementwise True in NumPy, the opposite of SQL).
@@ -1454,14 +1416,7 @@ def op_crosslingual_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (L != None)[:, None]  # noqa: E711 — elementwise
                 & (PL != None)[None, :]  # noqa: E711
             )
-            keep = (
-                (V[:, None] < PI[None, :])
-                & lang_ok
-                & (N[:, None] > 0)
-                & (PN[None, :] > 0)
-                & (cos >= thr)
-            )
-            vi, ui = np.nonzero(keep)
+            vi, ui = np.nonzero((V[:, None] < PI[None, :]) & lang_ok & (cos >= thr))
             yield pd.DataFrame(
                 {
                     "v1": V[vi],
@@ -1814,43 +1769,22 @@ def op_embedding_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doubles, so ranks and ties are unchanged.
     side = emb.select("vec_id", "embedding")
     pool_rows = side.collect()  # bounded: < KNN_GRAPH_POOL rows
-    p_ids = [r["vec_id"] for r in pool_rows]
-    p_emb = [list(r["embedding"]) for r in pool_rows]
+    PI = np.asarray([r["vec_id"] for r in pool_rows], dtype=np.int64)
+    P = embedding_matrix([r["embedding"] for r in pool_rows], LSH_DIM)
+    PN = fold_norms(P)
 
     def _sim_kernel(batches):
-        import numpy as np
         import pandas as pd
 
-        P = np.asarray(p_emb, dtype=np.float64)
-        PI = np.asarray(p_ids, dtype=np.int64)
-        m, d = P.shape
-        pn = np.zeros(m, dtype=np.float64)
-        for i in range(d):
-            pn = pn + P[:, i] * P[:, i]
-        pn = np.sqrt(pn)
         for b in batches:
             if len(b) == 0:
                 continue
-            E = np.asarray(b["embedding"].tolist(), dtype=np.float64)
+            E = embedding_matrix(b["embedding"], LSH_DIM)
             V = b["vec_id"].to_numpy(dtype=np.int64)
-            n = len(b)
-            en = np.zeros(n, dtype=np.float64)
-            for i in range(d):
-                en = en + E[:, i] * E[:, i]
-            en = np.sqrt(en)
-            acc = np.zeros((n, m), dtype=np.float64)
-            for i in range(d):
-                acc = acc + E[:, None, i] * P[None, :, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / (en[:, None] * pn[None, :])
+            # a zero-norm side is NaN here, NULL in Spark (as F.when)
+            cos = fold_cosines(E, P, fold_norms(E), PN)
             vi, ui = np.nonzero(V[:, None] != PI[None, :])
-            out = pd.DataFrame(
-                {"v1": V[vi], "v2": PI[ui], "cos": cos[vi, ui]}
-            )
-            bad = ~((en[:, None] > 0) & (pn[None, :] > 0))[vi, ui]
-            if bad.any():  # zero-norm side -> NULL, as F.when produced
-                out.loc[bad, "cos"] = None
-            yield out
+            yield pd.DataFrame({"v1": V[vi], "v2": PI[ui], "cos": cos[vi, ui]})
 
     sims = side.mapInPandas(_sim_kernel, "v1 long, v2 long, cos double")
     w = Window.partitionBy("v1").orderBy(F.desc("cos"), F.asc("v2"))
@@ -1962,43 +1896,21 @@ def op_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     side = emb.select("vec_id", "embedding")
     pool_rows = side.collect()  # bounded: < DBSCAN_POOL rows
-    p_ids = [r["vec_id"] for r in pool_rows]
-    p_emb = [list(r["embedding"]) for r in pool_rows]
+    PI = np.asarray([r["vec_id"] for r in pool_rows], dtype=np.int64)
+    P = embedding_matrix([r["embedding"] for r in pool_rows], LSH_DIM)
+    PN = fold_norms(P)
     tau = DBSCAN_TAU
 
     def _pair_kernel(batches):
-        import numpy as np
         import pandas as pd
 
-        P = np.asarray(p_emb, dtype=np.float64)  # (m, d)
-        PI = np.asarray(p_ids, dtype=np.int64)
-        m, d = P.shape
-        pn = np.zeros(m, dtype=np.float64)
-        for i in range(d):
-            pn = pn + P[:, i] * P[:, i]
-        pn = np.sqrt(pn)
         for b in batches:
             if len(b) == 0:
                 continue
-            E = np.asarray(b["embedding"].tolist(), dtype=np.float64)
+            E = embedding_matrix(b["embedding"], LSH_DIM)
             V = b["vec_id"].to_numpy(dtype=np.int64)
-            n = len(b)
-            en = np.zeros(n, dtype=np.float64)
-            for i in range(d):
-                en = en + E[:, i] * E[:, i]
-            en = np.sqrt(en)
-            acc = np.zeros((n, m), dtype=np.float64)
-            for i in range(d):
-                acc = acc + E[:, None, i] * P[None, :, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / (en[:, None] * pn[None, :])
-            keep = (
-                (V[:, None] != PI[None, :])
-                & (en[:, None] > 0)
-                & (pn[None, :] > 0)
-                & (cos >= tau)
-            )
-            vi, ui = np.nonzero(keep)
+            cos = fold_cosines(E, P, fold_norms(E), PN)
+            vi, ui = np.nonzero((V[:, None] != PI[None, :]) & (cos >= tau))
             yield pd.DataFrame({"v1": V[vi], "v2": PI[ui]})
 
     pairs = (
@@ -2190,9 +2102,9 @@ def op_ann_greedy_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate's own filters); norms are Spark-computed so the kernel's
     # d/(na*nb) runs on identical doubles.
     pool_rows = pool.collect()
-    p_ids = [r["vec_id"] for r in pool_rows]
-    p_emb = [list(r["embedding"]) for r in pool_rows]
-    p_nrm = [r["n"] for r in pool_rows]
+    PI = np.asarray([r["vec_id"] for r in pool_rows], dtype=np.int64)
+    P = embedding_matrix([r["embedding"] for r in pool_rows], LSH_DIM)
+    PN = np.asarray([r["n"] for r in pool_rows], dtype=np.float64)
     q_rows = (
         emb.filter(
             (F.col("vec_id") >= GREEDY_QLO) & (F.col("vec_id") < GREEDY_QHI)
@@ -2201,66 +2113,36 @@ def op_ann_greedy_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     q_ids = [r["vec_id"] for r in q_rows]
-    q_emb = [list(r["embedding"]) for r in q_rows]
-    q_nrm = [r["nq"] for r in q_rows]
+    QI = np.asarray(q_ids, dtype=np.int64)
+    QE = embedding_matrix([r["embedding"] for r in q_rows], LSH_DIM)
+    QN = np.asarray([r["nq"] for r in q_rows], dtype=np.float64)
 
     def _pool_cos_kernel(batches):
-        """(v1 = scanned pool row, v2 = closure pool member, cos) — the
-        order-preserving fold of dot()/cosine_from_norms (one
-        vectorized add per dimension = the exact left fold)."""
-        import numpy as np
+        """(v1 = scanned pool row, v2 = closure pool member, cos); a
+        zero-norm side is NaN here, NULL in Spark (as F.when)."""
         import pandas as pd
 
-        P = np.asarray(p_emb, dtype=np.float64)
-        PI = np.asarray(p_ids, dtype=np.int64)
-        PN = np.asarray(p_nrm, dtype=np.float64)
-        m, d = P.shape
         for b in batches:
             if len(b) == 0:
                 continue
-            E = np.asarray(b["embedding"].tolist(), dtype=np.float64)
+            E = embedding_matrix(b["embedding"], LSH_DIM)
             V = b["vec_id"].to_numpy(dtype=np.int64)
-            N = b["n"].to_numpy(dtype=np.float64)
-            acc = np.zeros((len(b), m), dtype=np.float64)
-            for i in range(d):
-                acc = acc + E[:, None, i] * P[None, :, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / (N[:, None] * PN[None, :])
+            cos = fold_cosines(E, P, b["n"].to_numpy(dtype=np.float64), PN)
             vi, ui = np.nonzero(V[:, None] != PI[None, :])
-            out = pd.DataFrame({"v1": V[vi], "v2": PI[ui], "cos": cos[vi, ui]})
-            bad = ~((N[:, None] > 0) & (PN[None, :] > 0))[vi, ui]
-            if bad.any():  # zero-norm side -> NULL, as F.when produced
-                out.loc[bad, "cos"] = None
-            yield out
+            yield pd.DataFrame({"v1": V[vi], "v2": PI[ui], "cos": cos[vi, ui]})
 
     def _qsims_kernel(batches):
         """(q_id = closure query, c_id = scanned pool row, cos)."""
-        import numpy as np
         import pandas as pd
 
-        QE = np.asarray(q_emb, dtype=np.float64)
-        QI = np.asarray(q_ids, dtype=np.int64)
-        QN = np.asarray(q_nrm, dtype=np.float64)
-        nq, d = QE.shape
         for b in batches:
             if len(b) == 0:
                 continue
-            E = np.asarray(b["embedding"].tolist(), dtype=np.float64)
+            E = embedding_matrix(b["embedding"], LSH_DIM)
             V = b["vec_id"].to_numpy(dtype=np.int64)
-            N = b["n"].to_numpy(dtype=np.float64)
-            acc = np.zeros((nq, len(b)), dtype=np.float64)
-            for i in range(d):
-                acc = acc + QE[:, i : i + 1] * E[None, :, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / (QN[:, None] * N[None, :])
-            qi, ci = np.nonzero(np.ones((nq, len(b)), dtype=bool))
-            out = pd.DataFrame(
-                {"q_id": QI[qi], "c_id": V[ci], "cos": cos[qi, ci]}
-            )
-            bad = ~((QN[:, None] > 0) & (N[None, :] > 0))[qi, ci]
-            if bad.any():
-                out.loc[bad, "cos"] = None
-            yield out
+            cos = fold_cosines(QE, E, QN, b["n"].to_numpy(dtype=np.float64))
+            qi, ci = np.indices(cos.shape).reshape(2, -1)
+            yield pd.DataFrame({"q_id": QI[qi], "c_id": V[ci], "cos": cos[qi, ci]})
 
     side = pool.select("vec_id", "embedding", "n")
     w_knn = Window.partitionBy("v1").orderBy(F.desc("cos"), F.asc("v2"))
@@ -2489,36 +2371,24 @@ def op_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "label", "embedding", "nrm")
         .collect()
     )
-    q_ids = [r["vec_id"] for r in q_rows]
-    q_labels = [r["label"] for r in q_rows]
-    q_emb = [list(r["embedding"]) for r in q_rows]
-    q_nrm = [r["nrm"] for r in q_rows]
+    QI = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
+    QL = np.asarray([r["label"] for r in q_rows], dtype=np.int64)
+    QE = embedding_matrix([r["embedding"] for r in q_rows], LSH_DIM)
+    QN = np.asarray([r["nrm"] for r in q_rows], dtype=np.float64)
 
     def _knn_kernel(batches):
-        import numpy as np
         import pandas as pd
 
-        QE = np.asarray(q_emb, dtype=np.float64)  # (Q, d)
-        QN = np.asarray(q_nrm, dtype=np.float64)
-        QI = np.asarray(q_ids, dtype=np.int64)
-        QL = np.asarray(q_labels, dtype=np.int64)
-        Q, d = QE.shape
         for b in batches:
             if len(b) == 0:
                 continue
-            E = np.asarray(b["embedding"].tolist(), dtype=np.float64)
-            N = b["nrm"].to_numpy(dtype=np.float64)
+            E = embedding_matrix(b["embedding"], LSH_DIM)
             V = b["vec_id"].to_numpy(dtype=np.int64)
             L = b["label"].to_numpy(dtype=np.int64)
-            # order-preserving fold — bit-identical to F.aggregate
-            acc = np.zeros((Q, len(b)), dtype=np.float64)
-            for i in range(d):
-                acc = acc + QE[:, i : i + 1] * E[None, :, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = acc / (QN[:, None] * N[None, :])
-            valid = (QN[:, None] > 0) & (N[None, :] > 0)
+            # a zero-norm side is NaN here, NULL in Spark (as F.when)
+            cos = fold_cosines(QE, E, QN, b["nrm"].to_numpy(dtype=np.float64))
             qi, ci = np.nonzero(V[None, :] != QI[:, None])
-            out = pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "q_id": QI[qi],
                     "q_label": QL[qi],
@@ -2527,10 +2397,6 @@ def op_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "vec_id": V[ci],
                 }
             )
-            bad = ~valid[qi, ci]
-            if bad.any():  # zero-norm side -> NULL, as F.when produced
-                out.loc[bad, "cos"] = None
-            yield out
 
     pairs = emb.select("vec_id", "label", "embedding", "nrm").mapInPandas(
         _knn_kernel,
@@ -2654,18 +2520,20 @@ def op_embedding_rp_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     signs = _rp_signs()
     emb = read_table(spark, sf_dir, "embeddings")
 
+    S = np.asarray(signs, dtype=np.int64)  # RP_DIM x 64
+
     def _rp_kernel(batches):
-        import numpy as np
         import pandas as pd
 
         from apitap_spark.operators.ml import _half_up_arr
 
-        S = np.asarray(signs, dtype=np.int64)  # RP_DIM x 64
         for b in batches:
             if len(b) == 0:
                 continue
-            E = np.asarray(b["embedding"].tolist(), dtype=np.float64)
-            Q = _half_up_arr(E * float(RP_QSCALE)).astype(np.int64)
+            E = embedding_matrix(b["embedding"], LSH_DIM)
+            ok = ~np.isnan(E).any(axis=1)  # NULL / ragged rows: NULL outputs
+            Q = _half_up_arr(np.where(ok[:, None], E, 0.0) * float(RP_QSCALE))
+            Q = Q.astype(np.int64)
             orig = (Q * Q).sum(axis=1)
             Y = Q @ S.T  # (n, RP_DIM) exact int64
             ysq = (Y * Y).sum(axis=1)
@@ -2673,12 +2541,16 @@ def op_embedding_rp_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ysq * 1000000 // np.where(orig == 0, 1, RP_DIM * orig),
                 dtype="Int64",
             )
-            pres[orig == 0] = None  # div-by-zero -> NULL, as Spark `div`
+            # div-by-zero -> NULL, as Spark `div` (dirty rows have orig 0)
+            pres[orig == 0] = None
             yield pd.DataFrame(
                 {
                     "vec_id": b["vec_id"].to_numpy(dtype=np.int64),
-                    "sketch": [",".join(map(str, row)) for row in Y],
-                    "sketch_l2sq": ysq,
+                    "sketch": [
+                        ",".join(map(str, row)) if k else None
+                        for row, k in zip(Y, ok)
+                    ],
+                    "sketch_l2sq": pd.Series(ysq, dtype="Int64").where(ok),
                     "preservation_micro": pres,
                 }
             )
@@ -3060,19 +2932,15 @@ def op_mmr_diversity_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     def mmr_kernel(pdf):
         from decimal import ROUND_HALF_UP, Decimal
 
-        import numpy as np
         import pandas as pd
 
         q6 = Decimal("0.000001")
         pdf = pdf.sort_values("rk").reset_index(drop=True)
         ids = pdf["c_id"].to_numpy(dtype=np.int64)
         rels = pdf["rel"].to_numpy(dtype=np.float64)
-        M = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["ce"]])
-        n = np.sqrt(np.cumsum(M * M, axis=1)[:, -1])
-        dots = np.zeros((len(ids), len(ids)))
-        for k in range(M.shape[1]):
-            dots += M[:, k, None] * M[None, :, k]
-        sims = dots / (n[:, None] * n[None, :])
+        M = embedding_matrix(pdf["ce"], LSH_DIM)
+        n = fold_norms(M)
+        sims = fold_cosines(M, M, n, n)
         qid = int(pdf["q_id"].iloc[0])
         selected: list[int] = []
         remaining = list(range(len(ids)))
@@ -3441,51 +3309,36 @@ def op_embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the noop sink). Both now run in one Arrow kernel that emits d
     PARTIAL int64 sums per batch; Spark reduces them per pos (int64
     addition is order-independent, so the totals are bit-identical).
-    The kernel replays Spark's exact semantics: norms via the
-    order-preserving cumsum fold, ``round(x, 0)`` as HALF_UP on the
-    double's shortest repr — fast path floor(x+0.5)/ceil(x-0.5), with
-    a decimal.Decimal(repr(x)) fallback inside a 1e-8 half-boundary
-    guard band (divergence requires |x - (k+.5)| < ~2 ulp ≈ 5e-10 at
-    the |x| <= ~1e6 range here, so the band over-covers by ~40x).
+    The kernel replays Spark's exact semantics: norms via
+    ``fold_norms`` (l2_norm's left fold), ``round(x, 0)`` via
+    ``ml._half_up_arr`` (HALF_UP on the double's shortest repr, with a
+    decimal fallback around every half boundary). Zero-norm, NULL and
+    wrong-length rows are skipped and left out of ``cnt``.
     """
     emb = read_table(spark, sf_dir, "embeddings")
 
     def _iso_kernel(batches):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import numpy as np
         import pandas as pd
 
-        q0 = Decimal("1")
+        from apitap_spark.operators.ml import _half_up_arr
+
         for b in batches:
             if len(b) == 0:
                 continue
-            E = np.asarray(b["embedding"].tolist(), dtype=np.float64)
-            # cumsum's last column == l2_norm's left fold, element for
-            # element
-            nrm = np.sqrt(np.cumsum(E * E, axis=1)[:, -1])
-            keep = nrm > 0
+            E = embedding_matrix(b["embedding"], LSH_DIM)
+            nrm = fold_norms(E)
+            keep = nrm > 0  # NaN (dirty) norms compare False too
             E, nrm = E[keep], nrm[keep]
             n = E.shape[0]
             if n == 0:
                 continue
-            d = E.shape[1]
             # same IEEE chain as the Spark expr: (x / nrm) * 1e6
-            X = (E / nrm[:, None]) * 1000000.0
-            R = np.where(X >= 0, np.floor(X + 0.5), np.ceil(X - 0.5))
-            sus = np.abs(X - np.floor(X) - 0.5) < 1e-8
-            if sus.any():
-                for i, j in zip(*np.nonzero(sus)):
-                    R[i, j] = float(
-                        Decimal(repr(X[i, j])).quantize(
-                            q0, rounding=ROUND_HALF_UP
-                        )
-                    )
+            R = _half_up_arr((E / nrm[:, None]) * 1000000.0)
             yield pd.DataFrame(
                 {
-                    "pos": np.arange(d, dtype=np.int32),
+                    "pos": np.arange(LSH_DIM, dtype=np.int32),
                     "s": R.astype(np.int64).sum(axis=0),
-                    "cnt": np.full(d, n, dtype=np.int64),
+                    "cnt": np.full(LSH_DIM, n, dtype=np.int64),
                 }
             )
 

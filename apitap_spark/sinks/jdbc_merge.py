@@ -367,13 +367,19 @@ def upsert_sql(
 ) -> str:
     """INSERT … ON CONFLICT (pk) DO UPDATE (reference src/writer/postgres.rs:398-512)."""
     base = insert_sql(dialect, table, columns, n_rows)
+    return f"{base} {_on_conflict_tail(columns, pks)}"
+
+
+def _on_conflict_tail(columns: list[str], pks: list[str]) -> str:
+    """``ON CONFLICT (pk) DO UPDATE SET …`` (``DO NOTHING`` when every
+    column is a key) — shared by the VALUES and stage upserts."""
     conflict = ", ".join(quote_ident(p) for p in pks)
     updates = ", ".join(
         f"{quote_ident(c)} = EXCLUDED.{quote_ident(c)}" for c in columns if c not in pks
     )
     if not updates:
-        return f"{base} ON CONFLICT ({conflict}) DO NOTHING"
-    return f"{base} ON CONFLICT ({conflict}) DO UPDATE SET {updates}"
+        return f"ON CONFLICT ({conflict}) DO NOTHING"
+    return f"ON CONFLICT ({conflict}) DO UPDATE SET {updates}"
 
 
 def merge_sql(
@@ -404,6 +410,15 @@ def merge_sql(
 
     one = "(" + ", ".join(ph(i) for i in range(len(columns))) + ")"
     values = ", ".join([one] * n_rows)
+    return (
+        f"MERGE INTO {t} AS t USING (VALUES {values}) AS s ({collist}) "
+        f"{_merge_tail(columns, pks)}"
+    )
+
+
+def _merge_tail(columns: list[str], pks: list[str]) -> str:
+    """``ON … WHEN MATCHED … WHEN NOT MATCHED …`` against source alias
+    ``s`` — shared by the VALUES and stage MERGEs."""
     on = " AND ".join(f"t.{quote_ident(p)} = s.{quote_ident(p)}" for p in pks)
     updates = ", ".join(
         f"{quote_ident(c)} = s.{quote_ident(c)}" for c in columns if c not in pks
@@ -412,8 +427,7 @@ def merge_sql(
     insert_vals = ", ".join(f"s.{quote_ident(c)}" for c in columns)
     matched = f"WHEN MATCHED THEN UPDATE SET {updates} " if updates else ""
     return (
-        f"MERGE INTO {t} AS t USING (VALUES {values}) AS s ({collist}) ON {on} "
-        f"{matched}"
+        f"ON {on} {matched}"
         f"WHEN NOT MATCHED THEN INSERT ({insert_cols}) VALUES ({insert_vals})"
     )
 
@@ -447,18 +461,9 @@ def merge_from_stage_sql(
 ) -> str:
     """MERGE INTO target USING stage — one server-side statement per
     COPY-staged batch (PG >= 15)."""
-    t = quote_ident_path(table)
-    on = " AND ".join(f"t.{quote_ident(p)} = s.{quote_ident(p)}" for p in pks)
-    updates = ", ".join(
-        f"{quote_ident(c)} = s.{quote_ident(c)}" for c in columns if c not in pks
-    )
-    insert_cols = ", ".join(quote_ident(c) for c in columns)
-    insert_vals = ", ".join(f"s.{quote_ident(c)}" for c in columns)
-    matched = f"WHEN MATCHED THEN UPDATE SET {updates} " if updates else ""
     return (
-        f"MERGE INTO {t} AS t USING {quote_ident(stage)} AS s ON {on} "
-        f"{matched}"
-        f"WHEN NOT MATCHED THEN INSERT ({insert_cols}) VALUES ({insert_vals})"
+        f"MERGE INTO {quote_ident_path(table)} AS t USING {quote_ident(stage)} "
+        f"AS s {_merge_tail(columns, pks)}"
     )
 
 
@@ -468,17 +473,11 @@ def upsert_from_stage_sql(
     """INSERT ... SELECT FROM stage ON CONFLICT — the staged upsert for
     PG 9.5-14, same shape the MERGE rung uses on 15+."""
     collist = ", ".join(quote_ident(c) for c in columns)
-    conflict = ", ".join(quote_ident(p) for p in pks)
-    updates = ", ".join(
-        f"{quote_ident(c)} = EXCLUDED.{quote_ident(c)}" for c in columns if c not in pks
-    )
-    base = (
+    return (
         f"INSERT INTO {quote_ident_path(table)} ({collist}) "
-        f"SELECT {collist} FROM {quote_ident(stage)}"
+        f"SELECT {collist} FROM {quote_ident(stage)} "
+        f"{_on_conflict_tail(columns, pks)}"
     )
-    if not updates:
-        return f"{base} ON CONFLICT ({conflict}) DO NOTHING"
-    return f"{base} ON CONFLICT ({conflict}) DO UPDATE SET {updates}"
 
 
 def rows_per_statement(n_cols: int, batch_size: int) -> int:

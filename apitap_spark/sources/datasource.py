@@ -134,9 +134,10 @@ class PagePartition(InputPartition):
     bounds in-flight requests — the reference's buffer_unordered(5)
     politeness (src/cmd/mod.rs:18) expressed as partition planning."""
 
-    def __init__(self, pages: tuple):
+    def __init__(self, pages: tuple, first: list | None = None):
         super().__init__(pages)
         self.pages = pages
+        self.first = first  # page 0's rows, fetched on the driver
 
 
 class CursorPartition(InputPartition):
@@ -160,26 +161,15 @@ class HttpJsonReader(DataSourceReader):
         src = self._src
         if isinstance(src.pagination, CursorPagination):
             return [CursorPartition()]
-        # One page-0 request serves both the emptiness/page-size check and
-        # the total hint (same fetch-once discipline as HttpSource.load).
-        from apitap_spark.sources.http import _fetch_raw, parse_response
-
-        resp = _fetch_raw(
-            src.url, src._page_params(0), src.headers, src.retry,
-            auth=src.auth,
-        )
-        first, envelope = parse_response(resp, src.data_path)
-        if not first:
-            return [PagePartition((0,))]
-        n_pages = src._total_from_hint(envelope) if envelope is not None else None
-        if n_pages is None:
-            if len(first) < src._page_size_guess():
-                n_pages = 1
-            else:
-                n_pages = src._probe_page_count()
+        # The same page plan as HttpSource.load; page 0's rows ride in
+        # the partition that holds page 0, so read() never refetches it.
+        first, n_pages = src.plan_pages()
         k = max(1, min(n_pages, src.max_concurrency))
         return [
-            PagePartition(tuple(range(start, n_pages, k))) for start in range(k)
+            PagePartition(
+                tuple(range(start, n_pages, k)), first if start == 0 else None
+            )
+            for start in range(k)
         ]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
@@ -193,7 +183,12 @@ class HttpJsonReader(DataSourceReader):
             return
         sess = requests.Session()
         for page_idx in partition.pages:
-            for row in src._fetch_page(page_idx, session=sess):
+            rows = (
+                partition.first
+                if page_idx == 0
+                else src._fetch_page(page_idx, session=sess)
+            )
+            for row in rows:
                 yield coerce_row(row, self._schema)
 
 

@@ -517,6 +517,35 @@ class HttpSource:
             return max(1, -(-total // per))
         return max(1, total)
 
+    def plan_pages(self) -> tuple[list, int]:
+        """Page 0's rows and the number of pages to read, from ONE page-0
+        request ("fetch page 1 once", SURVEY §7.4 — the reference fetches
+        it twice on the data_path-miss path): the envelope's total hint
+        when present, else a short first page means one page, else the
+        exponential probe. An empty page 0 plans one (empty) page."""
+        import requests
+
+        sess = requests.Session()
+        count_retry = lambda: setattr(  # noqa: E731
+            self._driver_stats, "retries", self._driver_stats.retries + 1
+        )
+        resp = _fetch_raw(
+            self.url, self._page_params(0), self.headers, self.retry,
+            session=sess, on_retry=count_retry, auth=self.auth,
+        )
+        first, envelope = parse_response(resp, self.data_path)
+        self._driver_stats.pages += 1
+        self._driver_stats.rows += len(first)
+        if not first:
+            return first, 1
+        n_pages = self._total_from_hint(envelope) if envelope is not None else None
+        if n_pages is None:
+            if len(first) < self._page_size_guess():
+                n_pages = 1  # short first page ⇒ no further pages
+            else:
+                n_pages = self._probe_page_count(session=sess)
+        return first, n_pages
+
     def _probe_page_count(self, session=None) -> int:
         """Exponential + binary probe for the first empty page (unknown-total
         path). O(log n) driver-side requests replace the reference's fully
@@ -622,32 +651,10 @@ class HttpSource:
                 F.from_json(F.col("value"), schema).alias("j")
             ).select("j.*")
 
-        # ONE page-0 request yields rows, schema sample AND the total hint
-        # ("fetch page 1 once", SURVEY §7.4 — the reference fetches it
-        # twice on the data_path-miss path).
-        import requests
-
-        sess = requests.Session()
-        count_retry = lambda: setattr(  # noqa: E731
-            self._driver_stats, "retries", self._driver_stats.retries + 1
-        )
-        resp = _fetch_raw(
-            self.url, self._page_params(0), self.headers, self.retry,
-            session=sess, on_retry=count_retry, auth=self.auth,
-        )
-        first, envelope = parse_response(resp, self.data_path)
-        self._driver_stats.pages += 1
-        self._driver_stats.rows += len(first)
-        n_pages = self._total_from_hint(envelope) if envelope is not None else None
+        first, n_pages = self.plan_pages()
         if not first:
             return spark.createDataFrame([], "struct<>")
         schema = self.infer_schema(spark, first)
-
-        if n_pages is None:
-            if len(first) < self._page_size_guess():
-                n_pages = 1  # short first page ⇒ no further pages
-            else:
-                n_pages = self._probe_page_count(session=sess)
 
         # Distributed fetch of pages 0..n-1 in one plan. Page 0 was fetched
         # above and rides in the closure ("fetch once", SURVEY §7.4); the

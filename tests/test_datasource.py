@@ -58,6 +58,40 @@ def test_format_read_page_number_hint(registered, api):
     assert df.count() == 37
 
 
+@pytest.mark.parametrize("route", ["page_number", "limit_offset"])
+def test_format_read_fetches_page_zero_twice(registered, route):
+    """A batch read requests page 0 once in schema() and once for the
+    page plan (HttpSource.plan_pages); the partition holding page 0
+    carries the plan's rows, so its task never requests it again. Every
+    other page is requested once, plus the unknown-total probe's."""
+    from collections import Counter
+
+    api = MockApi(ROWS)
+    base = api.start()
+    reader = registered.read.format("apitap_http").option("url", f"{base}/{route}")
+    if route == "page_number":
+        reader = (
+            reader.option("pagination_type", "page_number")
+            .option("per_page", 10)
+            .option("total_items_pointer", "/meta/total")
+            .option("data_path", "/data")
+        )
+    else:
+        reader = reader.option("pagination_type", "limit_offset").option("limit", 10)
+    try:
+        ids = sorted(r["id"] for r in reader.load().collect())
+    finally:
+        api.stop()
+    assert ids == list(range(37))
+    if route == "page_number":
+        pages = Counter(int(q["page"]) - 1 for _, q, _ in api.served)
+        assert pages == Counter({0: 2, 1: 1, 2: 1, 3: 1})
+    else:
+        pages = Counter(int(q["offset"]) // 10 for _, q, _ in api.served)
+        # probe: pages 1, 2, 4 (empty), 3; then the tasks read 1, 2, 3
+        assert pages == Counter({0: 2, 1: 2, 2: 2, 3: 2, 4: 1})
+
+
 def test_format_read_cursor_single_partition(registered, api):
     df = (
         registered.read.format("apitap_http")
