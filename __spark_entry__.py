@@ -214,16 +214,10 @@ def _gate_priority(names: list[str]) -> list[str]:
 
 def _oracle_names() -> set[str]:
     """Names of gates that currently have a DuckDB oracle registered."""
+    from apitap_spark.operators import ORACLES as OPS
     from apitap_spark.plans import ORACLES as REL
 
-    out = set(REL)
-    try:
-        from apitap_spark.operators import ORACLES as OPS
-
-        out |= set(OPS)
-    except ImportError:
-        pass
-    return out
+    return set(REL) | set(OPS)
 
 
 def _prioritized(mapping: dict) -> dict:
@@ -272,16 +266,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
+    from apitap_spark.operators import QUERIES as OPS
     from apitap_spark.plans import QUERIES as REL
-
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(REL)
-    try:
-        from apitap_spark.operators import QUERIES as OPS
-
-        out.update(OPS)
-    except ImportError:
-        pass
 
     def _wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -292,19 +278,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         run.__doc__ = fn.__doc__
         return run
 
-    return _prioritized({name: _wrap(fn) for name, fn in out.items()})
+    return _prioritized({name: _wrap(fn) for name, fn in {**REL, **OPS}.items()})
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL equivalent for each queries() key."""
+    from apitap_spark.operators import ORACLES as OPS
     from apitap_spark.plans import ORACLES as REL
 
-    out: dict[str, str] = {}
-    out.update(REL)
-    try:
-        from apitap_spark.operators import ORACLES as OPS
-
-        out.update(OPS)
-    except ImportError:
-        pass
-    return _prioritized(out)
+    return _prioritized({**REL, **OPS})

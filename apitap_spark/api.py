@@ -16,28 +16,14 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from apitap_spark.pipeline.templating import unique_view_name
+from apitap_spark.sources.http import json_rows_frame
 
 
 def json_to_df(spark: SparkSession, values: list | dict, sample_size: int = 100) -> DataFrame:
     """JSON rows → DataFrame with sampled-inference schema
     (reference ``Value::to_df``, src/utils/datafusion_ext.rs:54-71)."""
     rows = values if isinstance(values, list) else [values]
-    if not rows:
-        return spark.createDataFrame([], "struct<>")
-    from pyspark.sql import functions as F
-
-    from apitap_spark.sources.http import HttpSource
-
-    schema = HttpSource(name="_json", url="-", sample_size=sample_size).infer_schema(
-        spark, rows
-    )
-    return (
-        spark.createDataFrame(
-            spark.sparkContext.parallelize([json.dumps(r) for r in rows]), "string"
-        )
-        .select(F.from_json(F.col("value"), schema).alias("j"))
-        .select("j.*")
-    )
+    return json_rows_frame(spark, rows, sample_size)
 
 
 class SqlResult:

@@ -79,7 +79,7 @@ def _pagination_from(d: dict | None):
         return CursorPagination(
             cursor_param=d.get("cursor_param", "cursor"),
             page_size_param=d.get("page_size_param"),
-            page_size=d.get("page_size"),
+            page_size=int(d["page_size"]) if d.get("page_size") else None,
             next_cursor_pointer=d.get("next_cursor_pointer", "/next_cursor"),
         )
     raise ConfigError(f"unknown pagination type {kind!r}")

@@ -6,6 +6,7 @@ engine operators, each exposed through the driver contract
 (``queries()`` / ``oracle_sql()``).
 """
 
+from apitap_spark import registry
 from apitap_spark.operators import (
     bpe,
     corpus,
@@ -26,9 +27,7 @@ from apitap_spark.operators import (
     udtf_ops,
 )
 
-QUERIES = {}
-ORACLES = {}
-for _mod in (
+QUERIES, ORACLES = registry.of_modules(
     dedup,
     similarity,
     textstats,
@@ -46,8 +45,6 @@ for _mod in (
     bpe,
     features,
     planning,
-):
-    QUERIES.update(_mod.QUERIES)
-    ORACLES.update(_mod.ORACLES)
+)
 
 __all__ = ["QUERIES", "ORACLES"]

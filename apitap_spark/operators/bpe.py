@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apitap_spark.functions.text import tokens
+from apitap_spark.registry import gate
 from apitap_spark.session import (
     MEMO_BOOKKEEPING,
     clear_memos,
@@ -46,9 +47,6 @@ from apitap_spark.session import (
     read_table,
     release_memo,
 )
-
-QUERIES: dict = {}
-ORACLES: dict = {}
 
 # Cross-gate memo (round-10 optimization): EIGHT gates (learn, apply,
 # encode, pack, fertility, decode, wordpiece, shuffle-plan) compose the
@@ -144,16 +142,6 @@ def encoded_bpe(
         family="bpe",
     )
     return seqs, sym_ids
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 N_MERGES = 12
@@ -338,7 +326,7 @@ _BPE_APPLY_ORACLE = (
 )
 
 
-@_register("op_bpe_apply_tokens", _BPE_APPLY_ORACLE)
+@gate("op_bpe_apply_tokens", _BPE_APPLY_ORACLE)
 def op_bpe_apply_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counts under the learned BPE vocabulary:
     (doc_id, bpe_tokens, chars, words). ``bpe_tokens`` is the length a
@@ -435,7 +423,7 @@ _BPE_ENCODE_ORACLE = (
 )
 
 
-@_register("op_bpe_encode_docs", _BPE_ENCODE_ORACLE)
+@gate("op_bpe_encode_docs", _BPE_ENCODE_ORACLE)
 def op_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize the corpus under the learned BPE vocabulary: every final
     symbol gets a dense lexicographic id, every document becomes its
@@ -568,7 +556,7 @@ _BPE_PACK_ORACLE = (
 )
 
 
-@_register("op_bpe_pack_training_rows", _BPE_PACK_ORACLE)
+@gate("op_bpe_pack_training_rows", _BPE_PACK_ORACLE)
 def op_bpe_pack_training_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pipeline's terminal artifact: EOS-terminated encoded documents
     concatenated in doc_id order and cut into fixed SEQ_LEN-token
@@ -659,7 +647,7 @@ def pack_rows_frame(seqs: DataFrame, eos: int) -> DataFrame:
     )
 
 
-@_register("op_bpe_learn_merges", _BPE_ORACLE)
+@gate("op_bpe_learn_merges", _BPE_ORACLE)
 def op_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn the first N_MERGES BPE merges over the documents corpus.
     Output: (rank, left, right, pair_count) — the head of the merge
@@ -711,7 +699,7 @@ _BPE_FERTILITY_ORACLE = (
 )
 
 
-@_register("op_bpe_fertility_by_lang", _BPE_FERTILITY_ORACLE)
+@gate("op_bpe_fertility_by_lang", _BPE_FERTILITY_ORACLE)
 def op_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language tokenizer fertility report: (lang, n_docs, words,
     bpe_tokens, chars, fertility, chars_per_token). Fertility =
@@ -772,7 +760,7 @@ _BPE_ROUNDTRIP_ORACLE = (
 )
 
 
-@_register("op_bpe_decode_roundtrip", _BPE_ROUNDTRIP_ORACLE)
+@gate("op_bpe_decode_roundtrip", _BPE_ROUNDTRIP_ORACLE)
 def op_bpe_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer decode-roundtrip audit, closing the BPE lifecycle
     (learn → budget → encode → pack → DECODE): rebuild every document
@@ -866,7 +854,7 @@ _WORDPIECE_ORACLE = (
 )
 
 
-@_register("op_wordpiece_encode", _WORDPIECE_ORACLE)
+@gate("op_wordpiece_encode", _WORDPIECE_ORACLE)
 def op_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WordPiece-style tokenization (greedy longest-match-first against
     the learned symbol inventory — the second tokenizer FAMILY next to
@@ -969,7 +957,7 @@ _SHUFFLE_ORACLE = f"""
 """
 
 
-@_register("op_training_shuffle_plan", _SHUFFLE_ORACLE)
+@gate("op_training_shuffle_plan", _SHUFFLE_ORACLE)
 def op_training_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training-data shuffle: every packed SEQ_LEN row is
     assigned to a shard by a seeded content-independent hash
@@ -1151,7 +1139,7 @@ _UNIGRAM_ORACLE = rf"""
 """
 
 
-@_register("op_tokenizer_unigram_viterbi", _UNIGRAM_ORACLE)
+@gate("op_tokenizer_unigram_viterbi", _UNIGRAM_ORACLE)
 def op_tokenizer_unigram_viterbi(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -19,20 +19,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apitap_spark.functions.text import shingles, token_count, tokens
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # Word n-gram length for the contamination check. Real evals use 8-13
@@ -43,7 +31,7 @@ CONTAM_N = 3
 CONTAM_BENCH_MOD = 97
 
 
-@_register(
+@gate(
     "op_contamination_ngram",
     rf"""
     WITH tok AS (
@@ -114,7 +102,7 @@ def op_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_mixing_weights",
     r"""
     WITH per_source AS (
@@ -200,7 +188,7 @@ def op_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACK_CONTEXT = 1024  # tokens per packed training sequence
 
 
-@_register(
+@gate(
     "op_pack_sequences",
     rf"""
     WITH tok AS (
@@ -268,7 +256,7 @@ def _bucket_sql() -> str:
     return f"CASE {whens} ELSE '>={LENGTH_BUCKETS[-1]}' END"
 
 
-@_register(
+@gate(
     "op_length_histogram",
     rf"""
     WITH tok AS (
@@ -308,7 +296,7 @@ def op_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUANT_BITS_MAX = 127  # int8 symmetric range
 
 
-@_register(
+@gate(
     "op_embedding_quantize",
     f"""
     WITH v AS (
@@ -368,7 +356,7 @@ def op_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_source_concentration",
     r"""
     WITH per_source AS (
@@ -431,7 +419,7 @@ def op_source_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 WEIGHTED_SALT = "wsample-v1:"
 
 
-@_register(
+@gate(
     "op_weighted_sample",
     rf"""
     WITH per_source AS (
@@ -515,7 +503,7 @@ def op_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_corpus_summary_card",
     r"""
     WITH base AS (
@@ -588,7 +576,7 @@ SHARD_TARGET_TOKENS = 2000  # tokens per output shard (testdata-sized)
 SHARD_BUCKETS = 64  # phase-1 buckets; scale knob = shuffle width
 
 
-@_register(
+@gate(
     "op_shard_plan",
     rf"""
     WITH base AS (
@@ -685,7 +673,7 @@ def op_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_lm_perplexity",
     r"""
     WITH tok AS (
@@ -777,7 +765,7 @@ def with_perplexity(df: DataFrame) -> DataFrame:
     return df.withColumn("perplexity", F.exp("avg_nll"))
 
 
-@_register(
+@gate(
     "op_unigram_shift",
     r"""
     WITH tok AS (
@@ -887,7 +875,7 @@ def op_unigram_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 OVERLAP_HEAD_TOKENS = 16  # same head-fingerprint blocking key as leakage
 
 
-@_register(
+@gate(
     "op_source_overlap_matrix",
     rf"""
     WITH keyed AS (
@@ -1027,7 +1015,7 @@ def _vocab_coverage_oracle() -> str:
     """
 
 
-@_register("op_benchmark_vocab_coverage", _vocab_coverage_oracle())
+@gate("op_benchmark_vocab_coverage", _vocab_coverage_oracle())
 def op_benchmark_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark vocabulary coverage — the complement of
     op_contamination_ngram: for each held-out benchmark document, the
@@ -1137,7 +1125,7 @@ def _dsir_oracle() -> str:
     """
 
 
-@_register("op_dsir_importance_weights", _dsir_oracle())
+@gate("op_dsir_importance_weights", _dsir_oracle())
 def op_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, arXiv:2302.03169):
     per-document log importance ratio Σ_f c_f·(ln p̂_T(f) − ln p̂_R(f))
@@ -1291,7 +1279,7 @@ _CHI2_TOKEN_ORACLE = f"""
 """
 
 
-@_register("op_chi2_token_selection", _CHI2_TOKEN_ORACLE)
+@gate("op_chi2_token_selection", _CHI2_TOKEN_ORACLE)
 def op_chi2_token_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 chi-square-selected tokens per language — the classic
     feature-selection pass a lang-ID / quality-classifier training run

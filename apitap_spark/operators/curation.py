@@ -15,26 +15,14 @@ from pyspark.sql import functions as F
 
 from apitap_spark.functions.text import normalize_ws, tokens
 from apitap_spark.operators.textstats import LANG_MARKERS, STOPWORDS, _lang_case_sql
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
 
 QUALITY_KEEP_THRESHOLD = 0.55
 _SQL_STOP = ", ".join(f"'{w}'" for w in STOPWORDS)
 
 
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-@_register(
+@gate(
     "op_corpus_curation",
     rf"""
     WITH feat AS (

@@ -26,6 +26,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from apitap_spark import registry
 from apitap_spark.functions.text import (
     normalize_ws,
     shingle_grams,
@@ -33,23 +34,11 @@ from apitap_spark.functions.text import (
     tokens,
 )
 from apitap_spark.operators.graph import connected_components
+from apitap_spark.registry import gate
 from apitap_spark.session import clear_memos, memo, read_table
 
 # perfbench/gates.py imports this name; every other caller uses clear_memos.
 clear_dedup_frame_caches = clear_memos
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # DuckDB mirror of functions.text.shingles(text, 3): 1-based slices over the
@@ -64,7 +53,7 @@ _SQL_SHINGLES = r"""
 """
 
 
-@_register(
+@gate(
     "op_dedup_exact",
     r"""
     SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS text_hash,
@@ -238,7 +227,7 @@ def cap_shingles_by_df(sh: DataFrame, max_df: int) -> DataFrame:
     return sh.join(keep, "shingle")
 
 
-@_register("op_dedup_ngram_jaccard", _SQL_JACCARD_PAIRS_CAPPED)
+@gate("op_dedup_ngram_jaccard", _SQL_JACCARD_PAIRS_CAPPED)
 def op_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs (threshold 0.2) over the
     df-capped shingle vocabulary (df <= 10% of corpus; see
@@ -419,7 +408,7 @@ def minhash_buckets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("op_dedup_minhash_lsh", _SQL_JACCARD_PAIRS.format(thr=0.8))
+@gate("op_dedup_minhash_lsh", _SQL_JACCARD_PAIRS.format(thr=0.8))
 def op_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(128) + LSH(32 bands x 4 rows) near-dup pairs at Jaccard>=0.8.
 
@@ -498,7 +487,7 @@ _SQL_CLUSTERS = rf"""
 """
 
 
-@_register("op_dedup_clusters", _SQL_CLUSTERS)
+@gate("op_dedup_clusters", _SQL_CLUSTERS)
 def op_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: connected components over the LSH pair graph,
     keep-smallest-doc_id per cluster — the deliverable of a dedup pipeline
@@ -626,7 +615,7 @@ _SIMHASH_ORACLE = rf"""
     """
 
 
-@_register("op_dedup_simhash", _SIMHASH_ORACLE)
+@gate("op_dedup_simhash", _SIMHASH_ORACLE)
 def op_dedup_simhash(
     spark: SparkSession,
     sf_dir: str,
@@ -751,7 +740,7 @@ PASSAGE_WINDOW = 8  # tokens per passage window (real runs use 50; the
 # synthetic 40-word vocabulary needs a shorter window to exercise overlap)
 
 
-@_register(
+@gate(
     "op_dedup_passages",
     rf"""
     WITH toks AS (
@@ -818,7 +807,7 @@ def op_dedup_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAINMENT_THRESHOLD = 0.6
 
 
-@_register(
+@gate(
     "op_dedup_containment",
     rf"""
     WITH sh0 AS ({_SQL_SHINGLES}),
@@ -943,7 +932,7 @@ def _minhash_audit_oracle() -> str:
     """
 
 
-@_register("op_minhash_estimate_audit", _minhash_audit_oracle())
+@gate("op_minhash_estimate_audit", _minhash_audit_oracle())
 def op_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Estimator calibration audit for the MinHash family: for every
     near-dup pair (exact df-capped Jaccard >= AUDIT_JACCARD_THR),
@@ -1048,7 +1037,7 @@ def op_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 EDIT_HEAD_TOKENS = 16  # head-fingerprint blocking key width
 
 
-@_register(
+@gate(
     "op_dedup_edit_distance",
     rf"""
     WITH keyed AS (
@@ -1115,7 +1104,7 @@ def op_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _keep_best_oracle() -> str:
-    from apitap_spark.operators.textstats import ORACLES as _TEXT_ORACLES
+    import apitap_spark.operators.textstats  # noqa: F401  (registers the score oracle)
 
     return f"""
     WITH RECURSIVE pairs AS ({_SQL_JACCARD_PAIRS.format(thr=0.8)}),
@@ -1132,7 +1121,7 @@ def _keep_best_oracle() -> str:
     clusters AS (
       SELECT v AS doc_id, MIN(lab) AS cluster_id FROM reach GROUP BY v
     ),
-    scored AS ({_TEXT_ORACLES["op_text_quality_score"]})
+    scored AS ({registry.ORACLES["op_text_quality_score"]})
     SELECT c.doc_id, c.cluster_id,
            s.quality_score,
            (ROW_NUMBER() OVER (PARTITION BY c.cluster_id
@@ -1141,7 +1130,7 @@ def _keep_best_oracle() -> str:
     """
 
 
-@_register("op_dedup_keep_best", _keep_best_oracle())
+@gate("op_dedup_keep_best", _keep_best_oracle())
 def op_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware dedup canonicalization: within each near-dup
     cluster keep the HIGHEST-quality member (score DESC, doc_id
@@ -1242,7 +1231,7 @@ _BLOOM_ORACLE = f"""
 """
 
 
-@_register("op_dedup_bloom_filter", _BLOOM_ORACLE)
+@gate("op_dedup_bloom_filter", _BLOOM_ORACLE)
 def op_dedup_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter membership dedup audit: build a 65536-bit / k=4
     filter over the reference half of the corpus (even doc_ids, keyed on
@@ -1306,7 +1295,7 @@ LSH_TUNE_CONFIGS = [(64, 2), (32, 4), (16, 8), (8, 16)]
 
 
 def _lsh_tuning_oracle() -> str:
-    jac = ORACLES["op_dedup_ngram_jaccard"]
+    jac = registry.ORACLES["op_dedup_ngram_jaccard"]
     cfg_rows = ", ".join(f"({b}, {r})" for b, r in LSH_TUNE_CONFIGS)
     return f"""
     WITH pairs AS (SELECT * FROM ({jac}) t),
@@ -1339,7 +1328,7 @@ def _lsh_tuning_oracle() -> str:
     """
 
 
-@_register("op_lsh_tuning_curve", _lsh_tuning_oracle())
+@gate("op_lsh_tuning_curve", _lsh_tuning_oracle())
 def op_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH parameter tuning: evaluate the S-curve catch probability
     ``1 - (1 - s^r)^b`` of every alternative (bands x rows) split of the
@@ -1561,7 +1550,7 @@ def cdc_dedup_report(chunks: DataFrame) -> DataFrame:
     )
 
 
-@_register("op_cdc_chunking", _CDC_ORACLE)
+@gate("op_cdc_chunking", _CDC_ORACLE)
 def op_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking (the Rabin/FastCDC family, re-derived
     from the published scheme): cut each document where the rolling
@@ -1654,7 +1643,7 @@ _SPAN_ORACLE = f"""
 """
 
 
-@_register("op_dedup_substring_spans", _SPAN_ORACLE)
+@gate("op_dedup_substring_spans", _SPAN_ORACLE)
 def op_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact repeated-substring audit in the style of Lee et al. 2021
     ("Deduplicating Training Data Makes Language Models Better",
@@ -1784,7 +1773,7 @@ _BLOOM_ORACLE = f"""
 """
 
 
-@_register("op_dedup_bloom_prefilter", _BLOOM_ORACLE)
+@gate("op_dedup_bloom_prefilter", _BLOOM_ORACLE)
 def op_dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter prefilter audit for incremental dedup: build an
     (m = 8n+1)-bit, 3-hash Bloom set over the even-id docs' distinct
@@ -1933,7 +1922,7 @@ def _onion_gram_stream(docs: DataFrame) -> DataFrame:
     )
 
 
-@_register("op_dedup_onion_share", _onion_oracle())
+@gate("op_dedup_onion_share", _onion_oracle())
 def op_dedup_onion_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONION-style per-document duplication share (Pomikálek 2011): the
     fraction of each document's distinct word {ONION_N}-grams that also
@@ -1989,7 +1978,7 @@ DEDUP_SWEEP_THRS = tuple(range(2, 10))  # 0.2 .. 0.9 in tenths
 
 
 def _dedup_threshold_curve_oracle() -> str:
-    pairs = ORACLES["op_dedup_ngram_jaccard"]
+    pairs = registry.ORACLES["op_dedup_ngram_jaccard"]
     grid = ", ".join(f"({t})" for t in DEDUP_SWEEP_THRS)
     return f"""
     WITH pairs AS MATERIALIZED ({pairs}),
@@ -2006,7 +1995,7 @@ def _dedup_threshold_curve_oracle() -> str:
     """
 
 
-@_register("op_dedup_threshold_curve", _dedup_threshold_curve_oracle())
+@gate("op_dedup_threshold_curve", _dedup_threshold_curve_oracle())
 def op_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-aggressiveness tuning curve: for each candidate Jaccard
     bar 0.2..0.9, the number of near-dup pairs and distinct left docs
@@ -2085,7 +2074,7 @@ def _novelty_oracle() -> str:
     """
 
 
-@_register("op_text_ngram_novelty", _novelty_oracle())
+@gate("op_text_ngram_novelty", _novelty_oracle())
 def op_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-occurrence n-gram novelty per document: the share of each
     doc's distinct word {ONION_N}-grams whose FIRST corpus occurrence
@@ -2139,7 +2128,7 @@ def op_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_size_hist_oracle() -> str:
-    clusters = ORACLES["op_dedup_clusters"]
+    clusters = registry.ORACLES["op_dedup_clusters"]
     return f"""
     WITH cl AS MATERIALIZED ({clusters}),
     sizes AS (
@@ -2157,7 +2146,7 @@ def _cluster_size_hist_oracle() -> str:
     """
 
 
-@_register("op_dedup_cluster_size_histogram", _cluster_size_hist_oracle())
+@gate("op_dedup_cluster_size_histogram", _cluster_size_hist_oracle())
 def op_dedup_cluster_size_histogram(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2258,7 +2247,7 @@ def _blocking_audit_oracle() -> str:
     """
 
 
-@_register("op_dedup_blocking_audit", _blocking_audit_oracle())
+@gate("op_dedup_blocking_audit", _blocking_audit_oracle())
 def op_dedup_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocking-quality audit for record linkage / dedup candidate
     generation: for each blocking strategy — 16-token head fingerprint

@@ -22,20 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # --- Leave-one-out target encoding ---------------------------------------
@@ -73,7 +61,7 @@ _TE_ORACLE = f"""
 """
 
 
-@_register("op_target_encoding", _TE_ORACLE)
+@gate("op_target_encoding", _TE_ORACLE)
 def op_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out target encoding of order priority against order
     value — the leakage-safe way to hand a tree/linear model a
@@ -207,7 +195,7 @@ def _boot_oracle() -> str:
     """
 
 
-@_register("op_bootstrap_ci_mean", _boot_oracle())
+@gate("op_bootstrap_ci_mean", _boot_oracle())
 def op_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source confidence band on mean document length via the
     DETERMINISTIC Poisson bootstrap (Chamandy et al., "Estimating
@@ -355,7 +343,7 @@ def _qb_oracle() -> str:
     """
 
 
-@_register("op_quantile_binning", _qb_oracle())
+@gate("op_quantile_binning", _qb_oracle())
 def op_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equal-frequency (quantile) feature binning with per-bin target
     rates: discretize order value into QB_BINS buckets holding ~equal
@@ -469,7 +457,7 @@ def _perm_oracle() -> str:
     """
 
 
-@_register("op_permutation_test", _perm_oracle())
+@gate("op_permutation_test", _perm_oracle())
 def op_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic randomization test for a two-group mean difference
     (Fisher's permutation logic, Bernoulli-relabeling variant): is the

@@ -25,23 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from apitap_spark.registry import gate
 from apitap_spark.session import clear_memos, memo, read_table
 
 # perfbench/gates.py imports this name; every other caller uses clear_memos.
 clear_graph_frame_caches = clear_memos
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def connected_components(
@@ -105,7 +93,7 @@ def connected_components(
 SESSION_GAP_SEC = 30 * 60
 
 
-@_register(
+@gate(
     "op_graph_session_components",
     f"""
     WITH flagged AS (
@@ -310,7 +298,7 @@ _PAGERANK_ORACLE = f"""
     """
 
 
-@_register("op_graph_pagerank", _PAGERANK_ORACLE)
+@gate("op_graph_pagerank", _PAGERANK_ORACLE)
 def op_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the user-interaction graph (directed edges from each
     event to the user's next event, like the session graph but directed)
@@ -392,7 +380,7 @@ def lp_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("op_graph_label_propagation", _lp_oracle())
+@gate("op_graph_label_propagation", _lp_oracle())
 def op_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection via synchronous label propagation
     (Raghavan et al. 2007, public arXiv:0709.2938) over the user
@@ -582,7 +570,7 @@ def tri_pernode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("op_graph_triangles", _TRI_ORACLE)
+@gate("op_graph_triangles", _TRI_ORACLE)
 def op_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting (clustering-structure audit) over the
     co-activity graph, completing the graph-analytics family next to
@@ -660,7 +648,7 @@ _DEGREE_ORACLE = f"""
 """
 
 
-@_register("op_graph_degree_profile", _DEGREE_ORACLE)
+@gate("op_graph_degree_profile", _DEGREE_ORACLE)
 def op_graph_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the bounded-degree co-activity graph (the
     edge set op_graph_triangles enumerates): nodes per degree value
@@ -841,7 +829,7 @@ _LINKPRED_ORACLE = f"""
 """
 
 
-@_register("op_graph_link_prediction", _LINKPRED_ORACLE)
+@gate("op_graph_link_prediction", _LINKPRED_ORACLE)
 def op_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link prediction over the co-activity graph — common-neighbor /
     Jaccard scoring of NON-adjacent user pairs (the classic
@@ -943,7 +931,7 @@ def _modularity_oracle() -> str:
     """
 
 
-@_register("op_graph_modularity", _modularity_oracle())
+@gate("op_graph_modularity", _modularity_oracle())
 def op_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted modularity audit of the label-propagation communities —
     the evaluate half of the detect → evaluate loop (Newman 2004):
@@ -1187,7 +1175,7 @@ def hits(edges: DataFrame, n_iter: int = HITS_ITERS) -> DataFrame:
     )
 
 
-@_register("op_graph_hits", _hits_oracle())
+@gate("op_graph_hits", _hits_oracle())
 def op_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs/authorities over the customer→part purchase bipartite
     graph — the third iterative-graph operator (next to PageRank and
@@ -1255,7 +1243,7 @@ _BFS_ORACLE = (
 )
 
 
-@_register("op_graph_bfs_hops", _BFS_ORACLE)
+@gate("op_graph_bfs_hops", _BFS_ORACLE)
 def op_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded multi-source BFS over the co-activity graph: hop distance
     from every node to the nearest SEED user (user_id % 97 == 0),
@@ -1374,7 +1362,7 @@ def _kcore_oracle() -> str:
     return "".join(parts) + "\n    UNION ALL".join(sel)
 
 
-@_register("op_graph_kcore_peel", _kcore_oracle())
+@gate("op_graph_kcore_peel", _kcore_oracle())
 def op_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded k-core peel trajectory over the co-activity graph: per
     round, simultaneously drop every node with fewer than k surviving
@@ -1483,7 +1471,7 @@ _ASSORT_ORACLE = f"""
 """
 
 
-@_register("op_graph_assortativity", _ASSORT_ORACLE)
+@gate("op_graph_assortativity", _ASSORT_ORACLE)
 def op_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity (Newman 2002) of the co-activity graph: the
     Pearson correlation of endpoint degrees over all symmetrized edge
@@ -1591,7 +1579,7 @@ _TRUSTRANK_ORACLE = f"""
 """
 
 
-@_register("op_graph_trustrank_seeded", _TRUSTRANK_ORACLE)
+@gate("op_graph_trustrank_seeded", _TRUSTRANK_ORACLE)
 def op_graph_trustrank_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded PageRank (TrustRank, Gyöngyi et al., VLDB 2004) over the
     undirected co-activity graph: teleport mass restarts ONLY at a
@@ -1691,7 +1679,7 @@ _RA_ORACLE = f"""
 """
 
 
-@_register("op_graph_resource_allocation", _RA_ORACLE)
+@gate("op_graph_resource_allocation", _RA_ORACLE)
 def op_graph_resource_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resource-allocation link scoring (Zhou, Lü & Zhang 2009, public
     EPJ B 71:623): non-adjacent pairs scored RA(u,v) = Σ_{w∈N(u)∩N(v)}
@@ -1760,7 +1748,7 @@ _TRANSITIVITY_ORACLE = f"""
 """
 
 
-@_register("op_graph_transitivity", _TRANSITIVITY_ORACLE)
+@gate("op_graph_transitivity", _TRANSITIVITY_ORACLE)
 def op_graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global clustering coefficient (transitivity) of the co-activity
     graph: C = 3·triangles / wedges — the one-number cohesion metric

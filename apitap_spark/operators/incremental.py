@@ -43,20 +43,8 @@ from apitap_spark.operators.dedup import (
     _candidate_doc_shingles,
     _jaccard_pairs,
 )
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---- production API ------------------------------------------------------
@@ -115,7 +103,7 @@ _OLD_PRED = "doc_id % 10 < 8"  # 80% corpus
 _NEW_PRED = "doc_id % 10 >= 8"  # 20% incoming batch
 
 
-@_register(
+@gate(
     "op_dedup_incremental",
     rf"""
     WITH hashed AS (
@@ -151,7 +139,7 @@ def op_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_exact(batch, store)
 
 
-@_register(
+@gate(
     "op_dedup_incremental_minhash",
     rf"""
     WITH sh AS ({_SQL_SHINGLES}),
@@ -240,7 +228,7 @@ def _emb_incr_oracle() -> str:
     """
 
 
-@_register("op_dedup_incremental_embedding", _emb_incr_oracle())
+@gate("op_dedup_incremental_embedding", _emb_incr_oracle())
 def op_dedup_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic incremental dedup: which INCOMING embeddings are cosine
     near-duplicates (>= 0.4) of the EXISTING corpus — the embedding-space

@@ -26,20 +26,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from apitap_spark.functions.vectors import embedding_matrix
+from apitap_spark.registry import gate
 from apitap_spark.session import memo, read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _sq_dist(a, b):
@@ -213,7 +201,7 @@ _KMEANS_ORACLE = f"""
     """
 
 
-@_register("op_kmeans_refine", _KMEANS_ORACLE)
+@gate("op_kmeans_refine", _KMEANS_ORACLE)
 def op_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means refinement of the label-mean centroids (3 Lloyd rounds) —
     the IVF coarse-quantizer build (op_ann_ivf_label consumes such
@@ -618,7 +606,7 @@ def _logreg_oracle() -> str:
     )
 
 
-@_register("op_ml_logreg_quality", _logreg_oracle())
+@gate("op_ml_logreg_quality", _logreg_oracle())
 def op_ml_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train a long-form/quality classifier on token-level surface
     features — the model-based corpus filter rung (CCNet /
@@ -715,7 +703,7 @@ def _silhouette_oracle() -> str:
     """
 
 
-@_register("op_kmeans_silhouette", _silhouette_oracle())
+@gate("op_kmeans_silhouette", _silhouette_oracle())
 def op_kmeans_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled silhouette coefficient over the corpus's quantizer cells
     (label = cluster): for each probe vector, a = mean Euclidean
@@ -833,7 +821,7 @@ def _drift_oracle() -> str:
     """
 
 
-@_register("op_embedding_centroid_drift", _drift_oracle())
+@gate("op_embedding_centroid_drift", _drift_oracle())
 def op_embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding drift monitor: split the corpus into two deterministic
     snapshot halves (vec_id parity stands in for time-ordered batches),
@@ -916,7 +904,7 @@ def _cell_balance_oracle() -> str:
     """
 
 
-@_register("op_ivf_cell_balance", _cell_balance_oracle())
+@gate("op_ivf_cell_balance", _cell_balance_oracle())
 def op_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index-build report: per-cell population after quantizer
     assignment, with each cell's share and imbalance factor
@@ -1025,7 +1013,7 @@ def _top_pc_oracle() -> str:
     """
 
 
-@_register("op_embedding_top_pc", _top_pc_oracle())
+@gate("op_embedding_top_pc", _top_pc_oracle())
 def op_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal component of the embedding corpus by distributed
     power iteration — the spectral diagnostic an embedding pipeline
@@ -1188,7 +1176,7 @@ def _logreg_auc_oracle() -> str:
     )
 
 
-@_register("op_ml_logreg_eval_auc", _logreg_auc_oracle())
+@gate("op_ml_logreg_eval_auc", _logreg_auc_oracle())
 def op_ml_logreg_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking-quality evaluation of the trained quality classifier:
     exact Mann-Whitney AUC of the learned linear score against the
@@ -1289,7 +1277,7 @@ _BASKET_ORACLE = f"""
 """
 
 
-@_register("op_basket_association_rules", _BASKET_ORACLE)
+@gate("op_basket_association_rules", _BASKET_ORACLE)
 def op_basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association rules — A-priori support counting over
     order baskets (the relational sibling of op_text_collocations_lift,
@@ -1416,7 +1404,7 @@ _TREND_ORACLE = """
 """
 
 
-@_register("op_ml_linear_trend", _TREND_ORACLE)
+@gate("op_ml_linear_trend", _TREND_ORACLE)
 def op_ml_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-series OLS linear trend — the closed-form regression that
     anchors forecasting/capacity dashboards (next to the Newton-trained
@@ -1531,7 +1519,7 @@ _KS_ORACLE = """
 """
 
 
-@_register("op_ab_test_ks", _KS_ORACLE)
+@gate("op_ab_test_ks", _KS_ORACLE)
 def op_ab_test_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov test per event type — the
     DISTRIBUTION-shift complement to q_ab_test_chi2's proportion test:
@@ -1652,7 +1640,7 @@ _PR_CURVE_ORACLE = f"""
 """
 
 
-@_register("op_ml_pr_curve", _PR_CURVE_ORACLE)
+@gate("op_ml_pr_curve", _PR_CURVE_ORACLE)
 def op_ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact precision/recall curve for a ranking score — the
     classifier-eval companion to op_ml_logreg_eval_auc's single AUC
@@ -1796,7 +1784,7 @@ def _gini_oracle() -> str:
     """
 
 
-@_register("op_gini_best_split", _gini_oracle())
+@gate("op_gini_best_split", _gini_oracle())
 def op_gini_best_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decision-stump feature screening: for each of the first
     GINI_DIMS embedding dimensions, find the threshold (on the
@@ -1965,7 +1953,7 @@ _NB_ORACLE = rf"""
 """
 
 
-@_register("op_ml_naive_bayes_lang", _NB_ORACLE)
+@gate("op_ml_naive_bayes_lang", _NB_ORACLE)
 def op_ml_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial naive Bayes language classifier, trained on the even
     doc_ids and evaluated as a confusion matrix over the odd ones — the
@@ -2176,7 +2164,7 @@ def _ada_oracle() -> str:
     """
 
 
-@_register("op_ml_adaboost_stump_round", _ada_oracle())
+@gate("op_ml_adaboost_stump_round", _ada_oracle())
 def op_ml_adaboost_stump_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two rounds of discrete AdaBoost (Freund & Schapire 1997) over the
     op_gini_best_split stump space — dims 1..8 x milli-threshold grid x
@@ -2368,7 +2356,7 @@ _PASSK_ORACLE = f"""
 """
 
 
-@_register("op_eval_pass_at_k", _PASSK_ORACLE)
+@gate("op_eval_pass_at_k", _PASSK_ORACLE)
 def op_eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbiased pass@k estimator (Chen et al. 2021, arXiv:2107.03374
     §2.1 — the HumanEval metric): per task, pass@k = 1 - C(n-c,k)/C(n,k)
@@ -2469,7 +2457,7 @@ def _fairness_oracle() -> str:
     """
 
 
-@_register("op_fairness_equalized_odds", _fairness_oracle())
+@gate("op_fairness_equalized_odds", _fairness_oracle())
 def op_fairness_equalized_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Disaggregated evaluation / equalized-odds audit (Hardt et al.
     2016): per protected group (lang), the TPR and FPR of a classifier
@@ -2578,7 +2566,7 @@ def _mcnemar_oracle() -> str:
     """
 
 
-@_register("op_ml_mcnemar_paired", _mcnemar_oracle())
+@gate("op_ml_mcnemar_paired", _mcnemar_oracle())
 def op_ml_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     """McNemar's paired test between two classifiers evaluated on the
     SAME documents (Dietterich 1998's recommended comparison): the
@@ -2702,7 +2690,7 @@ _MWU_ORACLE = """
 """
 
 
-@_register("op_ab_test_mann_whitney", _MWU_ORACLE)
+@gate("op_ab_test_mann_whitney", _MWU_ORACLE)
 def op_ab_test_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Mann-Whitney U (Wilcoxon rank-sum) test per event
     type — the nonparametric LOCATION-shift complement to the KS gate's
@@ -2851,7 +2839,7 @@ _CONFORMAL_ORACLE = f"""
 """
 
 
-@_register("op_conformal_interval_audit", _CONFORMAL_ORACLE)
+@gate("op_conformal_interval_audit", _CONFORMAL_ORACLE)
 def op_conformal_interval_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-conformal prediction-interval audit (Vovk et al.;
     Papadopoulos et al. 2002 inductive form): per source, fit the
@@ -3010,7 +2998,7 @@ _AUPRC_ORACLE = f"""
 """
 
 
-@_register("op_ml_auprc_grid", _AUPRC_ORACLE)
+@gate("op_ml_auprc_grid", _AUPRC_ORACLE)
 def op_ml_auprc_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Step-integrated PR-AUC of the order-value ranker at
     {AUPRC_STEPS} fixed operating points — the single-number summary
@@ -3141,7 +3129,7 @@ _POISSON_ORACLE = """
 """
 
 
-@_register("op_ab_test_poisson_rates", _POISSON_ORACLE)
+@gate("op_ab_test_poisson_rates", _POISSON_ORACLE)
 def op_ab_test_poisson_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Poisson rate comparison per event type — the
     COUNT-data member of the A/B family (chi² → proportions, KS/MWU →

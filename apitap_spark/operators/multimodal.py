@@ -17,20 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -360,7 +348,7 @@ def with_binary_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_multimodal_features",
     """
     WITH sized AS (
@@ -439,7 +427,7 @@ def _sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out)
 
 
-@_register(
+@gate(
     "op_multimodal_frame_sample",
     f"""
     WITH sized AS (
@@ -506,7 +494,7 @@ def _resize_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-@_register(
+@gate(
     "op_multimodal_resize",
     f"""
     WITH sized AS (
@@ -541,7 +529,7 @@ def op_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_multimodal_metadata",
     """
     SELECT doc_id,
@@ -667,7 +655,7 @@ def _phash_oracle() -> str:
     """
 
 
-@_register("op_multimodal_phash", _phash_oracle())
+@gate("op_multimodal_phash", _phash_oracle())
 def op_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image hashing (dHash, Krawetz's public difference-hash
     scheme): decode -> integer luma -> nearest-sample 9x8 grid ->
@@ -722,7 +710,7 @@ def _phash_pairs_oracle() -> str:
     """
 
 
-@_register("op_dedup_phash_pairs", _phash_pairs_oracle())
+@gate("op_dedup_phash_pairs", _phash_pairs_oracle())
 def op_dedup_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-duplicate pairing: documents whose dHash
     signatures differ by at most PHASH_HAMMING_MAX of 64 bits — the
@@ -893,7 +881,7 @@ _AUDIO_VAD_ORACLE = f"""
 """
 
 
-@_register("op_multimodal_audio_vad", _AUDIO_VAD_ORACLE)
+@gate("op_multimodal_audio_vad", _AUDIO_VAD_ORACLE)
 def op_multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio voice-activity-detection plumbing: binary payload → unsigned
     8-bit PCM samples → fixed-size frames → per-frame energy

@@ -21,20 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apitap_spark.functions.text import token_count, tokens
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # --- UniMax-style token-budget allocation (water-filling) ----------------
@@ -94,7 +82,7 @@ _BUDGET_ORACLE = rf"""
 """
 
 
-@_register("op_token_budget_epochs", _BUDGET_ORACLE)
+@gate("op_token_budget_epochs", _BUDGET_ORACLE)
 def op_token_budget_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UniMax-style token-budget allocation (Chung et al. 2023,
     arXiv:2304.09151): split a fixed training budget across sources by
@@ -218,7 +206,7 @@ _PAD_ORACLE = rf"""
 """
 
 
-@_register("op_pad_waste_audit", _PAD_ORACLE)
+@gate("op_pad_waste_audit", _PAD_ORACLE)
 def op_pad_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Padding-waste audit of length-bucketed batching: assign every
     document to the smallest power-of-two sequence cap that fits it and
@@ -315,7 +303,7 @@ _SWEEP_ORACLE = rf"""
 """
 
 
-@_register("op_quality_retention_sweep", _SWEEP_ORACLE)
+@gate("op_quality_retention_sweep", _SWEEP_ORACLE)
 def op_quality_retention_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention curve over candidate quality bars: for each threshold
     on the distinct-token ratio (the cheapest repetition-quality
@@ -439,7 +427,7 @@ _RR_ORACLE = rf"""
 """
 
 
-@_register("op_privacy_randomized_response", _RR_ORACLE)
+@gate("op_privacy_randomized_response", _RR_ORACLE)
 def op_privacy_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Randomized response over the lang column (Warner 1965, the
     local-DP mechanism): each document reports its true class with
@@ -580,7 +568,7 @@ def _curriculum_oracle() -> str:
     """
 
 
-@_register("op_curriculum_phases", _curriculum_oracle())
+@gate("op_curriculum_phases", _curriculum_oracle())
 def op_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum phase assignment: order the corpus by a quality score
     (highest first) and cut it into {CURRICULUM_PHASES} phases of
@@ -699,7 +687,7 @@ _LPT_ORACLE = rf"""
 """
 
 
-@_register("op_shard_makespan_lpt", _LPT_ORACLE)
+@gate("op_shard_makespan_lpt", _LPT_ORACLE)
 def op_shard_makespan_lpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LPT (longest-processing-time-first, Graham 1969) placement of
     source shards onto LPT_WORKERS parallel workers — the greedy that schedules
@@ -809,7 +797,7 @@ _SKEW_ORACLE = """
 """
 
 
-@_register("op_data_skew_audit", _SKEW_ORACLE)
+@gate("op_data_skew_audit", _SKEW_ORACLE)
 def op_data_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew audit per event type over the (event_type,
     user_id) shuffle key — the measurement that decides whether a

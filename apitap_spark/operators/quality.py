@@ -16,26 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from apitap_spark import registry
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 _PROFILE_COLS = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"]
 
 
-@_register(
+@gate(
     "op_data_profile",
     """
     WITH base AS (SELECT * FROM orders)
@@ -93,7 +82,7 @@ def op_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide.select(F.explode(per_col).alias("p")).select("p.*")
 
 
-@_register(
+@gate(
     "op_data_validate",
     """
     SELECT 'orders_pk_unique' AS check_name,
@@ -182,7 +171,7 @@ def op_data_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@_register(
+@gate(
     "op_numeric_correlation",
     """
     WITH m AS (
@@ -237,7 +226,7 @@ def op_numeric_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select("l_returnflag", "n", F.round(corr, 6).alias("corr_qty_price"))
 
 
-@_register(
+@gate(
     "op_dataset_diff",
     r"""
     WITH v1 AS (
@@ -339,7 +328,7 @@ _SQL_DISCRETE_MEDIAN = """
 """
 
 
-@_register(
+@gate(
     "op_robust_stats",
     f"""
     WITH med AS ({_SQL_DISCRETE_MEDIAN.format(key="event_type", val="value", src="events")}),
@@ -413,7 +402,7 @@ def _fk_oracle() -> str:
     return "\nUNION ALL\n".join(parts)
 
 
-@_register("op_fk_integrity", _fk_oracle())
+@gate("op_fk_integrity", _fk_oracle())
 def op_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit: orphan counts for every foreign-key
     relationship in the star schema — the pre-flight check a pipeline
@@ -468,7 +457,7 @@ _SQL_NTOK = r"""
 """
 
 
-@_register(
+@gate(
     "op_length_filter_bounds",
     rf"""
     WITH lens AS ({_SQL_NTOK}),
@@ -567,10 +556,10 @@ def _calibration_oracle() -> str:
     # of truth, so a future change to STOPWORDS or the score weights in
     # textstats.py moves both gates together instead of silently
     # desynchronizing a duplicated formula (round-4 review)
-    from apitap_spark.operators.textstats import ORACLES as _TEXT_ORACLES
+    import apitap_spark.operators.textstats  # noqa: F401  (registers the score oracle)
 
     return f"""
-    WITH scored AS ({_TEXT_ORACLES["op_text_quality_score"]})
+    WITH scored AS ({registry.ORACLES["op_text_quality_score"]})
     SELECT CAST(FLOOR(quality_score * 10.0) AS BIGINT) AS bucket,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CASE WHEN n_chars > 300 THEN 1 ELSE 0 END) AS BIGINT)
@@ -581,7 +570,7 @@ def _calibration_oracle() -> str:
     """
 
 
-@_register("op_quality_calibration", _calibration_oracle())
+@gate("op_quality_calibration", _calibration_oracle())
 def op_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration curve for the heuristic quality score: bucket the
     C4-style composite score into tenths and report the observed
@@ -644,7 +633,7 @@ _SKEW_ORACLE = f"""
 """
 
 
-@_register("op_skew_key_audit", _SKEW_ORACLE)
+@gate("op_skew_key_audit", _SKEW_ORACLE)
 def op_skew_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-skew heavy-hitter audit over the events join key
     (``user_id``): the top-{K} heaviest keys with their row share,
@@ -733,7 +722,7 @@ _CARD_ORACLE = "\nUNION ALL\n".join(
 )
 
 
-@_register("op_join_cardinality_audit", _CARD_ORACLE)
+@gate("op_join_cardinality_audit", _CARD_ORACLE)
 def op_join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-cardinality estimation audit for the three FK joins of the
     schema: per pair, the textbook containment estimate
@@ -803,7 +792,7 @@ _KANON_ORACLE = f"""
 """
 
 
-@_register("op_kanonymity_audit", _KANON_ORACLE)
+@gate("op_kanonymity_audit", _KANON_ORACLE)
 def op_kanonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit over the (source, lang) quasi-identifier pair:
     each equivalence class with fewer than k=5 members is flagged and
@@ -852,7 +841,7 @@ _DIMPROF_ORACLE = f"""
 """
 
 
-@_register("op_embedding_dim_profile", _DIMPROF_ORACLE)
+@gate("op_embedding_dim_profile", _DIMPROF_ORACLE)
 def op_embedding_dim_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension embedding profile: n/min/max/mean/population
     variance for each of the d dimensions — the embedding-QA pass run
@@ -911,7 +900,7 @@ _LDIV_ORACLE = f"""
 """
 
 
-@_register("op_ldiversity_audit", _LDIV_ORACLE)
+@gate("op_ldiversity_audit", _LDIV_ORACLE)
 def op_ldiversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity audit (Machanavajjhala et al. 2007, the standard
     successor to k-anonymity): treating ``source`` as the released
@@ -970,7 +959,7 @@ _TCLOSE_ORACLE = f"""
 """
 
 
-@_register("op_tcloseness_audit", _TCLOSE_ORACLE)
+@gate("op_tcloseness_audit", _TCLOSE_ORACLE)
 def op_tcloseness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness audit (Li, Li, Venkatasubramanian 2007) — the third
     rung of the release-privacy ladder after op_kanonymity_audit and
@@ -1078,7 +1067,7 @@ _MAHA_ORACLE = f"""
 """
 
 
-@_register("op_embedding_outliers_mahalanobis", _MAHA_ORACLE)
+@gate("op_embedding_outliers_mahalanobis", _MAHA_ORACLE)
 def op_embedding_outliers_mahalanobis(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1236,7 +1225,7 @@ _ZORDER_ORACLE = f"""
 """
 
 
-@_register("op_zorder_layout_audit", _ZORDER_ORACLE)
+@gate("op_zorder_layout_audit", _ZORDER_ORACLE)
 def op_zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) layout locality audit — the lakehouse
     file-skipping planner's evidence table: interleave the low 16 bits
@@ -1349,7 +1338,7 @@ _ERASURE_ORACLE = f"""
 """
 
 
-@_register("op_erasure_impact", _ERASURE_ORACLE)
+@gate("op_erasure_impact", _ERASURE_ORACLE)
 def op_erasure_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-erasure (GDPR Art. 17) impact audit — the deletion
     PLANNER's evidence table, completing the privacy family
@@ -1438,7 +1427,7 @@ _BENFORD_ORACLE = f"""
 """
 
 
-@_register("op_benford_audit", _BENFORD_ORACLE)
+@gate("op_benford_audit", _BENFORD_ORACLE)
 def op_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit audit over event values — the classic
     fabricated-data / synthetic-distribution detector: observed
@@ -1533,7 +1522,7 @@ def _fd_oracle() -> str:
     return " UNION ALL ".join(parts)
 
 
-@_register("op_fd_audit", _fd_oracle())
+@gate("op_fd_audit", _fd_oracle())
 def op_fd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-dependency audit — the schema-discovery rung of the
     profiling family (op_data_profile gives per-column stats; this
@@ -1627,7 +1616,7 @@ _KMV_ORACLE = f"""
 """
 
 
-@_register("op_distinct_kmv_estimate", _KMV_ORACLE)
+@gate("op_distinct_kmv_estimate", _KMV_ORACLE)
 def op_distinct_kmv_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (k-minimum-values) distinct-count sketch, audited against the
     exact count — the mergeable cardinality estimator (Bar-Yossef et
@@ -1733,7 +1722,7 @@ _HIST_DRIFT_ORACLE = f"""
 """
 
 
-@_register("op_histogram_drift_l1", _HIST_DRIFT_ORACLE)
+@gate("op_histogram_drift_l1", _HIST_DRIFT_ORACLE)
 def op_histogram_drift_l1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source distribution-drift audit: bucketize document length
     into fixed-width histograms, express each source's bucket shares
@@ -1830,7 +1819,7 @@ _CRAMERS_ORACLE = f"""
 """
 
 
-@_register("op_cramers_v_association", _CRAMERS_ORACLE)
+@gate("op_cramers_v_association", _CRAMERS_ORACLE)
 def op_cramers_v_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical-association audit: chi-squared statistic and squared
     Cramér's V between the documents table's ``lang`` and ``source``
@@ -1933,7 +1922,7 @@ _KAPPA_ORACLE = rf"""
 """
 
 
-@_register("op_label_agreement_kappa", _KAPPA_ORACLE)
+@gate("op_label_agreement_kappa", _KAPPA_ORACLE)
 def op_label_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between two deterministic document annotators —
     length (n_tokens >= median) and lexical diversity (distinct/total
@@ -2038,7 +2027,7 @@ _PSI_ORACLE = f"""
 """
 
 
-@_register("op_psi_drift", _PSI_ORACLE)
+@gate("op_psi_drift", _PSI_ORACLE)
 def op_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index per source vs the corpus baseline —
     the standard model-monitoring drift score (sum over buckets of
@@ -2158,7 +2147,7 @@ _MI_ORACLE = f"""
 """
 
 
-@_register("op_mutual_information", _MI_ORACLE)
+@gate("op_mutual_information", _MI_ORACLE)
 def op_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual information between the documents table's ``lang`` and
     ``source`` facets, with both marginal entropies and the normalized
@@ -2317,7 +2306,7 @@ _THETA_ORACLE = f"""
 """
 
 
-@_register("op_sketch_theta_overlap", _THETA_ORACLE)
+@gate("op_sketch_theta_overlap", _THETA_ORACLE)
 def op_sketch_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta-sketch set intersection (the Apache DataSketches /
     Bar-Yossef KMV algebra): estimate the distinct-user overlap of
@@ -2484,7 +2473,7 @@ def _winsor_oracle() -> str:
     """
 
 
-@_register("op_winsorized_moments", _winsor_oracle())
+@gate("op_winsorized_moments", _winsor_oracle())
 def op_winsorized_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized per-source length moments: clamp n_chars at the
     discrete per-source p5/p95 and report the clipped counts, the
@@ -2564,10 +2553,10 @@ def op_winsorized_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _brier_oracle() -> str:
-    from apitap_spark.operators.textstats import ORACLES as _TEXT_ORACLES
+    import apitap_spark.operators.textstats  # noqa: F401  (registers the score oracle)
 
     return f"""
-    WITH scored AS ({_TEXT_ORACLES["op_text_quality_score"]}),
+    WITH scored AS ({registry.ORACLES["op_text_quality_score"]}),
     b AS (
       SELECT LEAST(CAST(FLOOR(quality_score * 10.0) AS BIGINT), 9) AS bucket,
              CAST(COUNT(*) AS BIGINT) AS n_k,
@@ -2606,7 +2595,7 @@ def _brier_oracle() -> str:
     """
 
 
-@_register("op_quality_brier_decomposition", _brier_oracle())
+@gate("op_quality_brier_decomposition", _brier_oracle())
 def op_quality_brier_decomposition(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2706,7 +2695,7 @@ _KRIPP_ORACLE = rf"""
 """
 
 
-@_register("op_krippendorff_alpha", _KRIPP_ORACLE)
+@gate("op_krippendorff_alpha", _KRIPP_ORACLE)
 def op_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Krippendorff's alpha across THREE deterministic binary raters —
     token count, lexical diversity, and the long-form char label — the
@@ -2808,7 +2797,7 @@ _WASSERSTEIN_ORACLE = """
 """
 
 
-@_register("op_drift_wasserstein", _WASSERSTEIN_ORACLE)
+@gate("op_drift_wasserstein", _WASSERSTEIN_ORACLE)
 def op_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 1-D Wasserstein-1 (earth-mover) distance between each
     source's document-length distribution and the REST of the corpus —

@@ -24,20 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 SPLIT_SALT = "split-v1:"
@@ -51,7 +39,7 @@ def bucket_of(key_col, salt: str = SPLIT_SALT):
     return F.substring(F.md5(F.concat(F.lit(salt), key_col.cast("string"))), 1, 2)
 
 
-@_register(
+@gate(
     "op_split_train_valid_test",
     f"""
     SELECT doc_id, bucket,
@@ -92,7 +80,7 @@ STRATA_RATES = [
 ]
 
 
-@_register(
+@gate(
     "op_stratified_sample",
     f"""
     WITH rates(lang, keep_below) AS (
@@ -132,7 +120,7 @@ def op_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 BALANCE_SALT = "balance-v1:"
 
 
-@_register(
+@gate(
     "op_cluster_balanced_sample",
     f"""
     WITH sized AS (
@@ -188,7 +176,7 @@ QUOTA_SALT = "quota-v1:"
 QUOTA_PER_SOURCE = 15
 
 
-@_register(
+@gate(
     "op_source_quota_sample",
     f"""
     SELECT doc_id, source, CAST(rn AS BIGINT) AS rn
@@ -232,7 +220,7 @@ def op_source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 LEAK_HEAD_TOKENS = 16  # head-fingerprint width for the leakage key
 
 
-@_register(
+@gate(
     "op_split_leakage_audit",
     rf"""
     WITH assigned AS (
@@ -349,7 +337,7 @@ _DPO_ORACLE = r"""
 """
 
 
-@_register("op_sample_dpo_pairs", _DPO_ORACLE)
+@gate("op_sample_dpo_pairs", _DPO_ORACLE)
 def op_sample_dpo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Preference-pair construction — the data-shaping step of
     DPO/RLHF reward training: within each (lang, source) stratum,
@@ -471,7 +459,7 @@ _KFOLD_ORACLE = f"""
 """
 
 
-@_register("op_stratified_kfold_assignment", _KFOLD_ORACLE)
+@gate("op_stratified_kfold_assignment", _KFOLD_ORACLE)
 def op_stratified_kfold_assignment(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -21,6 +21,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from apitap_spark import registry
 from apitap_spark.functions.vectors import (
     cosine_from_norms,
     cosine_similarity,
@@ -29,10 +30,8 @@ from apitap_spark.functions.vectors import (
     fold_norms,
     l2_norm,
 )
+from apitap_spark.registry import gate
 from apitap_spark.session import clear_memos, memo, read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
 
 
 # perfbench/gates.py imports this name; every other caller uses clear_memos.
@@ -55,16 +54,6 @@ def pq_build_cached(
     )
 
 
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
 # Double-precision cosine in DuckDB (list_cosine_similarity is float32 —
 # too coarse to hash-match a double pipeline).
 _SQL_DOT = (
@@ -77,7 +66,7 @@ _SQL_NORM2 = (
 )
 
 
-@_register(
+@gate(
     "op_ann_cosine_topk",
     f"""
     WITH q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings WHERE vec_id < 10),
@@ -143,7 +132,7 @@ def _cosine_topk_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_embedding_norms",
     f"""
     SELECT vec_id, CAST(label AS BIGINT) AS label,
@@ -253,7 +242,7 @@ def _sql_lsh_bucketed() -> str:
     """
 
 
-@_register("op_ann_lsh_bucketed", _sql_lsh_bucketed())
+@gate("op_ann_lsh_bucketed", _sql_lsh_bucketed())
 def op_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN: score only candidates sharing a (table, bucket)
     cell with the query in any of the N_TABLES hash tables. The scale path
@@ -367,7 +356,7 @@ _IVF_FINAL = """
 _IVF_ORACLE = _IVF_CTE_PREFIX + _IVF_FINAL
 
 
-@_register("op_ann_ivf_label", _IVF_ORACLE)
+@gate("op_ann_ivf_label", _IVF_ORACLE)
 def op_ann_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: label centroids act as the coarse quantizer (a k-means
     fit would produce them at build time); each query probes only its
@@ -426,7 +415,7 @@ def op_ann_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 COSINE_DUP_THRESHOLD = 0.4
 
 
-@_register(
+@gate(
     "op_dedup_embedding_cosine",
     f"""
     WITH pool AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 1000)
@@ -673,7 +662,7 @@ def pq_build(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
 
 
-@_register("op_ann_pq_codes", _pq_oracle())
+@gate("op_ann_pq_codes", _pq_oracle())
 def op_ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encoding (Jegou et al. 2011, public IEEE
     TPAMI "Product quantization for nearest neighbor search"): split
@@ -763,7 +752,7 @@ def _pq_adc_oracle() -> str:
     )
 
 
-@_register("op_ann_pq_adc", _pq_adc_oracle())
+@gate("op_ann_pq_adc", _pq_adc_oracle())
 def op_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ asymmetric-distance search (the query rung of IVF-PQ, Jegou
     2011 §IV): each query builds a per-block lookup table of squared
@@ -913,7 +902,7 @@ def _ivfpq_oracle() -> str:
     )
 
 
-@_register("op_ann_ivfpq_search", _ivfpq_oracle())
+@gate("op_ann_ivfpq_search", _ivfpq_oracle())
 def op_ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical IVF-PQ query path (FAISS architecture, Jegou 2011):
     each query probes its nearest coarse cell (deterministic label-mean
@@ -1147,7 +1136,7 @@ def _semdedup_oracle() -> str:
     """
 
 
-@_register("op_semantic_dedup", _semdedup_oracle())
+@gate("op_semantic_dedup", _semdedup_oracle())
 def op_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
     arXiv:2303.09540): partition the embedding space into cells via the
@@ -1259,7 +1248,7 @@ def _sql_rrf() -> str:
     """
 
 
-@_register("op_hybrid_retrieval_rrf", _sql_rrf())
+@gate("op_hybrid_retrieval_rrf", _sql_rrf())
 def op_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval with reciprocal-rank fusion: dense candidates
     (brute-force cosine rank over embeddings) and sparse candidates
@@ -1343,7 +1332,7 @@ CROSSLINGUAL_THRESHOLD = 0.5
 CROSSLINGUAL_POOL = 500  # bounded pool for the exact rung
 
 
-@_register(
+@gate(
     "op_crosslingual_neardup",
     f"""
     WITH pool AS (
@@ -1478,7 +1467,7 @@ def _recall_audit_oracle() -> str:
     )
 
 
-@_register("op_ann_recall_audit", _recall_audit_oracle())
+@gate("op_ann_recall_audit", _recall_audit_oracle())
 def op_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-quality audit: per-query recall@k of the IVF cell-probe
     index against exact brute-force cosine top-k — THE metric an ANN
@@ -1557,7 +1546,7 @@ def _hardneg_oracle() -> str:
     """
 
 
-@_register("op_sample_hard_negatives", _hardneg_oracle())
+@gate("op_sample_hard_negatives", _hardneg_oracle())
 def op_sample_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for embedding-model training: for each
     anchor (vec_id < {HARDNEG_QUERIES}), the top-k most similar vectors
@@ -1615,8 +1604,8 @@ def op_sample_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mrr_audit_oracle() -> str:
-    lsh = ORACLES["op_ann_lsh_bucketed"]
-    exact = ORACLES["op_ann_cosine_topk"]
+    lsh = registry.ORACLES["op_ann_lsh_bucketed"]
+    exact = registry.ORACLES["op_ann_cosine_topk"]
     return f"""
     WITH lsh AS (SELECT * FROM ({lsh}) t),
     exact AS (SELECT * FROM ({exact}) t),
@@ -1646,7 +1635,7 @@ def _mrr_audit_oracle() -> str:
     """
 
 
-@_register("op_ann_mrr_audit", _mrr_audit_oracle())
+@gate("op_ann_mrr_audit", _mrr_audit_oracle())
 def op_ann_mrr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-sensitive retrieval-quality audit of the LSH index against
     exact brute-force cosine: per query, precision@k (overlap of the
@@ -1726,7 +1715,7 @@ _KNN_CTE_PREFIX = f"""
 """
 
 
-@_register(
+@gate(
     "op_embedding_knn_graph",
     _KNN_CTE_PREFIX
     + f""",
@@ -1852,7 +1841,7 @@ _DBSCAN_CTE_PREFIX = f"""
 """
 
 
-@_register(
+@gate(
     "op_dbscan_clusters",
     _DBSCAN_CTE_PREFIX
     + """
@@ -2041,7 +2030,7 @@ def _greedy_cte_prefix() -> str:
 """
 
 
-@_register(
+@gate(
     "op_ann_greedy_graph_search",
     _greedy_cte_prefix()
     + """
@@ -2233,7 +2222,7 @@ def _label_noise_oracle() -> str:
     """
 
 
-@_register("op_label_noise_pairs", _label_noise_oracle())
+@gate("op_label_noise_pairs", _label_noise_oracle())
 def op_label_noise_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Noisy-label candidates: pairs of near-identical embeddings
     (cosine ≥ {tau}) carrying DIFFERENT labels — the confident-learning
@@ -2254,7 +2243,7 @@ def op_label_noise_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tiled kernel; cost remains the kernel's O(N²/B²) tiles (with an
     LSH/IVF prefilter at corpus scale, as documented on the kernel).
     """
-    pairs = QUERIES["op_dedup_embedding_cosine"](spark, sf_dir)
+    pairs = op_dedup_embedding_cosine(spark, sf_dir)
     lab = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("label").cast("bigint").alias("label")
     )
@@ -2325,7 +2314,7 @@ _KNN_ORACLE = f"""
 """
 
 
-@_register("op_knn_label_accuracy", _KNN_ORACLE)
+@gate("op_knn_label_accuracy", _KNN_ORACLE)
 def op_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN label-consistency audit: for a FIXED-SIZE deterministic
     query sample (the {KNN_QUERY_CAP} vectors with the smallest
@@ -2489,7 +2478,7 @@ def _rp_oracle() -> str:
     """
 
 
-@_register("op_embedding_rp_sketch", _rp_oracle())
+@gate("op_embedding_rp_sketch", _rp_oracle())
 def op_embedding_rp_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss random-projection sketch (Achlioptas 2001
     ±1 database-friendly variant): project each 64-dim embedding onto
@@ -2604,7 +2593,7 @@ _SQ_ORACLE = f"""
 """
 
 
-@_register("op_embedding_int8_quantization_audit", _SQ_ORACLE)
+@gate("op_embedding_int8_quantization_audit", _SQ_ORACLE)
 def op_embedding_int8_quantization_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2717,7 +2706,7 @@ def _recall_oracle() -> str:
     )
 
 
-@_register("op_ann_ivfpq_recall_audit", _recall_oracle())
+@gate("op_ann_ivfpq_recall_audit", _recall_oracle())
 def op_ann_ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the IVF-PQ approximate rung against exact ground
     truth — THE acceptance metric for any ANN index: per query, how
@@ -2767,7 +2756,7 @@ def op_ann_ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("erk") <= IVFPQ_TOPK)
         .select("q_id", F.col("vec_id").alias("c_id"))
     )
-    approx = QUERIES["op_ann_ivfpq_search"](spark, sf_dir).select(
+    approx = op_ann_ivfpq_search(spark, sf_dir).select(
         "q_id", "c_id"
     )
     inter = (
@@ -2877,7 +2866,7 @@ def _mmr_oracle() -> str:
     return "".join(parts)
 
 
-@_register("op_mmr_diversity_rerank", _mmr_oracle())
+@gate("op_mmr_diversity_rerank", _mmr_oracle())
 def op_mmr_diversity_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998) of each query's top-MMR_C cosine candidates: greedily select
@@ -3043,7 +3032,7 @@ def _mat_oracle() -> str:
     return "".join(parts) + "\n    UNION ALL".join(sels)
 
 
-@_register("op_embedding_matryoshka_audit", _mat_oracle())
+@gate("op_embedding_matryoshka_audit", _mat_oracle())
 def op_embedding_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka prefix-dimension audit (Kusupati et al. 2022,
     arXiv:2205.13147): for each prefix length P, the overlap@K between
@@ -3154,8 +3143,8 @@ NDCG_IDCG_MICRO: int = sum(
 
 
 def _ndcg_audit_oracle() -> str:
-    lsh = ORACLES["op_ann_lsh_bucketed"]
-    exact = ORACLES["op_ann_cosine_topk"]
+    lsh = registry.ORACLES["op_ann_lsh_bucketed"]
+    exact = registry.ORACLES["op_ann_cosine_topk"]
     disc = " ".join(
         f"WHEN {i} THEN {d}" for i, d in enumerate(NDCG_DISC_MICRO, start=1)
     )
@@ -3180,7 +3169,7 @@ def _ndcg_audit_oracle() -> str:
     """
 
 
-@_register("op_ann_ndcg_audit", _ndcg_audit_oracle())
+@gate("op_ann_ndcg_audit", _ndcg_audit_oracle())
 def op_ann_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nDCG@5 of the LSH index against exact-cosine graded relevance —
     the position-weighted rank-quality audit that completes the
@@ -3281,7 +3270,7 @@ _ISOTROPY_ORACLE = f"""
 """
 
 
-@_register("op_embedding_isotropy_audit", _ISOTROPY_ORACLE)
+@gate("op_embedding_isotropy_audit", _ISOTROPY_ORACLE)
 def op_embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding isotropy audit (Ethayarajh 2019-style anisotropy
     measurement, arXiv:1909.00512): the mean pairwise cosine between
@@ -3390,7 +3379,7 @@ def _lsh_recall_curve_oracle() -> str:
             f"SELECT vec_id, {t} AS t, {bucket} AS b FROM embeddings"
         )
     bucketed = "\nUNION ALL\n".join(per_table)
-    exact = ORACLES["op_ann_cosine_topk"]
+    exact = registry.ORACLES["op_ann_cosine_topk"]
     return f"""
     WITH bucketed AS MATERIALIZED ({bucketed}),
     mt AS (
@@ -3421,7 +3410,7 @@ def _lsh_recall_curve_oracle() -> str:
     """
 
 
-@_register("op_ann_lsh_recall_curve", _lsh_recall_curve_oracle())
+@gate("op_ann_lsh_recall_curve", _lsh_recall_curve_oracle())
 def op_ann_lsh_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical recall-vs-tables curve for the SRP-LSH index: for each
     prefix of the hash-table bank (1..N_TABLES tables), the fraction

@@ -20,20 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def asof_join(
@@ -93,7 +81,7 @@ def asof_join(
     )
 
 
-@_register(
+@gate(
     "op_asof_join_attribution",
     """
     WITH purchases AS (
@@ -127,7 +115,7 @@ def op_asof_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return asof_join(clicks, purchases, on="user_id")
 
 
-@_register(
+@gate(
     "op_feature_snapshot",
     """
     WITH cutoff AS (SELECT MAX(ts) AS c FROM events),
@@ -244,7 +232,7 @@ def asof_join_forward(
     )
 
 
-@_register(
+@gate(
     "op_asof_join_forward",
     """
     WITH clicks AS (
@@ -330,7 +318,7 @@ _TRACE_ORACLE = f"""
 """
 
 
-@_register("op_trace_assembly", _TRACE_ORACLE)
+@gate("op_trace_assembly", _TRACE_ORACLE)
 def op_trace_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversation/trace assembly: turn each gap-based user session
     into ONE ordered training record — the event sequence serialized in
@@ -409,7 +397,7 @@ _MARKOV_ORACLE = """
 """
 
 
-@_register("op_markov_transitions", _MARKOV_ORACLE)
+@gate("op_markov_transitions", _MARKOV_ORACLE)
 def op_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov model of user journeys — the event-type
     transition matrix behind next-action prediction, funnel-dropout
@@ -489,7 +477,7 @@ _PATHS_ORACLE = f"""
 """
 
 
-@_register("op_journey_paths", _PATHS_ORACLE)
+@gate("op_journey_paths", _PATHS_ORACLE)
 def op_journey_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K user journey paths — the full-sequence complement to
     op_markov_transitions' one-step matrix: each user's first
@@ -563,7 +551,7 @@ _CHURN_ORACLE = f"""
 """
 
 
-@_register("op_churn_labels", _CHURN_ORACLE)
+@gate("op_churn_labels", _CHURN_ORACLE)
 def op_churn_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-free churn label construction — the supervised-label
     side of op_feature_snapshot's point-in-time features: per
@@ -642,7 +630,7 @@ _NEAREST_ORACLE = """
 """
 
 
-@_register("op_asof_join_nearest", _NEAREST_ORACLE)
+@gate("op_asof_join_nearest", _NEAREST_ORACLE)
 def op_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest as-of join — the third leg of the as-of family
     (backward = op_asof_join_attribution, forward =
@@ -750,7 +738,7 @@ _INTERVAL_UNION_ORACLE = f"""
 """
 
 
-@_register("op_interval_union_coverage", _INTERVAL_UNION_ORACLE)
+@gate("op_interval_union_coverage", _INTERVAL_UNION_ORACLE)
 def op_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval union — merge overlapping windows and measure exact
     covered time (the sweep the incident-overlap join and gaps-and-
@@ -869,7 +857,7 @@ def _km_oracle() -> str:
     """
 
 
-@_register("op_survival_km", _km_oracle())
+@gate("op_survival_km", _km_oracle())
 def op_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival curve of user lifetimes per event type
     (Kaplan & Meier 1958) — the retention/longevity estimate that
@@ -1009,7 +997,7 @@ _SEASONALITY_ORACLE = """
 """
 
 
-@_register("op_event_seasonality", _SEASONALITY_ORACLE)
+@gate("op_event_seasonality", _SEASONALITY_ORACLE)
 def op_event_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day seasonality profile per event type: the 24-bin UTC
     load histogram summarized as peak hour / peak share plus Pearson's
@@ -1121,7 +1109,7 @@ _GAP_QUANTILES_ORACLE = """
 """
 
 
-@_register("op_event_gap_quantiles", _GAP_QUANTILES_ORACLE)
+@gate("op_event_gap_quantiles", _GAP_QUANTILES_ORACLE)
 def op_event_gap_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-event gap quantiles per event type (p50 / p90 / max of the
     per-user consecutive-event gap in whole seconds) — the measurement
@@ -1211,7 +1199,7 @@ _BURSTINESS_ORACLE = """
 """
 
 
-@_register("op_event_burstiness", _BURSTINESS_ORACLE)
+@gate("op_event_burstiness", _BURSTINESS_ORACLE)
 def op_event_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fano factor (variance-to-mean ratio) of the per-hour event count
     per event type, empty hours inside the observed span counted as
@@ -1328,7 +1316,7 @@ _MARKOV_DRIFT_ORACLE = f"""
 """
 
 
-@_register("op_markov_stationarity_drift", _MARKOV_DRIFT_ORACLE)
+@gate("op_markov_stationarity_drift", _MARKOV_DRIFT_ORACLE)
 def op_markov_stationarity_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-stationarity audit of user-journey dynamics: the L1 distance
     between each from-state's transition-probability row computed on

@@ -19,20 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apitap_spark.functions.text import shingle_grams, tokens
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # Lookahead-free patterns, valid under both Java regex (Spark) and RE2
@@ -52,7 +40,7 @@ def scrub_pii(col) -> "F.Column":
     return F.regexp_replace(c, PHONE_RE, "<PHONE>")
 
 
-@_register(
+@gate(
     "op_text_pii_scrub",
     rf"""
     SELECT doc_id,
@@ -100,7 +88,7 @@ TAG_RE = r"<[^>]+>"
 ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&")]
 
 
-@_register(
+@gate(
     "op_text_strip_markup",
     rf"""
     SELECT doc_id,
@@ -132,7 +120,7 @@ def op_text_strip_markup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_text_repetition",
     r"""
     WITH tok AS (
@@ -242,7 +230,7 @@ _GOPHER_ORACLE = rf"""
 """
 
 
-@_register("op_text_gopher_rules", _GOPHER_ORACLE)
+@gate("op_text_gopher_rules", _GOPHER_ORACLE)
 def op_text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style rule-based document filter (Rae et al. 2021 §A1.1):
     per-document named rule flags — word-count bounds, mean-word-length

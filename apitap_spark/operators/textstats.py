@@ -15,26 +15,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apitap_spark import registry
 from apitap_spark.functions.text import (
     normalize_ws,
     shingle_grams,
     token_count,
     tokens,
 )
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 CHUNK_TOKENS = 64  # tokens per passage chunk
@@ -65,7 +54,7 @@ def _chunk_oracle() -> str:
     """
 
 
-@_register("op_text_chunk_passages", _chunk_oracle())
+@gate("op_text_chunk_passages", _chunk_oracle())
 def op_text_chunk_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping passage chunking — the RAG/embedding-ingest splitter:
     CHUNK_TOKENS-token windows every CHUNK_STRIDE tokens, so consecutive
@@ -133,7 +122,7 @@ LANG_MARKERS = {
 }
 
 
-@_register(
+@gate(
     "op_text_token_stats",
     r"""
     SELECT doc_id,
@@ -165,7 +154,7 @@ def op_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_text_quality_score",
     rf"""
     WITH feat AS (
@@ -223,7 +212,7 @@ BPE_PRETOKEN_RE = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+
 _BPE_RE_SQL = BPE_PRETOKEN_RE.replace("'", "''")  # escape for the SQL literal
 
 
-@_register(
+@gate(
     "op_text_bpe_tokens",
     rf"""
     SELECT doc_id,
@@ -263,7 +252,7 @@ def _lang_case_sql() -> str:
     return f"CASE WHEN {g} = 0 THEN 'unknown' {whens} END"
 
 
-@_register(
+@gate(
     "op_text_lang_id",
     f"""
     SELECT doc_id, lang AS labeled_lang, {_lang_case_sql()} AS predicted_lang
@@ -289,7 +278,7 @@ def op_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_text_fingerprint",
     r"""
     SELECT doc_id,
@@ -312,7 +301,7 @@ WINNOW_K = 8  # char k-gram length
 WINNOW_W = 4  # winnowing window (guarantee: any match >= k+w-1 chars shares a print)
 
 
-@_register(
+@gate(
     "op_text_winnowing",
     rf"""
     WITH norm AS (
@@ -398,7 +387,7 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
 HASH_DIM = 64  # feature-hashing buckets
 
 
-@_register(
+@gate(
     "op_text_hashed_tf",
     rf"""
     WITH tok AS (
@@ -457,7 +446,7 @@ POSTINGS_MIN_DF = 5  # index only terms seen in >= 5 docs (noise floor)
 POSTINGS_CAP = 200  # max doc ids stored per term (stopword row-size guard)
 
 
-@_register(
+@gate(
     "op_text_inverted_index",
     rf"""
     WITH tok AS (
@@ -528,7 +517,7 @@ def inverted_index_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 LM_TOP_K = 30  # per n-gram order
 
 
-@_register(
+@gate(
     "op_text_ngram_lm_counts",
     rf"""
     WITH toks AS (
@@ -592,7 +581,7 @@ def op_text_ngram_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 TFIDF_TOP_K = 5
 
 
-@_register(
+@gate(
     "op_text_tfidf_topterms",
     rf"""
     WITH tok AS (
@@ -668,7 +657,7 @@ def op_text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_text_lexical_diversity",
     r"""
     WITH tok AS (
@@ -722,7 +711,7 @@ def op_text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 NOVELTY_N = 3  # shingle order for cross-doc novelty
 
 
-@_register(
+@gate(
     "op_doc_novelty",
     rf"""
     WITH tok AS (
@@ -827,7 +816,7 @@ def _script_oracle() -> str:
     """
 
 
-@_register("op_text_script_profile", _script_oracle())
+@gate("op_text_script_profile", _script_oracle())
 def op_text_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language character-class profile: the script/encoding audit a
     multilingual crawl runs before tokenizer training (a 'lang=en' shard
@@ -909,7 +898,7 @@ def _growth_oracle() -> str:
     """
 
 
-@_register("op_corpus_growth_curve", _growth_oracle())
+@gate("op_corpus_growth_curve", _growth_oracle())
 def op_corpus_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary growth curve (Heaps' law): distinct word types and
     cumulative tokens for doc_id-prefix checkpoints at powers of two —
@@ -964,14 +953,14 @@ def _lang_confusion_oracle() -> str:
     # composes the registered lang-id oracle as a CTE (single source of
     # truth with the per-doc gate)
     return f"""
-    WITH preds AS ({ORACLES["op_text_lang_id"]})
+    WITH preds AS ({registry.ORACLES["op_text_lang_id"]})
     SELECT labeled_lang, predicted_lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs
     FROM preds GROUP BY labeled_lang, predicted_lang
     """
 
 
-@_register("op_lang_confusion_matrix", _lang_confusion_oracle())
+@gate("op_lang_confusion_matrix", _lang_confusion_oracle())
 def op_lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID confusion matrix: labeled shard language vs the
     marker-vote prediction, counted — the classifier-quality report
@@ -1049,7 +1038,7 @@ def _rake_oracle() -> str:
     """
 
 
-@_register("op_text_keywords_rake", _rake_oracle())
+@gate("op_text_keywords_rake", _rake_oracle())
 def op_text_keywords_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010, the public
     co-occurrence degree/frequency method): candidate phrases are
@@ -1140,7 +1129,7 @@ def op_text_keywords_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZIPF_MAX_POW = 20  # vocab-size checkpoints: 2^1 .. 2^20 words
 
 
-@_register(
+@gate(
     "op_vocab_coverage_curve",
     rf"""
     WITH counts AS (
@@ -1281,7 +1270,7 @@ _COLLOC_ORACLE = rf"""
 """
 
 
-@_register("op_text_collocations_lift", _COLLOC_ORACLE)
+@gate("op_text_collocations_lift", _COLLOC_ORACLE)
 def op_text_collocations_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation mining: top-K adjacent word pairs by LIFT
     ``P(ab) / (P(a)·P(b)) = n_ab·N_uni² / (N_bi·n_a·n_b)`` with a
@@ -1435,7 +1424,7 @@ _CMS_ORACLE = rf"""
 """
 
 
-@_register("op_text_heavy_hitters_cms", _CMS_ORACLE)
+@gate("op_text_heavy_hitters_cms", _CMS_ORACLE)
 def op_text_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min-sketch heavy-hitter audit: build a depth-4 x
     width-1024 CMS over the corpus token stream (md5-derived row
@@ -1541,7 +1530,7 @@ def _bm25_oracle() -> str:
     """
 
 
-@_register("op_text_bm25_topk", _bm25_oracle())
+@gate("op_text_bm25_topk", _bm25_oracle())
 def op_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval (Okapi k1=1.2, b=0.75) for a fixed term
     query — the sparse half of every retrieval/RAG stack, next to
@@ -1655,7 +1644,7 @@ _READABILITY_ORACLE = r"""
 """
 
 
-@_register("op_text_readability", _READABILITY_ORACLE)
+@gate("op_text_readability", _READABILITY_ORACLE)
 def op_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch reading-ease and Flesch–Kincaid grade per document — the
     classic readability rung of a quality-filter ladder (alongside
@@ -1774,7 +1763,7 @@ _ZIPF_ORACLE = rf"""
 """
 
 
-@_register("op_text_zipf_fit", _ZIPF_ORACLE)
+@gate("op_text_zipf_fit", _ZIPF_ORACLE)
 def op_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit of the corpus unigram distribution: least-squares
     slope/intercept/R^2 of ln(frequency) against ln(rank) over the top
@@ -1881,7 +1870,7 @@ _BOILER_ORACLE = rf"""
 """
 
 
-@_register("op_text_boilerplate_prefix", _BOILER_ORACLE)
+@gate("op_text_boilerplate_prefix", _BOILER_ORACLE)
 def op_text_boilerplate_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Template-flood detector: per source, the most common leading
     BOILER_PREFIX_TOKENS-token prefix and its share of the source's
@@ -1985,7 +1974,7 @@ _ROUGE_OVERLAP_ORACLE = r"""
 """
 
 
-@_register("op_text_rouge_overlap", _ROUGE_OVERLAP_ORACLE)
+@gate("op_text_rouge_overlap", _ROUGE_OVERLAP_ORACLE)
 def op_text_rouge_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROUGE-2 clipped-bigram recall/precision between each document and
     its same-language doc_id successor — the n-gram-overlap eval metric
@@ -2094,7 +2083,7 @@ _BIGRAM_PREDICT_ORACLE = r"""
 """
 
 
-@_register("op_text_bigram_predictability", _BIGRAM_PREDICT_ORACLE)
+@gate("op_text_bigram_predictability", _BIGRAM_PREDICT_ORACLE)
 def op_text_bigram_predictability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document next-token predictability: the Simpson collision
     probability that two bigram occurrences drawn from the SAME

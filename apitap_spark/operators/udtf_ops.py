@@ -24,20 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 from pyspark.sql.types import DoubleType
 
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 @udtf(returnType="doc_id: bigint, shingle: string")
@@ -56,7 +44,7 @@ class ShingleUDTF:
                 yield (doc_id, s)
 
 
-@_register(
+@gate(
     "op_udtf_shingles",
     r"""
     SELECT doc_id, UNNEST(list_distinct(
@@ -87,7 +75,7 @@ def op_udtf_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "op_pandas_udf_zscore",
     """
     SELECT vec_id,
@@ -116,7 +104,7 @@ def op_pandas_udf_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", zscore(F.col("label")).alias("label_z"))
 
 
-@_register("op_approx_aggregates")  # sketch results are engine-specific
+@gate("op_approx_aggregates")  # sketch results are engine-specific
 def op_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL approx_count_distinct + KLL-style approx_percentile — the
     sketches that replace exact distinct/percentile at 100 TB (mergeable,
@@ -133,7 +121,7 @@ def op_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZLIB_LEVEL = 6
 
 
-@_register("op_text_compression_ratio")  # zlib not in SQL → rows-only gate
+@gate("op_text_compression_ratio")  # zlib not in SQL → rows-only gate
 def op_text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document zlib compression ratio — the Kolmogorov-style
     quality signal pretraining filters use to catch templated/repetitive

@@ -8,6 +8,7 @@ DataFrame-API query with a DuckDB oracle, over the driver's TPC-H-ish
 testdata.
 """
 
+from apitap_spark import registry
 from apitap_spark.plans import (
     relational,
     relational2,
@@ -18,23 +19,14 @@ from apitap_spark.plans import (
     timeseries,
 )
 
-QUERIES = {
-    **relational.QUERIES,
-    **relational2.QUERIES,
-    **relational3.QUERIES,
-    **relational4.QUERIES,
-    **relational5.QUERIES,
-    **relational6.QUERIES,
-    **timeseries.QUERIES,
-}
-ORACLES = {
-    **relational.ORACLES,
-    **relational2.ORACLES,
-    **relational3.ORACLES,
-    **relational4.ORACLES,
-    **relational5.ORACLES,
-    **relational6.ORACLES,
-    **timeseries.ORACLES,
-}
+QUERIES, ORACLES = registry.of_modules(
+    relational,
+    relational2,
+    relational3,
+    relational4,
+    relational5,
+    relational6,
+    timeseries,
+)
 
 __all__ = ["QUERIES", "ORACLES"]

@@ -23,10 +23,11 @@ advertised surface (reference ``README.md:98-101``).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from apitap_spark.registry import gate
 
 DEC = "decimal(18,2)"
 
@@ -58,24 +59,11 @@ SQL_REV = (
 )
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # Q6 aggregation — TPC-H Q1-style pricing summary (the flagship query).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q1_pricing_summary",
     """
     SELECT l_returnflag, l_linestatus,
@@ -120,7 +108,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q5 joins + Q8 top-k — TPC-H Q3-style shipping priority.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q3_shipping_priority",
     f"""
     SELECT l_orderkey,
@@ -164,7 +152,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q5 multi-join across the snowflake — TPC-H Q5-style regional revenue.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q5_region_revenue",
     f"""
     SELECT n_name, CAST(SUM({SQL_REV}) AS DOUBLE) AS revenue
@@ -210,7 +198,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q2 filter + Q6 global agg — TPC-H Q6-style revenue forecast.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q6_revenue_forecast",
     """
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
@@ -245,7 +233,7 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q1 projection / aliasing / scalar expressions.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_projection_alias",
     """
     SELECT o_orderkey AS order_id,
@@ -273,7 +261,7 @@ def q_projection_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q5 join types: left / right / full / semi / anti.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_join_left_outer",
     """
     SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders,
@@ -299,7 +287,7 @@ def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_join_full_outer",
     """
     SELECT COALESCE(c.k, s.k) AS nationkey,
@@ -329,7 +317,7 @@ def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_join_semi",
     """
     SELECT c_custkey, c_name
@@ -346,7 +334,7 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_join_anti",
     """
     SELECT c_custkey, c_name
@@ -366,7 +354,7 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_join_theta_range",
     """
     SELECT p1.p_partkey AS p_partkey, p1.p_name AS p_name, COUNT(*) AS n_cheaper_parts
@@ -396,7 +384,7 @@ def q_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q7 window functions.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_window_topn_per_group",
     """
     SELECT c_custkey, o_orderkey, o_totalprice, rk
@@ -425,7 +413,7 @@ def q_window_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_window_latest_per_key",
     """
     SELECT c_custkey, o_orderkey AS latest_order, o_orderdate AS latest_date
@@ -458,7 +446,7 @@ def q_window_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_window_lag_delta",
     """
     SELECT user_id, event_id, value,
@@ -479,7 +467,7 @@ def q_window_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_window_moving_sum",
     """
     SELECT o_custkey, o_orderkey,
@@ -507,7 +495,7 @@ def q_window_moving_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_window_ntile_percentile",
     """
     SELECT c_custkey, c_acctbal,
@@ -533,7 +521,7 @@ def q_window_ntile_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q9 set operations.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_setop_union_all",
     """
     SELECT k, kind FROM (
@@ -554,7 +542,7 @@ def q_setop_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.unionAll(s)
 
 
-@_register(
+@gate(
     "q_setop_intersect",
     """
     SELECT CAST(c_nationkey AS BIGINT) AS k FROM customer
@@ -569,7 +557,7 @@ def q_setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.intersect(s)
 
 
-@_register(
+@gate(
     "q_setop_except",
     """
     SELECT CAST(n_nationkey AS BIGINT) AS k FROM nation
@@ -593,7 +581,7 @@ def q_setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q10 subqueries: scalar, correlated.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_subquery_scalar",
     """
     SELECT o_orderkey, o_totalprice
@@ -615,7 +603,7 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_subquery_correlated",
     """
     SELECT o_orderkey, o_custkey, o_totalprice
@@ -641,7 +629,7 @@ def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q11 CTEs + VALUES.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_cte_monthly_revenue",
     f"""
     WITH monthly AS (
@@ -675,7 +663,7 @@ def q_cte_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_values_lookup_join",
     """
     SELECT o_orderpriority, pri_rank, COUNT(*) AS n_orders
@@ -705,7 +693,7 @@ def q_values_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q6 GROUPING SETS / ROLLUP / CUBE / DISTINCT aggregation.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_rollup_revenue",
     f"""
     SELECT l_returnflag, l_linestatus,
@@ -724,7 +712,7 @@ def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_cube_counts",
     """
     SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
@@ -738,7 +726,7 @@ def q_cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.cube("o_orderstatus", "o_orderpriority").agg(F.count("*").alias("n"))
 
 
-@_register(
+@gate(
     "q_distinct_agg",
     """
     SELECT l_returnflag,
@@ -764,7 +752,7 @@ def q_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q12 scalar function families: string, date/time, CASE/cast, arrays.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_string_functions",
     """
     SELECT p_partkey,
@@ -797,7 +785,7 @@ def q_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_datetime_functions",
     """
     SELECT o_orderkey,
@@ -823,7 +811,7 @@ def q_datetime_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_case_when_tiers",
     """
     SELECT tier, COUNT(*) AS n_customers,
@@ -854,7 +842,7 @@ def q_case_when_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_json_access",
     """
     SELECT CAST(props->>'$.k' AS BIGINT) AS k_val, COUNT(*) AS n_events,
@@ -879,7 +867,7 @@ def q_json_access(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_topk_orders",
     """
     SELECT o_orderkey, o_custkey, o_totalprice
@@ -899,7 +887,7 @@ def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_having_filter",
     """
     SELECT l_suppkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty

@@ -7,31 +7,17 @@ decimal-exact aggregates, explicit casts so schemas align across engines.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apitap_spark.plans.relational import DEC, SQL_REV, _dec, _revenue, _t
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from apitap_spark.registry import gate
 
 
 # ---------------------------------------------------------------------------
 # Q6 GROUPING SETS (explicit) — beyond rollup/cube.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_grouping_sets",
     """
     SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
@@ -57,7 +43,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q10 EXISTS (correlated, not decorrelatable to a simple semi-join key).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_exists_late_shipment",
     """
     SELECT o_orderpriority, COUNT(*) AS n_orders
@@ -93,7 +79,7 @@ def q_exists_late_shipment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q9 UNION (distinct).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_union_distinct",
     """
     SELECT CAST(k AS BIGINT) AS k FROM (
@@ -120,7 +106,7 @@ def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q12 arrays: explode + word frequency (the unnest workhorse).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_word_frequency",
     r"""
     SELECT word, COUNT(*) AS freq
@@ -145,7 +131,7 @@ def q_word_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_array_agg_tokens",
     r"""
     SELECT doc_id,
@@ -170,7 +156,7 @@ def q_array_agg_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q6 percentiles (exact interpolated).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_percentiles",
     """
     SELECT l_returnflag,
@@ -198,7 +184,7 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q6 pivot (conditional aggregation).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_pivot_status",
     """
     SELECT o_orderpriority,
@@ -229,7 +215,7 @@ def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q12 null handling: null-safe equality, NULLIF, COALESCE.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_null_safe_ops",
     """
     SELECT e1.event_id AS event_id,
@@ -261,7 +247,7 @@ def q_null_safe_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q2 LIKE / ILIKE / IN / BETWEEN predicate family.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_predicate_family",
     """
     SELECT p_partkey, p_name, p_brand
@@ -293,7 +279,7 @@ def q_predicate_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q7 remaining window functions: cume_dist, nth_value, first/last with frames.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_window_distribution",
     """
     SELECT o_custkey, o_orderkey,
@@ -325,7 +311,7 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TPC-H-style multi-join analytics.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q7_nation_volume",
     f"""
     SELECT supp_nation, cust_nation, order_year,
@@ -378,7 +364,7 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q10_returned_items",
     f"""
     SELECT c_custkey, c_name,
@@ -412,7 +398,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q14_promo_revenue_share",
     f"""
     SELECT CAST(100.0 * SUM(CASE WHEN p_type LIKE 'PROMO%' THEN {SQL_REV}
@@ -448,7 +434,7 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q18_large_orders",
     """
     SELECT c_custkey, c_name, o_orderkey,
@@ -492,7 +478,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Event/time-series analytics over the events stream table.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_sessionization",
     """
     WITH gaps AS (
@@ -545,7 +531,7 @@ def q_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_funnel_conditional_min",
     """
     WITH firsts AS (
@@ -603,7 +589,7 @@ def q_funnel_conditional_min(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q12 math scalar functions.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_math_functions",
     """
     SELECT l_orderkey, l_linenumber,
@@ -638,7 +624,7 @@ def q_math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q5 explicit cross join (dimension × dimension).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_cross_join_dims",
     """
     SELECT r_name, n_name
@@ -661,7 +647,7 @@ def q_cross_join_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q9 bag semantics: INTERSECT ALL / EXCEPT ALL.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q_setop_intersect_all",
     """
     SELECT CAST(o_custkey % 50 AS BIGINT) AS k FROM orders WHERE o_orderstatus = 'F'
@@ -681,7 +667,7 @@ def q_setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.intersectAll(b)
 
 
-@_register(
+@gate(
     "q_setop_except_all",
     """
     SELECT CAST(o_custkey % 20 AS BIGINT) AS k FROM orders WHERE o_orderstatus = 'F'

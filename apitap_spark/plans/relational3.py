@@ -7,28 +7,14 @@ exact aggregates, explicit casts.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apitap_spark.plans.relational import DEC, _dec, _t
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
+from apitap_spark.registry import gate
 
 
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-@_register(
+@gate(
     "q2_cheapest_part_per_size",
     """
     SELECT p.p_size AS p_size, p.p_partkey AS p_partkey, p.p_name AS p_name,
@@ -53,7 +39,7 @@ def q2_cheapest_part_per_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q11_nation_balance_share",
     """
     SELECT n_name, CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_balance
@@ -79,7 +65,7 @@ def q11_nation_balance_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q13_order_count_distribution",
     """
     SELECT n_orders, COUNT(*) AS n_customers
@@ -104,7 +90,7 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_cust.groupBy("n_orders").agg(F.count("*").alias("n_customers"))
 
 
-@_register(
+@gate(
     "q22_dormant_rich_customers",
     """
     SELECT CAST(c_nationkey AS BIGINT) AS nationkey, COUNT(*) AS n_customers,
@@ -140,7 +126,7 @@ def q22_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_retention_cohorts",
     """
     WITH firsts AS (

@@ -18,31 +18,17 @@ times.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apitap_spark.plans.relational import DEC, SQL_REV, _dec, _dsum, _revenue, _t
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from apitap_spark.registry import gate
 
 
 # ---------------------------------------------------------------------------
 # TPC-H Q4: order-priority checking (EXISTS semi-join + agg).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q4_order_priority",
     """
     SELECT o_orderpriority, COUNT(*) AS order_count
@@ -84,7 +70,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TPC-H Q8: national market share (two nation roles, conditional share).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q8_market_share",
     f"""
     SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
@@ -147,7 +133,7 @@ _Q9_AMOUNT_SQL = (
 )
 
 
-@_register(
+@gate(
     "q9_product_profit",
     f"""
     SELECT n_name AS nation, CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
@@ -197,7 +183,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TPC-H Q12: late lines by priority class (interval arithmetic + cond agg).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q12_late_line_priority",
     """
     SELECT l_returnflag,
@@ -250,7 +236,7 @@ _Q15_REVENUE_SQL = f"""
 """
 
 
-@_register(
+@gate(
     "q15_top_supplier",
     f"""
     WITH revenue AS ({_Q15_REVENUE_SQL})
@@ -292,7 +278,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TPC-H Q16: supplier variety per part group (distinct count + NOT IN).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q16_supplier_variety",
     """
     SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
@@ -334,7 +320,7 @@ def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TPC-H Q17: small-quantity-order revenue (per-part average threshold).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q17_small_quantity_revenue",
     """
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0
@@ -379,7 +365,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TPC-H Q19: disjunctive brand/size/quantity predicates.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q19_disjunctive_revenue",
     f"""
     SELECT CAST(SUM({SQL_REV}) AS DOUBLE) AS revenue
@@ -419,7 +405,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TPC-H Q20: suppliers with significant promo shipments (nested IN+HAVING).
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q20_promo_shippers",
     """
     SELECT s_suppkey, s_name
@@ -466,7 +452,7 @@ def q20_promo_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TPC-H Q21: suppliers who kept multi-supplier orders waiting.
 # ---------------------------------------------------------------------------
-@_register(
+@gate(
     "q21_waiting_supplier",
     """
     SELECT s_name, COUNT(*) AS numwait

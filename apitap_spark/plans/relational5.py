@@ -8,25 +8,11 @@ oracle, decimal-exact money aggregates.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apitap_spark.plans.relational import DEC, _dec, _t
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from apitap_spark.registry import gate
 
 
 _LATERAL_SQL = """
@@ -41,7 +27,7 @@ _LATERAL_SQL = """
 """
 
 
-@_register(
+@gate(
     "q_lateral_topn_orders",
     _LATERAL_SQL.format(cust="customer", orders="orders"),
 )
@@ -55,7 +41,7 @@ def q_lateral_topn_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_LATERAL_SQL.format(cust="_q5l_customer", orders="_q5l_orders"))
 
 
-@_register(
+@gate(
     "q_window_range_time",
     """
     SELECT event_id, user_id,
@@ -86,7 +72,7 @@ def q_window_range_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_mode_median_price",
     """
     WITH counted AS (
@@ -167,7 +153,7 @@ def q_mode_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mode_pick.join(median, "o_orderpriority")
 
 
-@_register(
+@gate(
     "q_salted_two_phase_agg",
     """
     SELECT l_returnflag,
@@ -203,7 +189,7 @@ def q_salted_two_phase_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_string_agg_nations",
     """
     SELECT n_regionkey, string_agg(n_name, ',' ORDER BY n_name) AS nation_list
@@ -223,7 +209,7 @@ def q_string_agg_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_unpivot_measures",
     """
     SELECT l_orderkey, l_linenumber, measure, val FROM (
@@ -253,7 +239,7 @@ def q_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_salted_skew_join",
     """
     SELECT p.p_brand,
@@ -288,7 +274,7 @@ def q_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_regex_functions",
     r"""
     SELECT doc_id,
@@ -324,7 +310,7 @@ def q_regex_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_bitwise_functions",
     """
     SELECT l_linenumber,
@@ -358,7 +344,7 @@ def q_bitwise_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_null_handling_functions",
     """
     SELECT o_orderkey,
@@ -399,7 +385,7 @@ def q_null_handling_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 PIVOT_LANGS = ["de", "en", "es", "fr", "zh"]
 
 
-@_register(
+@gate(
     "q_pivot_lang_counts",
     f"""
     SELECT source,
@@ -434,7 +420,7 @@ def q_pivot_lang_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_try_functions",
     """
     SELECT l_orderkey, l_linenumber,
@@ -489,7 +475,7 @@ def q_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_window_distinct_count",
     """
     SELECT o_custkey, o_orderkey,
@@ -536,7 +522,7 @@ def q_window_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_distinct_on",
     """
     SELECT DISTINCT ON (o_custkey)
@@ -564,7 +550,7 @@ def q_distinct_on(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_any_all_rewrite",
     """
     SELECT o_orderkey, o_totalprice
@@ -607,7 +593,7 @@ def q_any_all_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_filtered_agg",
     """
     SELECT l_returnflag,

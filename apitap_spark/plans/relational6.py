@@ -16,28 +16,14 @@ expressions, no Python in the hot path).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from apitap_spark.plans.relational import _t
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
+from apitap_spark.registry import gate
 
 
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-@_register(
+@gate(
     "q_qualify_clause",
     """
     SELECT o_orderpriority, o_orderkey, o_totalprice,
@@ -89,7 +75,7 @@ _NAMED_WINDOW_SQL = """
 """
 
 
-@_register("q_window_named", _NAMED_WINDOW_SQL.format(orders="orders"))
+@gate("q_window_named", _NAMED_WINDOW_SQL.format(orders="orders"))
 def q_window_named(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Named WINDOW clause (SQL:2003) — one window definition shared by
     several functions, IDENTICAL SQL text in both engines (the
@@ -106,7 +92,7 @@ def q_window_named(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_NAMED_WINDOW_SQL.format(orders="_nw_orders"))
 
 
-@_register(
+@gate(
     "q_higher_order_array",
     """
     WITH per_order AS (
@@ -158,7 +144,7 @@ def q_higher_order_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_map_functions",
     """
     WITH per AS (
@@ -225,7 +211,7 @@ _GROUPING_ID_SQL = """
 """
 
 
-@_register("q_grouping_id", _GROUPING_ID_SQL.format(orders="orders"))
+@gate("q_grouping_id", _GROUPING_ID_SQL.format(orders="orders"))
 def q_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING() markers over ROLLUP (SQL:1999; SURVEY §2.2 Q6 depth)
     — the function that disambiguates "NULL because subtotal" from
@@ -250,7 +236,7 @@ _RFM_SEGMENT_CASE = """CASE
              ELSE 'regular' END"""
 
 
-@_register(
+@gate(
     "q_rfm_segmentation",
     f"""
     WITH cust AS (
@@ -343,7 +329,7 @@ AB_CONVERT_CENTS = 150.0  # conversion: event value above this threshold
 AB_CHI2_95_MICRO = 3_841_459  # chi-square(1 df) 95% critical value, micro
 
 
-@_register(
+@gate(
     "q_ab_test_chi2",
     f"""
     WITH cells AS (
@@ -438,7 +424,7 @@ def q_ab_test_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_cohort_ltv",
     """
     WITH om AS (
@@ -550,7 +536,7 @@ _NULLS_ORDER_SQL = """
 """
 
 
-@_register("q_nulls_ordering", _NULLS_ORDER_SQL.format(orders="orders"))
+@gate("q_nulls_ordering", _NULLS_ORDER_SQL.format(orders="orders"))
 def q_nulls_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit NULLS FIRST / NULLS LAST sort ordering (SQL:2003) —
     IDENTICAL statement text both engines, on a genuinely nullable
@@ -569,7 +555,7 @@ PAGE_SIZE = 20
 PAGE_OFFSET = 40  # pages 1-2 already served; gate returns page 3
 
 
-@_register(
+@gate(
     "q_keyset_pagination",
     f"""
     SELECT o_orderkey, o_orderdate, o_orderstatus, o_totalprice
@@ -613,7 +599,7 @@ def q_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_relational_division",
     """
     SELECT c.c_custkey, c.c_name
@@ -659,7 +645,7 @@ def q_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "c_name")
 
 
-@_register(
+@gate(
     "q_aggregate_modern_family",
     """
     SELECT event_type,

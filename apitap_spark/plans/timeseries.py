@@ -11,32 +11,18 @@ perturb the double result (see plans/relational.py docstring).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from apitap_spark.registry import gate
 from apitap_spark.session import read_table
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _epoch_hour(col: str = "ts") -> "F.Column":
     return F.floor(F.col(col).cast("long") / 3600).cast("bigint")
 
 
-@_register(
+@gate(
     "q_resample_hourly_gapfill",
     """
     WITH bucketed AS (
@@ -101,7 +87,7 @@ def q_resample_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_time_bucket_ohlc",
     """
     WITH ranked AS (
@@ -164,7 +150,7 @@ def q_time_bucket_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_interpolate_locf",
     """
     WITH bucketed AS (
@@ -262,7 +248,7 @@ _RECURSIVE_BOM_SQL = """
 """
 
 
-@_register(
+@gate(
     "q_recursive_cte_bom",
     _RECURSIVE_BOM_SQL.format(part="part"),
 )
@@ -286,7 +272,7 @@ def q_recursive_cte_bom(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_RECURSIVE_BOM_SQL.format(part="_rc_part"))
 
 
-@_register(
+@gate(
     "q_session_window_native",
     f"""
     WITH flagged AS (
@@ -333,7 +319,7 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_window_first_last_nth",
     """
     SELECT event_id, user_id,
@@ -376,7 +362,7 @@ _GROUP_BY_ALL_SQL = """
 """
 
 
-@_register(
+@gate(
     "q_group_by_all",
     _GROUP_BY_ALL_SQL.format(orders="orders"),
 )
@@ -397,7 +383,7 @@ ANOMALY_MIN_N = 12  # minimum baseline size before scoring
 ANOMALY_Z = 3.0
 
 
-@_register(
+@gate(
     "q_timeseries_anomaly",
     f"""
     WITH bucketed AS (
@@ -491,7 +477,7 @@ _TIER_VALUES_SQL = ", ".join(
 )
 
 
-@_register(
+@gate(
     "q_bucketized_range_join",
     f"""
     WITH tiers(tier, lo, hi) AS (VALUES {_TIER_VALUES_SQL})
@@ -550,7 +536,7 @@ def q_bucketized_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUNNEL_STAGES = ["view", "click", "purchase"]
 
 
-@_register(
+@gate(
     "q_event_funnel",
     """
     WITH s1 AS (
@@ -642,7 +628,7 @@ INCIDENT_MOD = 101  # every 101st error event anchors an incident window
 INCIDENT_PAD_SEC = 3600  # +/- 1 hour around the anchor
 
 
-@_register(
+@gate(
     "q_interval_overlap_incidents",
     f"""
     WITH flagged AS (
@@ -748,7 +734,7 @@ def q_interval_overlap_incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@gate(
     "q_scd2_user_status",
     """
     WITH changes AS (
@@ -841,7 +827,7 @@ def _ewma_oracle() -> str:
     """
 
 
-@_register("q_ewma_smoothing", _ewma_oracle())
+@gate("q_ewma_smoothing", _ewma_oracle())
 def q_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA smoothing of the hourly per-type value series — the
     monitoring/forecast-baseline primitive (alpha = 1/2), computed
@@ -906,7 +892,7 @@ def q_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Time-weighted average (TWAP) ----------------------------------------
 
 
-@_register(
+@gate(
     "q_time_weighted_avg",
     """
     WITH seq AS (
@@ -995,7 +981,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 CUSUM_K = 12  # alarm when S_t exceeds K * (n * mean) in scaled units
 
 
-@_register(
+@gate(
     "q_cusum_changepoint",
     f"""
     WITH b AS (
@@ -1084,7 +1070,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEASONAL_Z = 3  # flag when (n·v − S)² > Z²·(n·Q − S²)
 
 
-@_register(
+@gate(
     "q_seasonal_anomaly",
     f"""
     WITH b AS (
@@ -1169,7 +1155,7 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Gaps and islands ----------------------------------------------------
 
 
-@_register(
+@gate(
     "q_gaps_islands",
     """
     WITH d AS (

@@ -32,100 +32,63 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from apitap_spark.config.models import SourceConfig
 from apitap_spark.sources.http import (
-    DEFAULT_CONCURRENCY,
+    DEFAULT_SAMPLE_SIZE,
     CursorPagination,
     HttpSource,
     LimitOffsetPagination,
-    PageNumberPagination,
-    PageOnlyPagination,
-    RetryPolicy,
-    TotalHint,
 )
 from apitap_spark.sources.schema import coerce_row, infer_schema_simple
 
 
+# Flat options that pass through unchanged into the pipeline config's
+# pagination block (config/models.py parses and validates both paths).
+_PAGINATION_OPTIONS = (
+    "limit", "limit_param", "offset_param", "per_page", "page_param",
+    "per_page_param", "start_page", "cursor_param", "page_size_param",
+    "page_size", "next_cursor_pointer",
+)
+
+
+def _prefixed(options: dict, prefix: str) -> dict:
+    return {k.removeprefix(prefix): v for k, v in options.items() if k.startswith(prefix)}
+
+
 def _source_from_options(options: dict) -> HttpSource:
-    kind = options.get("pagination_type", "limit_offset")
-    if kind == "limit_offset":
-        pagination = LimitOffsetPagination(
-            limit=int(options.get("limit", 100)),
-            limit_param=options.get("limit_param", "limit"),
-            offset_param=options.get("offset_param", "offset"),
-        )
-    elif kind == "page_number":
-        hint = None
-        if options.get("total_items_pointer"):
-            hint = TotalHint("items", options["total_items_pointer"])
-        elif options.get("total_pages_pointer"):
-            hint = TotalHint("pages", options["total_pages_pointer"])
-        pagination = PageNumberPagination(
-            per_page=int(options.get("per_page", 100)),
-            page_param=options.get("page_param", "page"),
-            per_page_param=options.get("per_page_param", "per_page"),
-            total_hint=hint,
-        )
-    elif kind == "page_only":
-        pagination = PageOnlyPagination(page_param=options.get("page_param", "page"))
-    elif kind == "cursor":
-        pagination = CursorPagination(
-            cursor_param=options.get("cursor_param", "cursor"),
-            page_size_param=options.get("page_size_param"),
-            page_size=int(options["page_size"]) if options.get("page_size") else None,
-            next_cursor_pointer=options.get("next_cursor_pointer", "/next_cursor"),
-        )
-    else:
-        raise ValueError(f"unknown pagination_type {kind!r}")
-    headers = json.loads(options["headers"]) if options.get("headers") else {}
-    params = json.loads(options["params"]) if options.get("params") else {}
-    auth = None
+    """The HttpSource of flat ``format("apitap_http")`` options: they map
+    onto a pipeline source entry (``oauth_<key>`` onto its ``auth:``
+    block, ``retry_<key>`` onto ``retry:``) and build through
+    ``SourceConfig``, so both paths parse and validate alike.
+
+    ``oauth_client_secret_env`` resolves in the calling process: readers
+    call this ONCE in their driver-side constructor and let the built
+    HttpSource pickle into executor tasks (auth.__getstate__ drops only
+    the token/lock, never the secret), so a cluster where the env var
+    exists solely on the driver still reads every partition."""
+    pagination = {k: options[k] for k in _PAGINATION_OPTIONS if k in options}
+    pagination["type"] = options.get("pagination_type", "limit_offset")
+    if options.get("total_items_pointer"):
+        pagination["total_hint"] = {"items_pointer": options["total_items_pointer"]}
+    elif options.get("total_pages_pointer"):
+        pagination["total_hint"] = {"pages_pointer": options["total_pages_pointer"]}
+    entry = {
+        "name": options.get("name", "http_source"),
+        "pagination": pagination,
+        "headers": json.loads(options.get("headers") or "{}"),
+        "params": json.loads(options.get("params") or "{}"),
+        "retry": _prefixed(options, "retry_"),
+        **{
+            k: options[k]
+            for k in ("url", "data_path", "max_concurrency", "min_request_interval_sec")
+            if k in options
+        },
+    }
     if options.get("oauth_token_url"):
-        # OAuth2 client-credentials via flat data-source options —
-        # parity with the pipeline config's auth: block. Secret comes
-        # from oauth_client_secret_env when given (preferred: option
-        # strings surface in plans/logs). The env var resolves in the
-        # process that calls this — readers therefore call it ONCE in
-        # their driver-side constructor and let the built HttpSource
-        # pickle into executor tasks (auth.__getstate__ drops only the
-        # token/lock, never the secret), so a cluster where the env var
-        # exists solely on the driver still reads every partition.
-        import os as _os
-
-        from apitap_spark.sources.http import OAuth2ClientCredentials
-
-        secret = options.get("oauth_client_secret", "")
-        env = options.get("oauth_client_secret_env")
-        if not secret and env:
-            secret = _os.environ.get(env, "")
-            if not secret:
-                raise ValueError(
-                    f"apitap_http: env {env} (oauth_client_secret_env) "
-                    "not set"
-                )
-        auth = OAuth2ClientCredentials(
-            token_url=options["oauth_token_url"],
-            client_id=options.get("oauth_client_id", ""),
-            client_secret=secret,
-            scope=options.get("oauth_scope"),
-            audience=options.get("oauth_audience"),
-        )
-    return HttpSource(
-        name=options.get("name", "http_source"),
-        url=options["url"],
-        pagination=pagination,
-        data_path=options.get("data_path"),
-        headers=headers,
-        extra_params=params,
-        retry=RetryPolicy(
-            max_attempts=int(options.get("retry_max_attempts", 3)),
-            min_delay_sec=float(options.get("retry_min_delay_sec", 1.0)),
-            max_delay_sec=float(options.get("retry_max_delay_sec", 5.0)),
-        ),
-        sample_size=int(options.get("sample_size", 100)),
-        max_concurrency=int(options.get("max_concurrency", DEFAULT_CONCURRENCY)),
-        min_request_interval_sec=float(options.get("min_request_interval_sec", 0.0)),
-        auth=auth,
-    )
+        entry["auth"] = _prefixed(options, "oauth_")
+    src = SourceConfig.from_dict(entry).to_http_source()
+    src.sample_size = int(options.get("sample_size", DEFAULT_SAMPLE_SIZE))
+    return src
 
 
 class PagePartition(InputPartition):

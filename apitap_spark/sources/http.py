@@ -640,16 +640,7 @@ class HttpSource:
         self._accs = None
         pg = self.pagination
         if isinstance(pg, CursorPagination):
-            rows = self._cursor_rows()
-            if not rows:
-                return spark.createDataFrame([], "struct<>")
-            schema = self.infer_schema(spark, rows)
-            return spark.createDataFrame(
-                spark.sparkContext.parallelize([json.dumps(r) for r in rows]),
-                "string",
-            ).select(
-                F.from_json(F.col("value"), schema).alias("j")
-            ).select("j.*")
+            return json_rows_frame(spark, self._cursor_rows(), self.sample_size)
 
         first, n_pages = self.plan_pages()
         if not first:
@@ -716,3 +707,22 @@ class HttpSource:
         df = self.load(spark)
         df.createOrReplaceTempView(view_name or self.name)
         return df
+
+
+def json_rows_frame(
+    spark: SparkSession, rows: list, sample_size: int = DEFAULT_SAMPLE_SIZE
+) -> DataFrame:
+    """Driver-held JSON rows as a DataFrame: the schema is inferred from
+    the first ``sample_size`` rows and every row parses under it
+    (PERMISSIVE ``from_json``). No rows make an empty frame."""
+    if not rows:
+        return spark.createDataFrame([], "struct<>")
+    schema = HttpSource(name="_json", url="-", sample_size=sample_size).infer_schema(
+        spark, rows
+    )
+    lines = spark.sparkContext.parallelize([json.dumps(r) for r in rows])
+    return (
+        spark.createDataFrame(lines, "string")
+        .select(F.from_json(F.col("value"), schema).alias("j"))
+        .select("j.*")
+    )

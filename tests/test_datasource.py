@@ -348,3 +348,44 @@ def test_process_token_cache_spans_rebuilt_auth_objects():
     finally:
         api.stop()
         http_mod._TOKEN_CACHE.clear()
+
+
+def test_start_page_option_sets_first_request():
+    """``start_page`` reaches the pagination: a 0-based API gets its
+    first request for page 0, as the YAML path's ``start_page: 0``."""
+    from apitap_spark.sources.datasource import _source_from_options
+
+    api = MockApi(ROWS)
+    base = api.start()
+    try:
+        src = _source_from_options(
+            {
+                "url": f"{base}/page_number",
+                "pagination_type": "page_number",
+                "per_page": "10",
+                "start_page": "0",
+                "total_items_pointer": "/meta/total",
+                "data_path": "/data",
+            }
+        )
+        src.plan_pages()
+        assert api.served[0][1]["page"] == "0"
+    finally:
+        api.stop()
+
+
+def test_oauth_options_validate_like_the_yaml_auth_block():
+    """An empty ``oauth_client_id`` is refused, as in a pipeline's
+    ``auth:`` block, and ``oauth_refresh_slack_sec`` reaches the auth."""
+    from apitap_spark.sources.datasource import _source_from_options
+
+    opts = {
+        "url": "http://x/items",
+        "oauth_token_url": "http://x/token",
+        "oauth_client_id": "cid",
+        "oauth_client_secret": "s",
+        "oauth_refresh_slack_sec": "5",
+    }
+    assert _source_from_options(opts).auth.refresh_slack_sec == 5.0
+    with pytest.raises(ValueError, match="client_id"):
+        _source_from_options({**opts, "oauth_client_id": ""})

@@ -127,9 +127,10 @@ def test_embedding_gates_tolerate_dirty_rows(spark, dirty_sf):
     non-NULL score."""
     from apitap_spark.operators import similarity as sim
     from apitap_spark.operators.ml import op_embedding_top_pc
+    from apitap_spark.registry import QUERIES
 
     def run(name):
-        return sim.QUERIES[name](spark, dirty_sf).collect()
+        return QUERIES[name](spark, dirty_sf).collect()
 
     for name in (
         "op_dedup_embedding_cosine",

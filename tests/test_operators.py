@@ -745,7 +745,8 @@ def test_bpe_corpus_pins_released_after_last_consumer(spark, sf_dir):
     family's last consumer gate runs (suite order), the entries are
     released and the next release_persisted sweep frees their RDD
     blocks. Vocab-sized entries (final_vocab, sym_ids) stay pinned."""
-    from apitap_spark.operators import bpe
+    import apitap_spark.operators.bpe  # noqa: F401  (registers the gates)
+    from apitap_spark.registry import QUERIES
     from apitap_spark.session import (
         _MEMO,
         _persistent_rdd_ids,
@@ -769,7 +770,7 @@ def test_bpe_corpus_pins_released_after_last_consumer(spark, sf_dir):
         "op_wordpiece_encode",
     ]
     for name in order:
-        bpe.QUERIES[name](spark, sf_dir).count()
+        QUERIES[name](spark, sf_dir).count()
         for entry in ("bpe_seqs", "bpe_packed"):
             corpus_ids |= _MEMO.get((ctx, entry, sf_dir), (None, set()))[1]
         spark.catalog.clearCache()

@@ -201,7 +201,8 @@ def test_whole_stage_codegen_present(spark, sf_dir, qname):
     import contextlib
     import io
 
-    from apitap_spark.plans.relational import QUERIES
+    import apitap_spark.plans.relational  # noqa: F401  (registers the gates)
+    from apitap_spark.registry import QUERIES
 
     spark.conf.set("spark.sql.adaptive.enabled", "false")  # AQE defers codegen
     try:

@@ -4,45 +4,47 @@ Round-5 root cause: ``q_event_funnel`` was registered by BOTH
 ``plans/relational2.py`` and ``plans/timeseries.py``; the dict-merge in
 ``plans/__init__.py`` let the later module silently shadow the earlier
 one, so a committed, oracled gate stopped being the one the driver (and
-bench) actually ran — the 9.2x "drift" on that gate between the round-3
-and round-4 freezes was an identity change, not a perf regression.
-These tests make any future name collision a hard failure.
+bench) actually ran. Every gate now registers through
+``apitap_spark.registry.gate``, which refuses a taken name at import.
 """
 
 from __future__ import annotations
 
-from collections import Counter
+import pytest
 
 
-def _per_module_names() -> list[str]:
-    import apitap_spark.operators as ops_pkg
-    import apitap_spark.plans as plans_pkg
+def test_gate_refuses_a_taken_name():
+    """A second registration of a name raises and leaves the first
+    registration (function and oracle) in place."""
+    import apitap_spark.plans  # noqa: F401  (registers the gates)
+    from apitap_spark.registry import ORACLES, QUERIES, gate
 
-    names: list[str] = []
-    for pkg in (plans_pkg, ops_pkg):
-        for attr in dir(pkg):
-            mod = getattr(pkg, attr)
-            if attr.startswith("_") or attr in ("QUERIES", "ORACLES"):
-                continue
-            q = getattr(mod, "QUERIES", None)
-            if isinstance(q, dict):
-                names.extend(q)
-    return names
+    first, oracle = QUERIES["q1_pricing_summary"], ORACLES["q1_pricing_summary"]
 
+    def shadow(spark, sf_dir):
+        raise AssertionError("never registered")
 
-def test_no_duplicate_gate_registrations():
-    dups = {n: c for n, c in Counter(_per_module_names()).items() if c > 1}
-    assert not dups, f"gate names registered by more than one module: {dups}"
+    with pytest.raises(ValueError, match="'q1_pricing_summary' is already registered"):
+        gate("q1_pricing_summary", "SELECT 1")(shadow)
+    assert QUERIES["q1_pricing_summary"] is first
+    assert ORACLES["q1_pricing_summary"] == oracle
 
 
-def test_merged_registry_loses_nothing():
-    """The merged QUERIES dicts must contain every per-module gate —
-    i.e. the dict merge shadowed nothing."""
-    from apitap_spark.operators import QUERIES as OPS
-    from apitap_spark.plans import QUERIES as REL
+def test_entry_serves_every_registered_gate():
+    """``queries()`` and ``oracle_sql()`` carry exactly the registry's
+    gates: no gate module can silently drop out of them."""
+    import os
+    import sys
 
-    merged = set(REL) | set(OPS)
-    assert merged == set(_per_module_names())
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if repo not in sys.path:
+        sys.path.insert(0, repo)
+    import __spark_entry__ as entry
+
+    from apitap_spark import registry
+
+    assert set(entry.queries()) == set(registry.QUERIES)
+    assert set(entry.oracle_sql()) == set(registry.ORACLES)
 
 
 def test_every_oracle_has_a_query():
@@ -117,24 +119,3 @@ def test_rotation_fronts_oldest_untested_gates(monkeypatch):
     # oracle ordering mirrors queries ordering (driver zips the dicts)
     assert list(oracles) == [n for n in names if n in oracles]
 
-
-def test_no_same_module_shadowing_in_source():
-    """A duplicate ``@_register("name")`` WITHIN one module overwrites
-    the module dict before any cross-module check can see it (round-7
-    near-miss: a second op_ann_recall_audit silently replaced the
-    round-4 original, caught only by the old gate's pytest). Scan the
-    source: every registered name must appear exactly once across all
-    operator/plan modules."""
-    import pathlib
-    import re
-
-    root = pathlib.Path(__file__).resolve().parent.parent / "apitap_spark"
-    names: list[str] = []
-    for py in list((root / "operators").glob("*.py")) + list(
-        (root / "plans").glob("*.py")
-    ):
-        names.extend(
-            re.findall(r"@_register\(\s*[\"']([^\"']+)[\"']", py.read_text())
-        )
-    dups = {n: c for n, c in Counter(names).items() if c > 1}
-    assert not dups, f"names registered twice in source: {dups}"

@@ -78,7 +78,7 @@ def test_chi2_single_language_shard_is_empty_not_crash(spark, tmp_path):
     import duckdb
 
     from apitap_spark.operators.corpus import op_chi2_token_selection
-    from apitap_spark.operators import ORACLES
+    from apitap_spark.registry import ORACLES
 
     docs = spark.createDataFrame(
         [(i, "en", "alpha beta gamma common words " * 3, "s", 30)

@@ -187,9 +187,9 @@ def test_ann_recall_audit_exact_side_matches_numpy(spark, sf_dir):
 
     from apitap_spark.operators.similarity import (
         IVFPQ_TOPK,
-        QUERIES,
         op_ann_ivfpq_recall_audit,
     )
+    from apitap_spark.registry import QUERIES
 
     emb = read_table(spark, sf_dir, "embeddings").collect()
     ids = [r["vec_id"] for r in emb]
