@@ -22,8 +22,6 @@ advertised surface (reference ``README.md:98-101``).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 

@@ -7,10 +7,10 @@ exact aggregates, explicit casts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from apitap_spark.plans.relational import DEC, _dec, _t
+from apitap_spark.plans.relational import _t
 from apitap_spark.registry import gate
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from apitap_spark.plans.relational import DEC, SQL_REV, _dec, _dsum, _revenue, _t
+from apitap_spark.plans.relational import DEC, SQL_REV, _dec, _revenue, _t
 from apitap_spark.registry import gate
 
 

@@ -1,8 +1,6 @@
 """Warehouse sinks: schema-creating, version-aware merge/upsert writer."""
 
 from apitap_spark.sinks.jdbc_merge import (
-    BigQueryDialect,
-    ClickHouseDialect,
     Dialect,
     DuckDbDialect,
     JdbcMergeWriter,
@@ -20,8 +18,6 @@ __all__ = [
     "Dialect",
     "PostgresDialect",
     "DuckDbDialect",
-    "ClickHouseDialect",
-    "BigQueryDialect",
     "pg_type_for",
     "ddl_for_schema",
     "quote_ident",

@@ -7,13 +7,14 @@ Spark-native re-expression of the reference's Postgres writer
   DataFrame's *Catalyst schema* (strictly better than the reference's
   10-row output sample, ``src/writer/postgres.rs:213-239``: no sampling
   error possible), complex types land as JSONB.
-* S14 batched multi-row INSERT (append mode), default batch 5000
-  (``src/writer/postgres.rs:163``), chunked to respect the 65535
-  bind-parameter limit (SURVEY §7.4 hazard).
-* S15 ``MERGE INTO … USING (VALUES …)`` upsert for PG ≥ 15
+* S14 batched append: Arrow batches of ``STAGE_BATCH_ROWS`` rows bulk-load
+  the target (Postgres ``COPY``; DuckDB ``INSERT … SELECT`` from the
+  registered batch) instead of the reference's bind-limited multi-row
+  INSERT (``src/writer/postgres.rs:163``, SURVEY §7.4 hazard).
+* S15 ``MERGE INTO … USING <stage>`` upsert for PG ≥ 15
   (``src/writer/postgres.rs:538-707``).
-* S16 ``INSERT … ON CONFLICT (pk) DO UPDATE`` for PG ≥ 9.5
-  (``src/writer/postgres.rs:398-512``).
+* S16 ``INSERT … SELECT … ON CONFLICT (pk) DO UPDATE`` for PG ≥ 9.5 and
+  DuckDB (``src/writer/postgres.rs:398-512``).
 * S17 server-version dispatch, probed once and cached
   (``src/writer/postgres.rs:96-156``).
 * S18 pre-run TRUNCATE hook tolerant of a missing table
@@ -30,14 +31,14 @@ Spark-native re-expression of the reference's Postgres writer
 Scale design: every partition is one executor task that opens one
 connection, writes its rows inside a single transaction, commits, and
 returns its input row count; the driver sums those into
-``rows_written``, so the write is the only Spark job of a load. Where
-the dialect has COPY, the partition body is ``mapInArrow``: pyarrow
-writes the batches as CSV straight into the COPY stage (MERGE/upsert)
-or the target (append). Elsewhere (DuckDB, drivers without COPY) it is
-a row partition feeding the statements of
-:meth:`JdbcMergeWriter.write_rows`. Idempotence at retry: MERGE/upsert
-by PK makes task retries safe (append mode is documented at-least-once,
-same as the reference).
+``rows_written``, so the write is the only Spark job of a load. The
+partition body is ``mapInArrow`` for every dialect: each chunk of Arrow
+batches is deduplicated by PK (merge mode), rendered once
+(:func:`_render`), loaded by the dialect's :meth:`Dialect.load` (COPY
+CSV into a temp stage or the target on Postgres, a registered Arrow
+table on DuckDB) and applied by one server-side statement.
+Idempotence at retry: MERGE/upsert by PK makes task retries safe
+(append mode is documented at-least-once, same as the reference).
 """
 
 from __future__ import annotations
@@ -47,7 +48,6 @@ import datetime as _dt
 import io
 import itertools
 import json
-import math
 import re
 import time
 from collections.abc import Callable, Iterable, Iterator
@@ -58,10 +58,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MAX_BIND_PARAMS = 65535  # Postgres wire-protocol limit (SURVEY §7.4)
-DEFAULT_BATCH_SIZE = 5000  # reference src/writer/postgres.rs:163
-STAGE_BATCH_ROWS = 50_000  # COPY-staged upserts: no bind limit applies, and
-# each stage cycle pays a MERGE + TRUNCATE — amortize over bigger batches
+STAGE_BATCH_ROWS = 50_000  # rows per load: each load pays an apply (and on
+# Postgres a TRUNCATE of the stage) — amortize over bigger batches
 
 
 class WriteMode(str, Enum):
@@ -116,20 +114,13 @@ def ddl_for_schema(
 ) -> str:
     """CREATE TABLE IF NOT EXISTS … (reference src/writer/postgres.rs:255-308).
 
-    With a ``dialect``, column types, PK inlining, and the engine suffix
-    (ReplacingMergeTree / CLUSTER BY) come from its hooks."""
+    With a ``dialect``, column types come from its :meth:`Dialect.type_for`."""
     pks = [primary_key] if isinstance(primary_key, str) else list(primary_key or [])
     type_of = dialect.type_for if dialect else (lambda dt: pg_type_for(dt, json_type))
     cols = [f"{quote_ident(f.name)} {type_of(f.dataType)}" for f in schema.fields]
-    if pks and (dialect is None or dialect.supports_inline_pk()):
+    if pks:
         cols.append("PRIMARY KEY (" + ", ".join(quote_ident(p) for p in pks) + ")")
-    suffix = dialect.ddl_options(pks) if dialect else ""
-    return (
-        f"CREATE TABLE IF NOT EXISTS {quote_ident_path(table)} ("
-        + ", ".join(cols)
-        + ")"
-        + suffix
-    )
+    return f"CREATE TABLE IF NOT EXISTS {quote_ident_path(table)} (" + ", ".join(cols) + ")"
 
 
 @dataclass
@@ -140,6 +131,12 @@ class Dialect:
     paramstyle: str = "qmark"  # "qmark" (?) or "format" (%s)
     json_type: str = "JSON"
     single_writer: bool = False  # engine allows only one writing connection
+    # True: load() fills a table, so an upsert stages each batch in a
+    # per-transaction temp table (created once, truncated after every
+    # apply) and an append loads the target itself. False: load() exposes
+    # the batch under the stage name, and appends apply it with
+    # INSERT … SELECT as well.
+    temp_stage = False
 
     def placeholder(self, _i: int) -> str:
         return "?" if self.paramstyle == "qmark" else "%s"
@@ -154,51 +151,24 @@ class Dialect:
     def supports_on_conflict(self, version: tuple[int, int]) -> bool:
         return True
 
-    # -- JSON-ish column rendering ----------------------------------------
-    def json_cast(self, expr: str) -> str:
-        return expr
+    def check_driver(self, conn) -> None:
+        """Raise when ``conn``'s driver cannot run :meth:`load`."""
 
-    # -- bulk append fast path --------------------------------------------
-    def bulk_append(self, conn, table: str, columns: list[str], rows: list) -> bool:
-        """Engine-native bulk load of bound rows for APPEND mode (DuckDB:
-        DataFrame registration; COPY-capable engines load through
-        :meth:`copy_csv` instead). Returns False when unsupported →
-        caller falls back to multi-row INSERT."""
-        return False
-
-    def copy_csv(self, conn, table: str, columns: list[str], data) -> bool:
-        """Bulk-load CSV (unquoted empty field = NULL, quoted "" = empty
-        string) from the file-like ``data``. Returns False when the engine
-        or driver has no COPY."""
-        return False
+    # -- bulk load ----------------------------------------------------------
+    def load(self, cur, table: str, tbl) -> None:
+        """Load the rendered Arrow table ``tbl`` (:func:`_render`) into
+        ``table`` (the target or the stage) on the cursor that then runs
+        the apply statement."""
+        raise NotImplementedError(f"{self.name}: no bulk load")
 
     # -- DDL hooks ---------------------------------------------------------
     def type_for(self, dt: T.DataType) -> str:
         return pg_type_for(dt, self.json_type)
 
-    def ddl_options(self, pks: list[str]) -> str:
-        """Engine-specific CREATE TABLE suffix (storage engine, clustering)."""
-        return ""
-
-    def supports_inline_pk(self) -> bool:
-        return True
-
-    def merge_as_insert(self) -> bool:
-        """True when upserts are modeled as plain INSERTs the engine
-        deduplicates itself (ClickHouse ReplacingMergeTree)."""
-        return False
-
-    def supports_copy_stage(self, conn) -> bool:
-        """True when MERGE/upsert batches can be staged via the engine's
-        bulk-load path into a temp table and applied with ONE
-        server-side statement (Postgres: COPY + MERGE ... USING stage).
-        Brings the COPY append throughput to the upsert path — the
-        write mode the reference runner hard-codes
-        (reference src/cmd/mod.rs:157)."""
-        return False
-
 
 class PostgresDialect(Dialect):
+    temp_stage = True
+
     def __init__(self):
         super().__init__(name="postgres", paramstyle="format", json_type="JSONB")
 
@@ -218,114 +188,52 @@ class PostgresDialect(Dialect):
     def supports_on_conflict(self, version: tuple[int, int]) -> bool:
         return version >= (9, 5)
 
-    def json_cast(self, expr: str) -> str:
-        return f"{expr}::jsonb"
+    def check_driver(self, conn) -> None:
+        """Every batch loads through COPY, so the driver's cursor must have
+        ``copy_expert`` (psycopg2 and :mod:`apitap_spark.sinks.pgwire` do;
+        psycopg 3's cursor does not)."""
+        if not hasattr(conn.cursor(), "copy_expert"):
+            driver = f"{type(conn).__module__}.{type(conn).__qualname__}"
+            raise TypeError(
+                f"postgres sink: {driver} has no cursor().copy_expert; "
+                "connect with psycopg2 or apitap_spark.sinks.pgwire"
+            )
 
-    def copy_csv(self, conn, table: str, columns: list[str], data) -> bool:
-        """COPY FROM STDIN (CSV) when the driver exposes copy_expert —
-        the 10-100x load path the reference lists as future work
-        (reference README.md:127, docs/OPTIMIZATION_REPORT.md:178-185)."""
-        copy_expert =getattr(getattr(conn, "cursor", lambda: None)(), "copy_expert", None)
-        if copy_expert is None:
-            return False
-        collist = ", ".join(quote_ident(c) for c in columns)
-        copy_expert(
+    def load(self, cur, table: str, tbl) -> None:
+        """COPY FROM STDIN as CSV — the 10-100x load path the reference
+        lists as future work (reference README.md:127,
+        docs/OPTIMIZATION_REPORT.md:178-185). pyarrow quotes every string,
+        so '' stays distinct from the unquoted empty NULL; binary columns
+        go as the bytea hex form."""
+        import pyarrow as pa
+        from pyarrow import csv as pacsv
+
+        cols = [
+            pa.array(
+                [None if v is None else "\\x" + v.hex() for v in col.to_pylist()],
+                pa.string(),
+            )
+            if pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type)
+            else col
+            for col in tbl.columns
+        ]
+        buf = io.BytesIO()
+        pacsv.write_csv(
+            pa.Table.from_arrays(cols, names=tbl.column_names),
+            buf,
+            pacsv.WriteOptions(include_header=False),
+        )
+        buf.seek(0)
+        collist = ", ".join(quote_ident(c) for c in tbl.column_names)
+        cur.copy_expert(
             f"COPY {quote_ident_path(table)} ({collist}) FROM STDIN "
             f"WITH (FORMAT csv, NULL '')",
-            data,
+            buf,
         )
-        return True
-
-    def supports_copy_stage(self, conn) -> bool:
-        cur = getattr(conn, "cursor", lambda: None)()
-        return getattr(cur, "copy_expert", None) is not None
-
-
-class BigQueryDialect(Dialect):
-    """BigQuery (generation-level: no live engine in this container; the
-    reference lists BigQuery as a planned connector, README.md:346).
-
-    Standard-SQL MERGE is always available; BigQuery has no enforced
-    primary keys, so DDL omits the PK clause and clusters by the merge
-    keys instead."""
-
-    def __init__(self):
-        super().__init__(name="bigquery", paramstyle="qmark", json_type="JSON")
-
-    def server_version(self, conn) -> tuple[int, int]:
-        return (999, 0)
-
-    def supports_merge(self, version: tuple[int, int]) -> bool:
-        return True
-
-    def supports_inline_pk(self) -> bool:
-        return False
-
-    def ddl_options(self, pks: list[str]) -> str:
-        if not pks:
-            return ""
-        return " CLUSTER BY " + ", ".join(quote_ident(p) for p in pks)
-
-    def type_for(self, dt: T.DataType) -> str:
-        if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-            return "INT64"
-        if isinstance(dt, (T.FloatType, T.DoubleType)):
-            return "FLOAT64"
-        if isinstance(dt, T.BooleanType):
-            return "BOOL"
-        if isinstance(dt, T.StringType):
-            return "STRING"
-        if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-            return "TIMESTAMP"
-        if isinstance(dt, T.DateType):
-            return "DATE"
-        if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
-            return "JSON"
-        return "STRING"
-
-
-class ClickHouseDialect(Dialect):
-    """ClickHouse (generation-level; planned connector in the reference,
-    README.md:345). No MERGE / ON CONFLICT: upserts are modeled the
-    ClickHouse way — plain INSERTs into a ReplacingMergeTree ordered by
-    the key, which deduplicates at background merge time (last insert
-    wins). The writer therefore routes merge mode to INSERT for this
-    dialect."""
-
-    def __init__(self):
-        super().__init__(name="clickhouse", paramstyle="qmark", json_type="String")
-
-    def server_version(self, conn) -> tuple[int, int]:
-        return (0, 0)  # neither MERGE nor ON CONFLICT
-
-    def merge_as_insert(self) -> bool:
-        return True
-
-    def supports_inline_pk(self) -> bool:
-        return False
-
-    def ddl_options(self, pks: list[str]) -> str:
-        order = ", ".join(quote_ident(p) for p in pks) if pks else "tuple()"
-        return f" ENGINE = ReplacingMergeTree ORDER BY ({order})"
-
-    def type_for(self, dt: T.DataType) -> str:
-        if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-            return "Int64"
-        if isinstance(dt, (T.FloatType, T.DoubleType)):
-            return "Float64"
-        if isinstance(dt, T.BooleanType):
-            return "Bool"
-        if isinstance(dt, T.StringType):
-            return "String"
-        if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-            return "DateTime64(6)"
-        if isinstance(dt, T.DateType):
-            return "Date32"
-        return "String"
 
 
 class DuckDbDialect(Dialect):
-    """Test stand-in: DuckDB speaks ON CONFLICT and qmark params."""
+    """DuckDB: ON CONFLICT upserts, qmark params, one writing connection."""
 
     def __init__(self):
         super().__init__(
@@ -335,44 +243,20 @@ class DuckDbDialect(Dialect):
     def server_version(self, conn) -> tuple[int, int]:
         return (9, 5)  # pretend: upsert-capable, no MERGE
 
-    def bulk_append(self, conn, table: str, columns: list[str], rows: list) -> bool:
-        """Register the batch as a DataFrame and INSERT ... SELECT — the
-        DuckDB analog of COPY (~10x the multi-row-INSERT path)."""
-        import pandas as pd
-
-        batch = pd.DataFrame(rows, columns=columns)  # noqa: F841 — read by name below
-        collist = ", ".join(quote_ident(c) for c in columns)
-        conn.register("_apitap_batch", batch)
-        conn.execute(
-            f"INSERT INTO {quote_ident_path(table)} ({collist}) "
-            f"SELECT {collist} FROM _apitap_batch"
-        )
-        conn.unregister("_apitap_batch")
-        return True
+    def load(self, cur, table: str, tbl) -> None:
+        """Register the batch under ``table``, replacing the previous one:
+        the apply statement reads it in place (DuckDB refuses ``ON COMMIT
+        DROP``). A registration is visible to its own cursor only: DuckDB's
+        ``cursor()`` opens a second connection."""
+        cur.register(table, tbl)
 
 
 # ---------------------------------------------------------------------------
 # SQL generation (pure, unit-testable — no connection required)
 # ---------------------------------------------------------------------------
-def insert_sql(dialect: Dialect, table: str, columns: list[str], n_rows: int) -> str:
-    """Multi-row parameterized INSERT (reference src/writer/postgres.rs:709-772)."""
-    collist = ", ".join(quote_ident(c) for c in columns)
-    one = "(" + ", ".join(dialect.placeholder(i) for i in range(len(columns))) + ")"
-    values = ", ".join([one] * n_rows)
-    return f"INSERT INTO {quote_ident_path(table)} ({collist}) VALUES {values}"
-
-
-def upsert_sql(
-    dialect: Dialect, table: str, columns: list[str], pks: list[str], n_rows: int
-) -> str:
-    """INSERT … ON CONFLICT (pk) DO UPDATE (reference src/writer/postgres.rs:398-512)."""
-    base = insert_sql(dialect, table, columns, n_rows)
-    return f"{base} {_on_conflict_tail(columns, pks)}"
-
-
 def _on_conflict_tail(columns: list[str], pks: list[str]) -> str:
     """``ON CONFLICT (pk) DO UPDATE SET …`` (``DO NOTHING`` when every
-    column is a key) — shared by the VALUES and stage upserts."""
+    column is a key)."""
     conflict = ", ".join(quote_ident(p) for p in pks)
     updates = ", ".join(
         f"{quote_ident(c)} = EXCLUDED.{quote_ident(c)}" for c in columns if c not in pks
@@ -382,43 +266,8 @@ def _on_conflict_tail(columns: list[str], pks: list[str]) -> str:
     return f"ON CONFLICT ({conflict}) DO UPDATE SET {updates}"
 
 
-def merge_sql(
-    dialect: Dialect,
-    table: str,
-    columns: list[str],
-    pks: list[str],
-    n_rows: int,
-    cast_types: dict[str, str] | None = None,
-) -> str:
-    """MERGE INTO … USING (VALUES …) for PG ≥ 15
-    (reference src/writer/postgres.rs:538-707).
-
-    ``cast_types``: per-column SQL type to CAST the VALUES placeholder
-    to. Unlike plain INSERT (where the target column gives parameters
-    their type), a MERGE source subquery has NO column context — an
-    untyped JSON-string parameter resolves to text and fails against a
-    jsonb column ("expression is of type text"), found live on PG 15.
-    """
-    t = quote_ident_path(table)
-    collist = ", ".join(quote_ident(c) for c in columns)
-    casts = cast_types or {}
-
-    def ph(i: int) -> str:
-        p = dialect.placeholder(i)
-        ct = casts.get(columns[i % len(columns)])
-        return f"CAST({p} AS {ct})" if ct else p
-
-    one = "(" + ", ".join(ph(i) for i in range(len(columns))) + ")"
-    values = ", ".join([one] * n_rows)
-    return (
-        f"MERGE INTO {t} AS t USING (VALUES {values}) AS s ({collist}) "
-        f"{_merge_tail(columns, pks)}"
-    )
-
-
 def _merge_tail(columns: list[str], pks: list[str]) -> str:
-    """``ON … WHEN MATCHED … WHEN NOT MATCHED …`` against source alias
-    ``s`` — shared by the VALUES and stage MERGEs."""
+    """``ON … WHEN MATCHED … WHEN NOT MATCHED …`` against source alias ``s``."""
     on = " AND ".join(f"t.{quote_ident(p)} = s.{quote_ident(p)}" for p in pks)
     updates = ", ".join(
         f"{quote_ident(c)} = s.{quote_ident(c)}" for c in columns if c not in pks
@@ -444,8 +293,9 @@ def stage_ddl(
 ) -> str:
     """Typed temp stage mirroring the batch columns. ON COMMIT DROP ties
     its lifetime to the per-partition transaction (S22); typed columns
-    mean the downstream MERGE needs no per-placeholder CASTs (the
-    VALUES-source jsonb pitfall found live in round 6)."""
+    mean the downstream MERGE needs no per-column CASTs (an untyped
+    JSON-string source column resolves to text and fails against jsonb,
+    found live on PG 15 in round 6)."""
     cols = ", ".join(
         f"{quote_ident(f.name)} {dialect.type_for(f.dataType)}"
         for f in schema.fields
@@ -456,11 +306,21 @@ def stage_ddl(
     )
 
 
+def insert_from_stage_sql(table: str, stage: str, columns: list[str]) -> str:
+    """INSERT ... SELECT FROM stage — the append apply where the load
+    cannot fill the target itself (DuckDB)."""
+    collist = ", ".join(quote_ident(c) for c in columns)
+    return (
+        f"INSERT INTO {quote_ident_path(table)} ({collist}) "
+        f"SELECT {collist} FROM {quote_ident(stage)}"
+    )
+
+
 def merge_from_stage_sql(
     table: str, stage: str, columns: list[str], pks: list[str]
 ) -> str:
     """MERGE INTO target USING stage — one server-side statement per
-    COPY-staged batch (PG >= 15)."""
+    staged batch (PG >= 15)."""
     return (
         f"MERGE INTO {quote_ident_path(table)} AS t USING {quote_ident(stage)} "
         f"AS s {_merge_tail(columns, pks)}"
@@ -471,19 +331,8 @@ def upsert_from_stage_sql(
     table: str, stage: str, columns: list[str], pks: list[str]
 ) -> str:
     """INSERT ... SELECT FROM stage ON CONFLICT — the staged upsert for
-    PG 9.5-14, same shape the MERGE rung uses on 15+."""
-    collist = ", ".join(quote_ident(c) for c in columns)
-    return (
-        f"INSERT INTO {quote_ident_path(table)} ({collist}) "
-        f"SELECT {collist} FROM {quote_ident(stage)} "
-        f"{_on_conflict_tail(columns, pks)}"
-    )
-
-
-def rows_per_statement(n_cols: int, batch_size: int) -> int:
-    """Bind-parameter-limit-aware chunk size (SURVEY §7.4: 5000×N cols can
-    exceed 65535 binds)."""
-    return max(1, min(batch_size, MAX_BIND_PARAMS // max(1, n_cols)))
+    PG 9.5-14 and DuckDB, same shape the MERGE rung uses on 15+."""
+    return f"{insert_from_stage_sql(table, stage, columns)} {_on_conflict_tail(columns, pks)}"
 
 
 def _json_default(o):
@@ -496,23 +345,9 @@ def _json_default(o):
 
 _JSON = json.JSONEncoder(default=_json_default)  # json.dumps, minus a per-call encoder
 
-
-def _bind_value(v, dt: T.DataType, dialect: Dialect):
-    """Render one Python value for binding; complex types serialize to JSON
-    (reference sink JSONB semantics, src/writer/postgres.rs:48-50)."""
-    if v is None:
-        return None
-    if isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
-        if hasattr(v, "asDict"):
-            v = v.asDict(recursive=True)
-        return _JSON.encode(v)
-    if isinstance(v, float) and (math.isnan(v) or math.isinf(v)):
-        return None
-    return v
-
-
 _COMPLEX_TYPES = (T.ArrayType, T.MapType, T.StructType)
-_COPY_TYPES = (
+# column types _render handles; write() casts any other column to STRING
+_RENDERED_TYPES = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType,
     T.DoubleType, T.DecimalType, T.BooleanType, T.StringType, T.DateType,
     T.TimestampType, T.TimestampNTZType, T.BinaryType, *_COMPLEX_TYPES,
@@ -521,12 +356,12 @@ _COPY_TYPES = (
 
 def _row_fixer(dt: T.DataType, structs_as_lists: bool):
     """A function turning one non-null ``to_pylist()`` value of ``dt`` into
-    the value the row path holds before :func:`_bind_value` dumps it, or
-    None where the two agree. Maps become dicts and session timestamps
-    local wall-clock time (``TimestampType.fromInternal``); structs stay
-    dicts, except below a top-level array or map (``structs_as_lists``),
-    where the row path dumps Rows as JSON arrays because it never calls
-    ``asDict`` there."""
+    the Python value the sink's JSON is made of, or None where they agree.
+    Maps become dicts and session timestamps local wall-clock time
+    (``TimestampType.fromInternal``); structs stay dicts, except below a
+    top-level array or map (``structs_as_lists``), where the sink has
+    always written them as JSON arrays (the collected Row values it once
+    bound, dumped without ``asDict``)."""
     if isinstance(dt, T.TimestampType):
         return lambda v: v.astimezone().replace(tzinfo=None)
     if isinstance(dt, T.ArrayType):
@@ -549,13 +384,12 @@ def _fixed(fix, v):
     return v if v is None or fix is None else fix(v)
 
 
-def _csv_table(tbl, schema: T.StructType):
-    """The Arrow twin of :func:`_bind_value`: the table that COPY reads
-    as pyarrow CSV, which quotes every string, so '' stays distinct from
-    NULL. Floats widen to float64 (what a Row carries) with NaN/±inf as
-    NULL; session timestamps become local wall-clock time; complex
-    columns become the row path's JSON text and binary the bytea hex
-    form."""
+def _render(tbl, schema: T.StructType):
+    """The Arrow table every :meth:`Dialect.load` reads. Floats widen to
+    float64 (what a Row carries) with NaN/±inf as NULL; session timestamps
+    become local wall-clock time; complex columns become JSON text
+    (reference sink JSONB semantics, src/writer/postgres.rs:48-50).
+    Binary stays raw: only the Postgres CSV needs the bytea hex form."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -571,11 +405,6 @@ def _csv_table(tbl, schema: T.StructType):
         elif isinstance(dt, T.TimestampType):
             fix = _row_fixer(dt, False)
             col = pa.array([_fixed(fix, v) for v in col.to_pylist()], pa.timestamp("us"))
-        elif isinstance(dt, T.BinaryType):
-            col = pa.array(
-                [None if v is None else "\\x" + v.hex() for v in col.to_pylist()],
-                pa.string(),
-            )
         elif isinstance(dt, _COMPLEX_TYPES):
             fix = _row_fixer(dt, not isinstance(dt, T.StructType))
             col = pa.array(
@@ -590,9 +419,9 @@ def _csv_table(tbl, schema: T.StructType):
 
 
 def _last_wins(tbl, pks: list[str]):
-    """Keep the last row of each primary key, in input order — the row
-    path's within-statement dedup (Postgres refuses a MERGE that touches
-    one row twice)."""
+    """Keep the last row of each primary key, in input order (Postgres
+    refuses a MERGE that touches one row twice; CDC increments routinely
+    repeat a PK)."""
     import numpy as np
     import pyarrow as pa
 
@@ -625,6 +454,10 @@ def _chunked(batches: Iterable, rows: int) -> Iterator[list]:
         yield chunk
 
 
+def _col(name: str):
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 class JdbcMergeWriter:
     """Merge-capable warehouse writer (driver- or partition-scoped).
 
@@ -641,7 +474,6 @@ class JdbcMergeWriter:
         dialect: Dialect | None = None,
         mode: WriteMode = WriteMode.MERGE,
         primary_key: str | list[str] | None = None,
-        batch_size: int = DEFAULT_BATCH_SIZE,
         truncate_first: bool = False,
     ):
         self.conn_factory = conn_factory
@@ -649,7 +481,6 @@ class JdbcMergeWriter:
         self.dialect = dialect or PostgresDialect()
         self.mode = mode
         self.pks = [primary_key] if isinstance(primary_key, str) else list(primary_key or [])
-        self.batch_size = batch_size
         self.truncate_first = truncate_first
         self.rows_written = 0  # input rows of the last write()
         if self.mode == WriteMode.MERGE and not self.pks:
@@ -658,9 +489,8 @@ class JdbcMergeWriter:
     # -- setup (driver-side, once) ----------------------------------------
     def prepare(self, schema: T.StructType):
         """ensure_table + additive schema evolution + optional truncate
-        (S13/S18), one driver connection. Returns ``(version, route)``:
-        the server version and the COPY route :meth:`write` takes for
-        ``schema`` (see :meth:`_copy_route`), so no partition probes
+        (S13/S18), one driver connection. Returns the route :meth:`write`
+        takes for ``schema`` (see :meth:`_route`), so no partition probes
         the server again.
 
         Evolution policy: columns present in the DataFrame but missing from
@@ -671,6 +501,7 @@ class JdbcMergeWriter:
         reference README.md:125 lists it as future work.)
         """
         with self._transaction() as conn:
+            self.dialect.check_driver(conn)
             cur = conn.cursor()
             cur.execute(
                 ddl_for_schema(
@@ -683,8 +514,7 @@ class JdbcMergeWriter:
                     cur.execute(f"TRUNCATE TABLE {quote_ident_path(self.table)}")
                 except Exception:  # noqa: BLE001 — missing table tolerated (42P01)
                     pass
-            version = self.dialect.server_version(conn)
-            return version, self._copy_route(conn, version, schema)
+            return self._route(conn, schema)
 
     def _evolve_schema(self, cur, schema: T.StructType) -> None:
         """Add DataFrame columns missing from the live table (additive only)."""
@@ -733,38 +563,6 @@ class JdbcMergeWriter:
             return None
         return {r[0].lower() for r in rows}
 
-    # -- statement routing -------------------------------------------------
-    def _statement(
-        self,
-        n_cols: int,
-        columns: list[str],
-        version,
-        n_rows: int,
-        dtypes: list | None = None,
-    ) -> str:
-        if self.mode in (WriteMode.APPEND, WriteMode.OVERWRITE):
-            return insert_sql(self.dialect, self.table, columns, n_rows)
-        if self.dialect.merge_as_insert():
-            # engine dedups by key itself (ClickHouse ReplacingMergeTree)
-            return insert_sql(self.dialect, self.table, columns, n_rows)
-        if self.dialect.supports_merge(version):
-            # complex types bind as JSON strings; the MERGE source VALUES
-            # has no column context, so cast them to the dialect JSON type
-            casts = {
-                c: self.dialect.json_type
-                for c, dt in zip(columns, dtypes or [])
-                if isinstance(dt, (T.ArrayType, T.MapType, T.StructType))
-            }
-            return merge_sql(
-                self.dialect, self.table, columns, self.pks, n_rows,
-                cast_types=casts or None,
-            )
-        if self.dialect.supports_on_conflict(version):
-            return upsert_sql(self.dialect, self.table, columns, self.pks, n_rows)
-        raise RuntimeError(
-            f"{self.dialect.name} {version} supports neither MERGE nor ON CONFLICT"
-        )
-
     @contextlib.contextmanager
     def _transaction(self) -> Iterator:
         """One connection, one transaction (S22): commit when the block
@@ -782,95 +580,56 @@ class JdbcMergeWriter:
         finally:
             conn.close()
 
+    def _route(self, conn, schema: T.StructType) -> tuple[str, str | None]:
+        """Probe the server version once and return ``(table, apply)``:
+        where each batch loads, and the statement applying it from there —
+        None when the load fills the target itself (append on a
+        ``temp_stage`` dialect). Upserts apply with MERGE, else
+        INSERT .. ON CONFLICT."""
+        version = self.dialect.server_version(conn)
+        stage, cols = stage_table_name(self.table), schema.names
+        if self.mode != WriteMode.MERGE:
+            if self.dialect.temp_stage:
+                return self.table, None
+            return stage, insert_from_stage_sql(self.table, stage, cols)
+        if self.dialect.supports_merge(version):
+            return stage, merge_from_stage_sql(self.table, stage, cols, self.pks)
+        if self.dialect.supports_on_conflict(version):
+            return stage, upsert_from_stage_sql(self.table, stage, cols, self.pks)
+        raise RuntimeError(
+            f"{self.dialect.name} {version} supports neither MERGE nor ON CONFLICT"
+        )
+
     def write_rows(self, rows: Iterable, schema: T.StructType) -> int:
         """Write an iterable of Rows on ONE connection in ONE transaction;
         returns the rows written after PK dedup. For driver-side
-        writes/tests: it probes the server version and COPY route itself
-        (:meth:`write`'s row partitions take the driver's). On a COPY
-        route the rows convert to Arrow and take :meth:`_copy_batches`,
-        as :meth:`write_batches` does."""
-        with self._transaction() as conn:
-            version = self.dialect.server_version(conn)
-            route = self._copy_route(conn, version, schema)
-            if route is None:
-                return self._write_rows_on(conn, version, rows, schema)
-            from pyspark.sql.conversion import LocalDataToArrowConversion
-
-            rows = iter(rows)
-            batches = (
-                b
-                for chunk in iter(
-                    lambda: list(itertools.islice(rows, STAGE_BATCH_ROWS)), []
-                )
-                for b in LocalDataToArrowConversion.convert(
-                    chunk, schema, False
-                ).to_batches()
+        writes/tests: it probes the route itself (:meth:`write`'s
+        partitions take the driver's). The rows convert to Arrow and take
+        :meth:`_load_batches`, as :meth:`write_batches` does."""
+        unrendered = [f.name for f in schema.fields if not isinstance(f.dataType, _RENDERED_TYPES)]
+        if unrendered:
+            raise ValueError(
+                f"write_rows cannot render column(s) {unrendered}: cast them "
+                "to STRING first, as write() does"
             )
-            return self._copy_batches(conn, batches, schema, *route)
+        from pyspark.sql.conversion import LocalDataToArrowConversion
 
-    def _write_rows_on(self, conn, version, rows: Iterable, schema: T.StructType) -> int:
-        columns = [f.name for f in schema.fields]
-        dtypes = [f.dataType for f in schema.fields]
-        chunk_rows = rows_per_statement(len(columns), self.batch_size)
-        written = 0
-        cur = conn.cursor()
-        buf: list = []
-
-        use_bulk = self.mode in (WriteMode.APPEND, WriteMode.OVERWRITE)
-
-        merge_dedup = (
-            self.mode == WriteMode.MERGE
-            and self.pks
-            and not self.dialect.merge_as_insert()
+        rows = iter(rows)
+        batches = (
+            b
+            for chunk in iter(lambda: list(itertools.islice(rows, STAGE_BATCH_ROWS)), [])
+            for b in LocalDataToArrowConversion.convert(chunk, schema, False).to_batches()
         )
-        pk_idx = (
-            [columns.index(p) for p in self.pks] if merge_dedup else []
-        )
-
-        def flush():
-            nonlocal written, use_bulk
-            if merge_dedup and len(buf) > 1:
-                # Postgres rejects duplicate keys inside one INSERT..ON
-                # CONFLICT DO UPDATE / MERGE statement ("command cannot
-                # affect row a second time"); CDC increments routinely
-                # repeat a PK. Last-wins within the statement — the same
-                # outcome the rows would produce applied sequentially.
-                last = {tuple(r[i] for i in pk_idx): r for r in buf}
-                if len(last) < len(buf):
-                    buf[:] = list(last.values())
-            if not buf:
-                return
-            rendered = [
-                tuple(
-                    _bind_value(r[i], dtypes[i], self.dialect)
-                    for i in range(len(columns))
-                )
-                for r in buf
-            ]
-            if use_bulk:
-                if self.dialect.bulk_append(conn, self.table, columns, rendered):
-                    written += len(buf)
-                    buf.clear()
-                    return
-                use_bulk = False  # unsupported → INSERT from here on
-            sql = self._statement(len(columns), columns, version, len(buf), dtypes)
-            cur.execute(sql, [v for r in rendered for v in r])
-            written += len(buf)
-            buf.clear()
-
-        for row in rows:
-            buf.append(row)
-            if len(buf) >= chunk_rows:
-                flush()
-        flush()
-        return written
+        with self._transaction() as conn:
+            self.dialect.check_driver(conn)
+            return self._load_batches(conn, batches, schema, *self._route(conn, schema))
 
     def write_batches(self, batches: Iterable, schema: T.StructType, route) -> int:
-        """The COPY partition body of :meth:`write`: Arrow record batches
-        in, written through :meth:`_copy_batches` along ``route`` (the
-        COPY route :meth:`prepare` returned on the driver) on ONE
-        connection in ONE transaction. Returns the input row count, before
-        PK dedup. An empty partition opens no connection."""
+        """The partition body of :meth:`write`: Arrow record batches in,
+        written through :meth:`_load_batches` along ``route`` (what
+        :meth:`prepare` returned on the driver) on ONE connection in ONE
+        transaction. Returns the input row count, before PK dedup. An
+        empty partition opens no connection."""
         batches = iter(batches)
         head = next(batches, None)
         if head is None:
@@ -884,59 +643,29 @@ class JdbcMergeWriter:
                 yield b
 
         with self._transaction() as conn:
-            self._copy_batches(conn, counted(), schema, *route)
+            self._load_batches(conn, counted(), schema, *route)
         return n_in
 
-    def _copy_route(self, conn, version, schema: T.StructType):
-        """``(COPY table, statement applying it or None)`` when the batches
-        can ride COPY as CSV, else None: the dialect has COPY, every column
-        type renders (:func:`_csv_table`), and the mode is append/overwrite
-        (COPY into the target) or an upsert the engine can apply from a
-        temp stage with ONE statement — MERGE, else INSERT .. ON
-        CONFLICT."""
-        if not (
-            all(isinstance(f.dataType, _COPY_TYPES) for f in schema.fields)
-            and self.dialect.supports_copy_stage(conn)
-        ):
-            return None
-        if self.mode in (WriteMode.APPEND, WriteMode.OVERWRITE):
-            return self.table, None
-        if self.dialect.merge_as_insert():
-            return None
-        stage = stage_table_name(self.table)
-        if self.dialect.supports_merge(version):
-            return stage, merge_from_stage_sql(self.table, stage, schema.names, self.pks)
-        if self.dialect.supports_on_conflict(version):
-            return stage, upsert_from_stage_sql(self.table, stage, schema.names, self.pks)
-        return None
-
-    def _copy_batches(self, conn, batches, schema: T.StructType, table: str, apply) -> int:
-        """COPY the batches as CSV in ``STAGE_BATCH_ROWS`` chunks: straight
-        into ``table``, or deduplicated last-wins by PK into the temp
-        stage ``table`` and applied by ``apply`` once per chunk. Returns
-        the rows written after dedup."""
+    def _load_batches(self, conn, batches, schema: T.StructType, table: str, apply) -> int:
+        """Load the batches in ``STAGE_BATCH_ROWS`` chunks — deduplicated
+        last-wins by PK in merge mode, rendered once, loaded into ``table``
+        by the dialect — and run ``apply`` after each load. Returns the
+        rows written after dedup."""
         import pyarrow as pa
-        from pyarrow import csv as pacsv
 
         cur = conn.cursor()
-        if apply is not None:
+        temp_stage = apply is not None and self.dialect.temp_stage
+        if temp_stage:
             cur.execute(stage_ddl(self.dialect, table, schema))
         written = 0
         for chunk in _chunked(batches, STAGE_BATCH_ROWS):
             tbl = pa.Table.from_batches(chunk)
-            if apply is not None:
+            if self.mode == WriteMode.MERGE:
                 tbl = _last_wins(tbl, self.pks)
-            buf = io.BytesIO()
-            pacsv.write_csv(
-                _csv_table(tbl, schema),
-                buf,
-                pacsv.WriteOptions(include_header=False),
-            )
-            buf.seek(0)
-            if not self.dialect.copy_csv(conn, table, schema.names, buf):
-                raise RuntimeError(f"{self.dialect.name}: COPY refused for {table}")
+            self.dialect.load(cur, table, _render(tbl, schema))
             if apply is not None:
                 cur.execute(apply)
+            if temp_stage:
                 cur.execute(f"TRUNCATE TABLE {quote_ident(table)}")
             written += tbl.num_rows
         return written
@@ -949,8 +678,12 @@ class JdbcMergeWriter:
         from the per-partition counts the write job returns, so callers
         need no second action to count the result.
 
+        Columns :func:`_render` cannot take (NullType, intervals, variant)
+        are cast to STRING in Catalyst first; a frame without any keeps
+        its plan.
+
         MERGE/upsert writes hash-partition by primary key first: equal
-        keys land in ONE partition, so the within-buffer last-wins dedup
+        keys land in ONE partition, so the within-chunk last-wins dedup
         sees every duplicate and no two connections ever contend on the
         same key — without this, cross-partition duplicate keys make
         concurrent MERGEs race (deadlocks / duplicate-key aborts, found
@@ -958,46 +691,31 @@ class JdbcMergeWriter:
         the 100 TB-correct shape: one shuffle keyed exactly like the
         target index.
 
-        Single-writer engines (DuckDB test stand-in) coalesce to one
-        partition first; real warehouses take the full parallel fan-in.
+        Single-writer engines (DuckDB) coalesce to one partition first;
+        real warehouses take the full parallel fan-in.
         """
-        version, copy_route = self.prepare(df.schema)
-        if (
-            self.mode == WriteMode.MERGE
-            and self.pks
-            and not self.dialect.merge_as_insert()
-            and not self.dialect.single_writer
-        ):
+        if any(not isinstance(f.dataType, _RENDERED_TYPES) for f in df.schema.fields):
+            df = df.select(
+                *[
+                    _col(f.name)
+                    if isinstance(f.dataType, _RENDERED_TYPES)
+                    else _col(f.name).cast("string").alias(f.name)
+                    for f in df.schema.fields
+                ]
+            )
+        route = self.prepare(df.schema)
+        if self.mode == WriteMode.MERGE and not self.dialect.single_writer:
             df = df.repartition(*[F.col(p) for p in self.pks])
         if self.dialect.single_writer:
             df = df.coalesce(1)
         schema = df.schema
         writer = self  # picklable as long as the factory is
 
-        if copy_route is not None:
+        def partition(batches):
+            import pyarrow as pa
 
-            def copy_partition(batches):
-                import pyarrow as pa
+            n = writer.write_batches(batches, schema, route)
+            yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int64())})
 
-                n = writer.write_batches(batches, schema, copy_route)
-                yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int64())})
-
-            counts = [r.n for r in df.mapInArrow(copy_partition, "n long").collect()]
-        else:
-
-            def row_partition(rows):
-                n = 0
-
-                def counted():
-                    nonlocal n
-                    for r in rows:
-                        n += 1
-                        yield r
-
-                with writer._transaction() as conn:
-                    writer._write_rows_on(conn, version, counted(), schema)
-                yield n
-
-            counts = df.rdd.mapPartitions(row_partition).collect()
-        self.rows_written = sum(counts)
+        self.rows_written = sum(r.n for r in df.mapInArrow(partition, "n long").collect())
         return self.rows_written

@@ -16,9 +16,9 @@ the DSN) including SCRAM-SHA-256-PLUS channel binding
 protocol (Parse/Bind/Describe/Execute/Sync) with all parameters and
 results in text format, typed decode of the common OIDs, and
 protocol-level COPY in both directions via ``Cursor.copy_expert`` —
-COPY IN is the fast path ``PostgresDialect.copy_csv`` probes for
-and the bench measures; COPY OUT feeds the apitap_postgres
-DataSource's per-stride bulk read.
+COPY IN is how ``PostgresDialect.load`` writes every sink batch (into
+the target on append, into the temp stage on merge); COPY OUT feeds the
+apitap_postgres DataSource's per-stride bulk read.
 Not implemented: binary format — the sink does not need it.
 Statement reuse is transparent (psycopg3
 style): a (sql, param-OIDs) pair seen ``PREPARE_THRESHOLD`` times is
@@ -160,8 +160,8 @@ class Cursor:
         """COPY in either direction (psycopg2's copy_expert surface).
 
         ``COPY ... FROM STDIN``: data read from ``file`` and streamed as
-        chunked CopyData frames — the fast path JdbcMergeWriter's
-        bulk-append probes for and the bench measures.
+        chunked CopyData frames — how JdbcMergeWriter loads every
+        Postgres batch.
 
         ``COPY ... TO STDOUT``: CopyData frames written to ``file`` as
         they arrive (CopyOutResponse 'H' path) — the bulk read-back

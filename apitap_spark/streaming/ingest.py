@@ -161,6 +161,13 @@ def running_user_totals(events: DataFrame, timeout_sec: int = 3600) -> DataFrame
     state, partitioned by the grouping key across executors; the timeout
     reaps idle users so state stays bounded (the hand-rolled analog of
     watermark eviction).
+
+    An availableNow trigger over it does not terminate, and
+    ``processAllAvailable()`` does not return: with a processing-time
+    timeout the operator asks for a no-data batch after every batch, so
+    a next batch always exists. Stop the query yourself, or start it
+    with ``spark.sql.streaming.noDataMicroBatches.enabled=false`` (then
+    timeouts fire only in batches that carry data).
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 

@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis) for the pure logic: inference lattice,
-identifier quoting, data_path drill, chunk sizing. The reference admits
+identifier quoting, data_path drill. The reference admits
 "no property-based tests" (SURVEY §5) — this closes that gap."""
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import json
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from apitap_spark.sinks.jdbc_merge import quote_ident, rows_per_statement
+from apitap_spark.sinks.jdbc_merge import quote_ident
 from apitap_spark.sources.http import drill_data_path
 from apitap_spark.sources.schema import _merge, infer_schema_simple
 
@@ -70,13 +70,6 @@ def test_quote_ident_always_balanced(name):
     assert q.startswith('"') and q.endswith('"')
     # unquoting inverts quoting
     assert q[1:-1].replace('""', '"') == name
-
-
-@given(n_cols=st.integers(min_value=1, max_value=10_000), batch=st.integers(min_value=1, max_value=100_000))
-def test_rows_per_statement_respects_param_limit(n_cols, batch):
-    r = rows_per_statement(n_cols, batch)
-    assert 1 <= r <= batch
-    assert r * n_cols <= 65535 or r == 1
 
 
 @given(

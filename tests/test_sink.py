@@ -18,15 +18,13 @@ from apitap_spark.sinks.jdbc_merge import (
     JdbcMergeWriter,
     PostgresDialect,
     WriteMode,
-    _bind_value,
     ddl_for_schema,
-    insert_sql,
-    merge_sql,
+    insert_from_stage_sql,
+    merge_from_stage_sql,
     pg_type_for,
     quote_ident,
     quote_ident_path,
-    rows_per_statement,
-    upsert_sql,
+    upsert_from_stage_sql,
 )
 
 SCHEMA = T.StructType(
@@ -71,39 +69,37 @@ def test_ddl_with_pk():
 
 # ---- statement shapes ------------------------------------------------------
 def test_insert_sql_shape():
-    sql = insert_sql(PostgresDialect(), "t", ["a", "b"], 2)
-    assert sql == 'INSERT INTO "t" ("a", "b") VALUES (%s, %s), (%s, %s)'
+    """The append apply where the load cannot fill the target (DuckDB)."""
+    sql = insert_from_stage_sql("t", "_apitap_stage_t", ["a", "b"])
+    assert sql == 'INSERT INTO "t" ("a", "b") SELECT "a", "b" FROM "_apitap_stage_t"'
 
 
 def test_upsert_sql_shape():
-    sql = upsert_sql(PostgresDialect(), "t", ["id", "v"], ["id"], 1)
+    """INSERT..ON CONFLICT from the stage, for PG 9.5-14 and DuckDB."""
+    sql = upsert_from_stage_sql("t", "_apitap_stage_t", ["id", "v"], ["id"])
+    assert sql.startswith('INSERT INTO "t" ("id", "v") SELECT "id", "v" FROM')
     assert 'ON CONFLICT ("id") DO UPDATE SET "v" = EXCLUDED."v"' in sql
 
 
 def test_upsert_all_pk_do_nothing():
-    sql = upsert_sql(PostgresDialect(), "t", ["id"], ["id"], 1)
+    sql = upsert_from_stage_sql("t", "_apitap_stage_t", ["id"], ["id"])
     assert sql.endswith('ON CONFLICT ("id") DO NOTHING')
 
 
 def test_merge_sql_shape():
-    sql = merge_sql(PostgresDialect(), "s.t", ["id", "v"], ["id"], 2)
-    assert sql.startswith('MERGE INTO "s"."t" AS t USING (VALUES (%s, %s), (%s, %s))')
+    """MERGE from the stage for PG 15+: no per-column CASTs, because the
+    stage columns carry the types."""
+    sql = merge_from_stage_sql("s.t", "_apitap_stage_t", ["id", "v"], ["id"])
+    assert sql.startswith('MERGE INTO "s"."t" AS t USING "_apitap_stage_t" AS s')
     assert 'ON t."id" = s."id"' in sql
     assert 'WHEN MATCHED THEN UPDATE SET "v" = s."v"' in sql
     assert 'WHEN NOT MATCHED THEN INSERT ("id", "v") VALUES (s."id", s."v")' in sql
+    assert "%s" not in sql
 
 
 def test_stage_sql_shapes():
-    """COPY-staged upsert builders: typed temp stage (ON COMMIT DROP),
-    MERGE-from-stage for PG 15+, INSERT..ON CONFLICT-from-stage for
-    9.5-14 — no per-placeholder CASTs needed because the stage columns
-    carry the types."""
-    from apitap_spark.sinks.jdbc_merge import (
-        merge_from_stage_sql,
-        stage_ddl,
-        stage_table_name,
-        upsert_from_stage_sql,
-    )
+    """The typed temp stage a Postgres upsert COPYs into (ON COMMIT DROP)."""
+    from apitap_spark.sinks.jdbc_merge import stage_ddl, stage_table_name
 
     assert stage_table_name("s.t") == "_apitap_stage_t"
     schema = T.StructType(
@@ -116,22 +112,6 @@ def test_stage_sql_shapes():
     assert ddl.startswith('CREATE TEMP TABLE IF NOT EXISTS "_apitap_stage_t"')
     assert '"id" BIGINT' in ddl and '"payload" JSONB' in ddl
     assert ddl.endswith("ON COMMIT DROP")
-    m = merge_from_stage_sql("s.t", "_apitap_stage_t", ["id", "v"], ["id"])
-    assert m.startswith('MERGE INTO "s"."t" AS t USING "_apitap_stage_t" AS s')
-    assert 'ON t."id" = s."id"' in m
-    assert 'WHEN MATCHED THEN UPDATE SET "v" = s."v"' in m
-    assert "%s" not in m and "VALUES (s." in m
-    u = upsert_from_stage_sql("t", "_apitap_stage_t", ["id", "v"], ["id"])
-    assert u.startswith('INSERT INTO "t" ("id", "v") SELECT "id", "v" FROM')
-    assert 'ON CONFLICT ("id") DO UPDATE SET "v" = EXCLUDED."v"' in u
-    u2 = upsert_from_stage_sql("t", "_apitap_stage_t", ["id"], ["id"])
-    assert u2.endswith('ON CONFLICT ("id") DO NOTHING')
-
-
-def test_param_limit_chunking():
-    assert rows_per_statement(13, 5000) == 5000  # 65000 binds OK
-    assert rows_per_statement(14, 5000) == 65535 // 14  # capped
-    assert rows_per_statement(100000, 5000) == 1
 
 
 # ---- S17 version dispatch --------------------------------------------------
@@ -150,6 +130,12 @@ class FakeConn:
                 return (conn.version_text,)
 
         return Cur()
+
+    def rollback(self):
+        pass
+
+    def close(self):
+        pass
 
 
 @pytest.mark.parametrize(
@@ -172,9 +158,32 @@ def test_version_gates():
 
 
 def test_statement_routing_unsupported():
-    w = JdbcMergeWriter(lambda: None, "t", mode=WriteMode.MERGE, primary_key="id")
+    """A server with neither MERGE nor ON CONFLICT fails ``prepare()``,
+    whose DDL then rolls back."""
+
+    class Pre95(PostgresDialect):
+        def server_version(self, conn):
+            return (9, 4)
+
+    conn = CopyConn()
+    w = JdbcMergeWriter(
+        lambda: conn, "t", dialect=Pre95(), mode=WriteMode.MERGE, primary_key="id"
+    )
     with pytest.raises(RuntimeError, match="neither MERGE nor ON CONFLICT"):
-        w._statement(2, ["id", "v"], (9, 4), 1)
+        w.prepare(SCHEMA)
+    assert conn.ends == ["rollback"]
+
+
+def test_prepare_refuses_a_postgres_driver_without_copy():
+    """Every Postgres batch loads through COPY: a driver whose cursor has
+    no ``copy_expert`` is refused by name before any DDL runs (FakeConn
+    accepts nothing but ``SELECT version()``)."""
+    w = JdbcMergeWriter(
+        lambda: FakeConn("PostgreSQL 15.4"), "t", dialect=PostgresDialect(),
+        mode=WriteMode.APPEND,
+    )
+    with pytest.raises(TypeError, match="tests.test_sink.FakeConn has no cursor"):
+        w.prepare(SCHEMA)
 
 
 def test_merge_requires_pk():
@@ -245,14 +254,24 @@ def test_overwrite_truncates(spark, duck_path):
 
 
 def test_write_rows_driver_side(duck_path):
-    """write_rows works without Spark (library surface, reference entry 3.3)."""
-    w = _writer(duck_path, WriteMode.MERGE, primary_key="id", batch_size=1)
+    """write_rows works without Spark (library surface, reference entry 3.3)
+    and returns the rows written after PK dedup."""
+    w = _writer(duck_path, WriteMode.MERGE, primary_key="id")
     w.prepare(SCHEMA)
     n = w.write_rows([(1, "a", 1.0, None), (1, "a2", 2.0, None)], SCHEMA)
     w.prepare(SCHEMA)  # idempotent ensure_table
-    assert n == 2
+    assert n == 1
     rows = duckdb.connect(duck_path).execute("SELECT id, name FROM target").fetchall()
-    assert rows == [(1, "a2")]  # second statement upserted over the first
+    assert rows == [(1, "a2")]  # the last row of the key wins
+
+
+def test_write_rows_refuses_a_column_it_cannot_render(duck_path):
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("gap", T.DayTimeIntervalType())]
+    )
+    w = _writer(duck_path, WriteMode.APPEND)
+    with pytest.raises(ValueError, match=r"\['gap'\]"):
+        w.write_rows([(1, dt.timedelta(days=1))], schema)
 
 
 def test_postgres_copy_bulk_append_shape():
@@ -292,9 +311,9 @@ def test_postgres_copy_bulk_append_shape():
 
 
 def test_duckdb_bulk_append_used_for_append(spark, duck_path):
-    """Append mode routes through the registered-DataFrame bulk path and
-    results match."""
-    w = _writer(duck_path, WriteMode.APPEND, batch_size=2)
+    """Append mode loads the registered Arrow batch with INSERT .. SELECT
+    and results match."""
+    w = _writer(duck_path, WriteMode.APPEND)
     w.prepare(SCHEMA)
     n = w.write_rows([(i, f"n{i}", float(i), None) for i in range(7)], SCHEMA)
     assert n == 7
@@ -329,34 +348,6 @@ def test_schema_evolution_adds_columns(spark, duck_path):
         "SELECT id, name, score FROM target ORDER BY id"
     ).fetchall()
     assert rows == [(1, "a", None), (2, "B", 2.5), (3, "c", 3.5)]
-
-
-def test_clickhouse_dialect_shapes():
-    """ClickHouse: ReplacingMergeTree DDL, merge routed to plain INSERT."""
-    from apitap_spark.sinks.jdbc_merge import ClickHouseDialect
-
-    d = ClickHouseDialect()
-    ddl = ddl_for_schema("t", SCHEMA, "id", dialect=d)
-    assert '"id" Int64' in ddl and '"score" Float64' in ddl and '"name" String' in ddl
-    assert "PRIMARY KEY" not in ddl
-    assert ddl.endswith('ENGINE = ReplacingMergeTree ORDER BY ("id")')
-    w = JdbcMergeWriter(lambda: None, "t", dialect=d, mode=WriteMode.MERGE, primary_key="id")
-    sql = w._statement(2, ["id", "v"], (0, 0), 2)
-    assert sql.startswith('INSERT INTO "t"')  # engine dedups, not the writer
-
-
-def test_bigquery_dialect_shapes():
-    """BigQuery: standard-SQL MERGE, CLUSTER BY instead of PK."""
-    from apitap_spark.sinks.jdbc_merge import BigQueryDialect
-
-    d = BigQueryDialect()
-    ddl = ddl_for_schema("ds.t", SCHEMA, "id", dialect=d)
-    assert '"id" INT64' in ddl and '"tags" JSON' in ddl
-    assert "PRIMARY KEY" not in ddl
-    assert ddl.endswith('CLUSTER BY "id"')
-    w = JdbcMergeWriter(lambda: None, "ds.t", dialect=d, mode=WriteMode.MERGE, primary_key="id")
-    sql = w._statement(2, ["id", "v"], d.server_version(None), 1)
-    assert sql.startswith('MERGE INTO "ds"."t"')
 
 
 def test_merge_dedups_pks_within_statement(spark, duck_path):
@@ -462,7 +453,7 @@ NESTED_ROWS = [
     (2, [], None, {}),
     (3, None, ("", None), None),
 ]
-# what the row path has always bound for NESTED_ROWS (json.dumps of dicts);
+# the JSON the sink has always written for NESTED_ROWS (json.dumps of dicts);
 # ASCII only: jsonb rejects \u escapes above 007F in a non-UTF8 database
 NESTED_JSON = {
     1: (json.dumps(["a", 'q"x', "b\\s"]), json.dumps({"k": "v", "n": 7}), json.dumps({"x": 1.5})),
@@ -472,7 +463,7 @@ NESTED_JSON = {
 
 
 def test_edge_values_merge_duckdb(spark, duck_path):
-    """The row partition body: NULL vs '', NaN/±inf as NULL, awkward
+    """The partition body on DuckDB: NULL vs '', NaN/±inf as NULL, awkward
     text, decimal/date/timestamp/bool, last-wins PK dedup, and
     rows_written counting the input rows before dedup."""
     w = _writer(duck_path, WriteMode.MERGE, primary_key="id")
@@ -491,8 +482,36 @@ def test_nested_columns_land_as_row_path_json_duckdb(spark, duck_path):
         "SELECT id, tags, meta, attrs FROM target ORDER BY id"
     ).fetchall()
     assert {r[0]: r[1:] for r in got} == NESTED_JSON
-    meta = NESTED_SCHEMA["meta"].dataType
-    assert _bind_value({"k": "v", "n": 7}, meta, DuckDbDialect()) == NESTED_JSON[1][1]
+
+
+def test_unrendered_columns_land_as_text_duckdb(spark, duck_path):
+    """NULL, interval and variant columns are cast to STRING in Catalyst
+    before the partition body, so they land as Spark's text for them."""
+    w = _writer(duck_path, WriteMode.MERGE, primary_key="id")
+    df = spark.sql(
+        """SELECT id, CAST(NULL AS VOID) AS n,
+        CASE WHEN id = 1 THEN INTERVAL '1 02:03:04' DAY TO SECOND END AS dts,
+        CASE WHEN id = 1 THEN INTERVAL '1-2' YEAR TO MONTH END AS ym,
+        CASE WHEN id = 1 THEN parse_json('{"a": [1, 2.5, null], "b": "x"}') END AS v
+        FROM VALUES (1), (2) AS t(id)"""
+    )
+    assert w.write(df) == 2
+    con = duckdb.connect(duck_path)
+    assert con.execute("SELECT * FROM target ORDER BY id").fetchall() == [
+        (
+            1,
+            None,
+            "INTERVAL '1 02:03:04' DAY TO SECOND",
+            "INTERVAL '1-2' YEAR TO MONTH",
+            '{"a":[1,2.5,null],"b":"x"}',
+        ),
+        (2, None, None, None, None),
+    ]
+    types = con.execute(
+        "SELECT data_type FROM information_schema.columns "
+        "WHERE table_name = 'target' ORDER BY ordinal_position"
+    ).fetchall()
+    assert types == [("BIGINT",)] + [("VARCHAR",)] * 4
 
 
 class CopyConn:
@@ -573,13 +592,13 @@ def _copy_batch():
 
 
 def _driver_route(w, schema=COPY_SCHEMA):
-    """The COPY route ``w.prepare`` returns on the driver, computed over a
+    """The route ``w.prepare`` returns on the driver, computed over a
     connection of its own so the partition body's records stay separate."""
     import copy
 
     driver = copy.copy(w)
     driver.conn_factory = CopyConn
-    return driver.prepare(schema)[1]
+    return driver.prepare(schema)
 
 
 @pytest.fixture(params=["UTC", "America/New_York"])
@@ -598,7 +617,7 @@ def test_copy_body_renders_csv_and_dedups_last_wins(local_tz):
     """The COPY partition body: pyarrow CSV into the stage with '' quoted
     and NULL bare, NaN/inf as NULL, the duplicate PK deduplicated to its
     last row, then one MERGE and one commit; returns the input row count.
-    Timestamps land as the local wall-clock time the row path bound
+    Timestamps land as the local wall-clock time a collected Row holds
     (``TimestampType.fromInternal``), including both sides of a DST
     change when the process zone has one."""
     conn = CopyConn()
@@ -663,10 +682,10 @@ def test_empty_partition_opens_no_connection():
 
 
 class LoggedPgConn:
-    """A PostgreSQL 15 stand-in without COPY (so writes take the row
-    path) that appends every statement to a file: the log reaches the
-    test from the driver and from the executors' Python workers alike.
-    Picklable, so an instance is its own connection factory."""
+    """A PostgreSQL 15 stand-in that appends every statement and COPY to
+    a file: the log reaches the test from the driver and from the
+    executors' Python workers alike. Picklable, so an instance is its own
+    connection factory."""
 
     def __init__(self, log: str):
         self.log = log
@@ -688,6 +707,9 @@ class LoggedPgConn:
             def fetchall(self):
                 return []
 
+            def copy_expert(self, sql, f):
+                self.execute(sql)
+
         return Cur()
 
     def commit(self):
@@ -702,7 +724,7 @@ class LoggedPgConn:
 
 def test_row_partitions_take_the_driver_server_version(spark, tmp_path):
     """``write()`` probes the server once, in ``prepare()`` on the driver;
-    its row partitions send no ``SELECT version()`` of their own, while
+    its partitions send no ``SELECT version()`` of their own, while
     ``write_rows`` called directly still probes."""
     log = str(tmp_path / "sql.log")
     w = JdbcMergeWriter(
@@ -724,8 +746,8 @@ def test_row_partitions_take_the_driver_server_version(spark, tmp_path):
 
 
 def test_nested_and_binary_columns_render_into_copy_csv():
-    """Array, struct and map columns reach the COPY stage as the row
-    path's JSON text (``_bind_value``), binary as the bytea hex form."""
+    """Array, struct and map columns reach the COPY stage as the sink's
+    JSON text (NESTED_JSON), binary as the bytea hex form."""
     import csv
     import io
 
@@ -749,10 +771,10 @@ def test_nested_and_binary_columns_render_into_copy_csv():
 
 
 def test_copy_json_matches_row_path_json(spark):
-    """Every complex column COPY renders from a mapInArrow batch equals the
-    JSON ``_bind_value`` makes of the collected Row value, quirks included
-    (structs below an array or map dump as JSON arrays), across nesting,
-    maps, timestamps, decimals, dates and float32."""
+    """Every complex column rendered from a mapInArrow batch is the JSON
+    the sink has always written for the collected Row value, quirks
+    included (structs below an array or map dump as JSON arrays), across
+    nesting, maps, timestamps, decimals, dates and float32."""
     df = spark.sql(
         """SELECT
         array(named_struct('k', 'a', 'n', 1L,
@@ -771,13 +793,24 @@ def test_copy_json_matches_row_path_json(spark):
     def render(batches):
         import pyarrow as pa
 
-        from apitap_spark.sinks.jdbc_merge import _csv_table
+        from apitap_spark.sinks.jdbc_merge import _render
 
         for b in batches:
-            yield from _csv_table(pa.Table.from_batches([b]), schema).to_batches()
+            yield from _render(pa.Table.from_batches([b]), schema).to_batches()
 
     [got] = df.mapInArrow(render, ", ".join(f"{n} string" for n in schema.names)).collect()
-    [row] = df.collect()
-    want = [_bind_value(v, f.dataType, PostgresDialect()) for v, f in zip(row, schema)]
-    assert list(got) == want
-    assert want[0].startswith('[["a", 1, "2024-11-03T')  # a struct as a list
+    session_zone = dt.timezone.utc  # the test session's spark.sql.session.timeZone
+
+    def local(*ts):  # a session timestamp as the process's wall-clock time
+        when = dt.datetime(*ts, tzinfo=session_zone)
+        return T.TimestampType().fromInternal(_micros(when)).isoformat()
+
+    assert list(got) == [
+        f'[["a", 1, "{local(2024, 11, 3, 6, 30, 0, 250000)}"], null]',
+        '{"x": ["2024-02-29", 1.5], "y": null}',
+        '{"inner": [{"q": "1.50"}], "mm": {"1": "one"}, '
+        f'"t": "{local(2024, 3, 10, 6, 59, 59, 500000)}", '
+        '"ntz": "2024-01-01T00:00:00", "b": "00ff", "f": 0.10000000149011612}',
+        "[[1, null], []]",
+        '{"k": [[1]]}',
+    ]

@@ -1,21 +1,16 @@
-"""OPTIONAL live-Postgres integration test for the merge sink.
+"""Live-Postgres integration tests for the merge sink.
 
-The DuckDB stand-in in test_sink.py proves the SQL shapes; this module
-proves them against the real dialect the reference targets
-(/root/reference/src/writer/postgres.rs) when a server is available.
+The fake connections and DuckDB in test_sink.py prove the SQL shapes;
+this module proves them against the real dialect the reference targets
+(reference src/writer/postgres.rs) when a server is available.
 
-Auto-skips unless BOTH hold:
-  * a Postgres DB-API driver is importable (psycopg 3 or psycopg2), and
-  * $APITAP_PG_DSN is set (e.g. "host=localhost dbname=test user=test
-    password=test").
+Skips unless $APITAP_PG_DSN is set. The driver is psycopg2 when it is
+importable, else the bundled pure-stdlib ``apitap_spark.sinks.pgwire``
+(the order ``TargetConfig.conn_factory`` uses). Start a throwaway
+PostgreSQL 15 with ``sh tools/pg_local.sh start``, then:
 
-Run it like:
-    docker run -d -e POSTGRES_PASSWORD=t -p 5432:5432 postgres:16
-    APITAP_PG_DSN="host=localhost user=postgres password=t" \
+    APITAP_PG_DSN="host=127.0.0.1 port=54329 user=postgres dbname=postgres" \
         python -m pytest tests/test_sink_postgres.py -q
-
-Neither the driver nor a server exists in the build sandbox, so CI
-records these as skipped — by design, not failure.
 """
 
 from __future__ import annotations
@@ -36,27 +31,21 @@ DSN = os.environ.get("APITAP_PG_DSN")
 
 def _driver():
     try:
-        import psycopg  # noqa: F401  (psycopg 3)
+        import psycopg2
 
-        return lambda: psycopg.connect(DSN)
+        return lambda: psycopg2.connect(DSN)
     except ImportError:
-        try:
-            import psycopg2  # noqa: F401
+        # dependency-free fallback: our own protocol-v3 client —
+        # enough DB-API surface for the sink and these tests
+        from apitap_spark.sinks import pgwire
 
-            return lambda: psycopg2.connect(DSN)
-        except ImportError:
-            # dependency-free fallback: our own protocol-v3 client —
-            # enough DB-API surface for the sink and these tests
-            from apitap_spark.sinks import pgwire
-
-            return lambda: pgwire.connect(DSN)
+        return lambda: pgwire.connect(DSN)
 
 
 _factory = _driver() if DSN else None
 
 pytestmark = pytest.mark.skipif(
-    _factory is None,
-    reason="live-Postgres test: set APITAP_PG_DSN and install psycopg[2]",
+    _factory is None, reason="live-Postgres test: set APITAP_PG_DSN"
 )
 
 SCHEMA = T.StructType(
@@ -348,11 +337,10 @@ def test_staged_merge_rides_copy_and_is_idempotent(spark, pg_conn):
             super().__init__()
             self.stage_copies = 0
 
-        def copy_csv(self, conn, table, columns, data):
-            ok = super().copy_csv(conn, table, columns, data)
-            if ok and table.startswith("_apitap_stage_"):
+        def load(self, cur, table, tbl):
+            super().load(cur, table, tbl)
+            if table.startswith("_apitap_stage_"):
                 self.stage_copies += 1
-            return ok
 
     dialect = Counting()
     writer = JdbcMergeWriter(
@@ -381,78 +369,38 @@ def test_staged_merge_rides_copy_and_is_idempotent(spark, pg_conn):
     assert cur.fetchone()[0] == 0
 
 
-def test_values_merge_fallback_still_live(spark, pg_conn):
-    """With the stage rung disabled, the 65535-bind VALUES MERGE (with
-    its jsonb cast_types) must still pass live — it remains the
-    fallback for drivers without COPY (e.g. psycopg 3's cursor)."""
+def test_prepare_refuses_a_driver_without_copy_live(pg_conn):
+    """Every batch loads through COPY: ``prepare()`` refuses, by name, a
+    connection whose cursor has no ``copy_expert`` (psycopg 3's has
+    none), before any DDL reaches the server."""
 
-    class NoStage(PostgresDialect):
-        def supports_copy_stage(self, conn):
-            return False
+    class NoCopy:
+        def __init__(self):
+            self.conn = _factory()
 
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("tags", T.ArrayType(T.StringType())),
-        ]
-    )
-    df1 = spark.createDataFrame([(1, ["a"]), (2, ["b"])], schema)
-    df2 = spark.createDataFrame([(2, ["b2", "x"])], schema)
-    writer = JdbcMergeWriter(
-        _factory, TABLE, dialect=NoStage(), mode=WriteMode.MERGE, primary_key="id"
-    )
-    writer.write(df1)
-    writer.write(df2)
+        def cursor(self):
+            cur = self.conn.cursor()
+
+            class Cur:
+                execute, fetchone, fetchall = cur.execute, cur.fetchone, cur.fetchall
+
+            return Cur()
+
+        def commit(self):
+            self.conn.commit()
+
+        def rollback(self):
+            self.conn.rollback()
+
+        def close(self):
+            self.conn.close()
+
+    writer = JdbcMergeWriter(NoCopy, TABLE, dialect=PostgresDialect(), mode=WriteMode.APPEND)
+    with pytest.raises(TypeError, match="NoCopy has no cursor"):
+        writer.prepare(SCHEMA)
     cur = pg_conn.cursor()
-    cur.execute(f"SELECT id, tags->>0 FROM {TABLE} ORDER BY id")
-    assert cur.fetchall() == [(1, "a"), (2, "b2")]
-
-
-def test_staged_merge_throughput_beats_values_merge(spark, pg_conn, monkeypatch):
-    """The point of staging: COPY + one server-side MERGE must beat the
-    un-prepared VALUES-bind MERGE on the same rows (sanity bound 1.5x
-    here; the bench publishes sink_pg_merge_rows_per_sec at full
-    scale). Statement reuse is disabled for the VALUES leg — with it,
-    the re-Bind path closes most of the gap (see the companion reuse
-    test), which is a win for the fallback, not a regression of
-    staging."""
-    import time as _t
-
-    from apitap_spark.sinks import pgwire
-
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    rows = [(i, float(i) / 7.0) for i in range(50_000)]
-
-    class NoStage(PostgresDialect):
-        def supports_copy_stage(self, conn):
-            return False
-
-    timings = {}
-    for name, dialect in (("staged", PostgresDialect()), ("values", NoStage())):
-        if name == "values":
-            monkeypatch.setattr(pgwire, "PREPARE_THRESHOLD", 10**9)
-        writer = JdbcMergeWriter(
-            _factory,
-            TABLE,
-            dialect=dialect,
-            mode=WriteMode.MERGE,
-            primary_key="id",
-            truncate_first=True,
-        )
-        # driver-side write_rows isolates the sink (writer.write's Spark
-        # job scheduling swamps a 50K-row delta); one warm pass first
-        writer.prepare(schema)
-        writer.write_rows(rows, schema)
-        writer.prepare(schema)  # truncate again
-        t0 = _t.perf_counter()
-        writer.write_rows(rows, schema)
-        timings[name] = _t.perf_counter() - t0
-    assert timings["staged"] * 1.5 < timings["values"], timings
+    cur.execute("SELECT to_regclass(%s)", (TABLE,))
+    assert cur.fetchone() == (None,)
 
 
 def test_prepared_reuse_skips_parse_messages(pg_conn):
@@ -823,7 +771,7 @@ def test_edge_values_ride_copy_csv_live(spark, pg_conn):
 
 
 def test_nested_columns_land_as_row_path_jsonb_live(spark, pg_conn):
-    """Array, struct and map columns keep the row path's JSON, as jsonb."""
+    """Array, struct and map columns keep the sink's JSON, as jsonb."""
     import json
 
     from tests.test_sink import NESTED_JSON, NESTED_ROWS, NESTED_SCHEMA

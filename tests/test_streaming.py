@@ -235,15 +235,27 @@ def test_stateful_running_totals(spark, tmp_path):
         [_ev(4, "2024-01-01T00:04:00Z", user=1, value=10.0)],
     )
     out = running_user_totals(read_event_stream(spark, src, max_files_per_trigger=1))
-    q = (
-        out.writeStream.format("memory")
-        .queryName("running_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM running_totals").collect()
+    # the processing-time timeout asks for a no-data batch after every
+    # batch, so neither the query's end nor processAllAvailable() would
+    # ever come (see running_user_totals); the conf is read at start()
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(no_data)
+    spark.conf.set(no_data, "false")
+    try:
+        q = (
+            out.writeStream.format("memory")
+            .queryName("running_totals")
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(no_data, before)
+    try:
+        q.processAllAvailable()
+        rows = spark.sql("SELECT * FROM running_totals").collect()
+    finally:
+        q.stop()
     # last emission per user wins (update mode): user 1 saw 3 events/15.0
     last = {}
     for r in rows:
