@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_APP_NAME = "apitap-spark"
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_parallelism() -> int:
@@ -55,6 +56,16 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # Python workers fork from apitap_spark/worker_daemon.py, which
+        # stops each task re-reading every zip on the worker's path; the
+        # package root goes on the workers' path so the daemon imports
+        # from any cwd.
+        .config("spark.python.daemon.module", "apitap_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # One gates_stage_heavy pass generates 108 classes; Spark's
+        # default 100-entry cache evicted and recompiled 78-90 of them
+        # on every warm pass.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # JDK 17 defaults ReservedCodeCacheSize to 240 MB; a long-lived
         # session running hundreds of distinct whole-stage-codegen plans
         # (the bench suite, a pipeline scheduler) fills it, the JIT stops

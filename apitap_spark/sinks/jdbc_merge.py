@@ -154,6 +154,12 @@ class Dialect:
     def check_driver(self, conn) -> None:
         """Raise when ``conn``'s driver cannot run :meth:`load`."""
 
+    def begin(self, conn):
+        """Start ``conn``'s transaction and return the cursor every
+        statement of it runs on. A DB-API driver opens the transaction
+        with the first statement, and its cursors share the connection's."""
+        return conn.cursor()
+
     # -- bulk load ----------------------------------------------------------
     def load(self, cur, table: str, tbl) -> None:
         """Load the rendered Arrow table ``tbl`` (:func:`_render`) into
@@ -243,11 +249,19 @@ class DuckDbDialect(Dialect):
     def server_version(self, conn) -> tuple[int, int]:
         return (9, 5)  # pretend: upsert-capable, no MERGE
 
+    def begin(self, conn):
+        """Statements run on ``conn`` itself, inside an explicit
+        transaction: DuckDB's ``cursor()`` opens a second connection,
+        which autocommits each statement, so a commit or rollback of
+        ``conn`` would not reach them."""
+        conn.begin()
+        return conn
+
     def load(self, cur, table: str, tbl) -> None:
         """Register the batch under ``table``, replacing the previous one:
         the apply statement reads it in place (DuckDB refuses ``ON COMMIT
-        DROP``). A registration is visible to its own cursor only: DuckDB's
-        ``cursor()`` opens a second connection."""
+        DROP``). A registration is visible to its own connection only, so
+        ``cur`` is the one :meth:`begin` returned."""
         cur.register(table, tbl)
 
 
@@ -500,9 +514,8 @@ class JdbcMergeWriter:
         values. (The reference has no schema evolution at all —
         reference README.md:125 lists it as future work.)
         """
-        with self._transaction() as conn:
+        with self._transaction() as (conn, cur):
             self.dialect.check_driver(conn)
-            cur = conn.cursor()
             cur.execute(
                 ddl_for_schema(
                     self.table, schema, self.pks or None, dialect=self.dialect
@@ -565,11 +578,13 @@ class JdbcMergeWriter:
 
     @contextlib.contextmanager
     def _transaction(self) -> Iterator:
-        """One connection, one transaction (S22): commit when the block
-        finishes, roll back when it raises."""
+        """One connection, one transaction (S22): yields ``(conn, cur)``,
+        ``cur`` being the cursor every statement runs on
+        (:meth:`Dialect.begin`); commits when the block finishes, rolls
+        back when it raises."""
         conn = self.conn_factory()
         try:
-            yield conn
+            yield conn, self.dialect.begin(conn)
             conn.commit()
         except Exception:
             try:
@@ -620,9 +635,9 @@ class JdbcMergeWriter:
             for chunk in iter(lambda: list(itertools.islice(rows, STAGE_BATCH_ROWS)), [])
             for b in LocalDataToArrowConversion.convert(chunk, schema, False).to_batches()
         )
-        with self._transaction() as conn:
+        with self._transaction() as (conn, cur):
             self.dialect.check_driver(conn)
-            return self._load_batches(conn, batches, schema, *self._route(conn, schema))
+            return self._load_batches(cur, batches, schema, *self._route(conn, schema))
 
     def write_batches(self, batches: Iterable, schema: T.StructType, route) -> int:
         """The partition body of :meth:`write`: Arrow record batches in,
@@ -642,18 +657,17 @@ class JdbcMergeWriter:
                 n_in += b.num_rows
                 yield b
 
-        with self._transaction() as conn:
-            self._load_batches(conn, counted(), schema, *route)
+        with self._transaction() as (_, cur):
+            self._load_batches(cur, counted(), schema, *route)
         return n_in
 
-    def _load_batches(self, conn, batches, schema: T.StructType, table: str, apply) -> int:
+    def _load_batches(self, cur, batches, schema: T.StructType, table: str, apply) -> int:
         """Load the batches in ``STAGE_BATCH_ROWS`` chunks — deduplicated
         last-wins by PK in merge mode, rendered once, loaded into ``table``
         by the dialect — and run ``apply`` after each load. Returns the
         rows written after dedup."""
         import pyarrow as pa
 
-        cur = conn.cursor()
         temp_stage = apply is not None and self.dialect.temp_stage
         if temp_stage:
             cur.execute(stage_ddl(self.dialect, table, schema))

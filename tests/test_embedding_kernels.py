@@ -161,3 +161,85 @@ def test_embedding_gates_tolerate_dirty_rows(spark, dirty_sf):
     pc = op_embedding_top_pc(spark, dirty_sf).collect()
     assert len(pc) == sim.LSH_DIM
     assert all(r["loading"] == r["loading"] for r in pc)  # no NaN
+
+
+def _planted_vectors():
+    """vec_id -> (lang, embedding) with known cross-lingual near-duplicates.
+
+    ``a`` and ``b`` are orthogonal halves of the 64 dims; ``c`` is
+    orthogonal to both. Every cosine inside a cluster is > 0.9; ``a+2b``
+    scores 0.45 against ``a`` (below the 0.5 threshold) and 0.89 against
+    ``b``."""
+    a = [1.0] * 32 + [0.0] * 32
+    b = [0.0] * 32 + [1.0] * 32
+
+    def bump(v, i, x):
+        v = list(v)
+        v[i] = x
+        return v
+
+    return {
+        0: ("en", a),
+        1: ("de", bump(a, 0, 2.0)),
+        2: ("fr", bump(a, 1, 0.5)),
+        3: ("en", b),
+        4: ("en", bump(b, 40, 2.0)),  # same language as 3: no pair
+        5: ("es", bump(b, 33, 0.5)),
+        6: (None, a),  # no language label: never a pair
+        7: ("de", [1.0, -1.0] * 32),
+        8: ("zh", None),  # NULL embedding: never a pair
+        9: ("it", [x + 2 * y for x, y in zip(a, b)]),
+        600: ("ja", a),  # outside the bounded pool
+    }
+
+
+def test_crosslingual_neardup_finds_planted_pairs(spark, tmp_path):
+    """The gate returns exactly the planted different-language pairs with
+    cosine >= 0.5 inside the pool, and agrees with its DuckDB oracle cell
+    for cell."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from apitap_spark.operators.similarity import CROSSLINGUAL_THRESHOLD
+    from apitap_spark.registry import ORACLES, QUERIES
+    from tests.oracle_harness import compare, duck_connection
+
+    planted = _planted_vectors()
+    ids = sorted(planted)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(
+                    [planted[i][1] for i in ids], pa.list_(pa.float32())
+                ),
+                "label": pa.array([0] * len(ids), pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(ids, pa.int64()),
+                "text": [f"doc {i}" for i in ids],
+                "lang": [planted[i][0] for i in ids],
+                "source": ["src0"] * len(ids),
+                "n_chars": pa.array([5] * len(ids), pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    sf = str(tmp_path)
+    got = QUERIES["op_crosslingual_neardup"](spark, sf)
+    rows = got.collect()
+    assert {(r["v1"], r["v2"]) for r in rows} == {
+        (0, 1), (0, 2), (1, 2), (3, 5), (4, 5), (3, 9), (4, 9), (5, 9),
+    }
+    for r in rows:
+        assert (r["lang1"], r["lang2"]) == (planted[r["v1"]][0], planted[r["v2"]][0])
+        assert CROSSLINGUAL_THRESHOLD <= r["cosine"] <= 1.0
+    cur = duck_connection(sf).execute(ORACLES["op_crosslingual_neardup"])
+    oracle = (cur.fetchall(), [d[0] for d in cur.description])
+    res = compare("op_crosslingual_neardup", got, oracle)
+    assert res.ok, res.issues

@@ -265,6 +265,43 @@ def test_write_rows_driver_side(duck_path):
     assert rows == [(1, "a2")]  # the last row of the key wins
 
 
+def test_duckdb_partition_write_is_atomic(duck_path, monkeypatch):
+    """A partition that fails after its first load and apply leaves the
+    DuckDB target empty: every load and apply of a partition runs in the
+    one transaction its failure rolls back."""
+    import pyarrow as pa
+
+    from apitap_spark.sinks import jdbc_merge
+
+    monkeypatch.setattr(jdbc_merge, "STAGE_BATCH_ROWS", 1)
+
+    class FailSecondLoad(DuckDbDialect):
+        loads = 0
+
+        def load(self, cur, table, tbl):
+            self.loads += 1
+            if self.loads == 2:
+                raise RuntimeError("lost mid-partition")
+            super().load(cur, table, tbl)
+
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
+    )
+    w = JdbcMergeWriter(
+        _factory(duck_path), "target", dialect=FailSecondLoad(),
+        mode=WriteMode.MERGE, primary_key="id",
+    )
+    route = w.prepare(schema)
+    batches = [
+        pa.RecordBatch.from_pydict({"id": [i], "name": [f"n{i}"]}) for i in range(3)
+    ]
+    with pytest.raises(RuntimeError, match="lost mid-partition"):
+        w.write_batches(iter(batches), schema, route)
+    assert w.dialect.loads == 2
+    n = duckdb.connect(duck_path).execute("SELECT count(*) FROM target").fetchone()[0]
+    assert n == 0
+
+
 def test_write_rows_refuses_a_column_it_cannot_render(duck_path):
     schema = T.StructType(
         [T.StructField("id", T.LongType()), T.StructField("gap", T.DayTimeIntervalType())]
