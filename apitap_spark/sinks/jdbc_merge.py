@@ -703,7 +703,10 @@ class JdbcMergeWriter:
         concurrent MERGEs race (deadlocks / duplicate-key aborts, found
         live when the bench fed a non-unique natural key). This is also
         the 100 TB-correct shape: one shuffle keyed exactly like the
-        target index.
+        target index. The shuffle keeps the session's default parallelism
+        (AQE never coalesces a partition count given explicitly), so a
+        small merge still loads over that many connections; an empty
+        partition opens none.
 
         Single-writer engines (DuckDB) coalesce to one partition first;
         real warehouses take the full parallel fan-in.
@@ -719,7 +722,12 @@ class JdbcMergeWriter:
             )
         route = self.prepare(df.schema)
         if self.mode == WriteMode.MERGE and not self.dialect.single_writer:
-            df = df.repartition(*[F.col(p) for p in self.pks])
+            # an explicit count: AQE coalesces a key-only repartition of a
+            # small frame into one partition, i.e. one connection
+            df = df.repartition(
+                df.sparkSession.sparkContext.defaultParallelism,
+                *[F.col(p) for p in self.pks],
+            )
         if self.dialect.single_writer:
             df = df.coalesce(1)
         schema = df.schema

@@ -31,16 +31,22 @@ Reference behaviors reproduced (SURVEY §2.1):
       (reference ``src/http/fetcher.rs:667-727``, ``src/utils/schema.rs``).
 
 Scale design: a load is ONE plan, ``spark.range(0, n_pages, 1, k)`` +
-``mapInPandas`` — one HTTP request per page, pages spread over ``k``
+``mapInArrow`` — one HTTP request per page, pages spread over ``k``
 tasks, rows never pass through the driver (except page 0, fetched once
 on the driver for its schema sample and total hint and shipped to its
 task inside the fetch closure, and the driver-side sequential cursor
 walk, which is inherently serial). Schema inference runs at analysis
 time (``schema_of_json`` over the sample), so building the frame
-launches no Spark job. Unknown totals are discovered with an O(log n)
-exponential+binary probe on the driver, then fetched in one parallel
-pass — the reference's sequential stop-on-empty loop becomes two
-phases: cheap discovery, then an embarrassingly parallel read.
+launches no Spark job. Each task decodes a page once and emits typed
+Arrow (``typed_batch``): a row whose values all convert exactly to the
+inferred types reaches Spark as typed columns, and only the rest — a
+type conflict, a nested value, a non-object row — travel as JSON text
+that ``from_json`` parses as before, so drift and dirty rows keep
+their PERMISSIVE results while clean rows skip the JVM's JSON parse.
+Unknown totals are discovered with an O(log n) exponential+binary probe
+on the driver, then fetched in one parallel pass — the reference's
+sequential stop-on-empty loop becomes two phases: cheap discovery, then
+an embarrassingly parallel read.
 """
 
 from __future__ import annotations
@@ -52,6 +58,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DEFAULT_SAMPLE_SIZE = 100
 DEFAULT_CONCURRENCY = 5  # reference src/cmd/mod.rs:18
@@ -429,6 +436,116 @@ def fetch_page_rows(
     return parse_response(resp, data_path)[0]
 
 
+# The fetch task's exact conversions, one per flat Spark type: each
+# returns the value Spark's from_json would produce for the row's JSON
+# text, or _RAW when only from_json can say. A non-NULL value of any
+# other field type (decimal, array, struct) is _RAW.
+_RAW = object()
+_INT64 = (-(1 << 63), 1 << 63)
+
+
+def _as_long(v):
+    # type() rather than isinstance: a bool is an int to Python, not to JSON
+    return v if type(v) is int and _INT64[0] <= v < _INT64[1] else _RAW
+
+
+def _as_double(v):
+    if type(v) is float:
+        return v
+    if type(v) is int:
+        try:
+            return float(v)  # correctly rounded, as Jackson's getDoubleValue
+        except OverflowError:
+            return _RAW
+    return _RAW
+
+
+def _as_string(v):
+    if type(v) is not str:
+        return _RAW
+    if v.isascii():
+        return v
+    try:
+        v.encode("utf-8")  # a lone surrogate cannot be Arrow UTF-8
+    except UnicodeEncodeError:
+        return _RAW
+    return v
+
+
+def _as_boolean(v):
+    return v if type(v) is bool else _RAW
+
+
+_EXACT = {
+    T.LongType: _as_long,
+    T.DoubleType: _as_double,
+    T.StringType: _as_string,
+    T.BooleanType: _as_boolean,
+}
+
+
+def _as_raw(v):
+    return _RAW
+
+
+def typed_batch(rows: list, schema: T.StructType):
+    """API rows as one Arrow batch ``struct<j: schema, __raw: string>``.
+
+    A row whose every schema field converts exactly (``_EXACT``; None or
+    a missing key is NULL) lands typed in ``j``; any other row (not an
+    object, a mismatched type, a non-NULL nested value) lands whole in
+    ``__raw`` as ``json.dumps(row)``, for ``from_json`` to parse exactly
+    as the JVM always has. Typed plus ``__raw`` equals ``from_json`` of
+    every row's JSON text, cell for cell (property-tested)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    names = schema.names
+    convs = [_EXACT.get(type(f.dataType), _as_raw) for f in schema.fields]
+    cols: list = [[] for _ in names]
+    raw: list = []
+    for row in rows:
+        vals = None
+        if isinstance(row, dict):
+            vals = []
+            for name, conv in zip(names, convs):
+                v = row.get(name)
+                if v is not None:
+                    v = conv(v)
+                    if v is _RAW:
+                        vals = None
+                        break
+                vals.append(v)
+        if vals is None:
+            raw.append(json.dumps(row))
+            vals = [None] * len(names)
+        else:
+            raw.append(None)
+        for col, v in zip(cols, vals):
+            col.append(v)
+    j_type = to_arrow_type(schema)
+    is_raw = pa.array([r is not None for r in raw], pa.bool_())
+    if names:
+        j = pa.StructArray.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, j_type)],
+            fields=list(j_type),
+            mask=is_raw,
+        )
+    else:  # struct<>: Arrow cannot size a struct from no children
+        j = pa.array([{} if r is None else None for r in raw], j_type)
+    return pa.RecordBatch.from_arrays(
+        [j, pa.array(raw, pa.string())], names=["j", "__raw"]
+    )
+
+
+def typed_or_parsed(schema: T.StructType):
+    """The row struct of a ``typed_batch`` frame: ``j`` where the task
+    converted the row, else ``from_json`` of its ``__raw`` text."""
+    return F.when(F.col("__raw").isNull(), F.col("j")).otherwise(
+        F.from_json(F.col("__raw"), schema)
+    )
+
+
 @dataclass
 class HttpSource:
     """A named paginated HTTP JSON endpoint (reference src/pipeline/mod.rs:33-47)."""
@@ -661,38 +778,37 @@ class HttpSource:
         )
         self._accs = (acc_pages, acc_rows, acc_retries)
         src = self  # capture for closure; dataclass pickles cleanly
-        first_json = [json.dumps(r) for r in first]
 
         def fetch_partition(batches: Iterator) -> Iterator:
-            import pandas as pd
             import requests as rq
 
             sess = rq.Session()
-            for pdf in batches:
-                out = []
+            for batch in batches:
+                rows = []
                 retries = [0]
 
                 def _on_retry():
                     retries[0] += 1
 
-                for page_idx in pdf["id"]:
+                for page_idx in batch.column("id").to_pylist():
                     if page_idx == 0:
-                        out.extend(first_json)  # fetched and counted on the driver
+                        rows.extend(first)  # fetched and counted on the driver
                         continue
-                    rows = src._fetch_page(
-                        int(page_idx), session=sess, on_retry=_on_retry
-                    )
-                    out.extend(json.dumps(row) for row in rows)
+                    page = src._fetch_page(page_idx, session=sess, on_retry=_on_retry)
+                    rows.extend(page)
                     acc_pages.add(1)
-                    acc_rows.add(len(rows))
+                    acc_rows.add(len(page))
                 acc_retries.add(retries[0])
-                yield pd.DataFrame({"value": out})
+                yield typed_batch(rows, schema)
 
         tasks = min(n_pages, max(1, self.max_concurrency))
-        raw = spark.range(0, n_pages, 1, tasks).mapInPandas(
-            fetch_partition, schema="value string"
+        fetched = spark.range(0, n_pages, 1, tasks).mapInArrow(
+            fetch_partition,
+            T.StructType(
+                [T.StructField("j", schema), T.StructField("__raw", T.StringType())]
+            ),
         )
-        return raw.select(F.from_json(F.col("value"), schema).alias("j")).select("j.*")
+        return fetched.select(typed_or_parsed(schema).alias("j")).select("j.*")
 
     def _page_size_guess(self) -> int:
         pg = self.pagination

@@ -318,6 +318,103 @@ def test_schema_drift_null_fills(spark):
         srv.shutdown()
 
 
+# Page 0 is the schema sample; every later row tests the typed fetch's
+# per-row choice between an exact Arrow value and the from_json text path.
+TYPED_SAMPLE = [
+    {"id": 0, "x": 1.5, "s": "a", "ok": True, "tags": [1], "meta": {"k": "v"},
+     "big": 2**65, "A": 1, "a": "x"},
+    {"id": 1, "x": 2, "s": "ñ", "ok": False, "tags": [], "meta": None,
+     "big": None, "A": None, "a": None},
+    {"id": 2, "x": -0.0, "s": "", "ok": None, "tags": None, "meta": {"k": None},
+     "big": 3, "A": 2, "a": "y"},
+    {"id": 3, "x": None, "s": None, "ok": True, "tags": [2, 3], "meta": {},
+     "big": None, "A": 3, "a": "z"},
+    {"id": 4, "x": 1e308, "s": "Жж", "ok": False},
+    {"id": 5, "x": 5, "s": "e", "ok": True, "tags": [4]},
+    {"id": 6, "x": 0.1, "s": "f", "ok": False},
+    {"id": 7, "x": 7.25, "s": "g", "ok": True},
+]
+TYPED_LATER = [
+    {"id": 8, "x": 3, "s": "plain", "ok": False, "tags": None, "meta": None},
+    {"id": "9", "x": 1.0, "s": "id is text"},
+    {"id": 2**70, "s": "id past int64"},
+    {"id": 11, "s": "lone \ud800 surrogate"},
+    {"id": 12, "s": {"nested": [1, 2]}},
+    {"id": 13, "ok": 1},
+    {"id": 14, "tags": [1, "two"]},
+    {"id": 15, "meta": {"k": "v", "z": 1}},
+    {"id": 16, "x": 10**400},
+    {"id": 17, "x": float("nan"), "s": "nan"},
+    {"id": 18, "A": 5, "a": "lower"},
+    {"id": 19, "new_field": 1},
+    42,
+    [1, 2],
+    {"id": 20, "big": 5},
+    {"id": 21, "ok": None, "s": ""},
+    {"id": 22, "x": True},
+    {"id": 23, "x": 2**70 + 1, "s": "wide int as double"},
+]
+# What the text path (json.dumps every row, from_json in the JVM) landed
+# for these rows, captured before the typed fetch replaced it.
+TYPED_LANDED = [
+    "(1, 'x', Decimal('36893488147419103232'), 0, Row(k='v'), True, 'a', [1], 1.5)",
+    "(None, None, None, 1, None, False, 'ñ', [], 2.0)",
+    "(2, 'y', Decimal('3'), 2, Row(k=None), None, '', None, -0.0)",
+    "(3, 'z', None, 3, Row(k=None), True, None, [2, 3], None)",
+    "(None, None, None, 4, None, False, 'Жж', None, 1e+308)",
+    "(None, None, None, 5, None, True, 'e', [4], 5.0)",
+    "(None, None, None, 6, None, False, 'f', None, 0.1)",
+    "(None, None, None, 7, None, True, 'g', None, 7.25)",
+    "(None, None, None, 8, None, False, 'plain', None, 3.0)",
+    "(None, None, None, None, None, None, 'id is text', None, 1.0)",
+    "(None, None, None, None, None, None, 'id past int64', None, None)",
+    "(None, None, None, 11, None, None, 'lone ? surrogate', None, None)",
+    "(None, None, None, 12, None, None, '{\"nested\":[1,2]}', None, None)",
+    "(None, None, None, 13, None, None, None, None, None)",
+    "(None, None, None, 14, None, None, None, None, None)",
+    "(None, None, None, 15, Row(k='v'), None, None, None, None)",
+    "(None, None, None, 16, None, None, None, None, inf)",
+    "(None, None, None, 17, None, None, 'nan', None, nan)",
+    "(5, 'lower', None, 18, None, None, None, None, None)",
+    "(None, None, None, 19, None, None, None, None, None)",
+    "(None, None, None, None, None, None, None, None, None)",
+    "(None, None, None, None, None, None, None, None, None)",
+    "(None, None, Decimal('5'), 20, None, None, None, None, None)",
+    "(None, None, None, 21, None, None, '', None, None)",
+    "(None, None, None, 22, None, None, None, None, None)",
+    "(None, None, None, 23, None, None, 'wide int as double', None, 1.1805916207174113e+21)",
+]
+
+
+def test_typed_fetch_lands_what_the_text_path_landed(spark):
+    """Pages past the sample carry type conflicts, nested values, ints
+    past int64 and past the double range, NaN, a lone surrogate, case-only
+    duplicate keys, drift and non-object rows: the typed fetch lands each
+    row exactly as parsing its JSON text did, and only rows that convert
+    exactly skip that parse."""
+    from apitap_spark.sources.http import typed_batch
+
+    api = MockApi(TYPED_SAMPLE + TYPED_LATER)
+    base = api.start()
+    try:
+        df = HttpSource(
+            name="typed", url=f"{base}/limit_offset",
+            pagination=LimitOffsetPagination(limit=8), sample_size=8,
+            max_concurrency=2,
+        ).load(spark)
+        assert df.schema.simpleString() == (
+            "struct<A:bigint,a:string,big:decimal(20,0),id:bigint,"
+            "meta:struct<k:string>,ok:boolean,s:string,tags:array<bigint>,x:double>"
+        )
+        assert [repr(tuple(r)) for r in df.collect()] == TYPED_LANDED
+    finally:
+        api.stop()
+    batch = typed_batch(TYPED_SAMPLE + TYPED_LATER, df.schema).to_pylist()
+    assert [b["j"]["id"] for b in batch if b["__raw"] is None] == [
+        4, 6, 7, 8, 17, 18, 19, 21, 23,
+    ]
+
+
 def test_client_error_not_retried(spark):
     """4xx (except 429) fails fast without burning the retry budget."""
     import threading

@@ -159,6 +159,94 @@ def test_http_inference_matches_json_reader(spark, rows):
     got = HttpSource(name="p", url="-").infer_schema(spark, rows)
     assert got == want
 
+
+# Values the typed fetch must hand to from_json: lone surrogates (not
+# UTF-8), ints past the double range, NaN, and the largest doubles.
+json_edge_leaves = json_leaves | st.sampled_from(
+    ["\ud800", "x\udfff", 1e308, -0.0, 10**400, -(10**400), float("nan")]
+)
+json_edge_values = st.recursive(
+    json_edge_leaves,
+    lambda inner: st.lists(inner, max_size=3)
+    | st.dictionaries(json_keys, inner, max_size=3),
+    max_leaves=8,
+)
+json_edge_objects = st.dictionaries(json_keys, json_edge_values, max_size=4)
+json_edge_flat_objects = st.dictionaries(
+    json_keys, json_edge_leaves, min_size=1, max_size=4
+)
+# Every sample key meets each of these, as does the row itself.
+JSON_PROBES = [
+    None, True, False, 0, -1, 2**63 - 1, 2**63, -(2**63), -(2**63) - 1,
+    10**400, 1.5, -0.0, 1e308, float("nan"), "", "s", "\ud800", [], [1],
+    {}, {"k": 1},
+]
+
+
+@given(
+    sample=st.lists(
+        json_edge_flat_objects | json_edge_objects, min_size=1, max_size=4
+    ),
+    data=st.data(),
+)
+@settings(max_examples=60, deadline=None)
+def test_typed_fetch_matches_from_json(spark, sample, data):
+    """The HTTP fetch task's typed rows plus its ``__raw`` fallback equal
+    ``from_json(json.dumps(row))`` under the sample's inferred schema,
+    cell for cell (NaN and -0.0 included), for every row: type
+    conflicts, nested values, non-object rows, lone surrogates, ints
+    past int64 and past the double range."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from apitap_spark.sources.http import HttpSource, typed_batch, typed_or_parsed
+
+    # a sample row's keys with fresh values: each meets a typed field
+    redrawn = st.sampled_from(sample).flatmap(
+        lambda r: st.fixed_dictionaries({k: json_edge_leaves for k in r})
+    )
+    later = data.draw(
+        st.lists(
+            st.one_of(redrawn, json_edge_objects, json_edge_values),
+            min_size=1,
+            max_size=6,
+        )
+    )
+    keys = sorted({k for r in sample for k in r})
+    probes = [{k: v} for k in keys for v in JSON_PROBES] + JSON_PROBES
+    rows = sample + later + probes
+    schema = HttpSource(name="p", url="-").infer_schema(spark, sample)
+
+    def emit(_):
+        import pyarrow as pa
+
+        b = typed_batch(rows, schema)
+        text = pa.array([json.dumps(r) for r in rows], pa.string())
+        yield pa.RecordBatch.from_arrays(
+            b.columns + [text], names=["j", "__raw", "text"]
+        )
+
+    out = T.StructType(
+        [
+            T.StructField("j", schema),
+            T.StructField("__raw", T.StringType()),
+            T.StructField("text", T.StringType()),
+        ]
+    )
+    got = (
+        spark.range(0, 1, 1, 1)
+        .mapInArrow(emit, out)
+        .select(
+            typed_or_parsed(schema).alias("typed"),
+            F.from_json("text", schema).alias("parsed"),
+        )
+        .collect()
+    )
+    assert len(got) == len(rows)
+    for r in got:
+        assert repr(r.typed) == repr(r.parsed)
+
+
 def test_cramer_det4_matches_numpy():
     """The shared fully-parenthesized determinant strings (evaluated by
     the logreg driver AND spliced into the DuckDB oracle) agree with

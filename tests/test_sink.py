@@ -782,6 +782,30 @@ def test_row_partitions_take_the_driver_server_version(spark, tmp_path):
         assert fh.read().splitlines().count("SELECT version()") == 2
 
 
+def test_merge_write_fans_out_to_the_session_parallelism(spark, tmp_path):
+    """A small MERGE write loads with one MERGE (in its own transaction)
+    per non-empty partition of a ``defaultParallelism``-way hash of its
+    keys: AQE does not coalesce the key shuffle into one partition, i.e.
+    one connection."""
+    from pyspark.sql import functions as F
+
+    log = str(tmp_path / "sql.log")
+    w = JdbcMergeWriter(
+        LoggedPgConn(log), "t", dialect=PostgresDialect(),
+        mode=WriteMode.MERGE, primary_key="id",
+    )
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("s", T.StringType())]
+    )
+    df = spark.createDataFrame([(i % 8, f"s{i}") for i in range(40)], schema)
+    assert w.write(df) == 40
+    with open(log) as fh:
+        loads = sum(q.startswith('MERGE INTO "t"') for q in fh.read().splitlines())
+    n = spark.sparkContext.defaultParallelism
+    keyed = df.repartition(n, "id").select(F.spark_partition_id()).distinct()
+    assert loads == keyed.count() > 1
+
+
 def test_nested_and_binary_columns_render_into_copy_csv():
     """Array, struct and map columns reach the COPY stage as the sink's
     JSON text (NESTED_JSON), binary as the bytea hex form."""
