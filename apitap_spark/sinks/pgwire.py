@@ -20,13 +20,11 @@ COPY IN is how ``PostgresDialect.load`` writes every sink batch (into
 the target on append, into the temp stage on merge); COPY OUT feeds the
 apitap_postgres DataSource's per-stride bulk read.
 Not implemented: binary format — the sink does not need it.
-Statement reuse is transparent (psycopg3
-style): a (sql, param-OIDs) pair seen ``PREPARE_THRESHOLD`` times is
-promoted to a server-side named statement — later executions skip
-Parse and only Bind/Execute, the 10-20% win the reference's own docs
-claim for its VALUES-merge fallback. The cache is capped (evictions
-Close the statement) and cleared on any aborted transaction, since
-ROLLBACK discards statements parsed inside it.
+Every extended query Parses into the unnamed statement, so no
+server-side statement outlives the query that made it: the pipeline
+runs each statement once per connection, and the one repeat (a MERGE
+partition over ``STAGE_BATCH_ROWS``) re-Parses a MERGE and a TRUNCATE
+per chunk, microseconds against the chunk's COPY.
 """
 
 from __future__ import annotations
@@ -220,10 +218,6 @@ class Cursor:
             # 'N'/'S' notices: skip
 
 
-PREPARE_THRESHOLD = 2  # promote to a named statement on the 2nd execution
-STMT_CACHE_MAX = 64
-
-
 def _der_tlv(buf: bytes, i: int) -> tuple[int, int, int, int]:
     """One DER TLV: (tag, content_start, content_end, next_sibling)."""
     tag = buf[i]
@@ -339,22 +333,6 @@ class Connection:
         sslmode = p.get("sslmode", "disable")
         if sslmode in ("prefer", "require", "verify-ca", "verify-full"):
             self._negotiate_tls(p, sslmode)
-        # Named-statement reuse (the reference's own docs claim 10-20%
-        # on the VALUES-merge fallback): (sql, oid-vector) -> server-side
-        # statement name, promoted after PREPARE_THRESHOLD executions so
-        # one-shot DDL never pollutes the server cache. OIDs are part of
-        # the key because Parse freezes parameter types.
-        self._stmt_cache: dict[tuple, bytes] = {}
-        self._stmt_seen: dict[tuple, int] = {}
-        self._stmt_counter = 0
-        # Names dropped from the cache that may still exist server-side
-        # (parsed in an EARLIER committed txn, then forgotten when an
-        # error cleared the cache). Closed lazily by piggybacking Close
-        # messages on the next healthy extended query — without this a
-        # long-lived connection with recurring errors leaks server-side
-        # prepared statements unboundedly (round-8 ADVICE #2).
-        self._stmt_orphans: list[bytes] = []
-        self._txn_failed = False
         user = p.get("user", "postgres")
         db = p.get("dbname", p.get("database", user))
         parts = [
@@ -582,24 +560,19 @@ class Connection:
                 err = PgError(self._err_fields(body))
             if mtype == b"Z":
                 self._in_txn = body != b"I"
-                self._txn_failed = body == b"E"
                 if err:
-                    # The error aborted the transaction; statements
-                    # parsed inside it are discarded at ROLLBACK —
-                    # conservatively forget every cached name (names
-                    # from earlier committed txns survive server-side
-                    # and are Close'd lazily via _stmt_orphans).
-                    self._forget_statements()
                     raise err
                 return
 
     # -- query execution ------------------------------------------------------
     @staticmethod
     def _param_oid(v) -> int:
-        """Parse-time type OID per Python type. Without these, params in
-        contexts PostgreSQL can't infer (e.g. a MERGE USING (VALUES ...)
-        source) default to text and joins fail with 'bigint = text'.
-        Strings stay OID 0 (unknown) so they coerce to any target type."""
+        """Parse-time type OID per Python type: a typed parameter gives a
+        typed result column (``SELECT %s`` of an int decodes as an int,
+        not text) and a typed comparison where PostgreSQL cannot infer
+        one from context (an untyped parameter defaults to text, and
+        ``bigint = text`` fails). Strings stay OID 0 (unknown) so they
+        coerce to any target type."""
         if isinstance(v, bool):
             return 16
         if isinstance(v, int):
@@ -616,54 +589,12 @@ class Connection:
             return 1082
         return 0
 
-    def _forget_statements(self) -> None:
-        """Drop every cached statement name. Names may still exist
-        server-side (only statements parsed inside a rolled-back txn
-        vanish), so they move to _stmt_orphans for a lazy Close."""
-        self._stmt_orphans.extend(self._stmt_cache.values())
-        self._stmt_cache.clear()
-
     def _extended_query(self, sql: str, params: list):
-        if self._stmt_orphans and not self._txn_failed:
-            # Piggyback Close for orphaned names on this pipeline: zero
-            # extra round trips (like the eviction path), CloseComplete
-            # ('3') is skipped by the recv loop, and the protocol makes
-            # Close on a nonexistent name a no-op rather than an error.
-            for nm in self._stmt_orphans:
-                self._send(b"C", b"S" + nm + b"\x00")
-            self._stmt_orphans.clear()
-        oids = tuple(self._param_oid(v) for v in params)
-        key = (sql, oids)
-        name = self._stmt_cache.get(key)
-        promoted = False
-        if name is None:
-            seen = self._stmt_seen.get(key, 0) + 1
-            if len(self._stmt_seen) > 4 * STMT_CACHE_MAX:
-                self._stmt_seen.clear()  # bounded bookkeeping
-            self._stmt_seen[key] = seen
-            if seen >= PREPARE_THRESHOLD:
-                if len(self._stmt_cache) >= STMT_CACHE_MAX:
-                    evict_key = next(iter(self._stmt_cache))
-                    evict_name = self._stmt_cache.pop(evict_key)
-                    # Close the evicted statement in the same pipeline;
-                    # CloseComplete ('3') is skipped by the recv loop.
-                    self._send(b"C", b"S" + evict_name + b"\x00")
-                self._stmt_counter += 1
-                name = b"_ap%d" % self._stmt_counter
-                self._stmt_cache[key] = name
-                promoted = True
-            else:
-                name = b""
-        stmt = name if (promoted or name == b"") else None
-        if stmt is not None:  # first use of this name (or unnamed): Parse
-            parse = (
-                stmt + b"\x00" + sql.encode() + b"\x00"
-                + struct.pack(">h", len(params))
-            )
-            for oid in oids:
-                parse += struct.pack(">i", oid)
-            self._send(b"P", parse)
-        bind = [b"\x00" + name + b"\x00", struct.pack(">h", 0)]  # text params
+        parse = b"\x00" + sql.encode() + b"\x00" + struct.pack(">h", len(params))
+        for v in params:
+            parse += struct.pack(">i", self._param_oid(v))
+        self._send(b"P", parse)  # the unnamed statement
+        bind = [b"\x00\x00", struct.pack(">h", 0)]  # text params
         bind.append(struct.pack(">h", len(params)))
         for v in params:
             enc = _encode_param(v)
@@ -715,11 +646,7 @@ class Connection:
                     err = PgError(self._err_fields(body))
             elif mtype == b"Z":
                 self._in_txn = body != b"I"
-                self._txn_failed = body == b"E"
                 if err:
-                    # txn aborted: in-txn names vanish at ROLLBACK, the
-                    # rest get a lazy Close via _stmt_orphans
-                    self._forget_statements()
                     raise err
                 return desc, rows, tag
             # '1' ParseComplete, '2' BindComplete, 'n' NoData,
@@ -744,11 +671,6 @@ class Connection:
     def rollback(self) -> None:
         if self._in_txn:
             self._simple("ROLLBACK")
-            # Statements parsed inside the rolled-back txn are gone
-            # server-side; forget all names rather than track txn spans.
-            # Pre-txn names survive and are Close'd by the next healthy
-            # extended query via _stmt_orphans.
-            self._forget_statements()
 
     def close(self) -> None:
         if not self.closed:

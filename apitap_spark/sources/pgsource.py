@@ -27,15 +27,11 @@ Usage::
             .load())
 
 The wire client is the dependency-free protocol-v3 implementation in
-``apitap_spark.sinks.pgwire`` (text format, typed decode by OID), so the
-source works in environments without psycopg. Each task opens one
-connection, streams its stride, and closes — no driver-side row traffic.
-
-Strides read via protocol-level ``COPY (SELECT ...) TO STDOUT`` by
-default (one stream per stride instead of one DataRow message per row —
-the same 10-20x protocol economics the COPY write path measured);
-``.option("read_method", "row")`` falls back to the extended-query row
-protocol.
+``apitap_spark.sinks.pgwire``, so the source works in environments
+without psycopg. Each task opens one connection, reads its stride with
+one protocol-level ``COPY (SELECT ...) TO STDOUT`` in CSV, parses it with
+``pyarrow.csv`` and yields RecordBatches: no per-row Python on either
+side, and no driver-side row traffic.
 
 :func:`read_on_driver` is the small-table alternative the pipeline
 runner takes below the broadcast threshold: the same schema mapping
@@ -195,39 +191,16 @@ def _filter_to_sql(f: Filter) -> str | None:
     return None
 
 
-# COPY TO STDOUT text-format field unescape: COPY TO emits exactly these
-# backslash escapes (postgresql.org/docs/current/sql-copy.html "Text
-# Format"); \N is the NULL marker, handled before unescaping.
-_TEXT_ESCAPES = {
-    "\\": "\\", "b": "\b", "f": "\f", "n": "\n",
-    "r": "\r", "t": "\t", "v": "\v",
-}
-
-
-def _unescape(s: str) -> str:
-    if "\\" not in s:  # fast path: the overwhelming majority of fields
-        return s
-    out = []
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if c == "\\" and i + 1 < len(s):
-            out.append(_TEXT_ESCAPES.get(s[i + 1], s[i + 1]))
-            i += 2
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
-
-
-def _arrow_type(dtype):
-    """Arrow type for the vectorized COPY-CSV read, or None when the
-    Spark type can't be parsed straight from PG CSV text by pyarrow
-    (binary hex, session-tz timestamps) — those schemas fall back to
-    the per-tuple text decode."""
+def _arrow_type(field):
+    """Arrow type that ``pyarrow.csv`` parses ``field``'s COPY CSV text
+    as: every type :func:`_oid_to_spark_type` returns. A timestamptz
+    arrives as UTC wall time and a bytea as hex text (see
+    :func:`_select_expr`); :meth:`PostgresReader.read` converts
+    both. Raises ``ValueError`` naming the column for any other type."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
+    dtype = field.dataType
     if isinstance(dtype, T.BooleanType):
         return pa.bool_()
     if isinstance(dtype, T.LongType):
@@ -244,38 +217,30 @@ def _arrow_type(dtype):
         return pa.decimal128(dtype.precision, dtype.scale)
     if isinstance(dtype, T.DateType):
         return pa.date32()
-    if isinstance(dtype, T.TimestampNTZType):
+    if isinstance(dtype, (T.TimestampNTZType, T.TimestampType)):
         return pa.timestamp("us")
-    if isinstance(dtype, T.StringType):
+    if isinstance(dtype, (T.StringType, T.BinaryType)):
         return pa.string()
-    return None
+    raise ValueError(
+        f"apitap_postgres: column {field.name!r} has type "
+        f"{dtype.simpleString()}, which the reader cannot read"
+    )
 
 
-def _pg_text_decoder(dtype):
-    """Decoder for one COPY-text field, by Spark type — the COPY-read
-    twin of pgwire's OID-keyed ``_decode_field``."""
-    import datetime as dt
-    from decimal import Decimal
-
+def _select_expr(field) -> str:
+    """``field``'s entry in the COPY's select list. A timestamptz is read
+    as UTC wall time: pyarrow rejects an offset with seconds (PG prints
+    ``+00:19:32`` for pre-1900 values in zones like Europe/Amsterdam),
+    and a value with no offset when the column type has a time zone. A
+    bytea is read as hex, whatever the server's ``bytea_output``."""
     from pyspark.sql import types as T
 
-    if isinstance(dtype, T.BooleanType):
-        return lambda s: s == "t"
-    if isinstance(dtype, (T.LongType, T.IntegerType, T.ShortType)):
-        return int
-    if isinstance(dtype, (T.DoubleType, T.FloatType)):
-        return float
-    if isinstance(dtype, T.DecimalType):
-        return Decimal
-    if isinstance(dtype, T.BinaryType):
-        return lambda s: (
-            bytes.fromhex(s[2:]) if s.startswith("\\x") else s.encode()
-        )
-    if isinstance(dtype, T.DateType):
-        return dt.date.fromisoformat
-    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-        return dt.datetime.fromisoformat
-    return lambda s: s
+    col = _quote_ident(field.name)
+    if isinstance(field.dataType, T.TimestampType):
+        return f"({col} AT TIME ZONE 'UTC') AS {col}"
+    if isinstance(field.dataType, T.BinaryType):
+        return f"encode({col}, 'hex') AS {col}"
+    return col
 
 
 class RangePartition(InputPartition):
@@ -401,56 +366,14 @@ class PostgresReader(DataSourceReader):
         return parts
 
     # -- execution -----------------------------------------------------
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        cols = ", ".join(
-            _quote_ident(f.name) for f in self.schema_struct.fields
-        )
-        sql = (
-            f"SELECT {cols} FROM {self._relation()}"
-            + self._where(getattr(partition, "clause", None))
-        )
-        method = (self.options.get("read_method") or "copy").lower()
-        if method == "row":
-            # Extended-query row protocol: one DataRow message per row.
-            # Kept as an option for diagnostics/compat; COPY is the
-            # default — the write path measured COPY at 10-20x the row
-            # protocol and the read direction pays the same per-message
-            # tax in reverse.
-            with self._connection() as conn:
-                cur = conn.cursor()
-                cur.execute(sql)
-                rows = cur.fetchall()
-            yield from rows
-            return
-        arrow_types = [
-            _arrow_type(f.dataType) for f in self.schema_struct.fields
-        ]
-        if method != "copy_text" and all(t is not None for t in arrow_types):
-            yield from self._read_copy_arrow(sql, arrow_types)
-            return
-        yield from self._read_copy_text(sql)
-
-    def _copy_fetch(self, copy_sql: str):
-        """Run one COPY ... TO STDOUT and return the raw byte stream.
-        Memory profile matches the row path (which also materialized
-        the stride) — strides are bounded by num_partitions sizing.
-        With ``max_copy_bytes`` set, a stream past the cap raises
-        :class:`CopyTooLarge` mid-COPY, leaving the connection unusable."""
-        cap = self.max_copy_bytes
-        buf = io.BytesIO() if cap is None else _CappedBuffer(cap)
-        with self._connection() as conn:
-            conn.cursor().copy_expert(copy_sql, buf)
-        buf.seek(0)
-        return buf
-
-    def _read_copy_arrow(self, sql: str, arrow_types: list):
-        """Vectorized stride read: COPY CSV → pyarrow.csv (C++ parse)
-        → RecordBatch yields. Spark's Python DataSource accepts Arrow
-        batches directly, so no per-row Python runs on EITHER side —
-        measured ~4x the row protocol client-side at 200K rows, more
-        end-to-end once Spark's row pickling is counted. NULLs travel
-        as unquoted \\N (PG quotes any data value equal to the marker,
-        and quoted_strings_can_be_null=False keeps those as strings).
+    def read(self, partition: InputPartition) -> Iterator:
+        """One stride as pyarrow RecordBatches: COPY CSV → ``pyarrow.csv``
+        (C++ parse). Spark's Python DataSource accepts Arrow batches
+        directly, so no per-row Python runs on either side — measured
+        ~4x the row protocol client-side at 200K rows, more end-to-end
+        once Spark's row pickling is counted. NULLs travel as unquoted
+        \\N (PG quotes any data value equal to the marker, and
+        quoted_strings_can_be_null=False keeps those as strings).
 
         ``newlines_in_values=True`` is mandatory, not an option: PG's CSV
         COPY quotes embedded newlines, but pyarrow's parallel chunker
@@ -462,14 +385,23 @@ class PostgresReader(DataSourceReader):
         rows of parse time — ~1% of the stride read (COPY transfer
         dominates), so it stays unconditional rather than adaptive (see
         bench ``source_pg_read_rows_per_sec``)."""
+        import pyarrow as pa
         from pyarrow import csv as pacsv
+        from pyspark.sql import types as T
 
+        fields = self.schema_struct.fields
+        arrow_types = [_arrow_type(f) for f in fields]
+        cols = ", ".join(_select_expr(f) for f in fields)
+        sql = (
+            f"SELECT {cols} FROM {self._relation()}"
+            + self._where(getattr(partition, "clause", None))
+        )
         buf = self._copy_fetch(
             f"COPY ({sql}) TO STDOUT WITH (FORMAT csv, NULL '\\N')"
         )
         if not buf.getbuffer().nbytes:
             return  # empty stride: pyarrow rejects an empty CSV stream
-        names = [f.name for f in self.schema_struct.fields]
+        names = [f.name for f in fields]
         tbl = pacsv.read_csv(
             buf,
             read_options=pacsv.ReadOptions(column_names=names),
@@ -483,23 +415,30 @@ class PostgresReader(DataSourceReader):
                 false_values=["f"],
             ),
         )
+        for i, f in enumerate(fields):
+            if isinstance(f.dataType, T.TimestampType):
+                utc = tbl.column(i).cast(pa.timestamp("us", tz="UTC"))
+                tbl = tbl.set_column(i, f.name, utc)
+            elif isinstance(f.dataType, T.BinaryType):
+                raw = [
+                    None if h is None else bytes.fromhex(h)
+                    for h in tbl.column(i).to_pylist()
+                ]
+                tbl = tbl.set_column(i, f.name, pa.array(raw, pa.binary()))
         yield from tbl.to_batches()
 
-    def _read_copy_text(self, sql: str):
-        """COPY text-format fallback for schemas pyarrow can't parse
-        from CSV (bytea hex, timestamptz): tab-separated stream with
-        backslash escapes, decoded per the Spark schema."""
-        buf = self._copy_fetch(f"COPY ({sql}) TO STDOUT")
-        decoders = [
-            _pg_text_decoder(f.dataType) for f in self.schema_struct.fields
-        ]
-        for line in buf.getvalue().split(b"\n"):
-            if not line:
-                continue
-            yield tuple(
-                None if s == "\\N" else dec(_unescape(s))
-                for s, dec in zip(line.decode("utf-8").split("\t"), decoders)
-            )
+    def _copy_fetch(self, copy_sql: str):
+        """Run one COPY ... TO STDOUT and return the raw byte stream.
+        The stride is held in memory whole; strides are bounded by
+        num_partitions sizing. With ``max_copy_bytes`` set, a stream
+        past the cap raises :class:`CopyTooLarge` mid-COPY, leaving the
+        connection unusable."""
+        cap = self.max_copy_bytes
+        buf = io.BytesIO() if cap is None else _CappedBuffer(cap)
+        with self._connection() as conn:
+            conn.cursor().copy_expert(copy_sql, buf)
+        buf.seek(0)
+        return buf
 
 
 class PostgresDataSource(DataSource):
@@ -1037,7 +976,7 @@ def read_on_driver(spark, options: dict, max_bytes: int, watermark=None):
 
     One connection runs the size probe, the schema probe
     (:func:`describe_schema`) and :meth:`PostgresReader.read` over the
-    whole table (COPY CSV → Arrow, or the text fallback), then
+    whole table (COPY CSV → Arrow), then
     ``spark.createDataFrame`` makes a local relation: no planner
     workers, no Python scan stage, no job. ``watermark`` is an
     incremental ``(cursor, last)``: ``cursor > last`` goes into the
@@ -1047,7 +986,6 @@ def read_on_driver(spark, options: dict, max_bytes: int, watermark=None):
     if max_bytes < 0 or options.get("query"):
         return None
     import pyarrow as pa
-    from pyspark.sql.conversion import LocalDataToArrowConversion
     from pyspark.sql.pandas.types import to_arrow_schema
 
     reader = PostgresReader(options, None)
@@ -1075,12 +1013,10 @@ def read_on_driver(spark, options: dict, max_bytes: int, watermark=None):
             out = list(reader.read(RangePartition(None)))
     except CopyTooLarge:
         return None
-    if not out:
-        table = to_arrow_schema(schema).empty_table()
-    elif isinstance(out[0], pa.RecordBatch):
-        table = pa.Table.from_batches(out)
-    else:  # tuples from the text fallback (bytea, timestamptz)
-        table = LocalDataToArrowConversion.convert(out, schema, False)
+    table = (
+        pa.Table.from_batches(out) if out
+        else to_arrow_schema(schema).empty_table()
+    )
     return spark.createDataFrame(table, schema)
 
 

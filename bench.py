@@ -304,8 +304,9 @@ def main(out_path: str | None = None) -> None:
         # Read-back throughput (round-7 verdict #5): the merge bench
         # leaves bench_pg_sink populated — time the DataSource stride
         # reader directly (driver-side; Spark task scheduling would
-        # swamp a 200K-row delta), COPY-CSV→Arrow default vs the
-        # extended-query row protocol.
+        # swamp a 200K-row delta), COPY-CSV→Arrow against a pgwire
+        # fetchall() of the same SELECT over the extended-query row
+        # protocol.
         from apitap_spark.sources.pgsource import (
             PostgresDataSource,
             PostgresReader,
@@ -314,15 +315,28 @@ def main(out_path: str | None = None) -> None:
 
         src_opts = {"dsn": dsn, "table": "bench_pg_sink"}
         src_schema = PostgresDataSource(options=src_opts).schema()
-        for method in ("row", "copy"):
-            reader = PostgresReader(
-                {**src_opts, "read_method": method}, src_schema
-            )
-            list(reader.read(RangePartition(None)))  # warm
+        reader = PostgresReader(src_opts, src_schema)
+        select = (
+            "SELECT " + ", ".join(f'"{n}"' for n in src_schema.names)
+            + ' FROM "bench_pg_sink"'
+        )
+
+        def fetch_rows():
+            conn = pgwire.connect(dsn)
+            try:
+                return conn.cursor().execute(select).fetchall()
+            finally:
+                conn.close()
+
+        for method, read in (
+            ("row", fetch_rows),
+            ("copy", lambda: list(reader.read(RangePartition(None)))),
+        ):
+            read()  # warm
             runs = []
             for _ in range(SINK_RUNS):
                 t0 = time.perf_counter()
-                list(reader.read(RangePartition(None)))
+                read()
                 runs.append(time.perf_counter() - t0)
             read_runs[method] = runs
         source_pg_read_rows_per_sec = round(

@@ -1,5 +1,5 @@
-"""Server-free tests of the apitap_postgres filter rendering and the
-COPY byte cap of the driver read."""
+"""Server-free tests of the apitap_postgres filter rendering, the COPY
+byte cap of the driver read and the stride read's type handling."""
 
 from __future__ import annotations
 
@@ -49,12 +49,13 @@ class _FakeCopyConn:
     frames arrive; records how many it delivered."""
 
     def __init__(self, chunks):
-        self.chunks, self.sent = chunks, 0
+        self.chunks, self.sent, self.sql = chunks, 0, None
 
     def cursor(self):
         return self
 
     def copy_expert(self, sql, file):
+        self.sql = sql
         for c in self.chunks:
             file.write(c)
             self.sent += 1
@@ -82,3 +83,61 @@ def test_copy_stream_within_the_cap_reads_every_row():
     conn = _FakeCopyConn([b"1\n2\n", b"3\n"])
     batches = list(_capped_reader(conn, 6).read(RangePartition(None)))
     assert [v for b in batches for v in b.column(0).to_pylist()] == [1, 2, 3]
+
+
+def test_stride_read_converts_timestamptz_and_bytea():
+    """The COPY selects a timestamptz as UTC wall time and a bytea as hex,
+    and the reader turns them back into UTC timestamps and bytes; every
+    other column keeps its plain select-list entry."""
+    import datetime as dt
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    conn = _FakeCopyConn(
+        [b"1,00ff0a,2024-03-10 06:59:59.5\n", b"2,,1850-01-01 00:00:00\n3,\\N,\\N\n"]
+    )
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("by", T.BinaryType()),
+            T.StructField("tz", T.TimestampType()),
+        ]
+    )
+    reader = PostgresReader({"dsn": "unused", "table": "t"}, schema)
+    reader.conn = conn
+    batches = list(reader.read(RangePartition(None)))
+    assert conn.sql == (
+        """COPY (SELECT "id", encode("by", 'hex') AS "by","""
+        """ ("tz" AT TIME ZONE 'UTC') AS "tz" FROM "t")"""
+        """ TO STDOUT WITH (FORMAT csv, NULL '\\N')"""
+    )
+    tbl = pa.Table.from_batches(batches)
+    assert tbl.schema.field("by").type == pa.binary()
+    assert tbl.schema.field("tz").type == pa.timestamp("us", tz="UTC")
+    utc = dt.timezone.utc
+    assert tbl.to_pylist() == [
+        {"id": 1, "by": b"\x00\xff\n",
+         "tz": dt.datetime(2024, 3, 10, 6, 59, 59, 500000, tzinfo=utc)},
+        {"id": 2, "by": b"", "tz": dt.datetime(1850, 1, 1, tzinfo=utc)},
+        {"id": 3, "by": None, "tz": None},
+    ]
+
+
+def test_unreadable_schema_type_is_refused_by_column_name():
+    """A ``.schema()`` type outside the OID mapping fails before any COPY
+    runs, with the column named."""
+    from pyspark.sql import types as T
+
+    conn = _FakeCopyConn([b"1\n"])
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("tags", T.ArrayType(T.StringType())),
+        ]
+    )
+    reader = PostgresReader({"dsn": "unused", "table": "t"}, schema)
+    reader.conn = conn
+    with pytest.raises(ValueError, match="'tags'"):
+        list(reader.read(RangePartition(None)))
+    assert conn.sql is None

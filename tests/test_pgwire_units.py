@@ -229,17 +229,6 @@ def test_cert_sig_hash_malformed_falls_back_sha256():
         assert _cert_sig_hash(der) == hashlib.sha256(der).digest()
 
 
-def test_forget_statements_moves_names_to_orphans():
-    from apitap_spark.sinks.pgwire import Connection
-
-    conn = Connection.__new__(Connection)
-    conn._stmt_cache = {("SELECT 1", ()): b"_ap1", ("SELECT 2", ()): b"_ap2"}
-    conn._stmt_orphans = [b"_ap0"]
-    conn._forget_statements()
-    assert conn._stmt_cache == {}
-    assert sorted(conn._stmt_orphans) == [b"_ap0", b"_ap1", b"_ap2"]
-
-
 @given(st.binary(max_size=96))
 def test_cert_sig_hash_total_on_arbitrary_bytes(junk):
     """The DER walk must be total: any byte soup falls back to SHA-256
@@ -304,3 +293,84 @@ def test_connection_sets_tcp_nodelay():
         t.join(5)
         srv.close()
     assert not t.is_alive()
+
+
+def test_every_execute_parses_the_unnamed_statement():
+    """Each execute Parses its SQL into the unnamed statement and Binds
+    the unnamed portal to it: eight executes of one SQL string send eight
+    Parse messages and no Close, and so do eight more after an
+    ErrorResponse and a ``rollback()``. A scripted in-process server
+    answers every message and records what the client sent."""
+    import socket
+    import struct
+    import threading
+
+    import pytest
+
+    from apitap_spark.sinks.pgwire import Connection, PgError
+
+    def msg(mtype: bytes, body: bytes = b"") -> bytes:
+        return mtype + struct.pack(">i", len(body) + 4) + body
+
+    srv = socket.create_server(("127.0.0.1", 0))
+    port = srv.getsockname()[1]
+    sent: list[tuple[bytes, bytes]] = []
+
+    def serve():
+        peer, _ = srv.accept()
+        with peer:
+            (n,) = struct.unpack(">i", _recv_exact(peer, 4))
+            _recv_exact(peer, n - 4)  # startup packet
+            peer.sendall(msg(b"R", struct.pack(">i", 0)) + msg(b"Z", b"I"))
+            status, failing = b"I", False
+            while True:
+                mtype = _recv_exact(peer, 1)
+                (n,) = struct.unpack(">i", _recv_exact(peer, 4))
+                body = _recv_exact(peer, n - 4)
+                sent.append((mtype, body))
+                if mtype == b"X":  # Terminate
+                    return
+                if mtype == b"Q":  # BEGIN / ROLLBACK
+                    status = b"T" if body.startswith(b"BEGIN") else b"I"
+                    peer.sendall(msg(b"C", body) + msg(b"Z", status))
+                elif mtype == b"P":
+                    failing = b"boom" in body
+                elif mtype == b"S":  # answer the whole pipeline at Sync
+                    if failing:
+                        status = b"E"
+                        reply = msg(b"E", b"SERROR\x00C42703\x00Mboom\x00\x00")
+                    else:
+                        reply = (
+                            msg(b"1") + msg(b"2") + msg(b"n")
+                            + msg(b"C", b"SELECT 0\x00")
+                        )
+                    peer.sendall(reply + msg(b"Z", status))
+
+    t = threading.Thread(target=serve, daemon=True)
+    t.start()
+    conn = Connection(f"host=127.0.0.1 port={port} user=u")
+    try:
+        cur = conn.cursor()
+        for i in range(8):
+            cur.execute("SELECT %s", (i,))
+        with pytest.raises(PgError, match="boom"):
+            cur.execute("SELECT boom")
+        conn.rollback()
+        for i in range(8):
+            cur.execute("SELECT %s", (i,))
+    finally:
+        conn.close()
+        t.join(5)
+        srv.close()
+    assert not t.is_alive()
+    # Parse: unnamed statement, SQL, one parameter of OID 20 (int8)
+    parse = b"\x00SELECT $1\x00" + struct.pack(">hi", 1, 20)
+    parses = [body for mtype, body in sent if mtype == b"P"]
+    assert parses == [parse] * 8 + [b"\x00SELECT boom\x00\x00\x00"] + [parse] * 8
+    binds = [body for mtype, body in sent if mtype == b"B"]
+    assert len(binds) == 17
+    assert all(body.startswith(b"\x00\x00") for body in binds)  # portal, statement
+    assert b"C" not in {mtype for mtype, _ in sent}  # no Close
+    assert [body for mtype, body in sent if mtype == b"Q"] == [
+        b"BEGIN\x00", b"ROLLBACK\x00", b"BEGIN\x00"
+    ]

@@ -403,69 +403,6 @@ def test_prepare_refuses_a_driver_without_copy_live(pg_conn):
     assert cur.fetchone() == (None,)
 
 
-def test_prepared_reuse_skips_parse_messages(pg_conn):
-    """Deterministic protocol proof of statement reuse: N repeated
-    executes of the same (sql, oid-vector) must send exactly TWO Parse
-    messages (the unnamed first execution + the promotion), never N —
-    counted on the wire, immune to timing noise."""
-    _pgwire_only(pg_conn)
-    cur = pg_conn.cursor()
-    sql = "SELECT %s::bigint * 2 AS x"
-    sent: list[bytes] = []
-    orig = pg_conn._send
-    pg_conn._send = lambda mtype, body: (sent.append(mtype), orig(mtype, body))
-    try:
-        for i in range(8):
-            assert cur.execute(sql, (i,)).fetchone()[0] == 2 * i
-    finally:
-        pg_conn._send = orig
-    assert sent.count(b"P") == 2, sent
-    pg_conn.commit()
-
-
-def test_prepared_reuse_speeds_repeated_big_statement(pg_conn, monkeypatch):
-    """Throughput half of the reuse claim, on the shape where Parse
-    cost is a real fraction: a 10000-placeholder upsert executed
-    repeatedly. Measured ~1.5x on this box; asserted at a lenient
-    1.1x (the reference's own docs claim 10-20% for its equivalent).
-    Within the MERGE writer the server-side MERGE join dominates, so
-    the end-to-end win there is smaller — the protocol-level Parse
-    skip is what this pins."""
-    import time as _t
-
-    from apitap_spark.sinks import pgwire
-
-    _pgwire_only(pg_conn)
-    cur = pg_conn.cursor()
-    cur.execute(f"DROP TABLE IF EXISTS {TABLE}")
-    cur.execute(
-        f"CREATE TABLE {TABLE} (id BIGINT PRIMARY KEY, v DOUBLE PRECISION)"
-    )
-    pg_conn.commit()
-    nrow = 5000
-    sql = (
-        f"INSERT INTO {TABLE} VALUES " + ",".join(["(%s,%s)"] * nrow)
-        + " ON CONFLICT (id) DO UPDATE SET v = EXCLUDED.v"
-    )
-    params = [x for i in range(nrow) for x in (i, i / 7.0)]
-    timings = {}
-    for name, thr in (("reused", 2), ("reparse", 10**9)):
-        monkeypatch.setattr(pgwire, "PREPARE_THRESHOLD", thr)
-        conn = _factory()
-        try:
-            c = conn.cursor()
-            c.execute(sql, params)  # warm; promotes on the 'reused' leg
-            c.execute(sql, params)
-            t0 = _t.perf_counter()
-            for _ in range(8):
-                c.execute(sql, params)
-            timings[name] = _t.perf_counter() - t0
-            conn.commit()
-        finally:
-            conn.close()
-    assert timings["reused"] * 1.1 < timings["reparse"], timings
-
-
 def test_merge_with_cross_partition_duplicate_keys_live(spark, pg_conn):
     """Duplicate PKs split across input partitions must not race: the
     writer hash-partitions by key before the fan-in, so equal keys meet
@@ -496,13 +433,16 @@ def _pgwire_only(conn):
 
 
 def test_copy_out_roundtrip_matches_row_protocol(pg_conn):
-    """Protocol-level COPY TO STDOUT must return exactly what the
-    extended-query row protocol returns — NULLs, embedded tabs/
-    newlines/backslashes, bytea, timestamps, numerics, booleans.
-    This is the client half of the DataSource's per-stride COPY read."""
+    """The DataSource's stride read (protocol-level COPY TO STDOUT in CSV,
+    parsed into Arrow) must return exactly what the extended-query row
+    protocol returns — NULLs, embedded tabs/newlines/backslashes, bytea,
+    timestamps, numerics, booleans."""
     import datetime as dt
-    import io
     from decimal import Decimal
+
+    import pyarrow as pa
+
+    from apitap_spark.sources.pgsource import PostgresReader, RangePartition
 
     _pgwire_only(pg_conn)
     cur = pg_conn.cursor()
@@ -526,33 +466,31 @@ def test_copy_out_roundtrip_matches_row_protocol(pg_conn):
     pg_conn.commit()
     cur.execute(f"SELECT * FROM {TABLE} ORDER BY id")
     via_rows = cur.fetchall()
-
-    buf = io.BytesIO()
-    cur.copy_expert(f"COPY (SELECT * FROM {TABLE} ORDER BY id) TO STDOUT", buf)
     pg_conn.commit()
 
-    from pyspark.sql import types as T
-
-    from apitap_spark.sources.pgsource import _pg_text_decoder, _unescape
-
-    decoders = [
-        _pg_text_decoder(t)
-        for t in (
-            T.LongType(), T.StringType(), T.DoubleType(), T.BooleanType(),
-            T.BinaryType(), T.TimestampNTZType(), T.DecimalType(12, 4),
-        )
-    ]
-    via_copy = []
-    for line in buf.getvalue().split(b"\n"):
-        if not line:
-            continue
-        via_copy.append(
-            tuple(
-                None if s == "\\N" else dec(_unescape(s))
-                for s, dec in zip(line.decode().split("\t"), decoders)
+    schema = T.StructType(
+        [
+            T.StructField(name, t)
+            for name, t in zip(
+                ("id", "s", "d", "f", "by", "ts", "n"),
+                (
+                    T.LongType(), T.StringType(), T.DoubleType(),
+                    T.BooleanType(), T.BinaryType(), T.TimestampNTZType(),
+                    T.DecimalType(12, 4),
+                ),
             )
+        ]
+    )
+    batches = list(
+        PostgresReader({"dsn": DSN, "table": TABLE}, schema).read(
+            RangePartition(None)
         )
-    assert via_copy == via_rows
+    )
+    assert batches and all(isinstance(b, pa.RecordBatch) for b in batches)
+    via_copy = sorted(
+        tuple(r.values()) for r in pa.Table.from_batches(batches).to_pylist()
+    )
+    assert via_copy == via_rows == rows
 
 
 def test_copy_out_into_text_mode_file(pg_conn):
@@ -566,68 +504,11 @@ def test_copy_out_into_text_mode_file(pg_conn):
     assert sio.getvalue() == "1\ta\n"
 
 
-def test_prepared_statement_reuse_promotes_and_invalidates(pg_conn):
-    """The (sql, oid-vector) cache must promote to a server-side named
-    statement at the threshold (visible in pg_prepared_statements),
-    keep answering correctly on reuse, and clear itself when a
-    transaction aborts (ROLLBACK discards statements parsed in it)."""
-    from apitap_spark.sinks import pgwire
-
-    _pgwire_only(pg_conn)
-    cur = pg_conn.cursor()
-    sql = "SELECT %s::bigint + 1 AS x"
-    for i in (1, 2, 3):  # 1st: unnamed; 2nd: promote+parse; 3rd: reuse
-        assert cur.execute(sql, (i,)).fetchone()[0] == i + 1
-    assert pg_conn._stmt_cache, "statement was not promoted"
-    cur.execute("SELECT name FROM pg_prepared_statements")
-    names = {r[0] for r in cur.fetchall()}
-    assert any(n.startswith("_ap") for n in names), names
-    pg_conn.commit()
-
-    # error aborts the txn -> conservative full cache clear
-    with pytest.raises(pgwire.PgError):
-        cur.execute("SELECT no_such_column_xyz")
-    pg_conn.rollback()
-    assert pg_conn._stmt_cache == {}
-    # and the same statement re-parses cleanly afterwards
-    assert cur.execute(sql, (7,)).fetchone()[0] == 8
-    pg_conn.commit()
-
-
-def test_no_server_side_statement_leak_across_error_cycles(pg_conn):
-    """Round-8 ADVICE #2 regression: statements promoted in COMMITTED
-    transactions survive a later error's cache clear server-side; the
-    client must Close them (piggybacked on the next healthy query)
-    instead of leaking a fresh _apN per re-promotion. After many
-    error/recover cycles, pg_prepared_statements must hold at most the
-    live cache, not one statement per cycle."""
-    from apitap_spark.sinks import pgwire
-
-    _pgwire_only(pg_conn)
-    cur = pg_conn.cursor()
-    sql = "SELECT %s::bigint * 2 AS x"
-    for cycle in range(6):
-        for i in (1, 2, 3):  # promote (threshold 2) then reuse
-            assert cur.execute(sql, (i,)).fetchone()[0] == 2 * i
-        pg_conn.commit()  # statement now survives any later ROLLBACK
-        with pytest.raises(pgwire.PgError):
-            cur.execute("SELECT no_such_column_zzz")
-        pg_conn.rollback()
-        assert pg_conn._stmt_cache == {}
-        assert pg_conn._stmt_orphans  # the survivor awaits a Close
-    # next healthy query flushes every orphaned Close
-    assert cur.execute(sql, (10,)).fetchone()[0] == 20
-    assert pg_conn._stmt_orphans == []
-    cur.execute("SELECT COUNT(*) FROM pg_prepared_statements")
-    n_server = cur.fetchone()[0]
-    assert n_server <= len(pg_conn._stmt_cache) + 1, n_server
-    pg_conn.commit()
-
-
 def test_prepared_statement_oid_vector_keys_cache(pg_conn):
-    """Same SQL text with different Python param types must prepare
-    separately — Parse freezes parameter OIDs, and binding a float to
-    an int-parsed statement (or vice versa) would corrupt or error."""
+    """Same SQL text with different Python param types must come back
+    typed by each value — Parse carries the parameter OIDs, and an int
+    bound to a float-parsed statement (or vice versa) would corrupt or
+    error."""
     _pgwire_only(pg_conn)
     cur = pg_conn.cursor()
     sql = "SELECT %s AS v"
@@ -635,7 +516,28 @@ def test_prepared_statement_oid_vector_keys_cache(pg_conn):
         assert cur.execute(sql, (5,)).fetchone()[0] == 5
     for _ in range(3):
         assert cur.execute(sql, (5.5,)).fetchone()[0] == 5.5
-    assert len(pg_conn._stmt_cache) == 2
+    pg_conn.commit()
+
+
+def test_error_rollback_cycles_leave_no_prepared_statement(pg_conn):
+    """Every extended query parses the unnamed statement, so repeated
+    statements, errors and rollbacks leave no named statement behind in
+    ``pg_prepared_statements``."""
+    from apitap_spark.sinks import pgwire
+
+    _pgwire_only(pg_conn)
+    cur = pg_conn.cursor()
+    sql = "SELECT %s::bigint * 2 AS x"
+    for _ in range(3):
+        for i in (1, 2, 3):
+            assert cur.execute(sql, (i,)).fetchone()[0] == 2 * i
+        pg_conn.commit()
+        with pytest.raises(pgwire.PgError):
+            cur.execute("SELECT no_such_column_zzz")
+        pg_conn.rollback()
+    assert cur.execute(sql, (10,)).fetchone()[0] == 20
+    cur.execute("SELECT COUNT(*) FROM pg_prepared_statements")
+    assert cur.fetchone() == (0,)
     pg_conn.commit()
 
 

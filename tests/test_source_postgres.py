@@ -389,12 +389,17 @@ def _exec(*statements: str) -> None:
 def test_driver_read_matches_datasource_schema_and_rows(spark):
     """The driver read and the DataSource map a relation to the same
     schema and the same rows: over a table with a column of every OID
-    ``_oid_to_spark_type`` maps (bytea and timestamptz take the COPY text
-    fallback) and over an empty table."""
+    ``_oid_to_spark_type`` maps, over an empty table, and over bytea and
+    timestamptz values read under a non-UTC server zone. That last
+    table's rows must also equal the ones the COPY text decode returned
+    before the read went through CSV: every byte value, an empty bytea,
+    a pre-1900 instant (Europe/Amsterdam prints it with a ``+00:19:32``
+    offset) and both sides of a DST change."""
     from apitap_spark.sources.pgsource import PostgresDataSource, read_on_driver
 
     every = "pgsrc_every_oid"
     empty = "pgsrc_empty"
+    zoned = "pgsrc_tz_bytea"
     _exec(
         f"DROP TABLE IF EXISTS {every}",
         f"CREATE TABLE {every} (b BOOLEAN, by BYTEA, i8 BIGINT, i2 SMALLINT,"
@@ -413,10 +418,31 @@ def test_driver_read_matches_datasource_schema_and_rows(spark):
         f"DROP TABLE IF EXISTS {empty}",
         f"CREATE TABLE {empty} (id BIGINT, tz TIMESTAMPTZ, by BYTEA)",
     )
+    all_bytes = bytes(range(256))
+    _exec(
+        f"DROP TABLE IF EXISTS {zoned}",
+        f"CREATE TABLE {zoned} (id INTEGER, by BYTEA, tz TIMESTAMPTZ)",
+        f"""INSERT INTO {zoned} VALUES
+            (1, '\\x{all_bytes.hex()}', '1850-01-01 00:00:00+00'),
+            (2, '', '2024-03-31 01:30:00+00'),
+            (3, NULL, '2024-11-03 05:30:00-05'),
+            (4, NULL, NULL)""",
+    )
+    # recorded from the COPY text decode (session time zone UTC)
+    zoned_rows = [
+        (1, all_bytes, dt.datetime(1850, 1, 1, 0, 0)),
+        (2, b"", dt.datetime(2024, 3, 31, 1, 30)),
+        (3, None, dt.datetime(2024, 11, 3, 10, 30)),
+        (4, None, None),
+    ]
     spark.dataSource.register(PostgresDataSource)
     try:
-        for table, n in ((every, 3), (empty, 0)):
-            opts = {"dsn": DSN, "table": table}
+        for table, dsn, want_rows in (
+            (every, DSN, 3),
+            (empty, DSN, 0),
+            (zoned, DSN + " timezone=Europe/Amsterdam", zoned_rows),
+        ):
+            opts = {"dsn": dsn, "table": table}
             on_driver = read_on_driver(spark, opts, 1 << 30)
             assert on_driver is not None
             via_source = spark.read.format("apitap_postgres").options(**opts).load()
@@ -424,9 +450,13 @@ def test_driver_read_matches_datasource_schema_and_rows(spark):
             assert on_driver.selectExpr("*").schema == want == via_source.schema
             got = sorted(map(repr, on_driver.collect()))  # repr: NaN == NaN
             assert got == sorted(map(repr, via_source.collect()))
-            assert len(got) == n
+            if isinstance(want_rows, int):
+                assert len(got) == want_rows
+            else:
+                for frame in (on_driver, via_source):
+                    assert sorted(map(tuple, frame.collect())) == want_rows
     finally:
-        _exec(f"DROP TABLE {every}", f"DROP TABLE {empty}")
+        _exec(f"DROP TABLE {every}", f"DROP TABLE {empty}", f"DROP TABLE {zoned}")
 
 
 def test_driver_read_declines_large_missing_and_disabled(spark, seeded_table):
@@ -547,18 +577,28 @@ def test_non_finite_float_filters_push_like_spark(spark):
         _exec(f"DROP TABLE {table}")
 
 
+def _fetchall(sql: str) -> list[tuple]:
+    """``sql`` over pgwire's extended-query row protocol: the reference
+    the COPY stride read is checked against."""
+    from apitap_spark.sinks import pgwire
+
+    conn = pgwire.connect(DSN)
+    try:
+        return conn.cursor().execute(sql).fetchall()
+    finally:
+        conn.close()
+
+
 def test_copy_read_matches_row_protocol_read(spark, seeded_table):
-    """The default per-stride COPY TO STDOUT read must return exactly
-    what the extended-query row protocol returns — same values, same
-    types, across NULLs, bools, doubles, timestamps and numerics."""
+    """The per-stride COPY TO STDOUT read must return exactly what the
+    extended-query row protocol returns — same values, same types,
+    across NULLs, bools, doubles, timestamps and numerics."""
     kw = dict(table=TABLE, partition_column="id", num_partitions=4)
     via_copy = sorted(
         _reader(spark, **kw).load().collect(), key=lambda r: r["id"]
     )
-    via_row = sorted(
-        _reader(spark, read_method="row", **kw).load().collect(),
-        key=lambda r: r["id"],
-    )
+    via_row = _fetchall(f"SELECT * FROM {TABLE} ORDER BY id")
+    assert len(via_row) == N_ROWS
     assert via_copy == via_row
 
 
@@ -569,8 +609,8 @@ def test_copy_arrow_newlines_survive_large_stride(spark):
     parser got out of sync with chunker`` (the parallel chunker splits
     blocks on raw newlines; ParseOptions(newlines_in_values=True) is
     the fix). Builds ~4 MB of newline-laden text server-side, reads it
-    through the DEFAULT path in ONE partition, and cross-checks the
-    row protocol."""
+    through the DataSource in ONE partition, and cross-checks the row
+    protocol."""
     from apitap_spark.sinks import pgwire
 
     table = "pgsrc_newline_docs"
@@ -596,11 +636,7 @@ def test_copy_arrow_newlines_survive_large_stride(spark):
         assert got[0]["body"].count("\n") == 60
         assert got[0]["body"].endswith("tail-1")
         assert '"ipsum"' in got[0]["body"]
-        via_row = sorted(
-            _reader(spark, table=table, read_method="row").load().collect(),
-            key=lambda r: r["id"],
-        )
-        assert got == via_row
+        assert got == _fetchall(f"SELECT * FROM {table} ORDER BY id")
     finally:
         try:
             cur = conn.cursor()
@@ -643,18 +679,19 @@ def test_copy_read_throughput_beats_row_protocol(seeded_table):
                 T.StructField("flag", T.BooleanType()),
             ]
         )
-        part = RangePartition(None)
+        reader = PostgresReader({"dsn": DSN, "table": big}, schema)
+        reads = {  # the same SELECT either way
+            "row": lambda: _fetchall(f"SELECT id, name, val, flag FROM {big}"),
+            "copy": lambda: list(reader.read(RangePartition(None))),
+        }
         timings = {}
         counts = {}
         for method in ("row", "copy"):  # row first: copy gets no cache edge
-            reader = PostgresReader(
-                {"dsn": DSN, "table": big, "read_method": method}, schema
-            )
-            list(reader.read(part))  # warm (page cache, connection path)
+            reads[method]()  # warm (page cache, connection path)
             best = float("inf")
             for _ in range(3):  # best-of-3: shared-box noise immunity
                 t0 = _t.perf_counter()
-                out = list(reader.read(part))
+                out = reads[method]()
                 best = min(best, _t.perf_counter() - t0)
             timings[method] = best
             counts[method] = (
@@ -677,9 +714,9 @@ def test_copy_read_throughput_beats_row_protocol(seeded_table):
 
 
 def test_copy_read_yields_arrow_batches_for_safe_schema(seeded_table):
-    """The default read path must actually hand Spark Arrow
-    RecordBatches (a silent fallback to per-tuple decode would keep
-    results correct but lose the vectorized handoff)."""
+    """The stride read must hand Spark Arrow RecordBatches, never
+    tuples, for every type the schema mapping returns: bytea and
+    timestamptz columns included."""
     import pyarrow as pa
 
     from pyspark.sql import types as T
@@ -700,10 +737,13 @@ def test_copy_read_yields_arrow_batches_for_safe_schema(seeded_table):
     out = list(reader.read(RangePartition(None)))
     assert out and all(isinstance(b, pa.RecordBatch) for b in out)
     assert sum(b.num_rows for b in out) == N_ROWS
-    # a bytea column forces the tuple fallback (pyarrow can't parse
-    # PG hex from CSV) — same reader, different schema
+    # bytea and timestamptz columns are Arrow batches too
     with_bin = T.StructType(
-        schema.fields[:1] + [T.StructField("name", T.BinaryType())]
+        schema.fields[:1]
+        + [
+            T.StructField("name", T.BinaryType()),
+            T.StructField("tz", T.TimestampType()),
+        ]
     )
     reader2 = PostgresReader(
         # convert_to(), not ::bytea — the cast re-parses backslash
@@ -711,14 +751,23 @@ def test_copy_read_yields_arrow_batches_for_safe_schema(seeded_table):
         {
             "dsn": DSN,
             "query": (
-                f"SELECT id, convert_to(name, 'UTF8') AS name FROM {TABLE}"
+                f"SELECT id, convert_to(name, 'UTF8') AS name,"
+                f" ts AT TIME ZONE 'UTC' AS tz FROM {TABLE}"
             ),
         },
         with_bin,
     )
-    rows = list(reader2.read(RangePartition(None)))
-    assert rows and all(isinstance(r, tuple) for r in rows)
-    assert len(rows) == N_ROWS
+    out = list(reader2.read(RangePartition(None)))
+    assert out and all(isinstance(b, pa.RecordBatch) for b in out)
+    got = pa.Table.from_batches(out).to_pylist()
+    assert len(got) == N_ROWS
+    by_id = {r[0]: r for r in seeded_table}
+    for r in got:
+        want = by_id[r["id"]]
+        assert r["name"] == (
+            None if want[1] is None else want[1].encode("utf-8")
+        )
+        assert r["tz"] == want[4].replace(tzinfo=dt.timezone.utc)
 
 
 def test_stream_read_incremental_microbatches(spark, tmp_path):
@@ -835,8 +884,8 @@ def test_copy_arrow_randomized_unicode_roundtrip(spark):
     """Deterministic fuzz of the COPY-CSV->Arrow read: 2000 rows of
     generated text spanning quotes, commas, CR/LF runs, tabs, literal
     \\N, unicode (CJK, emoji, combining marks, RTL) and control chars
-    (minus NUL, which PG text rejects) must round-trip the DEFAULT
-    read path identically to the row protocol."""
+    (minus NUL, which PG text rejects) must round-trip the DataSource
+    read identically to the row protocol."""
     import random
 
     from apitap_spark.sinks import pgwire
@@ -871,10 +920,7 @@ def test_copy_arrow_randomized_unicode_roundtrip(spark):
             _reader(spark, table=table).load().collect(),
             key=lambda r: r["id"],
         )
-        got_row = sorted(
-            _reader(spark, table=table, read_method="row").load().collect(),
-            key=lambda r: r["id"],
-        )
+        got_row = _fetchall(f"SELECT * FROM {table} ORDER BY id")
         assert got_copy == got_row
         assert len(got_copy) == 2000
         for (i, body), g in zip(rows, got_copy):
