@@ -16,14 +16,17 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from apitap_spark.pipeline.templating import unique_view_name
-from apitap_spark.sources.http import json_rows_frame
+from apitap_spark.sources.http import HttpSource
 
 
 def json_to_df(spark: SparkSession, values: list | dict, sample_size: int = 100) -> DataFrame:
     """JSON rows → DataFrame with sampled-inference schema
-    (reference ``Value::to_df``, src/utils/datafusion_ext.rs:54-71)."""
+    (reference ``Value::to_df``, src/utils/datafusion_ext.rs:54-71): the
+    rows are the one page of an HTTP fetch plan, decoded as fetched
+    pages are."""
     rows = values if isinstance(values, list) else [values]
-    return json_rows_frame(spark, rows, sample_size)
+    src = HttpSource(name="json", url="-", sample_size=sample_size)
+    return src.pages_frame(spark, rows, 1)
 
 
 class SqlResult:

@@ -1,41 +1,33 @@
-"""Spark 4 Python Data Source API wrapper for the paginated HTTP source.
+"""Spark 4 Python Data Source for streaming reads of the HTTP source.
 
-The idiomatic Spark 4 surface for S9 (SURVEY §2.1): the HTTP stream
-registers as a real ``spark.read.format(...)`` source, so scans plan
-through Catalyst like any other relation:
+``readStream.format("apitap_http")`` polls an append-only limit/offset
+API in micro-batches (SURVEY §2.1 S9, the reference's streaming-ingestion
+roadmap item):
 
     spark.dataSource.register(HttpJsonDataSource)
-    df = (spark.read.format("apitap_http")
-            .option("url", "https://api.example.com/items")
-            .option("pagination_type", "page_number")
-            .option("per_page", 50)
-            .option("data_path", "/data")
-            .load())
+    stream = (spark.readStream.format("apitap_http")
+                .option("url", "https://api.example.com/items")
+                .option("pagination_type", "limit_offset")
+                .option("limit", 50)
+                .load())
 
-Partition planning is one InputPartition per page (the reference's
-``buffer_unordered(5)`` concurrency becomes executor-task parallelism);
-cursor pagination degrades to a single sequential partition. ``schema()``
-must run before any executor exists, so it uses the driver-side flat
-inferencer (sources/schema.py) over the first page — the same sampled
-"fixed for the run" policy as the reference (SURVEY §1.3).
+The source is streaming-only. A batch read is ``HttpSource.load`` (or
+``register`` for a SQL view), whose one fetch plan decodes every page
+with ``typed_batch``. ``schema()`` runs in a planning worker with no
+SparkContext, so it uses the flat inferencer (sources/schema.py) over
+page 0, requested once — the same sampled "fixed for the run" policy as
+the reference (SURVEY §1.3).
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator, Sequence
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from apitap_spark.config.models import SourceConfig
 from apitap_spark.sources.http import (
     DEFAULT_SAMPLE_SIZE,
-    CursorPagination,
     HttpSource,
     LimitOffsetPagination,
 )
@@ -61,11 +53,11 @@ def _source_from_options(options: dict) -> HttpSource:
     block, ``retry_<key>`` onto ``retry:``) and build through
     ``SourceConfig``, so both paths parse and validate alike.
 
-    ``oauth_client_secret_env`` resolves in the calling process: readers
-    call this ONCE in their driver-side constructor and let the built
-    HttpSource pickle into executor tasks (auth.__getstate__ drops only
-    the token/lock, never the secret), so a cluster where the env var
-    exists solely on the driver still reads every partition."""
+    ``oauth_client_secret_env`` resolves in the calling process: the
+    stream reader calls this ONCE in its driver-side constructor and
+    keeps the built HttpSource (auth.__getstate__ drops only the
+    token/lock when it pickles, never the secret), so a cluster where
+    the env var exists solely on the driver still reads every batch."""
     pagination = {k: options[k] for k in _PAGINATION_OPTIONS if k in options}
     pagination["type"] = options.get("pagination_type", "limit_offset")
     if options.get("total_items_pointer"):
@@ -91,70 +83,6 @@ def _source_from_options(options: dict) -> HttpSource:
     return src
 
 
-class PagePartition(InputPartition):
-    """A strided slice of page indices. One partition = one Spark task =
-    one sequential fetch loop, so the partition count (≤ max_concurrency)
-    bounds in-flight requests — the reference's buffer_unordered(5)
-    politeness (src/cmd/mod.rs:18) expressed as partition planning."""
-
-    def __init__(self, pages: tuple, first: list | None = None):
-        super().__init__(pages)
-        self.pages = pages
-        self.first = first  # page 0's rows, fetched on the driver
-
-
-class CursorPartition(InputPartition):
-    def __init__(self):
-        super().__init__(0)
-
-
-class HttpJsonReader(DataSourceReader):
-    def __init__(self, options: dict, schema):
-        self._options = dict(options)
-        self._schema = schema
-        # Build the source (and resolve oauth_client_secret_env) ONCE,
-        # here on the driver: executor processes on a real cluster
-        # don't inherit driver-only env vars, so read() must never
-        # re-resolve them — the HttpSource pickles into each task with
-        # the secret inside the auth object (repr-hidden, token/lock
-        # stripped by __getstate__).
-        self._src = _source_from_options(self._options)
-
-    def partitions(self) -> Sequence[InputPartition]:
-        src = self._src
-        if isinstance(src.pagination, CursorPagination):
-            return [CursorPartition()]
-        # The same page plan as HttpSource.load; page 0's rows ride in
-        # the partition that holds page 0, so read() never refetches it.
-        first, n_pages = src.plan_pages()
-        k = max(1, min(n_pages, src.max_concurrency))
-        return [
-            PagePartition(
-                tuple(range(start, n_pages, k)), first if start == 0 else None
-            )
-            for start in range(k)
-        ]
-
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        import requests
-
-        src = self._src
-        if isinstance(partition, CursorPartition):
-            rows = src._cursor_rows()
-            for row in rows:
-                yield coerce_row(row, self._schema)
-            return
-        sess = requests.Session()
-        for page_idx in partition.pages:
-            rows = (
-                partition.first
-                if page_idx == 0
-                else src._fetch_page(page_idx, session=sess)
-            )
-            for row in rows:
-                yield coerce_row(row, self._schema)
-
-
 class HttpJsonSimpleStreamReader(SimpleDataSourceStreamReader):
     """Streaming poll of a limit/offset API: offset = rows consumed.
 
@@ -176,11 +104,10 @@ class HttpJsonSimpleStreamReader(SimpleDataSourceStreamReader):
         self._options = dict(options)
         self._schema = schema
         self._max_pages = int(options.get("max_pages_per_batch", 10))
-        # Same driver-side construction contract as HttpJsonReader: one
-        # env resolution, one auth object reused across EVERY micro-batch
-        # (the process-wide token cache in OAuth2ClientCredentials then
-        # guarantees at most one token POST per expiry window even on a
-        # 5s poll interval).
+        # Built ONCE, driver-side: one env resolution, one auth object
+        # reused across EVERY micro-batch (the process-wide token cache in
+        # OAuth2ClientCredentials then guarantees at most one token POST
+        # per expiry window even on a 5s poll interval).
         self._src = _source_from_options(self._options)
 
     def initialOffset(self) -> dict:
@@ -232,8 +159,8 @@ class HttpJsonSimpleStreamReader(SimpleDataSourceStreamReader):
 
 
 class HttpJsonDataSource(DataSource):
-    """``format("apitap_http")`` — paginated HTTP JSON as a first-class
-    Spark data source (batch ``read`` and streaming ``readStream``)."""
+    """``readStream.format("apitap_http")`` — an append-only limit/offset
+    HTTP JSON API as a Spark streaming source."""
 
     @classmethod
     def name(cls) -> str:
@@ -241,14 +168,7 @@ class HttpJsonDataSource(DataSource):
 
     def schema(self):
         src = _source_from_options(self.options)
-        if isinstance(src.pagination, CursorPagination):
-            rows = src._cursor_rows()
-        else:
-            rows = src._fetch_page(0)
-        return infer_schema_simple(rows, src.sample_size)
-
-    def reader(self, schema) -> DataSourceReader:
-        return HttpJsonReader(self.options, schema)
+        return infer_schema_simple(src._fetch_page(0), src.sample_size)
 
     def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
         return HttpJsonSimpleStreamReader(self.options, schema)

@@ -1,6 +1,6 @@
-"""File-format sources/sinks (SURVEY §2.1 S23 — the reference has none;
-Spark provides them natively, exposed here with the engine's inference
-policy and scale-aware write defaults)."""
+"""File-format sources (SURVEY §2.1 S23 — the reference has none; Spark
+provides them natively, exposed here with the engine's inference policy).
+Datasets are written by ``sinks/dataset.write_dataset``."""
 
 from __future__ import annotations
 
@@ -34,44 +34,3 @@ def read_files(
         options.setdefault("samplingRatio", str(sample_ratio))
     return reader.options(**options).format(fmt).load(path)
 
-
-def write_dataset(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    max_records_per_file: int | None = 1_000_000,
-) -> None:
-    """Write a dataset with scale-sane defaults: parquet, bounded file
-    sizes (prevents the giant-file straggler on read), optional hive-style
-    partitioning for downstream partition pruning."""
-    writer = df.write.mode(mode).format(fmt)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_by: str | list[str],
-    n_buckets: int = 64,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (+sorted) managed table.
-
-    Bucketing pre-shuffles the data once at write time: two tables
-    bucketed on the same key with the same bucket count join WITHOUT a
-    shuffle (and without even a sort if ``sort=True``) — the pattern for
-    repeatedly-joined 100 TB fact tables where the per-query shuffle is
-    the dominant cost.
-    """
-    cols = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by)
-    writer = df.write.mode(mode).bucketBy(n_buckets, *cols)
-    if sort:
-        writer = writer.sortBy(*cols)
-    writer.saveAsTable(table)

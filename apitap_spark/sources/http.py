@@ -34,15 +34,17 @@ Scale design: a load is ONE plan, ``spark.range(0, n_pages, 1, k)`` +
 ``mapInArrow`` — one HTTP request per page, pages spread over ``k``
 tasks, rows never pass through the driver (except page 0, fetched once
 on the driver for its schema sample and total hint and shipped to its
-task inside the fetch closure, and the driver-side sequential cursor
-walk, which is inherently serial). Schema inference runs at analysis
-time (``schema_of_json`` over the sample), so building the frame
-launches no Spark job. Each task decodes a page once and emits typed
-Arrow (``typed_batch``): a row whose values all convert exactly to the
-inferred types reaches Spark as typed columns, and only the rest — a
-type conflict, a nested value, a non-object row — travel as JSON text
-that ``from_json`` parses as before, so drift and dirty rows keep
-their PERMISSIVE results while clean rows skip the JVM's JSON parse.
+task inside the fetch closure). A cursor walk is inherently serial: it
+runs on the driver, and its rows enter the same plan as the one page of
+a one-page load, as do the rows ``api.json_to_df`` is given. Schema
+inference runs at analysis time (``schema_of_json`` over the sample),
+so building the frame launches no Spark job. Each task decodes a page
+once and emits typed Arrow (``typed_batch``): a row whose values all
+convert exactly to the inferred types reaches Spark as typed columns,
+and only the rest — a type conflict, a nested value, a non-object row —
+travel as JSON text that ``from_json`` parses as before, so drift and
+dirty rows keep their PERMISSIVE results while clean rows skip the
+JVM's JSON parse.
 Unknown totals are discovered with an O(log n) exponential+binary probe
 on the driver, then fetched in one parallel pass — the reference's
 sequential stop-on-empty loop becomes two phases: cheap discovery, then
@@ -752,21 +754,27 @@ class HttpSource:
         """Fetch the full source as a DataFrame (schema inferred from the
         first page's ≤100-row sample; later drift null-fills via PERMISSIVE
         parsing — documented improvement over the reference's hard error,
-        SURVEY §7.4)."""
+        SURVEY §7.4). A cursor walk runs on the driver and its rows enter
+        the plan as page 0 of one."""
         self._driver_stats = FetchStats()
         self._accs = None
-        pg = self.pagination
-        if isinstance(pg, CursorPagination):
-            return json_rows_frame(spark, self._cursor_rows(), self.sample_size)
+        if isinstance(self.pagination, CursorPagination):
+            first, n_pages = self._cursor_rows(), 1
+        else:
+            first, n_pages = self.plan_pages()
+        return self.pages_frame(spark, first, n_pages)
 
-        first, n_pages = self.plan_pages()
+    def pages_frame(self, spark: SparkSession, first: list, n_pages: int) -> DataFrame:
+        """The fetch plan over pages ``0..n_pages-1``: ``first`` is page
+        0's rows, already held on the driver, and every later page is one
+        request from a fetch task. No rows make an empty frame."""
         if not first:
             return spark.createDataFrame([], "struct<>")
         schema = self.infer_schema(spark, first)
 
-        # Distributed fetch of pages 0..n-1 in one plan. Page 0 was fetched
-        # above and rides in the closure ("fetch once", SURVEY §7.4); the
-        # task holding it emits those rows without a request. Executor-side
+        # Distributed fetch of pages 0..n-1 in one plan. Page 0 is already
+        # on the driver and rides in the closure ("fetch once", SURVEY
+        # §7.4); the task holding it emits those rows without a request. Executor-side
         # requests.Session per partition. The task count is capped at
         # max_concurrency (the reference's buffer_unordered(5) politeness,
         # src/http/fetcher.rs:434-497): each task walks its pages
@@ -824,21 +832,3 @@ class HttpSource:
         df.createOrReplaceTempView(view_name or self.name)
         return df
 
-
-def json_rows_frame(
-    spark: SparkSession, rows: list, sample_size: int = DEFAULT_SAMPLE_SIZE
-) -> DataFrame:
-    """Driver-held JSON rows as a DataFrame: the schema is inferred from
-    the first ``sample_size`` rows and every row parses under it
-    (PERMISSIVE ``from_json``). No rows make an empty frame."""
-    if not rows:
-        return spark.createDataFrame([], "struct<>")
-    schema = HttpSource(name="_json", url="-", sample_size=sample_size).infer_schema(
-        spark, rows
-    )
-    lines = spark.sparkContext.parallelize([json.dumps(r) for r in rows])
-    return (
-        spark.createDataFrame(lines, "string")
-        .select(F.from_json(F.col("value"), schema).alias("j"))
-        .select("j.*")
-    )

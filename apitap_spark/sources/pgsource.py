@@ -232,7 +232,11 @@ def _select_expr(field) -> str:
     as UTC wall time: pyarrow rejects an offset with seconds (PG prints
     ``+00:19:32`` for pre-1900 values in zones like Europe/Amsterdam),
     and a value with no offset when the column type has a time zone. A
-    bytea is read as hex, whatever the server's ``bytea_output``."""
+    bytea is read as hex, whatever the server's ``bytea_output``. A
+    numeric is rounded to the decimal type's scale, half away from zero
+    as Spark's JDBC reader rounds it: pyarrow refuses a CSV value with
+    more fractional digits, and an unconstrained NUMERIC reads as
+    ``decimal(38,18)``."""
     from pyspark.sql import types as T
 
     col = _quote_ident(field.name)
@@ -240,6 +244,8 @@ def _select_expr(field) -> str:
         return f"({col} AT TIME ZONE 'UTC') AS {col}"
     if isinstance(field.dataType, T.BinaryType):
         return f"encode({col}, 'hex') AS {col}"
+    if isinstance(field.dataType, T.DecimalType):
+        return f"round({col}, {field.dataType.scale}) AS {col}"
     return col
 
 

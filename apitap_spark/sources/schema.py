@@ -1,15 +1,16 @@
-"""Driver-side JSON schema inference without a SparkSession.
+"""Flat JSON schema inference without a SparkSession, and the row
+conversion of the streaming HTTP source.
 
 Mirrors the reference's streaming inferencer semantics
 (``src/utils/schema.rs:10-129``): JSON → {Boolean, Int64, Float64, Utf8},
 arrays/objects serialize to strings, widening lattice
 Int64 ⊔ Float64 = Float64 and anything ⊔ Utf8 = Utf8, ≤sample-size cutoff,
-all fields nullable. Used by the Python DataSource API, whose ``schema()``
-hook runs before any Spark context is available to the source.
+all fields nullable. Used by ``readStream.format("apitap_http")``, whose
+``schema()`` hook runs in a planning worker with no Spark context.
 
-(The richer nested inference — structs/arrays preserved — lives in
-``HttpSource.infer_schema`` via Spark's JSON reader, matching the
-reference's serde_arrow path, SURVEY §1.2a.)
+(The batch read, ``HttpSource.load``, keeps nested structs and arrays:
+its schema comes from Spark's JSON inference, matching the reference's
+serde_arrow path, SURVEY §1.2a.)
 """
 
 from __future__ import annotations
@@ -17,6 +18,8 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import types as T
+
+from apitap_spark.sources.http import _EXACT, _RAW, _as_raw
 
 _BOTTOM = "string"
 _ORDER = {"boolean": 0, "bigint": 1, "double": 2, "string": 3}
@@ -81,21 +84,23 @@ def _spark_type(name: str) -> T.DataType:
     }[name]
 
 
-def coerce_row(row: dict, schema: T.StructType) -> tuple:
-    """Render one JSON object as a tuple in schema order, stringifying
-    nested values and mismatches leniently (reference bind coercions,
-    src/writer/postgres.rs:775-851)."""
+def coerce_row(row, schema: T.StructType) -> tuple:
+    """One JSON row as a tuple in schema order. Each value converts as in
+    the batch fetch task (``http._EXACT``); a value that does not convert
+    exactly lands NULL, so drift null-fills as ``from_json`` does. A
+    string field takes a non-string value's compact JSON text. A row that
+    is not an object lands all NULL."""
+    if not isinstance(row, dict):
+        row = {}
     out = []
     for f in schema.fields:
         v = row.get(f.name)
-        if v is None:
-            out.append(None)
-        elif isinstance(f.dataType, T.BooleanType):
-            out.append(bool(v) if not isinstance(v, str) else v.lower() in ("true", "1"))
-        elif isinstance(f.dataType, T.LongType):
-            out.append(int(v) if not isinstance(v, (dict, list)) else None)
-        elif isinstance(f.dataType, T.DoubleType):
-            out.append(float(v) if not isinstance(v, (dict, list)) else None)
-        else:
-            out.append(v if isinstance(v, str) else json.dumps(v))
+        if v is not None:
+            if isinstance(f.dataType, T.StringType) and type(v) is not str:
+                v = json.dumps(v, separators=(",", ":"))
+            else:
+                v = _EXACT.get(type(f.dataType), _as_raw)(v)
+                if v is _RAW:
+                    v = None
+        out.append(v)
     return tuple(out)

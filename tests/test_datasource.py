@@ -1,4 +1,4 @@
-"""Spark 4 Python DataSource API tests: spark.read.format("apitap_http")."""
+"""Spark 4 Python DataSource API tests: spark.readStream.format("apitap_http")."""
 
 from __future__ import annotations
 
@@ -26,49 +26,16 @@ def registered(spark):
     return spark
 
 
-def test_format_read_limit_offset(registered, api):
-    df = (
-        registered.read.format("apitap_http")
-        .option("url", f"{api.base}/limit_offset")
-        .option("pagination_type", "limit_offset")
-        .option("limit", 10)
-        .load()
-    )
-    assert dict(df.dtypes) == {
-        "id": "bigint",
-        "userId": "bigint",
-        "title": "string",
-        "score": "double",
-    }
-    assert sorted(r["id"] for r in df.collect()) == list(range(37))
-
-
-def test_format_read_page_number_hint(registered, api):
-    df = (
-        registered.read.format("apitap_http")
-        .option("url", f"{api.base}/page_number")
-        .option("pagination_type", "page_number")
-        .option("per_page", 10)
-        .option("total_items_pointer", "/meta/total")
-        .option("data_path", "/data")
-        .load()
-    )
-    # partition-per-page: 4 pages → 4 partitions
-    assert df.rdd.getNumPartitions() == 4
-    assert df.count() == 37
-
-
 @pytest.mark.parametrize("route", ["page_number", "limit_offset"])
-def test_format_read_fetches_page_zero_twice(registered, route):
-    """A batch read requests page 0 once in schema() and once for the
-    page plan (HttpSource.plan_pages); the partition holding page 0
-    carries the plan's rows, so its task never requests it again. Every
-    other page is requested once, plus the unknown-total probe's."""
-    from collections import Counter
-
+def test_schema_requests_page_zero_once(registered, route):
+    """Planning ``readStream.format("apitap_http")`` runs ``schema()``,
+    which requests page 0 once and nothing else: no page plan, no probe,
+    no cursor walk. The flat inferencer types page 0's rows."""
     api = MockApi(ROWS)
     base = api.start()
-    reader = registered.read.format("apitap_http").option("url", f"{base}/{route}")
+    reader = registered.readStream.format("apitap_http").option(
+        "url", f"{base}/{route}"
+    )
     if route == "page_number":
         reader = (
             reader.option("pagination_type", "page_number")
@@ -79,47 +46,60 @@ def test_format_read_fetches_page_zero_twice(registered, route):
     else:
         reader = reader.option("pagination_type", "limit_offset").option("limit", 10)
     try:
-        ids = sorted(r["id"] for r in reader.load().collect())
+        df = reader.load()
     finally:
         api.stop()
-    assert ids == list(range(37))
+    assert dict(df.dtypes) == {
+        "id": "bigint",
+        "userId": "bigint",
+        "title": "string",
+        "score": "double",
+    }
+    assert len(api.served) == 1
+    _, query, _ = api.served[0]
     if route == "page_number":
-        pages = Counter(int(q["page"]) - 1 for _, q, _ in api.served)
-        assert pages == Counter({0: 2, 1: 1, 2: 1, 3: 1})
+        assert query == {"page": "1", "per_page": "10"}
     else:
-        pages = Counter(int(q["offset"]) // 10 for _, q, _ in api.served)
-        # probe: pages 1, 2, 4 (empty), 3; then the tasks read 1, 2, 3
-        assert pages == Counter({0: 2, 1: 2, 2: 2, 3: 2, 4: 1})
+        assert query == {"limit": "10", "offset": "0"}
 
 
-def test_format_read_cursor_single_partition(registered, api):
-    df = (
-        registered.read.format("apitap_http")
-        .option("url", f"{api.base}/cursor")
-        .option("pagination_type", "cursor")
-        .option("cursor_param", "nextToken")
-        .option("page_size_param", "maxResults")
-        .option("page_size", 10)
-        .option("data_path", "/items")
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 1  # inherently sequential
-    assert df.count() == 37
-
-
-def test_format_sql_queryable(registered, api):
+def test_format_sql_queryable(registered, api, tmp_path):
+    """The stream registers as a temp view that Spark SQL queries."""
     (
-        registered.read.format("apitap_http")
+        registered.readStream.format("apitap_http")
         .option("url", f"{api.base}/limit_offset")
         .option("pagination_type", "limit_offset")
         .option("limit", 20)
         .load()
     ).createOrReplaceTempView("ds_posts")
-    out = registered.sql(
-        "SELECT userId, COUNT(*) AS n FROM ds_posts GROUP BY userId ORDER BY userId"
-    ).collect()
-    expected = [(k, sum(1 for r in ROWS if r["userId"] == k)) for k in range(5)]
-    assert [(r["userId"], r["n"]) for r in out] == expected
+    q = (
+        registered.sql("SELECT id, userId FROM ds_posts WHERE score >= 5")
+        .writeStream.format("memory")
+        .queryName("ds_posts_sink")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+    out = registered.sql("SELECT * FROM ds_posts_sink ORDER BY id").collect()
+    assert [(r["id"], r["userId"]) for r in out] == [
+        (r["id"], r["userId"]) for r in ROWS if r["score"] >= 5
+    ]
+
+
+def test_batch_read_is_refused(registered, api):
+    """The source is streaming-only: a batch read is ``HttpSource.load``,
+    whose one fetch plan decodes every page."""
+    from pyspark.errors import AnalysisException
+
+    reader = registered.read.format("apitap_http").option(
+        "url", f"{api.base}/limit_offset"
+    )
+    with pytest.raises(AnalysisException, match="reader is not implemented"):
+        reader.load().collect()
 
 
 # ---- flat inferencer semantics (reference schema.rs tests, SURVEY §5) ------
@@ -227,20 +207,96 @@ def test_stream_read_between_offsets_replay():
         api.stop()
 
 
-def test_datasource_oauth_options_end_to_end(registered, monkeypatch, tmp_path):
-    """format("apitap_http") with oauth_* options authenticates against
-    the mock token endpoint and reads the protected route. The e2e path
-    passes the secret directly (data-source options resolve in the
-    PLANNING WORKER, whose env pre-dates this test's monkeypatch; real
-    clusters ship env via spark.executorEnv.*); env indirection is
-    covered at unit level below."""
-    from tests.mock_api import MockApi
+# Flat values a drifted page can carry, met by each flat field type.
+DRIFT_PROBES = [
+    None, True, False, 0, -1, 2**63 - 1, 2**63, -(2**63), -(2**63) - 1,
+    10**400, 1.5, 1.9, -0.0, 1e308, float("nan"), "", "s", "abc", "no",
+    "NaN", "1", "true", "\ud800", [], [1], {}, {"k": 1}, {"k": [1, "x"]},
+]
 
+
+def test_stream_read_null_fills_drift(spark):
+    """A micro-batch whose rows drift from the sampled schema null-fills
+    each value that does not convert exactly (``http._EXACT``) instead
+    of failing the batch or truncating, and a string field takes a
+    non-string value's compact JSON text. Over ``DRIFT_PROBES`` in
+    each flat type this equals ``from_json(json.dumps(row))`` on every
+    value but five, where ``from_json`` lands:
+
+    * ``10**400`` in a double field: ``inf`` (here NULL, not exact);
+    * ``"NaN"`` (quoted) in a double field: ``nan`` (here NULL);
+    * ``1e308`` in a string field: ``'1.0E308'``, the JVM's float text
+      (here ``'1e+308'``);
+    * ``float("nan")`` in a string field: ``'"NaN"'`` (here ``'NaN'``);
+    * a lone surrogate in a string field: ``'?'`` (here NULL: it is not
+      UTF-8)."""
+    import json
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from apitap_spark.sources.datasource import HttpJsonSimpleStreamReader
+
+    kinds = {"l": T.LongType(), "d": T.DoubleType(), "s": T.StringType(),
+             "b": T.BooleanType()}
+    schema = T.StructType([T.StructField(k, t) for k, t in kinds.items()])
+    page = [
+        {"l": 1, "d": 0.5, "s": "a", "b": True},
+        {"l": "abc", "d": "x", "s": 7, "b": "no"},
+        {"l": 1.9, "d": True, "s": {"k": [1, 2]}, "b": 1},
+        42,
+    ] + [{k: v for k in kinds} for v in DRIFT_PROBES]
+    api = MockApi(page)
+    base = api.start()
+    try:
+        opts = {
+            "url": f"{base}/limit_offset",
+            "pagination_type": "limit_offset",
+            "limit": "100",
+        }
+        got, end = HttpJsonSimpleStreamReader(opts, schema).read({"offset": 0})
+        got = list(got)
+    finally:
+        api.stop()
+    assert end == {"offset": len(page)}
+    assert got[:4] == [
+        (1, 0.5, "a", True),
+        (None, None, "7", None),
+        (None, None, '{"k":[1,2]}', None),
+        (None, None, None, None),
+    ]
+    parsed = (
+        spark.createDataFrame([(json.dumps(r),) for r in page], "t string")
+        .select(F.from_json("t", schema).alias("j"))
+        .select("j.*")
+        .collect()
+    )
+    differ = {
+        (k, repr(v))
+        for row, want, v in zip(got[4:], parsed[4:], DRIFT_PROBES)
+        for k, a, b in zip(kinds, row, want)
+        if repr(a) != repr(b)
+    }
+    assert differ == {
+        ("d", repr(10**400)), ("d", "'NaN'"), ("s", "1e+308"),
+        ("s", "nan"), ("s", "'\\ud800'"),
+    }
+    assert [tuple(r) for r in parsed[:4]] == got[:4]
+
+
+def test_datasource_oauth_options_end_to_end(registered, tmp_path):
+    """readStream.format("apitap_http") with oauth_* options
+    authenticates against the mock token endpoint and reads the
+    protected route. The e2e path passes the secret directly
+    (data-source options resolve in the PLANNING WORKER, whose env
+    pre-dates the test; real clusters ship env via
+    spark.executorEnv.*); env indirection is covered at unit level
+    below."""
     api = MockApi([{"id": i, "v": i * 2.0} for i in range(23)])
     base = api.start()
     try:
-        df = (
-            registered.read.format("apitap_http")
+        stream = (
+            registered.readStream.format("apitap_http")
             .option("url", f"{base}/protected")
             .option("pagination_type", "limit_offset")
             .option("limit", 10)
@@ -249,8 +305,19 @@ def test_datasource_oauth_options_end_to_end(registered, monkeypatch, tmp_path):
             .option("oauth_client_secret", api.client_secret)
             .load()
         )
-        got = sorted(r["id"] for r in df.collect())
-        assert got == list(range(23))
+        q = (
+            stream.writeStream.format("memory")
+            .queryName("http_oauth_sink")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            q.stop()
+        got = registered.sql("SELECT id FROM http_oauth_sink").collect()
+        assert sorted(r["id"] for r in got) == list(range(23))
         assert api.tokens_issued >= 1
     finally:
         api.stop()
@@ -285,16 +352,13 @@ def test_datasource_oauth_env_indirection_unit(monkeypatch):
 
 def test_reader_resolves_secret_env_once_at_construction(monkeypatch):
     """The env var backing oauth_client_secret_env exists only on the
-    DRIVER of a real cluster. Readers must therefore resolve it in
-    __init__ (driver-side) and carry the secret inside the pickled
-    HttpSource — read() on an executor whose env lacks the var must
+    DRIVER of a real cluster. The stream reader must therefore resolve
+    it in __init__ (driver-side) and carry the secret inside the pickled
+    HttpSource — a read in a process whose env lacks the var must
     still authenticate (round-9 ADVICE #1)."""
     import pickle
 
-    from apitap_spark.sources.datasource import (
-        HttpJsonReader,
-        HttpJsonSimpleStreamReader,
-    )
+    from apitap_spark.sources.datasource import HttpJsonSimpleStreamReader
 
     monkeypatch.setenv("T_DS_OAUTH_SECRET2", "driver-only")
     opts = {
@@ -303,15 +367,13 @@ def test_reader_resolves_secret_env_once_at_construction(monkeypatch):
         "oauth_client_id": "cid",
         "oauth_client_secret_env": "T_DS_OAUTH_SECRET2",
     }
-    batch = HttpJsonReader(opts, None)
     stream = HttpJsonSimpleStreamReader(opts, None)
     monkeypatch.delenv("T_DS_OAUTH_SECRET2")  # simulate the executor env
-    for reader in (batch, stream):
-        clone = pickle.loads(pickle.dumps(reader))  # ships to the task
-        assert clone._src.auth is not None
-        assert clone._src.auth.client_secret == "driver-only"
-        # the token cache state never rides the pickle
-        assert clone._src.auth._token is None
+    clone = pickle.loads(pickle.dumps(stream))  # ships to the task
+    assert clone._src.auth is not None
+    assert clone._src.auth.client_secret == "driver-only"
+    # the token cache state never rides the pickle
+    assert clone._src.auth._token is None
 
 
 def test_process_token_cache_spans_rebuilt_auth_objects():

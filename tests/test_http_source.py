@@ -386,21 +386,34 @@ TYPED_LANDED = [
 ]
 
 
-def test_typed_fetch_lands_what_the_text_path_landed(spark):
+TYPED_ROUTES = {
+    "limit_offset": (LimitOffsetPagination(limit=8), None),
+    "cursor": (
+        CursorPagination(
+            cursor_param="nextToken", page_size_param="maxResults", page_size=8
+        ),
+        "/items",
+    ),
+}
+
+
+@pytest.mark.parametrize("route", sorted(TYPED_ROUTES))
+def test_typed_fetch_lands_what_the_text_path_landed(spark, route):
     """Pages past the sample carry type conflicts, nested values, ints
     past int64 and past the double range, NaN, a lone surrogate, case-only
     duplicate keys, drift and non-object rows: the typed fetch lands each
     row exactly as parsing its JSON text did, and only rows that convert
-    exactly skip that parse."""
+    exactly skip that parse. A cursor walk's rows land the same schema
+    and rows as the paged load's."""
     from apitap_spark.sources.http import typed_batch
 
+    pagination, data_path = TYPED_ROUTES[route]
     api = MockApi(TYPED_SAMPLE + TYPED_LATER)
     base = api.start()
     try:
         df = HttpSource(
-            name="typed", url=f"{base}/limit_offset",
-            pagination=LimitOffsetPagination(limit=8), sample_size=8,
-            max_concurrency=2,
+            name="typed", url=f"{base}/{route}", pagination=pagination,
+            data_path=data_path, sample_size=8, max_concurrency=2,
         ).load(spark)
         assert df.schema.simpleString() == (
             "struct<A:bigint,a:string,big:decimal(20,0),id:bigint,"
@@ -482,27 +495,6 @@ def test_concurrency_cap_respected(spark, big_api):
     # 40 pages through a 4-task fan-out: parallel, but never more than 4
     # requests in flight at once.
     assert big_api.max_inflight <= 4, big_api.max_inflight
-    assert big_api.max_inflight >= 2, "expected overlapping requests"
-
-
-def test_concurrency_cap_datasource(spark, big_api):
-    from apitap_spark.sources.datasource import register
-
-    register(spark)
-    big_api.delay_sec = 0.05
-    df = (
-        spark.read.format("apitap_http")
-        .option("url", f"{big_api.base}/page_number")
-        .option("pagination_type", "page_number")
-        .option("per_page", 10)
-        .option("data_path", "/data")
-        .option("total_items_pointer", "/meta/total")
-        .option("max_concurrency", 3)
-        .load()
-    )
-    ids = sorted(r["id"] for r in df.select("id").collect())
-    assert ids == [r["id"] for r in BIG_ROWS]
-    assert big_api.max_inflight <= 3, big_api.max_inflight
     assert big_api.max_inflight >= 2, "expected overlapping requests"
 
 

@@ -13,7 +13,8 @@ from apitap_spark.functions.scale import (
     salted_join,
     skew_factor,
 )
-from apitap_spark.sources.files import read_files, write_dataset
+from apitap_spark.sinks.dataset import DatasetSpec, write_dataset
+from apitap_spark.sources.files import read_files
 
 
 @pytest.fixture(scope="module")
@@ -85,7 +86,7 @@ def test_file_roundtrip_partitioned(spark, tmp_path):
         "id long, v string, month string",
     )
     out = os.path.join(tmp_path, "ds")
-    write_dataset(df, out, partition_by=["month"])
+    write_dataset(df, DatasetSpec(path=out, partition_by=("month",)))
     back = read_files(spark, out)
     assert sorted(r["id"] for r in back.collect()) == [1, 2, 3]
     # hive-style partition dirs exist → partition pruning possible
@@ -102,37 +103,3 @@ def test_csv_inference_roundtrip(spark, tmp_path):
     assert dict(df.dtypes) == {"id": "int", "score": "double", "name": "string"}
     assert df.count() == 2
 
-
-def test_bucketed_join_avoids_shuffle(spark, tmp_path):
-    """Two co-bucketed tables join with zero Exchange operators."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F2
-
-    from apitap_spark.sources.files import write_bucketed_table
-
-    facts = spark.range(10_000).select(
-        (F2.col("id") % 500).alias("k"), (F2.col("id") * 2).alias("v")
-    )
-    dims = spark.range(500).select(
-        F2.col("id").alias("k"), F2.concat(F2.lit("d"), F2.col("id")).alias("label")
-    )
-    write_bucketed_table(facts, "bj_facts", "k", n_buckets=8)
-    write_bucketed_table(dims, "bj_dims", "k", n_buckets=8)
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        joined = spark.table("bj_facts").join(spark.table("bj_dims"), "k")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan  # co-located: no shuffle at all
-        assert joined.count() == 10_000
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS bj_facts")
-        spark.sql("DROP TABLE IF EXISTS bj_dims")

@@ -459,6 +459,40 @@ def test_driver_read_matches_datasource_schema_and_rows(spark):
         _exec(f"DROP TABLE {every}", f"DROP TABLE {empty}", f"DROP TABLE {zoned}")
 
 
+def test_unconstrained_numeric_reads_rounded_to_scale(spark):
+    """An unconstrained NUMERIC reads as ``decimal(38,18)``. A value with
+    more than 18 fractional digits lands rounded half away from zero, as
+    Spark's JDBC reader rounds it, through the driver read and the
+    DataSource alike; it used to fail the whole stride (``ArrowInvalid:
+    Rescaling Decimal128 value would cause data loss``)."""
+    from apitap_spark.sources.pgsource import PostgresDataSource, read_on_driver
+
+    table = "pgsrc_numeric_scale"
+    _exec(
+        f"DROP TABLE IF EXISTS {table}",
+        f"CREATE TABLE {table} (id INTEGER, n NUMERIC)",
+        f"INSERT INTO {table} VALUES (1, 1::numeric / 7), (2, -2::numeric / 3),"
+        " (3, 0.5), (4, NULL)",
+    )
+    want = [
+        (1, Decimal("0.142857142857142857")),
+        (2, Decimal("-0.666666666666666667")),
+        (3, Decimal("0.5")),
+        (4, None),
+    ]
+    spark.dataSource.register(PostgresDataSource)
+    try:
+        opts = {"dsn": DSN, "table": table}
+        on_driver = read_on_driver(spark, opts, 1 << 30)
+        assert on_driver is not None
+        via_source = spark.read.format("apitap_postgres").options(**opts).load()
+        for frame in (on_driver, via_source):
+            assert dict(frame.dtypes)["n"] == "decimal(38,18)"
+            assert sorted(map(tuple, frame.collect())) == want
+    finally:
+        _exec(f"DROP TABLE {table}")
+
+
 def test_driver_read_declines_large_missing_and_disabled(spark, seeded_table):
     """``read_on_driver`` reads nothing, and returns None, for a table over
     the bound, a threshold of -1, a missing table, a query relation, and
